@@ -80,7 +80,12 @@ def eval_once(col: Column) -> Column:
     the codec runs exactly once per row in its own projection and every
     consumer reads the attribute. The guard survives the same four
     optimizer attacks no_pushdown documents; the no-otherwise branch is
-    unreachable (uuid() length is never <= -1), so the value and its
-    type/nullability are unchanged. Costs ~0.5 us/row.
+    unreachable (uuid() length is never <= -1), so every VALUE and the
+    type are unchanged — but a CASE without ELSE is nullable, so the
+    column's declared nullability becomes true even when ``col`` is
+    non-nullable (harmless for the nullable from_json struct it guards
+    today; wrap non-nullable columns only where a nullable schema is
+    acceptable). Pinned by test_cdc_parse_evaluates_from_json_once.
+    Costs ~0.5 us/row.
     """
     return F.when(F.length(F.expr("uuid()")) > -1, col)

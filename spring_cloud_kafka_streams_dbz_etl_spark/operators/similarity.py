@@ -10,14 +10,13 @@ Scale design:
   The cell equi-join prunes the corpus scan to 1/n_cells of the data; at
   100 TB this is the difference between scanning everything and scanning
   one partition (cells map to parquet partitions).
-- The optional Pandas-UDF path (`pandas_topk_scores`) batches vectors
-  through Arrow into numpy for BLAS scoring — the practical choice for
-  wide vectors / many queries; kept off the oracle surface.
+- ANN/PQ: one implementation per operator. Training, routing, encoding
+  and ADC lookup tables all read the same squared-L2 argmin kernel
+  (`_cell_dists`), so the lattice and trained variants differ only in
+  where their codebook comes from; the DuckDB oracles are the reference.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -142,10 +141,7 @@ def hyperplane_lsh_pairs(
         raise ValueError(f"planes={planes} not divisible by bands={bands}")
     bits = planes // bands
 
-    iv = F.transform(
-        F.col(vec_col), lambda x: F.floor(x.cast("double") * float(int_scale)).cast("long")
-    )
-    with_iv = df.select(F.col(id_col).alias("__id"), iv.alias("iv"))
+    with_iv = int_vectors(df, id_col, vec_col, int_scale)
 
     def plane_dot(p: int) -> F.Column:
         sign_arr = F.array(*[F.lit(s) for s in signs[p]])
@@ -207,6 +203,91 @@ def hyperplane_lsh_pairs(
     )
 
 
+# -- shared argmin kernels ----------------------------------------------------
+# Every ANN/PQ decision — k-means training and serving-time routing, the
+# lattice and trained PQ encoders, the ADC lookup tables — reads ONE
+# squared-L2 fold, so training, encoding and serving arithmetic can never
+# drift apart.
+
+
+def _iv(vec: F.Column, int_scale: int) -> F.Column:
+    """floor(x·int_scale) BIGINT components — the LSH/PQ/IVF integerization
+    policy: everything downstream has exact integer operands."""
+    return F.transform(
+        vec, lambda x: F.floor(x.cast("double") * float(int_scale)).cast("long")
+    )
+
+
+def _vectors(col, dtype: str = "float64"):
+    """Row-major numpy matrix of an array column (one Arrow batch, or a
+    pandas probe frame)."""
+    import numpy as np
+
+    return np.array([np.asarray(x, dtype=dtype) for x in col])
+
+
+def _cell_dists(X, C):
+    """The (n_vectors × n_centroids) squared-L2 matrix of double vectors
+    ``X`` against centroids ``C`` — accumulated as an ascending-d LEFT
+    fold (acc = acc + t*t from 0.0, one IEEE add per step), the same
+    sequence as the DuckDB oracles' ascending ``list_sum``/left folds.
+    Integer-vector callers pass ``iv / int_scale`` (one exact long->double
+    division per component); the lattice encoder and the lattice ADC
+    tables pass raw doubles.
+
+    The loop runs over DIMENSIONS only (one (n × k) rank-1 update per
+    d), not over (centroid, d): `ivf_cells_for` scales k with the corpus,
+    and a per-centroid loop would pay k×dim numpy dispatches per batch
+    where this shape pays dim regardless of k. Never rewrite this as the
+    BLAS ‖x‖² + ‖c‖² − 2x·c expansion, which changes the summation order
+    and breaks cross-engine ties."""
+    import numpy as np
+
+    CM = np.asarray(C, dtype=np.float64)  # (k, d)
+    acc = np.zeros((len(X), len(CM)))
+    t = np.empty_like(acc)
+    for d in range(CM.shape[1]):
+        # in-place (x_d − c_d)² accumulation: identical IEEE ops on
+        # identical operands in identical order, no (n × k) temporaries —
+        # at 32k vectors × 716 cells the out-of-place form allocated
+        # ~11 GB/pass of short-lived arrays and was memory-bound
+        np.subtract(X[:, d, None], CM[None, :, d], out=t)
+        np.multiply(t, t, out=t)
+        acc += t
+    return acc
+
+
+def _argmin_cells(X, C):
+    """Nearest centroid per row of ``X`` by :func:`_cell_dists`;
+    np.argmin's first index is the smaller-cell/code tie-break. Returns
+    (index int array, dist-to-chosen double array)."""
+    import numpy as np
+
+    dists = _cell_dists(X, C)
+    cells = np.argmin(dists, axis=1)
+    return cells, dists[np.arange(len(dists)), cells]
+
+
+def _pq_codes(X, CB):
+    """Per-subspace argmin codes of double vectors ``X`` against the
+    (subspaces × codes × sub) codebook tensor ``CB``, plus the summed
+    reconstruction error as an ascending-m left fold. Returns
+    (codes (n × subspaces) int array, recon double array)."""
+    import numpy as np
+
+    sub = len(CB[0][0])
+    codes = np.empty((len(X), len(CB)), dtype=np.int64)
+    recon = np.zeros(len(X))
+    for m in range(len(CB)):
+        codes[:, m], dm = _argmin_cells(X[:, m * sub : (m + 1) * sub], CB[m])
+        recon = recon + dm
+    return codes, recon
+
+
+def _code_strings(codes) -> list[str]:
+    return [",".join(map(str, row)) for row in codes.tolist()]
+
+
 # -- product quantization ---------------------------------------------------
 PQ_SUBSPACES = 8
 PQ_K = 16
@@ -227,6 +308,65 @@ def pq_codebook(m: int, k: int, sub_dim: int) -> list[float]:
     ]
 
 
+def _lattice(subspaces: int, k: int, dim: int) -> list[list[list[float]]]:
+    """The fixed md5 lattice as a (subspaces × k × sub) codebook tensor."""
+    sub = dim // subspaces
+    return [[pq_codebook(m, kk, sub) for kk in range(k)] for m in range(subspaces)]
+
+
+def _pq_encode(
+    df: DataFrame,
+    vec: F.Column,
+    codebooks,
+    id_col: str,
+    keep_cols: tuple[str, ...],
+    int_scale: int | None = None,
+) -> DataFrame:
+    """THE encode pass behind :func:`pq_encode` (lattice books, raw
+    doubles) and :func:`pq_encode_cb` (trained books, ``iv`` integers
+    divided back by ``int_scale`` in the batch — the space the books were
+    trained in): one Arrow mapInPandas map over the scan, codes by
+    :func:`_pq_codes`, ROUND(6) of recon_err in the JVM (F.round HALF_UP,
+    matching the oracle). Returns (id, *keep_cols, pq_codes 'c0,c1,...',
+    recon_err)."""
+    import numpy as np
+
+    CB = np.asarray(codebooks, dtype=np.float64)
+    keep_schema = "".join(
+        f", {c} {df.schema[c].dataType.simpleString()}" for c in keep_cols
+    )
+
+    def enc(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = _vectors(pdf["__v"])
+            if int_scale is not None:
+                X = X / float(int_scale)
+            codes, recon = _pq_codes(X, CB)
+            out = {id_col: pdf[id_col].to_numpy()}
+            for c in keep_cols:
+                out[c] = pdf[c].to_numpy()
+            out["pq_codes"] = _code_strings(codes)
+            out["recon_err"] = recon
+            yield pd.DataFrame(out)
+
+    return (
+        df.select(id_col, *keep_cols, vec.alias("__v"))
+        .mapInPandas(
+            enc, f"{id_col} long{keep_schema}, pq_codes string, recon_err double"
+        )
+        .select(
+            id_col,
+            *keep_cols,
+            "pq_codes",
+            F.round(F.col("recon_err"), 6).alias("recon_err"),
+        )
+    )
+
+
 def pq_encode(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -236,265 +376,112 @@ def pq_encode(
     dim: int = PQ_DIM,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Product-quantize vectors as an Arrow mapInPandas pass: split into
-    ``subspaces`` sub-vectors, assign each to its nearest of ``k`` fixed
-    centroids (squared L2 accumulated in an ascending-dimension LEFT
-    fold — explicit sequential adds, bit-identical to the HOF form and
-    the SQL oracle; ties break to the smaller code via argmin-first).
-    Returns (id, *keep_cols, pq_codes 'c0,c1,...', recon_err) exactly
-    like :func:`pq_encode_expr`, whose JVM HOF plan it replaced on
-    measurement: the vectorized (batch × k) fold runs the same 40k-row
-    encode in 0.44 s warm vs 1.22 s (tools/measure_adc.py session,
-    value-identical on every row). The codebook tensor broadcasts once;
-    rounding stays JVM-side (F.round HALF_UP, matching the oracle).
+    """Product-quantize vectors against the fixed md5 lattice: split into
+    ``subspaces`` sub-vectors, assign each to its nearest of ``k``
+    centroids (squared L2 as an ascending-dimension LEFT fold,
+    bit-identical to the SQL oracle; ties break to the smaller code).
+    Returns (id, *keep_cols, pq_codes 'c0,c1,...', recon_err) — codes
+    compress dim×4 bytes to ``subspaces`` nibbles (32x for 64-d float32
+    at 8×16), recon_err is the summed squared distance to the chosen
+    centroids.
 
-    Scale: still a pure map over the scan — the Python boundary is one
-    Arrow batch stream, the standard 10-30x memory cut unchanged.
+    Production PQ trains its codebooks (:func:`pq_train` /
+    :func:`pq_encode_cb`); the lattice keeps the OPERATOR exact and
+    oracle-checkable with the codebook inlined into the oracle SQL. One
+    Arrow batch pass through the shared :func:`_pq_encode` kernel — a
+    pure map over the scan, no shuffle; the vectorized (batch × k) fold
+    replaced a JVM higher-order-function encode on measurement (0.44 s
+    vs 1.22 s warm on 40k rows, value-identical on every row).
     """
+    return _pq_encode(
+        df, F.col(vec_col), _lattice(subspaces, k, dim), id_col, keep_cols
+    )
+
+
+def _adc_rank(
+    queries_pd,
+    Q,
+    codebooks,
+    codes: DataFrame,
+    k: int,
+    id_col: str,
+    cell_col: str | None,
+) -> DataFrame:
+    """THE ADC server behind both the lattice (:func:`pq_adc_topk`) and
+    trained (:func:`pq_adc_topk_cb`) scorers — only the probe vectors
+    ``Q`` (raw or floored) and the codebook tensor differ between them.
+
+    LUT build: the (probes × subspaces × n_codes) partial-squared-distance
+    tensor is :func:`_cell_dists` of each probe sub-vector against its
+    subspace's book — the encode kernel's fold, driver-side, a few KiB.
+    Scan: an Arrow mapInPandas gather over the codes relation evaluates
+    Σ_m lut[m][code_m] as an ascending-m LEFT fold of vectorized numpy
+    takes (explicit sequential adds — numpy pairwise summation would
+    reorder it). ROUND(9) and the (adc_dist asc, neighbor id asc) rank
+    window stay in the JVM, matching the oracle. The Arrow gather
+    replaced an inlined-literal JVM tree whose struct explode multiplied
+    rows n_probes× before filtering: 2.5× faster at 16 probes, 3.2× at
+    48, the gap widening with probe count.
+
+    ``cell_col`` fuses IVF pruning: the codes scan pre-filters to the
+    probes' cell set JVM-side (partition pruning on cell-partitioned
+    code files), and each probe scores only rows of ITS cell via a numpy
+    mask inside the batch."""
     import numpy as np
 
-    sub = dim // subspaces
-    cb = np.zeros((subspaces, k, sub))
-    for m in range(subspaces):
-        for kk in range(k):
-            cb[m, kk] = pq_codebook(m, kk, sub)
-    spark = df.sparkSession
-    b_cb = spark.sparkContext.broadcast(cb)
-    in_cols = [id_col, *keep_cols, vec_col]
-    keep_schema = "".join(
-        f", {c} {df.schema[c].dataType.simpleString()}" for c in keep_cols
-    )
-
-    def enc(batches):
-        import pandas as pd
-
-        C = b_cb.value
-        n_sub, n_codes, sd = C.shape
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.array(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-            )
-            codes = np.zeros((len(v), n_sub), dtype=np.int64)
-            err = np.zeros(len(v))
-            for m in range(n_sub):
-                seg = v[:, m * sd : (m + 1) * sd]
-                # ascending-d LEFT fold, vectorized over (batch, k)
-                acc = np.zeros((len(v), n_codes))
-                for d in range(sd):
-                    diff = seg[:, d : d + 1] - C[m][None, :, d]
-                    acc = acc + diff * diff
-                codes[:, m] = np.argmin(acc, axis=1)  # first min = smallest code
-                err = err + acc[np.arange(len(v)), codes[:, m]]
-            out = {id_col: pdf[id_col].to_numpy()}
-            for c in keep_cols:
-                out[c] = pdf[c].to_numpy()
-            out["pq_codes"] = [",".join(map(str, r)) for r in codes]
-            out["__err"] = err
-            yield pd.DataFrame(out)
-
-    return (
-        df.select(*in_cols)
-        .mapInPandas(
-            enc,
-            f"{id_col} long{keep_schema}, pq_codes string, __err double",
-        )
-        .select(
-            id_col,
-            *keep_cols,
-            "pq_codes",
-            F.round(F.col("__err"), 6).alias("recon_err"),
-        )
-    )
-
-
-def pq_encode_expr(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    subspaces: int = PQ_SUBSPACES,
-    k: int = PQ_K,
-    dim: int = PQ_DIM,
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """JVM-expression PQ encode (the pre-r6 registered form): split into
-    ``subspaces`` sub-vectors,
-    assign each to its nearest of ``k`` fixed centroids (squared L2,
-    summed in ascending-dimension order so the doubles are bit-identical
-    across engines; ties break on the smaller code). Returns
-    (id, pq_codes string 'c0,c1,...', recon_err double) — codes compress
-    dim×4 bytes to ``subspaces`` nibbles (32x for 64-d float32 at 8×16),
-    recon_err is the summed squared distance to the chosen centroids.
-
-    Production PQ trains codebooks with k-means; the codebooks here are
-    fixed md5-derived grids so the OPERATOR (split/assign/argmin plan
-    shape, zero Python, zero shuffle) is exact and oracle-checkable —
-    swap `pq_codebook` for trained centroids at deployment.
-
-    Scale: pure map over the scan; at 100 TB this is the standard 10-30x
-    memory cut that makes billion-vector ANN fit a cluster's RAM.
-
-    Plan shape (r5 rewrite): the codebook is ONE literal nested array and
-    the subspace/code/dim loops are higher-order functions (transform /
-    aggregate / array_position), not an unrolled subspaces*k*sub_dim
-    expression tree. The r4 unrolled form built 128 struct candidates +
-    1024 arithmetic nodes — a ~2.6 MiB task binary whose per-row
-    interpretation dominated the encode (measured 4.1 s for 5k rows at
-    sf0.1); the HOF form is bit-identical and runs the same data in
-    1.1 s warm with a kilobyte-scale plan. (SCALE.md anti-pattern #2 —
-    don't move EXPENSIVE exprs like md5 into HOF lambdas — doesn't apply:
-    these lambdas are pure float arithmetic, and the win is collapsing
-    the giant tree.) Determinism is unchanged: inner sum runs ascending-d
-    via aggregate's left fold, argmin ties break to the smallest code
-    because array_position returns the FIRST index of the minimum.
-    """
-    sub_dim = dim // subspaces
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cb_lit = F.array(
-        *[
-            F.array(
-                *[
-                    F.array(*[F.lit(x) for x in pq_codebook(m, kk, sub_dim)])
-                    for kk in range(k)
-                ]
-            )
-            for m in range(subspaces)
-        ]
-    )
-    # dd[m][kk] = Σ_d (v[m*sub+d] - CB[m][kk][d])², ascending d
-    dd = F.transform(
-        cb_lit,
-        lambda cbm, m: F.transform(
-            cbm,
-            lambda c: F.aggregate(
-                F.sequence(F.lit(1), F.lit(sub_dim)),
-                F.lit(0.0),
-                lambda acc, d: acc
-                + (F.element_at(v, m * sub_dim + d) - F.element_at(c, d))
-                * (F.element_at(v, m * sub_dim + d) - F.element_at(c, d)),
-            ),
-        ),
-    )
-    codes = F.transform(dd, lambda d: F.array_position(d, F.array_min(d)).cast("int") - 1)
-    err = F.aggregate(
-        F.transform(dd, lambda d: F.array_min(d)), F.lit(0.0), lambda a, x: a + x
-    )
-    return df.select(
-        F.col(id_col),
-        *[F.col(c) for c in keep_cols],
-        F.concat_ws(",", F.transform(codes, lambda c: c.cast("string"))).alias(
-            "pq_codes"
-        ),
-        F.round(err, 6).alias("recon_err"),
-    )
-
-
-def pq_adc_topk_expr(
-    queries_pd,
-    codes: DataFrame,
-    k: int = 10,
-    subspaces: int = PQ_SUBSPACES,
-    n_codes: int = PQ_K,
-    dim: int = PQ_DIM,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str | None = None,
-) -> DataFrame:
-    """JVM-expression ADC variant: per query, precompute the
-    (subspace × code) -> partial-squared-distance lookup table
-    driver-side (subspaces·n_codes doubles — trivially small), inline it
-    as literal arrays, and score every coded vector with
-    Σ_m lut[m][code_m] — a pure map over the CODES table. The corpus
-    lives as ``subspaces``-byte codes (32x smaller), scans never touch
-    raw vectors, and distance evaluation is ``subspaces`` array lookups.
-
-    NOT the registered scorer since r6: the per-probe literal-array tree
-    grows with probes × n_codes and is interpreted per code row, and
-    the struct explode multiplies rows n_probes× BEFORE the filter —
-    measured 2.5-3.2× slower than the Arrow gather in
-    :func:`pq_adc_topk` (tools/measure_adc.py), with the gap widening
-    in probe count. Kept as the zero-Python reference implementation
-    and the measurement baseline; results are bit-identical.
-
-    ``queries_pd``: pandas DataFrame with (id_col, vec_col) probe rows.
-    ``codes``: output of :func:`pq_encode` (same ``id_col``). All queries
-    score in ONE pass over the codes table (an array of per-query
-    (query_id, dist) structs, exploded) — the corpus scan and the code
-    parse never repeat per query. Ranking is deterministic (adc_dist
-    asc, neighbor id asc). Approximation quality is the codebooks' —
-    with trained k-means books this is production PQ-ADC.
-
-    ``cell_col`` (optional) fuses IVF pruning into the scan: both
-    ``queries_pd`` and ``codes`` must carry it, and each probe scores
-    only code rows in ITS cell — at scale the cell predicate partition-
-    prunes the codes scan to nprobe/n_cells of the corpus, and the codes
-    are 32x smaller than raw vectors: the two multiplicative wins of the
-    standard IVF-PQ (FAISS IVFADC) layout.
-    """
-    sub = dim // subspaces
-    # Parse the code string ONCE per row into an int array (projection
-    # below); referencing the split expression per (probe x subspace)
-    # would re-split the string up to n_probes*subspaces times per row —
-    # measured 1.6x on the ADC scan (tools/measure_ann.py).
-    parts = F.col("__codes")
-
-    def dist_for(qv: list[float]) -> F.Column:
-        dist = None
-        for m in range(subspaces):
-            seg = qv[m * sub : (m + 1) * sub]
-            lut = [
-                # explicit multiply (not **2): bit-identical to the SQL
-                # oracle's (a-b)*(a-b) on every libm
-                sum((seg[d] - c[d]) * (seg[d] - c[d]) for d in range(sub))
-                for c in (pq_codebook(m, kk, sub) for kk in range(n_codes))
-            ]
-            lut_arr = F.array(*[F.lit(x) for x in lut])
-            term = F.element_at(lut_arr, F.element_at(parts, m + 1).cast("int") + 1)
-            dist = term if dist is None else dist + term
-        return F.round(dist, 9)
-
-    entries = [
-        F.struct(
-            F.lit(int(q[id_col])).alias("query_id"),
-            dist_for([float(x) for x in q[vec_col]]).alias("adc_dist"),
-            *(
-                # .item() unwraps numpy scalars from the pandas probe frame
-                [
-                    F.lit(
-                        q[cell_col].item()
-                        if hasattr(q[cell_col], "item")
-                        else q[cell_col]
-                    ).alias("query_cell")
-                ]
-                if cell_col is not None
-                else []
-            ),
-        )
-        for _, q in queries_pd.iterrows()
-    ]
-    if not entries:
+    if not len(queries_pd):
         return codes.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, adc_dist double, rank int"
         )
-    parsed = codes.select(
-        F.col(id_col),
-        *([F.col(cell_col)] if cell_col is not None else []),
-        F.transform(F.split(F.col("pq_codes"), ","), lambda x: x.cast("int")).alias(
-            "__codes"
-        ),
+    CB = np.asarray(codebooks, dtype=np.float64)
+    sub = CB.shape[2]
+    lut = np.stack(
+        [_cell_dists(Q[:, m * sub : (m + 1) * sub], CB[m]) for m in range(len(CB))],
+        axis=1,
     )
-    scored = parsed.select(
-        F.col(id_col).alias("neighbor_id"),
-        *([F.col(cell_col)] if cell_col is not None else []),
-        F.explode(F.array(*entries)).alias("__q"),
-    )
+    qid = np.array([int(x) for x in queries_pd[id_col]])
+    qcell = None
     if cell_col is not None:
-        # IVF restriction: keep only (probe, code) pairs in the same cell.
-        # The filter sits directly above the scan, so with cell-partitioned
-        # code files it collapses to partition pruning.
-        scored = scored.filter(F.col("__q.query_cell") == F.col(cell_col))
-    scored = scored.select("__q.query_id", "neighbor_id", "__q.adc_dist")
+        # .item() unwraps numpy scalars from the pandas probe frame
+        cells = [c.item() if hasattr(c, "item") else c for c in queries_pd[cell_col]]
+        # partition-pruning half of IVF-PQ: only the probed cells scan
+        codes = codes.filter(F.col(cell_col).isin(*set(cells)))
+        qcell = np.array(cells)
+
+    def score(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            codes_m = np.array(
+                [[int(c) for c in s.split(",")] for s in pdf["pq_codes"]],
+                dtype=np.int64,
+            )
+            nid = pdf[id_col].to_numpy()
+            ncell = pdf[cell_col].to_numpy() if qcell is not None else None
+            for qi in range(len(lut)):
+                if qcell is not None:
+                    mask = ncell == qcell[qi]
+                    if not mask.any():
+                        continue
+                    cm, ni = codes_m[mask], nid[mask]
+                else:
+                    cm, ni = codes_m, nid
+                acc = lut[qi][0][cm[:, 0]]
+                for m in range(1, lut.shape[1]):
+                    acc = acc + lut[qi][m][cm[:, m]]
+                yield pd.DataFrame(
+                    {"query_id": qid[qi], "neighbor_id": ni, "adc_dist": acc}
+                )
+
+    scored = codes.mapInPandas(
+        score, "query_id long, neighbor_id long, adc_dist double"
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("adc_dist"), 9).alias("adc_dist"),
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col("neighbor_id").asc()
     )
@@ -516,183 +503,25 @@ def pq_adc_topk(
     vec_col: str = "embedding",
     cell_col: str | None = None,
 ) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes — the billion-scale ANN
-    serving path: the corpus lives as ``subspaces``-byte codes (32x
-    smaller), scans never touch raw vectors, and every probe scores in
-    ONE pass over the codes relation.
+    """Asymmetric-distance top-k over lattice PQ codes — the
+    billion-scale ANN serving path: the corpus lives as
+    ``subspaces``-byte codes (32x smaller), scans never touch raw
+    vectors, and every probe scores in ONE pass over the codes relation
+    (:func:`_adc_rank`, raw probe vectors against the lattice).
 
-    Scoring runs as an Arrow ``mapInPandas`` gather: the
-    (probes × subspaces × n_codes) LUT tensor — a few KiB of doubles,
-    built driver-side exactly as before — broadcasts to executors, and
-    each Arrow batch evaluates Σ_m lut[m][code_m] as ``subspaces``
-    vectorized numpy gathers. Chosen over the inlined-literal JVM
-    expression tree (:func:`pq_adc_topk_expr`) on measurement, not
-    aesthetics: the literal tree is interpreted per code row and its
-    struct explode multiplies rows n_probes× before filtering — the
-    Arrow path is 2.5× faster at 16 probes and 3.2× at 48
-    (tools/measure_adc.py), the gap widening with probe count.
-
-    Bit-identical to the expression form: the LUT doubles come from the
-    SAME Python builder, the Σ_m fold is the same ascending-m left
-    fold (explicit sequential adds — numpy pairwise summation would
-    reorder it), and the final ROUND(9) + rank window stay in the JVM,
-    so the oracle contract is untouched.
-
-    ``cell_col`` (optional) fuses IVF pruning: the codes scan
-    pre-filters to the probes' cell set JVM-side (partition pruning on
-    cell-partitioned code files), and each probe scores only rows of
-    ITS cell via a numpy mask inside the batch.
+    ``queries_pd``: pandas DataFrame with (id_col, vec_col[, cell_col])
+    probe rows. ``codes``: output of :func:`pq_encode` (same ``id_col``;
+    carrying ``cell_col`` when set — the standard IVF-PQ / FAISS IVFADC
+    layout). Ranking is deterministic (adc_dist asc, neighbor id asc).
     """
-    import numpy as np
-
-    sub = dim // subspaces
-    if not len(queries_pd):
-        return codes.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, adc_dist double, rank int"
-        )
-    luts = np.zeros((len(queries_pd), subspaces, n_codes))
-    qids: list[int] = []
-    qcells: list = []
-    for qi, (_, q) in enumerate(queries_pd.iterrows()):
-        qv = [float(x) for x in q[vec_col]]
-        qids.append(int(q[id_col]))
-        if cell_col is not None:
-            cell = q[cell_col]
-            qcells.append(cell.item() if hasattr(cell, "item") else cell)
-        for m in range(subspaces):
-            seg = qv[m * sub : (m + 1) * sub]
-            for kk in range(n_codes):
-                c = pq_codebook(m, kk, sub)
-                # explicit multiply (not **2): bit-identical to the SQL
-                # oracle's (a-b)*(a-b) on every libm
-                luts[qi, m, kk] = sum(
-                    (seg[d] - c[d]) * (seg[d] - c[d]) for d in range(sub)
-                )
-    return _adc_rank(codes, luts, qids, qcells, cell_col, k, id_col)
-
-
-def _adc_rank(
-    codes: DataFrame,
-    luts,
-    qids: list[int],
-    qcells: list,
-    cell_col: str | None,
-    k: int,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """The shared ADC scoring tail — LUT-gather scan + JVM ROUND(9) +
-    per-probe rank window — behind both the lattice-codebook
-    (:func:`pq_adc_topk`) and trained-codebook
-    (:func:`pq_adc_topk_cb`) servers; only the LUT BUILD differs
-    between them, so the scan arithmetic cannot drift. ``luts`` is the
-    (probes × subspaces × n_codes) tensor; ascending-m LEFT fold per
-    batch, argmin ties to the smaller neighbor id in the window."""
-    import numpy as np
-
-    spark = codes.sparkSession
-    if cell_col is not None:
-        # partition-pruning half of IVF-PQ: only the probed cells scan
-        codes = codes.filter(F.col(cell_col).isin(*set(qcells)))
-    b_lut = spark.sparkContext.broadcast(luts)
-    b_qid = spark.sparkContext.broadcast(np.array(qids))
-    b_cell = spark.sparkContext.broadcast(
-        np.array(qcells) if cell_col is not None else None
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        lut, qid, qcell = b_lut.value, b_qid.value, b_cell.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes_m = np.array(
-                [[int(c) for c in s.split(",")] for s in pdf["pq_codes"]],
-                dtype=np.int64,
-            )
-            nid = pdf[id_col].to_numpy()
-            ncell = pdf[cell_col].to_numpy() if qcell is not None else None
-            for qi in range(lut.shape[0]):
-                if qcell is not None:
-                    mask = ncell == qcell[qi]
-                    if not mask.any():
-                        continue
-                    cm, ni = codes_m[mask], nid[mask]
-                else:
-                    cm, ni = codes_m, nid
-                # ascending-m LEFT fold, matching the expression form
-                acc = lut[qi][0][cm[:, 0]]
-                for m in range(1, lut.shape[1]):
-                    acc = acc + lut[qi][m][cm[:, m]]
-                yield pd.DataFrame(
-                    {"query_id": qid[qi], "neighbor_id": ni, "adc_dist": acc}
-                )
-
-    scored = codes.mapInPandas(
-        score, "query_id long, neighbor_id long, adc_dist double"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        # rounding stays in the JVM: same F.round HALF_UP as the
-        # expression form and the DuckDB oracle's ROUND
-        F.round(F.col("adc_dist"), 9).alias("adc_dist"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def pandas_topk_scores(
-    queries_pd, corpus: DataFrame, vec_col: str = "embedding", k: int = 10
-) -> DataFrame:
-    """Arrow/numpy BLAS scoring path: queries broadcast as a numpy matrix,
-    corpus streamed through mapInPandas in Arrow batches. Preferred for
-    wide vectors or >100 queries; not oracle-checked (fp order differs).
-    """
-    import numpy as np
-
-    qm = np.asarray(list(queries_pd[vec_col]), dtype="float64")
-    qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-    qids = list(queries_pd["vec_id"])
-    spark = corpus.sparkSession
-    bqn = spark.sparkContext.broadcast(qn)
-    bqids = spark.sparkContext.broadcast(qids)
-
-    def score(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            cm = np.asarray(list(pdf[vec_col]), dtype="float64")
-            cn = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-            sims = cn @ bqn.value.T  # (batch, n_queries)
-            out = []
-            for qi, qid in enumerate(bqids.value):
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": pdf["vec_id"].to_numpy(),
-                            "cos_sim": sims[:, qi],
-                        }
-                    )
-                )
-            yield pd.concat(out)
-
-    scored = corpus.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _adc_rank(
+        queries_pd,
+        _vectors(queries_pd[vec_col]),
+        _lattice(subspaces, n_codes, dim),
+        codes,
+        k,
+        id_col,
+        cell_col,
     )
 
 
@@ -777,263 +606,115 @@ def nprobe_for(n_cells: int) -> int:
     return max(4, 2 * math.ceil(math.sqrt(n_cells)))
 
 
-def _argmin_cells(IV, C: list[list[float]], dim: int, int_scale: int):
-    """Shared numpy argmin-assignment kernel over an integer-vector batch:
-    X = iv/int_scale (one exact long->double division per component),
-    squared L2 accumulated as an ascending-d LEFT fold (acc = acc + t*t,
-    never numpy pairwise summation), np.argmin's first-index = the
-    smaller-cell tie-break. Every Arrow assignment path —
-    :func:`kmeans_cells` / :func:`kmeans_fit` training rounds AND
-    :func:`ivf_assign` serving-time routing, all via
-    :func:`_assign_arrow` — calls THIS kernel, so training and serving
-    arithmetic can never drift: the property the trained-index recall
-    audit (q_ann_pq_recall_trained) depends on. Returns
-    (cells int array, dist-to-chosen double array)."""
-    import numpy as np
-
-    dists = _cell_dists(IV, C, dim, int_scale)
-    n = len(dists)
-    cells = np.argmin(dists, axis=1)
-    return cells, dists[np.arange(n), cells]
-
-
-def _cell_dists(IV, C: list[list[float]], dim: int, int_scale: int):
-    """The (n_vectors × n_cells) squared-L2 matrix behind BOTH cell
-    decisions — :func:`_argmin_cells`' argmin assignment and
-    :func:`ivf_probe`'s top-nprobe routing — so single-probe and
-    multi-probe serving rank cells with bit-identical distances.
-    X = iv/int_scale exact divisions, ascending-d LEFT fold.
-
-    The loop runs over DIMENSIONS only (one (n × k) rank-1 update per
-    d), not over (cell, d): since `ivf_cells_for` scales k with the
-    corpus, a per-cell loop would pay k×dim numpy dispatches per batch
-    (~4k at sf0.1's k=62) where this shape pays dim regardless of k.
-    Bit-compatibility is unchanged — each (vector, cell) element still
-    accumulates (x_d − c_d)² in ascending-d order, the same IEEE adds
-    in the same sequence as the per-cell form (pinned against the JVM
-    expression tree in test_kmeans_assign_arrow_equals_expr); never
-    rewrite this as the BLAS ‖x‖² + ‖c‖² − 2x·c expansion, which
-    changes the summation order and breaks cross-engine ties."""
-    import numpy as np
-
-    X = IV / float(int_scale)
-    n = len(X)
-    CM = np.asarray(C, dtype=np.float64)  # (k, dim)
-    acc = np.zeros((n, len(C)))
-    t = np.empty_like(acc)
-    for d in range(dim):
-        # in-place forms of (x_d − c_d)² accumulation: identical IEEE
-        # ops on identical operands in identical order, no (n × k)
-        # temporaries — at 32k vectors × 716 cells the out-of-place
-        # form allocated ~11 GB/pass of short-lived arrays and was
-        # memory-bandwidth-bound
-        np.subtract(X[:, d, None], CM[None, :, d], out=t)
-        np.multiply(t, t, out=t)
-        acc += t
-    return acc
-
-
-def _int_vectors(
-    df: DataFrame, id_col: str, vec_col: str, int_scale: int
-) -> DataFrame:
-    """(__id, iv) projection shared by every k-means/IVF entry point:
-    vectors enter the determinism boundary as floor(x*int_scale) BIGINTs
-    (the LSH/PQ integerization policy), so all downstream arithmetic has
-    exact integer operands."""
-    iv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * float(int_scale)).cast("long"),
-    )
-    return df.select(F.col(id_col).alias("__id"), iv.alias("iv"))
-
-
-def _assign_arrow(
-    base: DataFrame, cents: list[list[float]], dim: int, int_scale: int
-) -> DataFrame:
-    """THE Arrow assignment path — the single mapInPandas wrapper around
-    :func:`_argmin_cells` that kmeans training rounds, the final
-    kmeans_cells assignment, and ivf_assign serving-time routing all
-    share. Broadcasting happens via closure capture of the k×dim
-    centroid list (a few KiB — task-serialized once per stage, same as
-    an explicit sc.broadcast for this size). Bit-identical to
-    ``assign_expr``'s JVM literal tree: X = iv/int_scale is the same
-    long/double division, t*t adds accumulate in the same ascending-d
-    order, np.argmin's first-index is array_min's smaller-cell
-    tie-break; rounding stays with the JVM caller."""
-    C = [list(map(float, c)) for c in cents]
-
-    def go(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            IV = np.array([np.asarray(x, dtype=np.int64) for x in pdf["iv"]])
-            cellv, distv = _argmin_cells(IV, C, dim, int_scale)
-            yield pd.DataFrame(
-                {
-                    "__id": pdf["__id"].to_numpy(),
-                    "iv": pdf["iv"],
-                    "cell": cellv.astype("int32"),
-                    "dist": distv,
-                }
-            )
-
-    return base.mapInPandas(go, "__id long, iv array<long>, cell int, dist double")
-
-
-def _lloyd_stats_arrow(
-    base: DataFrame, cents: list[list[float]], dim: int, int_scale: int
-) -> dict[int, tuple[int, list[int]]]:
-    """One Lloyd round's sufficient statistics, FUSED into the assignment
-    kernel (r17 optimization): the mapInPandas pass that argmin-routes each
-    batch also folds that batch's per-cell integer sums/counts in NumPy, so
-    what leaves Python is one ≤k-row partial per Arrow batch instead of the
-    dim-exploded corpus (the old posexplode path shuffled 64 rows per
-    vector into the hash aggregate every round). The tiny partials combine
-    in one map-side-combinable groupBy(cell); integer addition is
-    associative, so the global (sum, n) — and the centroid division — are
-    bit-identical to the exploded form. Returns {cell: (n, [s_d])}."""
-    C = [list(map(float, c)) for c in cents]
-
-    def go(batches):
-        import numpy as np
-        import pandas as pd
-
-        acc: dict[int, tuple[int, object]] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            IV = np.array([np.asarray(x, dtype=np.int64) for x in pdf["iv"]])
-            cellv, _ = _argmin_cells(IV, C, dim, int_scale)
-            for c in np.unique(cellv):
-                m = cellv == c
-                n, s = int(m.sum()), IV[m].sum(axis=0)
-                if int(c) in acc:
-                    pn, ps = acc[int(c)]
-                    acc[int(c)] = (pn + n, ps + s)
-                else:
-                    acc[int(c)] = (n, s)
-        if acc:
-            yield pd.DataFrame(
-                {
-                    "cell": list(acc.keys()),
-                    "n": [v[0] for v in acc.values()],
-                    "s": [v[1].tolist() for v in acc.values()],
-                }
-            )
-
-    partials = base.mapInPandas(go, "cell int, n long, s array<long>")
-    # Few-partition inputs (the usual case after catalog.fan_out_vectorized)
-    # collect the ≤k-rows-per-partition partials straight to the driver and
-    # reduce there — no exchange, no AQE stage job per round. Wide layouts
-    # keep the map-side-combinable groupBy so driver traffic stays bounded
-    # by k×dim, not partitions×k×dim. Both reduce the same integer sums in
-    # a different (associative) order — centroids are bit-identical.
-    if base.rdd.getNumPartitions() <= 64:
-        out: dict[int, tuple[int, list[int]]] = {}
-        for r in partials.collect():
-            cell, n, s = int(r["cell"]), int(r["n"]), [int(x) for x in r["s"]]
-            if cell in out:
-                pn, ps = out[cell]
-                out[cell] = (pn + n, [a + b for a, b in zip(ps, s)])
-            else:
-                out[cell] = (n, s)
-        return out
-    rows = (
-        partials.groupBy("cell")
-        .agg(
-            F.sum("n").alias("n"),
-            *[
-                F.sum(F.element_at("s", d + 1)).alias(f"s{d}")
-                for d in range(dim)
-            ],
-        )
-        .collect()
-    )
-    return {
-        int(r["cell"]): (int(r["n"]), [int(r[f"s{d}"]) for d in range(dim)])
-        for r in rows
-    }
-
-
-def _lloyd_stats_exploded(
-    assigned: DataFrame, dim: int
-) -> dict[int, tuple[int, list[int]]]:
-    """The original posexplode statistics path — retained for the
-    zero-Python ``assign_expr`` reference implementation."""
-    stats = (
-        assigned.select("cell", F.posexplode("iv").alias("d", "x"))
-        .groupBy("cell", "d")
-        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    by_cell: dict[int, dict[int, tuple[int, int]]] = {}
-    for r in stats:
-        by_cell.setdefault(int(r.cell), {})[int(r.d)] = (int(r.s), int(r.n))
-    return {
-        cell: (ds[0][1], [ds[d][0] for d in range(dim)])
-        for cell, ds in by_cell.items()
-    }
-
-
-def _lloyd_train(
-    base: DataFrame,
-    k: int,
-    iters: int,
-    dim: int,
-    int_scale: int,
-    assign_impl,
-    stats_impl=None,
-) -> list[list[float]]:
-    """The shared Lloyd loop (MLlib shape): seeds are the k first rows
-    in :func:`_seed_hash` order (deterministic k-means++-style spread —
-    no RNG, hash-decorrelated from id locality, tie-break on id; cell c
-    is the c-th seed in that order on BOTH engines); each round is one
-    fused assignment+partial-sum pass (``stats_impl``, default the Arrow
-    kernel :func:`_lloyd_stats_arrow`) whose only shuffle is the ≤k-row-
-    per-Arrow-batch partials — bytes independent of corpus size — and a
-    k×dim collect to rebuild the driver-side model. Empty cells keep
-    their previous centroid. Returns the trained k×dim centroid list."""
-    seeds = base.orderBy(_seed_hash(F.col("__id")), "__id").limit(k).collect()
-    if len(seeds) < k:
-        raise ValueError(f"corpus has fewer than k={k} vectors")
-    # centroid c[cell][d] as exact double: sum_int / (n * int_scale)
-    cents = [[float(r.iv[d]) / float(int_scale) for d in range(dim)] for r in seeds]
-    if stats_impl is None:
-        # generic fallback: run the caller's assignment and aggregate the
-        # exploded statistics (the expr-reference path keeps this shape)
-        stats_impl = lambda c: _lloyd_stats_exploded(assign_impl(c), dim)  # noqa: E731
-    for _ in range(iters):
-        by_cell = stats_impl(cents)
-        cents = [
-            [
-                float(by_cell[cell][1][d])
-                / (float(by_cell[cell][0]) * float(int_scale))
-                if cell in by_cell
-                else cents[cell][d]  # empty cell keeps its centroid
-                for d in range(dim)
-            ]
-            for cell in range(k)
-        ]
-    return cents
-
-
-def int_vectors_prepared(
+def int_vectors(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     int_scale: int = 1_000_000,
 ) -> DataFrame:
-    """The (__id, iv) integer projection as a caller-owned relation, for
-    sharing ONE persisted copy across a train+encode+serve pipeline
-    (r17: q_ann_pq_recall_trained_cb ran four independent fan_out scans
-    and two private persists of this same projection). Pass the
-    persisted result as ``prepared=`` to :func:`kmeans_fit`,
-    :func:`pq_train` and :func:`ivf_assign_encode`; values are identical
-    to each operator's private projection by construction."""
-    return _int_vectors(df, id_col, vec_col, int_scale)
+    """(__id, iv) projection shared by every k-means/IVF/PQ-training entry
+    point: vectors enter the determinism boundary as floor(x*int_scale)
+    BIGINTs, so all downstream arithmetic has exact integer operands. A
+    train+encode+serve pipeline persists ONE copy and passes it as
+    ``prepared=`` to :func:`kmeans_fit`, :func:`pq_train` and
+    :func:`ivf_assign_encode` (values identical to each operator's
+    private projection by construction)."""
+    return df.select(F.col(id_col).alias("__id"), _iv(F.col(vec_col), int_scale).alias("iv"))
+
+
+def _lloyd_stats(
+    rel: DataFrame, books, int_scale: int
+) -> dict[tuple[int, int], tuple[int, list[int]]]:
+    """One Lloyd round's sufficient statistics for every trainer: ``rel``
+    carries (m int, iv array<long>) rows and ``books[m]`` is the
+    centroid list of book m — k-means trains ONE book (m = 0), PQ trains
+    one book per subspace (m = subspace). Each Arrow batch argmin-routes
+    its rows through :func:`_argmin_cells` (on iv/int_scale) and folds
+    per-(m, code) integer sums/counts in numpy, so what leaves Python is
+    ≤ books×codes partial rows per task instead of the corpus. Few-
+    partition inputs (the usual case after catalog.fan_out_vectorized)
+    collect the partials and reduce on the driver — no exchange, no AQE
+    stage job per round; wide layouts reduce through a map-side-
+    combinable groupBy(m, code) so driver traffic stays bounded by
+    books×codes×width. Integer addition is associative, so every order
+    gives bit-identical centroids. Returns {(m, code): (n, [s_d])}."""
+    import numpy as np
+
+    B = [np.asarray(bk, dtype=np.float64) for bk in books]
+    width = B[0].shape[1]
+
+    def go(batches):
+        import pandas as pd
+
+        acc: dict[tuple[int, int], tuple[int, object]] = {}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            mv = pdf["m"].to_numpy()
+            IV = _vectors(pdf["iv"], "int64")
+            for m in np.unique(mv):
+                iv_m = IV[mv == m]
+                codes, _ = _argmin_cells(iv_m / float(int_scale), B[int(m)])
+                for code in np.unique(codes):
+                    hit = codes == code
+                    key = (int(m), int(code))
+                    pn, ps = acc.get(key, (0, 0))
+                    acc[key] = (pn + int(hit.sum()), ps + iv_m[hit].sum(axis=0))
+        if acc:
+            yield pd.DataFrame(
+                {
+                    "m": [key[0] for key in acc],
+                    "code": [key[1] for key in acc],
+                    "n": [v[0] for v in acc.values()],
+                    "s": [v[1].tolist() for v in acc.values()],
+                }
+            )
+
+    partials = rel.mapInPandas(go, "m int, code int, n long, s array<long>")
+    if rel.rdd.getNumPartitions() <= 64:
+        out: dict[tuple[int, int], tuple[int, list[int]]] = {}
+        for r in partials.collect():
+            key = (r["m"], r["code"])
+            pn, ps = out.get(key, (0, [0] * width))
+            out[key] = (pn + r["n"], [a + b for a, b in zip(ps, r["s"])])
+        return out
+    rows = (
+        partials.groupBy("m", "code")
+        .agg(
+            F.sum("n").alias("n"),
+            *[F.sum(F.element_at("s", d + 1)).alias(f"s{d}") for d in range(width)],
+        )
+        .collect()
+    )
+    return {
+        (r["m"], r["code"]): (r["n"], [r[f"s{d}"] for d in range(width)])
+        for r in rows
+    }
+
+
+def _lloyd(rel: DataFrame, books, iters: int, int_scale: int):
+    """The shared Lloyd loop (MLlib shape): the model (``books``, driver-
+    side metadata) is refit ``iters`` times from :func:`_lloyd_stats` —
+    one fused assignment+partial-sum pass per round whose only shuffle,
+    if any, is the constant-size partials. Centroids are sum/(n·int_scale)
+    doubles (exact integer operands -> one IEEE division, bit-identical
+    in every engine); an empty cell/code keeps its centroid."""
+    for _ in range(iters):
+        stats = _lloyd_stats(rel, books, int_scale)
+        books = [
+            [
+                [
+                    float(stats[(m, c)][1][d])
+                    / (float(stats[(m, c)][0]) * float(int_scale))
+                    for d in range(len(cent))
+                ]
+                if (m, c) in stats
+                else cent
+                for c, cent in enumerate(bk)
+            ]
+            for m, bk in enumerate(books)
+        ]
+    return books
 
 
 def kmeans_fit(
@@ -1046,37 +727,38 @@ def kmeans_fit(
     int_scale: int = 1_000_000,
     prepared: DataFrame | None = None,
 ) -> list[list[float]]:
-    """Train the IVF coarse quantizer and return only the centroid MODEL
-    (k×dim doubles) — the artifact a real index build persists and ships
-    to the serving tier. Same training loop as :func:`kmeans_cells`
-    (identical seeds, assignment kernel, update rule), split out so the
-    trained-index audit can route NEW vectors through
-    :func:`ivf_assign` with the exact arithmetic training used
-    (reference parity: the ETL's enrichment lookups separate the
-    lookup-table BUILD from its APPLY the same way,
-    spring-cloud-kafka-streams-dbz-etl processor topology; here the
-    split is train-vs-serve for the ANN index).
+    """Train the IVF coarse quantizer — Lloyd's k-means, the TRAINING
+    half of the IVF path — and return the centroid MODEL (k×dim
+    doubles), the artifact an index build persists and ships to the
+    serving tier; :func:`ivf_assign` routes vectors with the exact
+    arithmetic training used (reference parity: the ETL's enrichment
+    lookups separate the lookup-table BUILD from its APPLY the same way,
+    spring-cloud-kafka-streams-dbz-etl processor topology).
+
+    Seeds are the k first rows in :func:`_seed_hash` order (deterministic
+    k-means++-style spread — no RNG, hash-decorrelated from id locality,
+    tie-break on id; cell c is the c-th seed on BOTH engines), then
+    ``iters`` rounds of :func:`_lloyd`. Cross-engine determinism is the
+    LSH/PQ integer-vector policy: floor(x·int_scale) BIGINTs, exact-
+    operand centroid divisions, ascending-dimension distance folds,
+    smaller-cell tie-break.
 
     ``k=None`` (the default) sizes the quantizer from the training
     corpus via :func:`ivf_cells_for` — the count() runs on the already-
-    persisted integer projection, so it costs one pass the Lloyd rounds
-    were about to pay for anyway. ``prepared`` (a caller-persisted
-    :func:`int_vectors_prepared` relation) skips the private projection
-    and its persist/unpersist — identical training, shared scan."""
+    persisted integer projection. ``prepared`` (a caller-persisted
+    :func:`int_vectors` relation) skips the private projection and its
+    persist/unpersist — identical training, shared scan."""
     own = prepared is None
-    base = _int_vectors(df, id_col, vec_col, int_scale).persist() if own else prepared
+    base = int_vectors(df, id_col, vec_col, int_scale).persist() if own else prepared
     try:
         if k is None:
             k = ivf_cells_for(base.count())
-        return _lloyd_train(
-            base,
-            k,
-            iters,
-            dim,
-            int_scale,
-            lambda c: _assign_arrow(base, c, dim, int_scale),
-            stats_impl=lambda c: _lloyd_stats_arrow(base, c, dim, int_scale),
-        )
+        seeds = base.orderBy(_seed_hash(F.col("__id")), "__id").limit(k).collect()
+        if len(seeds) < k:
+            raise ValueError(f"corpus has fewer than k={k} vectors")
+        cents = [[float(r.iv[d]) / float(int_scale) for d in range(dim)] for r in seeds]
+        rel = base.select(F.lit(0).alias("m"), "iv")
+        return _lloyd(rel, [cents], iters, int_scale)[0]
     finally:
         if own:
             base.unpersist()
@@ -1087,7 +769,6 @@ def ivf_assign(
     cents: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     int_scale: int = 1_000_000,
 ) -> DataFrame:
     """Serving-time IVF routing: assign each vector to its nearest
@@ -1097,11 +778,33 @@ def ivf_assign(
     This is the routing step a 100 TB index build runs when writing
     cell-partitioned code files, and what q_ann_pq_recall_trained uses
     to route both corpus and probes through trained cells."""
-    base = _int_vectors(df, id_col, vec_col, int_scale)
-    return _assign_arrow(base, cents, dim, int_scale).select(
-        F.col("__id").alias(id_col),
-        F.col("cell").cast("int").alias("cell"),
-        F.round(F.col("dist"), 6).alias("dist"),
+    import numpy as np
+
+    C = np.asarray(cents, dtype=np.float64)
+
+    def go(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            cellv, distv = _argmin_cells(_vectors(pdf["iv"]) / float(int_scale), C)
+            yield pd.DataFrame(
+                {
+                    "__id": pdf["__id"].to_numpy(),
+                    "cell": cellv.astype("int32"),
+                    "dist": distv,
+                }
+            )
+
+    return (
+        int_vectors(df, id_col, vec_col, int_scale)
+        .mapInPandas(go, "__id long, cell int, dist double")
+        .select(
+            F.col("__id").alias(id_col),
+            "cell",
+            F.round(F.col("dist"), 6).alias("dist"),
+        )
     )
 
 
@@ -1111,7 +814,6 @@ def ivf_probe(
     nprobe: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     int_scale: int = 1_000_000,
 ) -> DataFrame:
     """Multi-probe serving-time routing — the standard IVF recall knob:
@@ -1123,21 +825,20 @@ def ivf_probe(
     :func:`ivf_assign`'s cell by construction. One map-only Arrow pass,
     no shuffle — at 100 TB a probe batch routes in milliseconds and the
     downstream ADC scan reads nprobe/n_cells of the code files."""
-    C = [list(map(float, c)) for c in cents]
+    import numpy as np
+
+    C = np.asarray(cents, dtype=np.float64)
     npb = int(nprobe)
     if not 1 <= npb <= len(C):
         raise ValueError(f"nprobe must be in [1, {len(C)}], got {nprobe}")
-    base = _int_vectors(df, id_col, vec_col, int_scale)
 
     def go(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             if not len(pdf):
                 continue
-            IV = np.array([np.asarray(x, dtype=np.int64) for x in pdf["iv"]])
-            dists = _cell_dists(IV, C, dim, int_scale)
+            dists = _cell_dists(_vectors(pdf["iv"]) / float(int_scale), C)
             order = np.argsort(dists, axis=1, kind="stable")[:, :npb]
             ids = pdf["__id"].to_numpy()
             yield pd.DataFrame(
@@ -1150,8 +851,10 @@ def ivf_probe(
                 }
             )
 
-    return base.mapInPandas(go, "__id long, cell int, probe_rank int").select(
-        F.col("__id").alias(id_col), "cell", "probe_rank"
+    return (
+        int_vectors(df, id_col, vec_col, int_scale)
+        .mapInPandas(go, "__id long, cell int, probe_rank int")
+        .select(F.col("__id").alias(id_col), "cell", "probe_rank")
     )
 
 
@@ -1160,19 +863,18 @@ def ivf_probe_pd(
     cents: list[list[float]],
     nprobe: int,
     vec_col: str = "embedding",
-    dim: int = 64,
     int_scale: int = 1_000_000,
 ):
     """Driver-side twin of :func:`ivf_probe` for a control-plane-sized
-    probe set that is ALREADY in pandas (r17: the serving queries ran a
-    full mapInPandas pass plus a shuffle join to route 8 probe rows).
-    Same integerization (floor(x·int_scale) on the double cast), same
-    :func:`_cell_dists` fold, same stable argsort tie-break — the
-    (probe × nprobe) frame is row-for-row the probes⋈ivf_probe join.
-    Appends a ``cell`` int32 column, one row per (probe, probe_rank)."""
+    probe set that is ALREADY in pandas (routing 8 probe rows needs no
+    mapInPandas pass and shuffle join). Same integerization
+    (floor(x·int_scale) on the double cast), same :func:`_cell_dists`
+    fold, same stable argsort tie-break — the (probe × nprobe) frame is
+    row-for-row the probes⋈ivf_probe join. Appends a ``cell`` int32
+    column, one row per (probe, probe_rank)."""
     import numpy as np
 
-    C = [list(map(float, c)) for c in cents]
+    C = np.asarray(cents, dtype=np.float64)
     npb = int(nprobe)
     if not 1 <= npb <= len(C):
         raise ValueError(f"nprobe must be in [1, {len(C)}], got {nprobe}")
@@ -1180,15 +882,8 @@ def ivf_probe_pd(
         out = probes_pd.copy()
         out["cell"] = np.array([], dtype="int32")
         return out
-    IV = np.array(
-        [
-            np.floor(np.asarray(v, dtype=np.float64) * float(int_scale)).astype(
-                np.int64
-            )
-            for v in probes_pd[vec_col]
-        ]
-    )
-    dists = _cell_dists(IV, C, dim, int_scale)
+    IV = np.floor(_vectors(probes_pd[vec_col]) * float(int_scale)).astype(np.int64)
+    dists = _cell_dists(IV / float(int_scale), C)
     order = np.argsort(dists, axis=1, kind="stable")[:, :npb]
     rep = probes_pd.loc[probes_pd.index.repeat(npb)].reset_index(drop=True)
     rep["cell"] = order.reshape(-1).astype("int32")
@@ -1203,93 +898,19 @@ def kmeans_cells(
     vec_col: str = "embedding",
     dim: int = 64,
     int_scale: int = 1_000_000,
-    use_arrow: bool = True,
 ) -> DataFrame:
-    """Lloyd's k-means over the corpus — the TRAINING half of the IVF
-    path (q_ann_ivf/q_ann_ivfpq consume a cell assignment; this is where
-    the cells come from). Returns (id, cell, dist) for the final
-    assignment. :func:`kmeans_fit` exposes the same training loop when
-    only the centroid MODEL is wanted (serving-path routing via
-    :func:`ivf_assign`).
+    """Lloyd's k-means cell assignment of the corpus — the cells
+    q_ann_ivf/q_ann_ivfpq-style consumers block on: :func:`kmeans_fit`
+    trains the model, :func:`ivf_assign` routes the same corpus through
+    it. Returns (id, cell int, dist double ROUND(6)). ``k=None`` sizes
+    the quantizer via :func:`ivf_cells_for`.
 
-    Spark-first iteration shape (the MLlib pattern): the MODEL (k×dim
-    centroids) is driver-side metadata, the DATA never leaves executors.
-    Each round is (a) a map-only argmin assignment — an Arrow batch
-    pass with the centroid matrix broadcast (since r6; the k×dim
-    literal expression tree it replaced paid a multi-second codegen
-    warmup per round and is retained as ``assign_expr``, pinned
-    row-for-row equal) — (b) one groupBy(cell, dim) over exploded
-    integer components to get per-dim sums/counts (map-side combinable,
-    k×dim-row result), (c) a k×dim collect to rebuild the model.
-    Nothing data-sized ever reaches the driver.
-
-    Cross-engine determinism (same policy as LSH/PQ): vectors enter as
-    floor(x·int_scale) BIGINTs, centroids are sum/(n·int_scale) doubles
-    (exact integer operands -> one IEEE division, bit-identical
-    everywhere), distances accumulate (iv/int_scale − c)² in ascending
-    dimension order, argmin tie-breaks on the smaller cell id. Seeds are
-    the first k rows in `_seed_hash` order — deterministic spread, no RNG.
-
-    Scale: per round, the argmin is whole-stage-codegen'd map work and
-    the update is ONE shuffle of k×dim partial sums (bytes independent
-    of corpus size). iters is fixed (production IVF trains on a sample
-    anyway); convergence quality is the standard Lloyd guarantee.
-    ``k=None`` sizes the quantizer via :func:`ivf_cells_for`.
-    """
-    base = _int_vectors(df, id_col, vec_col, int_scale).persist()
-    if k is None:
-        k = ivf_cells_for(base.count())
-
-    def assign_expr(cents_now: list[list[float]]) -> DataFrame:
-        """JVM-expression assignment (the pre-r6 registered form): k×dim
-        inlined literal terms + struct array_min. Kept as the
-        zero-Python reference — pinned row-for-row equal to ``assign``
-        in test_kmeans_assign_arrow_equals_expr."""
-        cands = []
-        for cell, c in enumerate(cents_now):
-            dist = None
-            for d in range(dim):
-                t = F.element_at("iv", d + 1) / F.lit(float(int_scale)) - F.lit(c[d])
-                term = t * t
-                dist = term if dist is None else dist + term
-            cands.append(F.struct(dist.alias("dist"), F.lit(cell).alias("cell")))
-        best = F.array_min(F.array(*cands))
-        return base.select(
-            "__id", "iv", best["cell"].alias("cell"), best["dist"].alias("dist")
-        )
-
-    def assign(cents_now: list[list[float]]) -> DataFrame:
-        """Arrow assignment (registered since r6, same lesson as the
-        ADC/encode/cosine-pair swaps): the k×dim literal tree is
-        interpreted per row and pays a multi-second codegen warmup; the
-        numpy form routes through the shared :func:`_assign_arrow` /
-        :func:`_argmin_cells` kernel — the same batches
-        :func:`ivf_assign` serves with, so training and serving cannot
-        drift. ROUND(6) stays in the JVM caller."""
-        return _assign_arrow(base, cents_now, dim, int_scale)
-
-    assign_impl = assign if use_arrow else assign_expr
-    cents = _lloyd_train(
-        base,
-        k,
-        iters,
-        dim,
-        int_scale,
-        assign_impl,
-        stats_impl=(
-            (lambda c: _lloyd_stats_arrow(base, c, dim, int_scale))
-            if use_arrow
-            else None
-        ),
-    )
-
-    out = assign_impl(cents).select(
-        F.col("__id").alias(id_col),
-        F.col("cell").cast("int").alias("cell"),
-        F.round(F.col("dist"), 6).alias("dist"),
-    )
-    base.unpersist()
-    return out
+    Scale: per training round one map-only Arrow argmin pass plus a
+    constant-size partial-sum reduce (bytes independent of corpus size);
+    the final assignment is one more map pass. Nothing data-sized ever
+    reaches the driver."""
+    cents = kmeans_fit(df, k, iters, id_col, vec_col, dim, int_scale)
+    return ivf_assign(df, cents, id_col, vec_col, int_scale)
 
 
 def blocked_cosine_pairs(
@@ -1414,13 +1035,18 @@ def pair_dots_arrow(
       (zip_with pads with NULLs, one NULL poisons the fold); such pairs
       emit __dp NULL here. Same-length degenerate pairs (including two
       empty vectors: fold over nothing = 0.0) go through the matrix.
+    - Rows whose id or cell key is NULL pair with nothing: inner-join
+      semantics, as the join form's ``a.label = b.label`` and
+      ``a.id < b.id`` (and the oracle's ``ON``) give. They are dropped
+      before the shuffle, so a NULL id never reaches the per-cell sort
+      and NULL keys never form a cell.
 
     Scale: identical shuffle to the groupBy form (each vector moves once
     to its cell); the accumulator is |class|^2 doubles per cell, bounded
     by the blocking scheme, chunked over the row axis past
     ``block_rows``. Row-for-row parity with the join-HOF form is pinned
-    in tests/test_plans.py and fuzz-swept (incl. NaN/zero/ragged rows)
-    in tools/deep_fuzz.py.
+    in tests/test_plans.py and fuzz-swept (incl. NaN/zero/ragged rows and
+    NULL keys) in tools/deep_fuzz.py and tools/measure_pairdots.py.
     """
     import numpy as np
     import pyarrow as pa
@@ -1504,6 +1130,7 @@ def pair_dots_arrow(
 
     return (
         e.select(cell_col, id_col, vec_col)
+        .filter(F.col(cell_col).isNotNull() & F.col(id_col).isNotNull())
         .repartition(cell_col)
         .mapInArrow(cell_dots, out_schema)
     )
@@ -1530,51 +1157,41 @@ def pq_train(
     lattice codebook (q_ann_pq_recall_trained measured the lattice's ADC
     noise as the binding recall loss; training the codebooks recovers
     it: see q_ann_pq_recall_trained_cb). Vectors explode into
-    (id, m, integer-subvector) rows — m is a COLUMN, not a loop — so
-    every round is one Arrow argmin pass over all subspaces at once
-    (per-m centroid slices of the broadcast tensor, the same
-    :func:`_cell_dists` fold as cell training) plus ONE
-    groupBy(m, code, d) shuffle whose result is subspaces×k×sub rows
-    regardless of corpus size. Returns codebooks[m][code] as sub-dim
-    float lists.
+    (m, integer-subvector) rows — m is a COLUMN, not a loop — so every
+    round is one :func:`_lloyd` pass over all subspaces at once, the
+    same kernel and reduce as cell training with one book per subspace.
+    Returns codebooks[m][code] as sub-dim float lists.
 
-    Cross-engine determinism (the kmeans_cells policy, subspace-wise):
+    Cross-engine determinism (the k-means policy, subspace-wise):
     integer subvectors floor(x*int_scale), centroids sum/(n*int_scale)
     exact divisions, ascending-d folds, argmin-first = smaller-code
     tie-break, seeds = the first k distinct ``id_col`` values in
-    `_seed_hash` order (subvectors ranked per m by that order). Empty
-    codes keep their centroid. The DuckDB
+    `_seed_hash` order. Empty codes keep their centroid. The DuckDB
     twin is the relational chain in queries/similarity._pq_train_cte_chain.
     """
     sub = dim // subspaces
-    base = (
-        _int_vectors(df, id_col, vec_col, int_scale) if prepared is None else prepared
-    )
+    base = int_vectors(df, id_col, vec_col, int_scale) if prepared is None else prepared
     slices = F.array(
         *[
             F.struct(
                 F.lit(m).cast("int").alias("m"),
-                F.slice("iv", m * sub + 1, sub).alias("siv"),
+                F.slice("iv", m * sub + 1, sub).alias("iv"),
             )
             for m in range(subspaces)
         ]
     )
     sv = (
-        base.select("__id", F.explode(slices).alias("x"))
-        .select("__id", F.col("x.m").alias("m"), F.col("x.siv").alias("siv"))
+        base.select(F.explode(slices).alias("x"))
+        .select(F.col("x.m").alias("m"), F.col("x.iv").alias("iv"))
         .persist()
     )
     try:
-        # Seed IDS first, subvectors second (ADVICE r10: the old
-        # limit(k*subspaces) over (__id, m) rows assumed unique ids with
-        # exactly `subspaces` rows each — a duplicate id could leave
-        # None codebook slots). Ranks follow _seed_hash order, the same
-        # deterministic spread the cell trainer uses. r17: both seed jobs
-        # run on the UNEXPLODED base (k full iv rows slice locally into
-        # the k×subspaces subvectors — identical values, 1/subspaces the
-        # scanned rows); the duplicate-id raise is preserved verbatim
-        # (base.filter(isin) yields >k rows iff a seed id repeats).
-        # (Row.__id needs item access — PySpark blocks dunder attributes.)
+        # Seed IDS first, subvectors second: a duplicate id must raise,
+        # never leave None codebook slots. Both seed jobs run on the
+        # UNEXPLODED base (k full iv rows slice locally into the
+        # k×subspaces subvectors); base.filter(isin) yields >k rows iff a
+        # seed id repeats. (Row.__id needs item access — PySpark blocks
+        # dunder attributes.)
         seed_ids = [
             r["__id"]
             for r in base.select("__id")
@@ -1600,102 +1217,7 @@ def pq_train(
                     float(x) / float(int_scale)
                     for x in r.iv[m * sub : (m + 1) * sub]
                 ]
-
-        def stats_pass(
-            cb_now: list[list[list[float]]],
-        ) -> dict[tuple[int, int], tuple[int, list[int]]]:
-            """One PQ Lloyd round's sufficient statistics, fused into the
-            per-subspace argmin kernel (r17 optimization — the kmeans
-            `_lloyd_stats_arrow` shape over (m, code)): each Arrow batch
-            leaves Python as ≤subspaces×k partial-sum rows instead of the
-            sub-dim-exploded subvector relation; the combinable
-            groupBy(m, code) reduces them, and integer-sum associativity
-            keeps the centroid divisions bit-identical."""
-            C = [[list(map(float, c)) for c in bk] for bk in cb_now]
-
-            def go(batches):
-                import numpy as np
-                import pandas as pd
-
-                acc: dict[tuple[int, int], tuple[int, object]] = {}
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    mv = pdf["m"].to_numpy()
-                    IVS = np.array(
-                        [np.asarray(x, dtype=np.int64) for x in pdf["siv"]]
-                    )
-                    for m in np.unique(mv):
-                        mask = mv == m
-                        sub_iv = IVS[mask]
-                        cm, _ = _argmin_cells(sub_iv, C[int(m)], sub, int_scale)
-                        for code in np.unique(cm):
-                            mm = cm == code
-                            key = (int(m), int(code))
-                            n, s = int(mm.sum()), sub_iv[mm].sum(axis=0)
-                            if key in acc:
-                                pn, ps = acc[key]
-                                acc[key] = (pn + n, ps + s)
-                            else:
-                                acc[key] = (n, s)
-                if acc:
-                    yield pd.DataFrame(
-                        {
-                            "m": [k_[0] for k_ in acc],
-                            "code": [k_[1] for k_ in acc],
-                            "n": [v[0] for v in acc.values()],
-                            "s": [v[1].tolist() for v in acc.values()],
-                        }
-                    )
-
-            partials = sv.mapInPandas(go, "m int, code int, n long, s array<long>")
-            # same few-partition driver reduction as _lloyd_stats_arrow
-            if sv.rdd.getNumPartitions() <= 64:
-                out: dict[tuple[int, int], tuple[int, list[int]]] = {}
-                for r in partials.collect():
-                    key = (int(r["m"]), int(r["code"]))
-                    n, s = int(r["n"]), [int(x) for x in r["s"]]
-                    if key in out:
-                        pn, ps = out[key]
-                        out[key] = (pn + n, [a + b for a, b in zip(ps, s)])
-                    else:
-                        out[key] = (n, s)
-                return out
-            rows = (
-                partials.groupBy("m", "code")
-                .agg(
-                    F.sum("n").alias("n"),
-                    *[
-                        F.sum(F.element_at("s", d + 1)).alias(f"s{d}")
-                        for d in range(sub)
-                    ],
-                )
-                .collect()
-            )
-            return {
-                (int(r["m"]), int(r["code"])): (
-                    int(r["n"]),
-                    [int(r[f"s{d}"]) for d in range(sub)],
-                )
-                for r in rows
-            }
-
-        for _ in range(iters):
-            by_mc = stats_pass(cb)
-            cb = [
-                [
-                    [
-                        float(by_mc[(m, code)][1][d])
-                        / (float(by_mc[(m, code)][0]) * float(int_scale))
-                        if (m, code) in by_mc
-                        else cb[m][code][d]  # empty code keeps its centroid
-                        for d in range(sub)
-                    ]
-                    for code in range(k)
-                ]
-                for m in range(subspaces)
-            ]
-        return cb
+        return _lloyd(sv, cb, iters, int_scale)
     finally:
         sv.unpersist()
 
@@ -1708,59 +1230,15 @@ def pq_encode_cb(
     int_scale: int = 1_000_000,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Encode against TRAINED codebooks (:func:`pq_train`) — same Arrow
-    shape as :func:`pq_encode`, but the input enters as iv/int_scale
-    doubles (the space the codebooks were trained in, via the same
-    :func:`_cell_dists` fold), so encode distance and training distance
-    are bit-compatible. Returns (id, *keep_cols, pq_codes 'c0,...',
-    recon_err ROUND(6)); ties break to the smaller code (argmin-first).
+    """Encode against TRAINED codebooks (:func:`pq_train`) — the shared
+    :func:`_pq_encode` pass of :func:`pq_encode`, with the input entering
+    as iv/int_scale doubles (the space the codebooks were trained in), so
+    encode distance and training distance are bit-compatible. Returns
+    (id, *keep_cols, pq_codes 'c0,...', recon_err ROUND(6)); ties break
+    to the smaller code (argmin-first).
     """
-    subspaces = len(codebooks)
-    sub = len(codebooks[0][0])
-    C = [[list(map(float, c)) for c in bk] for bk in codebooks]
-    iv = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * float(int_scale)).cast("long"),
-    )
-    in_cols = [F.col(id_col), *[F.col(c) for c in keep_cols], iv.alias("__iv")]
-    base = df.select(*in_cols)
-    keep_schema = "".join(
-        f", {c} {df.schema[c].dataType.simpleString()}" for c in keep_cols
-    )
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            IV = np.array([np.asarray(x, dtype=np.int64) for x in pdf["__iv"]])
-            n = len(IV)
-            codes = np.empty((n, subspaces), dtype=np.int64)
-            recon = np.zeros(n)
-            for m in range(subspaces):
-                cm, dm = _argmin_cells(
-                    IV[:, m * sub : (m + 1) * sub], C[m], sub, int_scale
-                )
-                codes[:, m] = cm
-                recon = recon + dm  # ascending-m left fold
-            out = {id_col: pdf[id_col].to_numpy()}
-            for c in keep_cols:
-                out[c] = pdf[c]
-            out["pq_codes"] = [",".join(str(int(x)) for x in row) for row in codes]
-            out["recon_err"] = recon
-            yield pd.DataFrame(out)
-
-    enc_df = base.mapInPandas(
-        enc,
-        f"{id_col} long{keep_schema}, pq_codes string, recon_err double",
-    )
-    return enc_df.select(
-        id_col,
-        *keep_cols,
-        "pq_codes",
-        F.round(F.col("recon_err"), 6).alias("recon_err"),
+    return _pq_encode(
+        df, _iv(F.col(vec_col), int_scale), codebooks, id_col, keep_cols, int_scale
     )
 
 
@@ -1770,51 +1248,39 @@ def ivf_assign_encode(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     int_scale: int = 1_000_000,
     prepared: DataFrame | None = None,
 ) -> DataFrame:
     """:func:`ivf_assign` ⋈ :func:`pq_encode_cb` fused into ONE Arrow
-    pass (r17 optimization): the index build routes each vector to its
-    trained cell AND encodes it against the trained codebooks from the
-    same in-memory batch, emitting (id, cell, pq_codes) directly — the
-    join-on-id shuffle between the two former passes disappears (the id
-    is unique, so the join result is exactly this row set). Cell argmin
-    and per-subspace code argmin are the identical `_argmin_cells`
-    kernels the split operators use, so every value is unchanged. At
-    100 TB this is the difference between scanning the corpus twice plus
-    shuffling it once, and scanning it once."""
-    base = (
-        _int_vectors(df, id_col, vec_col, int_scale) if prepared is None else prepared
-    )
-    subspaces = len(codebooks)
-    sub = len(codebooks[0][0])
-    C = [list(map(float, c)) for c in cents]
-    CB = [[list(map(float, c)) for c in bk] for bk in codebooks]
+    pass: the index build routes each vector to its trained cell AND
+    encodes it against the trained codebooks from the same in-memory
+    batch, emitting (id, cell, pq_codes) directly — no join-on-id
+    shuffle between two passes (the id is unique, so the join result is
+    exactly this row set). Cell argmin and per-subspace code argmin are
+    the identical :func:`_argmin_cells` / :func:`_pq_codes` kernels the
+    split operators use, so every value is unchanged. At 100 TB this is
+    the difference between scanning the corpus twice plus shuffling it
+    once, and scanning it once."""
+    import numpy as np
+
+    base = int_vectors(df, id_col, vec_col, int_scale) if prepared is None else prepared
+    C = np.asarray(cents, dtype=np.float64)
+    CB = np.asarray(codebooks, dtype=np.float64)
 
     def go(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             if not len(pdf):
                 continue
-            IV = np.array([np.asarray(x, dtype=np.int64) for x in pdf["iv"]])
-            cellv, _ = _argmin_cells(IV, C, dim, int_scale)
-            n = len(IV)
-            codes = np.empty((n, subspaces), dtype=np.int64)
-            for m in range(subspaces):
-                cm, _dm = _argmin_cells(
-                    IV[:, m * sub : (m + 1) * sub], CB[m], sub, int_scale
-                )
-                codes[:, m] = cm
+            X = _vectors(pdf["iv"]) / float(int_scale)
+            cellv, _ = _argmin_cells(X, C)
+            codes, _ = _pq_codes(X, CB)
             yield pd.DataFrame(
                 {
                     "__id": pdf["__id"].to_numpy(),
                     "cell": cellv.astype("int32"),
-                    "pq_codes": [
-                        ",".join(str(int(x)) for x in row) for row in codes
-                    ],
+                    "pq_codes": _code_strings(codes),
                 }
             )
 
@@ -1833,37 +1299,12 @@ def pq_adc_topk_cb(
     vec_col: str = "embedding",
     cell_col: str | None = None,
 ) -> DataFrame:
-    """Asymmetric-distance top-k against TRAINED codebooks: probe LUTs
-    build driver-side from iv/int_scale probe subvectors vs the trained
-    tensor (ascending-d explicit adds — the list_sum order), then the
-    scan/rank tail is the SHARED :func:`_adc_rank` (identical to the
-    lattice server), so only the LUT source differs between the two."""
+    """Asymmetric-distance top-k against TRAINED codebooks: probes enter
+    as floor(x·int_scale)/int_scale doubles (the training space), then
+    LUT build, scan and rank are the SHARED :func:`_adc_rank` of the
+    lattice server :func:`pq_adc_topk` — only the probe vectors and the
+    codebook tensor differ between the two."""
     import numpy as np
 
-    subspaces = len(codebooks)
-    sub = len(codebooks[0][0])
-    if not len(queries_pd):
-        return codes.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, adc_dist double, rank int"
-        )
-    n_codes = len(codebooks[0])
-    luts = np.zeros((len(queries_pd), subspaces, n_codes))
-    qids: list[int] = []
-    qcells: list = []
-    for qi, (_, q) in enumerate(queries_pd.iterrows()):
-        qiv = [
-            float(np.floor(float(x) * int_scale)) / float(int_scale)
-            for x in q[vec_col]
-        ]
-        qids.append(int(q[id_col]))
-        if cell_col is not None:
-            cell = q[cell_col]
-            qcells.append(cell.item() if hasattr(cell, "item") else cell)
-        for m in range(subspaces):
-            seg = qiv[m * sub : (m + 1) * sub]
-            for kk in range(n_codes):
-                c = codebooks[m][kk]
-                luts[qi, m, kk] = sum(
-                    (seg[d] - c[d]) * (seg[d] - c[d]) for d in range(sub)
-                )
-    return _adc_rank(codes, luts, qids, qcells, cell_col, k, id_col)
+    Q = np.floor(_vectors(queries_pd[vec_col]) * int_scale) / float(int_scale)
+    return _adc_rank(queries_pd, Q, codebooks, codes, k, id_col, cell_col)

@@ -503,7 +503,7 @@ SIMHASH_BLOCK_BITS = SIMHASH64_WIDTH // SIMHASH_BLOCKS  # 16
 
 def _simhash64_fp_cte() -> str:
     """CTEs t/h/s/f64 ending in f64(doc_id, simhash BIGINT) — DuckDB twin
-    of ``operators.dedup.simhash_bits(width=64)``: bit j's vote is bit
+    of ``operators.dedup.simhash_bits_arrow(width=64)``: bit j's vote is bit
     (j % 4) of md5-hex nibble j // 4; bit 63 assembles via two's
     complement (-2^63) so both engines agree on the signed BIGINT."""
     votes = ",\n    ".join(
@@ -569,11 +569,11 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The fingerprint runs as the Arrow map-side form
     (``simhash_bits_arrow``): measured 1.4-1.8x over the JVM
-    explode+64-vote-agg twin with the gap widening in corpus size
-    (tools/measure_simhash.py), bit-identical fingerprints — the vote
-    sums are exact integers, so Arrow batch order can't matter, and the
-    sign/assembly rules are shared. The JVM form stays as
-    ``simhash_bits``, parity-pinned in tests/test_plans.py."""
+    explode+64-vote-agg form it replaced, with the gap widening in
+    corpus size — the vote sums are exact integers, so Arrow batch
+    order can't matter. The oracle below is the reference; the vote
+    scheme is also pinned against a plain-Python model in
+    tests/test_properties.py."""
     from ..operators.dedup import simhash_bits_arrow
 
     tune(spark)

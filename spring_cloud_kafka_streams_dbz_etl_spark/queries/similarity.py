@@ -372,8 +372,8 @@ FROM dd
 def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization of the embedding corpus (8 subspaces x 16
     codes over 64-d): each vector compresses to 8 nibble codes (32x) plus
-    its reconstruction error. Pure map over the scan — array expressions +
-    struct array_min argmin, zero Python, zero shuffle (the billion-vector
+    its reconstruction error. Pure map over the scan — one Arrow batch
+    pass of the shared argmin kernel, zero shuffle (the billion-vector
     memory-cut path; see operators/similarity.py::pq_encode).
 
     Oracle: identical split/assign/argmin restated over DuckDB list
@@ -429,9 +429,9 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     side of a serving request, not a data-path collect), and every probe
     scores in ONE pass over the codes relation. Scoring is an Arrow
     mapInPandas LUT gather — measured 2.4-3.2x faster than the inlined
-    literal-expression tree it replaced (tools/measure_adc.py), with
-    bit-identical results since the rounding and rank window stay JVM-side
-    (see operators/similarity.py::pq_adc_topk vs pq_adc_topk_expr).
+    literal-expression tree it replaced, with the rounding and rank
+    window JVM-side (see operators/similarity.py::pq_adc_topk; the LUT
+    builder and scan are shared with the trained-codebook server).
 
     Scale: raw vectors are never touched after encode; distance is 8
     vectorized array gathers per (probe, batch), map-only until the tiny
@@ -764,12 +764,14 @@ def q_ann_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("q_kmeans_cells", oracle=_kmeans_oracle())
 def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed k-means — the TRAINING half of the IVF path (the cell
-    assignments q_ann_ivf / q_ann_ivfpq consume). Lloyd's algorithm in
+    assignments q_ann_ivf / q_ann_ivfpq consume): kmeans_fit trains the
+    model, ivf_assign routes the corpus through it. Lloyd's algorithm in
     the MLlib shape: the k x 64 centroid MODEL lives driver-side and is
-    inlined as literals into a map-only argmin assignment; the update is
-    one groupBy(cell, dim) over exploded integer components whose result
-    is k x dim rows regardless of corpus size — data never reaches the
-    driver, shuffle bytes are constant per round.
+    shipped to a map-only Arrow argmin pass that also folds per-cell
+    integer partial sums per task; the partials (at most k rows per task,
+    regardless of corpus size) reduce on the driver or in one combinable
+    groupBy(cell) — data never reaches the driver, reduce bytes are
+    constant per round.
 
     Cross-engine determinism (the LSH/PQ policy): integer vectors
     floor(x*1e6), centroids sum/(n*1e6) as one exact-operand IEEE
@@ -2579,7 +2581,7 @@ def q_ann_pq_recall_trained_cb(spark: SparkSession, sf_dir: str) -> DataFrame:
     one constant-shuffle Lloyd over exploded subvectors at build
     time."""
     from ..operators.similarity import (
-        int_vectors_prepared,
+        int_vectors,
         ivf_assign_encode,
         ivf_probe_pd,
         kmeans_fit,
@@ -2598,7 +2600,7 @@ def q_ann_pq_recall_trained_cb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan_out scans, two private persists, and a corpus join-on-id between
     # assignment and encode — see ivf_assign_encode); partitioning derives
     # from input bytes, not core count (catalog.fan_out_vectorized).
-    base = cache_scoped(int_vectors_prepared(fan_out_vectorized(e, spark)))
+    base = cache_scoped(int_vectors(fan_out_vectorized(e, spark)))
     cents = kmeans_fit(e, prepared=base)
     cb = pq_train(e, prepared=base)
 

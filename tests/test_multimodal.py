@@ -108,23 +108,6 @@ def test_frame_sample(spark, sf_smoke):
     assert len(rows) == expected
 
 
-def test_pandas_topk_matches_builtin(spark, sf_smoke):
-    """The BLAS mapInPandas scoring path agrees with the codegen path on
-    neighbor sets (scores may differ in last ulp)."""
-    from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
-        brute_force_topk,
-        pandas_topk_scores,
-    )
-
-    e = table(spark, sf_smoke, "embeddings")
-    queries_pd = e.filter(F.col("vec_id") < 4).toPandas()
-    builtin = brute_force_topk(e.filter(F.col("vec_id") < 4), e, k=5)
-    pandas_path = pandas_topk_scores(queries_pd, e, k=5)
-    b = {(r.query_id, r.neighbor_id) for r in builtin.collect()}
-    p = {(r.query_id, r.neighbor_id) for r in pandas_path.collect()}
-    assert b == p
-
-
 def test_resize_media_dims_and_bytes(spark, sf_smoke):
     from spring_cloud_kafka_streams_dbz_etl_spark.operators.multimodal import (
         resize_media,

@@ -126,6 +126,27 @@ def test_cdc_parse_codec_stays_above_fanout_exchange(spark, sf_smoke):
     assert "StructsToJson" not in below, below[:2000]
 
 
+def test_cdc_parse_evaluates_from_json_once(spark, sf_smoke):
+    """eval_once pins the envelope codec to ONE from_json evaluation per
+    row in both CDC parse plans — the batch parse (sources/cdc.py) and
+    the DLQ-keeping stream parse (streaming/pipeline.py). Without the
+    guard Catalyst inlines the envelope alias into every referencing
+    filter and projected field (3 and 6 evaluations respectively)."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
+        parse_event_envelopes,
+        synthesize_event_envelopes,
+    )
+    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        _parse_keep_original,
+    )
+
+    src = spark.read.parquet(f"{sf_smoke}/events.parquet").repartition(8)
+    raw = synthesize_event_envelopes(src)
+    for df in (parse_event_envelopes(raw), _parse_keep_original(raw)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("from_json(") == 1, plan[:3000]
+
+
 def test_doc_chunks_generate_only_no_shuffle(spark, sf_smoke):
     from spring_cloud_kafka_streams_dbz_etl_spark.plans import explain_str
 
@@ -404,7 +425,7 @@ def test_pq_encode_matches_numpy_and_is_map_only(spark, sf_smoke):
     """PQ assignment == numpy brute-force argmin over the same codebooks;
     plan is a shuffle-free map whose only Python boundary is the single
     Arrow mapInPandas batch stream (the 100 TB contract — no Exchange,
-    no per-row Python; the JVM HOF form is pinned separately below)."""
+    no per-row Python)."""
     import numpy as np
 
     from spring_cloud_kafka_streams_dbz_etl_spark.catalog import table
@@ -1103,51 +1124,6 @@ def test_ts_similarity_single_rollup_then_topk(spark, sf_smoke):
     assert "CartesianProduct" not in text and "SortMergeJoin" not in text, text[:2000]
 
 
-def test_pq_encode_expr_is_python_free(spark, sf_smoke):
-    """The retained JVM HOF encode variant stays shuffle-free AND
-    Python-free, and matches the registered Arrow form row-for-row —
-    the bit-identical guarantee the r6 swap rests on."""
-    from spring_cloud_kafka_streams_dbz_etl_spark.catalog import table
-    from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
-        pq_encode,
-        pq_encode_expr,
-    )
-    from spring_cloud_kafka_streams_dbz_etl_spark.plans import explain_str
-
-    e = table(spark, sf_smoke, "embeddings").limit(200)
-    expr = pq_encode_expr(e)
-    text = explain_str(expr)
-    assert "Exchange" not in text, text[:2000]
-    assert "MapInPandas" not in text and "BatchEvalPython" not in text
-    arrow = pq_encode(e)
-    assert expr.exceptAll(arrow).count() == 0
-    assert arrow.exceptAll(expr).count() == 0
-
-
-def test_pq_adc_arrow_equals_expr_form(spark, sf_smoke):
-    """The registered Arrow ADC scorer must agree with the retained
-    JVM expression form row-for-row (ids, rounded distances, ranks) —
-    the bit-identical guarantee the r6 swap rests on, with and without
-    IVF cell restriction."""
-    from spring_cloud_kafka_streams_dbz_etl_spark.catalog import table
-    from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
-        pq_adc_topk,
-        pq_adc_topk_expr,
-        pq_encode,
-    )
-    from pyspark.sql import functions as F
-
-    e = table(spark, sf_smoke, "embeddings")
-    probes = e.filter(F.col("vec_id") < 5).toPandas()
-    codes = pq_encode(e, keep_cols=("label",)).select(
-        "vec_id", "label", "pq_codes"
-    )
-    for cell in (None, "label"):
-        a = pq_adc_topk(probes, codes, k=10, cell_col=cell)
-        b = pq_adc_topk_expr(probes, codes, k=10, cell_col=cell)
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, cell
-
-
 def test_blocked_cosine_pairs_equals_join_form(spark, sf_smoke):
     """The per-cell Arrow pair generator must agree with the join-HOF
     form row-for-row (ids, cells, rounded cosines) — the bit-compatible
@@ -1186,27 +1162,59 @@ def test_blocked_cosine_pairs_equals_join_form(spark, sf_smoke):
     assert join_form.exceptAll(arrow).count() == 0
 
 
-def test_kmeans_assign_arrow_equals_expr(spark, sf_smoke):
-    """The Arrow k-means assignment must reproduce the JVM literal-tree
-    form end-to-end — both Lloyd iterations AND the final assignment —
-    row-for-row (ids, cells, rounded distances): same ascending-d fold,
-    same argmin-first smaller-cell tie-break."""
-    from spring_cloud_kafka_streams_dbz_etl_spark.catalog import table
+def test_pair_dots_arrow_null_keys_match_join_form(spark):
+    """Rows with a NULL id or a NULL cell key pair with nothing — the
+    inner-join semantics of the join form (``a.label = b.label`` and
+    ``a.id < b.id``) and of the oracles' ``ON``. The kernel must neither
+    abort its task sorting a NULL id nor let NULL keys form a cell;
+    undirected and directed emission match the join form pair-for-pair
+    with bit-identical rounded cosines (repr: None, NaN and floats are
+    all distinct)."""
+    from pyspark.sql import functions as F
+
+    from spring_cloud_kafka_streams_dbz_etl_spark.functions.vector import (
+        cosine_from_dot,
+        cosine_pre,
+        l2_norm,
+    )
     from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
-        kmeans_cells,
+        pair_dots_arrow,
     )
 
-    e = table(spark, sf_smoke, "embeddings")
-    arrow = kmeans_cells(e, use_arrow=True)
-    expr = kmeans_cells(e, use_arrow=False)
-    assert arrow.exceptAll(expr).count() == 0
-    assert expr.exceptAll(arrow).count() == 0
+    rows = [
+        (1, 0, [1.0, 0.0]), (2, 0, [0.5, 0.5]), (None, 0, [0.2, 0.9]),
+        (3, 0, [0.0, 1.0]), (4, None, [1.0, 1.0]), (5, None, [0.3, 0.1]),
+        (None, None, [0.7, 0.7]), (6, 1, [0.1, 0.2]), (7, 1, None),
+        (None, 1, [1.0, 0.0]), (8, 1, [0.4, float("nan")]), (9, 1, [0.4, 0.4]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, label int, v array<double>")
+
+    def side(s):
+        return df.select(
+            F.col("vec_id").alias(f"i{s}"), "label",
+            F.col("v").alias(f"v{s}"), l2_norm(F.col("v")).alias(f"n{s}"),
+        )
+
+    joined = side("a").join(side("b"), "label")
+    for directed in (False, True):
+        keep = F.col("ia") != F.col("ib") if directed else F.col("ia") < F.col("ib")
+        join_form = joined.filter(keep).select(
+            "ia", "ib",
+            cosine_pre(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")),
+        )
+        arrow = pair_dots_arrow(df, directed=directed).select(
+            "vec_id_a", "vec_id_b",
+            cosine_from_dot(F.col("__dp"), F.col("__na"), F.col("__nb")),
+        )
+        want = sorted(repr(tuple(r)) for r in join_form.collect())
+        assert len(want) == (18 if directed else 9)
+        assert sorted(repr(tuple(r)) for r in arrow.collect()) == want, directed
 
 
 def test_kmeans_fit_plus_ivf_assign_equals_kmeans_cells(spark, sf_smoke):
-    """Parity pin on the r10 train/serve split: kmeans_fit (model out)
+    """Parity pin on the train/serve split: kmeans_fit (model out)
     followed by ivf_assign (serving-time routing through the SAME
-    _argmin_cells kernel) must reproduce kmeans_cells' fused output
+    _argmin_cells kernel) must reproduce kmeans_cells' output
     row-for-row — ids, cells, rounded distances. This is the no-drift
     guarantee q_ann_pq_recall_trained's cell routing stands on."""
     from spring_cloud_kafka_streams_dbz_etl_spark.catalog import table
@@ -1287,45 +1295,6 @@ def test_ann_pq_recall_exact_side_is_broadcast_map_only(spark, sf_smoke):
     assert "BroadcastNestedLoopJoin" in text, text[:2000]
     assert "CartesianProduct" not in text, text[:2000]
     assert "MapInPandas" in text, text[:2000]
-
-
-def test_simhash_arrow_equals_jvm_form(spark, sf_smoke):
-    """The registered Arrow SimHash fingerprint must agree with the
-    retained JVM explode+vote-agg form row-for-row — the bit-identical
-    guarantee the r8 swap rests on — including empty/NULL token arrays
-    (dropped, explode semantics) and NULL token elements (all-bits −1
-    vote, the JVM NULL-md5 chain) — and must plan with ZERO exchanges
-    (the fingerprint is per-doc local; the JVM form's groupBy never
-    needed to be a shuffle)."""
-    from pyspark.sql import functions as F
-
-    from spring_cloud_kafka_streams_dbz_etl_spark.catalog import table
-    from spring_cloud_kafka_streams_dbz_etl_spark.operators.dedup import (
-        simhash_bits,
-        simhash_bits_arrow,
-    )
-    from spring_cloud_kafka_streams_dbz_etl_spark.plans import explain_str
-
-    d = table(spark, sf_smoke, "documents").select(
-        "doc_id", F.array_distinct(F.split(F.col("text"), " ")).alias("toks")
-    )
-    edge = spark.createDataFrame(
-        [
-            (100001, []),
-            (100002, None),
-            (100003, ["alpha", None, "beta"]),
-            (100004, [None]),
-        ],
-        "doc_id long, toks array<string>",
-    )
-    d = d.unionByName(edge)
-    for width in (64, 40):
-        a = simhash_bits_arrow(d, "doc_id", "toks", width=width)
-        j = simhash_bits(d, "doc_id", "toks", width=width)
-        assert a.exceptAll(j).count() == 0 and j.exceptAll(a).count() == 0, width
-    assert "Exchange" not in explain_str(
-        simhash_bits_arrow(d, "doc_id", "toks")
-    )
 
 
 def test_hard_negatives_served_plan_is_cell_pruned_no_cross(spark, sf_smoke):

@@ -458,56 +458,74 @@ def test_simhash_width_for_tracks_corpus_size():
     assert widths == sorted(widths)
 
 
-def test_simhash_bits_matches_python_model(spark):
-    """simhash_bits(width=64) equals a direct Python computation of the
-    same nibble-bit vote scheme, including the sign-bit (two's complement)
-    assembly for bit 63."""
+def _simhash_model(toks, width=64):
+    """Plain-Python SimHash: bit j's vote is bit (j % 4) of md5-hex nibble
+    j // 4, one vote per token occurrence; a NULL token votes -1 on every
+    bit; a bit is set on a strictly positive sum; bit 63 is the BIGINT
+    sign bit (two's complement)."""
     import hashlib
 
-    from spring_cloud_kafka_streams_dbz_etl_spark.operators.dedup import simhash_bits
+    votes = [0] * width
+    for t in toks:
+        hx = hashlib.md5(t.encode()).hexdigest() if t is not None else "0" * 32
+        for j in range(width):
+            nib = int(hx[j // 4], 16)
+            votes[j] += 1 if (nib >> (j % 4)) & 1 else -1
+    fp = sum(1 << j for j in range(min(width, 63)) if votes[j] > 0)
+    if width == 64 and votes[63] > 0:
+        fp += -(1 << 63)
+    return fp
 
-    docs = [
-        (1, ["alpha", "beta", "gamma"]),
-        (2, ["alpha", "beta", "gamma", "delta"]),
-        (3, ["zed"]),
-    ]
 
-    def model(toks):
-        votes = [0] * 64
-        for t in set(toks):
-            hx = hashlib.md5(t.encode()).hexdigest()
-            for j in range(64):
-                nib = int(hx[j // 4], 16)
-                votes[j] += 1 if (nib >> (j % 4)) & 1 else -1
-        fp = 0
-        for j in range(63):
-            if votes[j] > 0:
-                fp += 1 << j
-        if votes[63] > 0:
-            fp += -(1 << 63)
-        return fp
+def test_simhash_bits_matches_python_model(spark, sf_smoke):
+    """simhash_bits_arrow equals the plain-Python vote model at full and
+    partial widths, on the fixture corpus plus the edge rows: empty and
+    NULL token arrays are dropped (explode semantics), a NULL token
+    votes -1 on every bit. The fingerprint is per-doc local, so the plan
+    carries no Exchange."""
+    from pyspark.sql import functions as F
 
+    from spring_cloud_kafka_streams_dbz_etl_spark.catalog import table
     from spring_cloud_kafka_streams_dbz_etl_spark.operators.dedup import (
         simhash_bits_arrow,
     )
+    from spring_cloud_kafka_streams_dbz_etl_spark.plans import explain_str
 
-    df = spark.createDataFrame(docs, "doc_id long, toks array<string>")
-    for op in (simhash_bits, simhash_bits_arrow):
-        got = {r.doc_id: r.simhash for r in op(df, "doc_id", "toks").collect()}
-        for doc_id, toks in docs:
-            assert got[doc_id] == model(toks), (op.__name__, doc_id)
+    edge = [
+        (1, ["alpha", "beta", "gamma"]),
+        (2, ["alpha", "beta", "gamma", "delta"]),
+        (3, ["zed"]),
+        (100001, []),
+        (100002, None),
+        (100003, ["alpha", None, "beta"]),
+        (100004, [None]),
+    ]
+    corpus = table(spark, sf_smoke, "documents").select(
+        "doc_id", F.array_distinct(F.split(F.col("text"), " ")).alias("toks")
+    )
+    df = corpus.unionByName(
+        spark.createDataFrame(edge, "doc_id long, toks array<string>")
+    )
+    docs = [(r.doc_id, r.toks) for r in df.collect()]
+    for width in (64, 40):
+        got = {
+            r.doc_id: r.simhash
+            for r in simhash_bits_arrow(df, "doc_id", "toks", width=width).collect()
+        }
+        want = {i: _simhash_model(t, width) for i, t in docs if t}
+        assert got == want, width
+    assert "Exchange" not in explain_str(simhash_bits_arrow(df, "doc_id", "toks"))
 
 
 def test_simhash_arrow_memo_cap_bounds_memory_not_results(spark):
     """The md5 memo inside simhash_bits_arrow is a pure cache bounded by
     memo_cap (VERDICT r17 #3): a task whose batches carry far more
     distinct tokens than the cap must produce fingerprints identical to
-    the uncapped kernel AND the JVM form — the `len(memo) < memo_cap`
-    guard stops insertion (bounding the dict at cap entries for the
-    task's lifetime) without ever changing a digest. Runs on ONE
-    partition so a single task sees every distinct token."""
+    the uncapped kernel AND the plain-Python model — the
+    `len(memo) < memo_cap` guard stops insertion (bounding the dict at
+    cap entries for the task's lifetime) without ever changing a digest.
+    Runs on ONE partition so a single task sees every distinct token."""
     from spring_cloud_kafka_streams_dbz_etl_spark.operators.dedup import (
-        simhash_bits,
         simhash_bits_arrow,
     )
 
@@ -528,10 +546,8 @@ def test_simhash_arrow_memo_cap_bounds_memory_not_results(spark):
         r.doc_id: r.simhash
         for r in simhash_bits_arrow(df, "doc_id", "toks").collect()
     }
-    jvm = {
-        r.doc_id: r.simhash for r in simhash_bits(df, "doc_id", "toks").collect()
-    }
-    assert capped == uncapped == jvm
+    model = {i: _simhash_model(t) for i, t in docs}
+    assert capped == uncapped == model
     assert len(capped) == len(docs)
 
 

@@ -10,14 +10,17 @@ the shrunk counterexample.
 Covered (operator → invariant):
 - global_rank        == single-partition Window row_number (NULLs FIRST,
                         duplicates, any bucket count)
-- simhash_bits_arrow == simhash_bits row-for-row on random token corpora
+- simhash_bits_arrow == plain-Python nibble-vote model on random token
+                        corpora (NULL/empty arrays, NULL tokens)
 - interval_overlap   grid-cell join == quadratic bruteforce
-- pq_encode/adc      Arrow forms == retained JVM expression twins across
-                        random (subspaces, k, dim) with forced ties
+- pq_encode/adc      == plain-Python ascending-d / ascending-m fold model
+                        across random (subspaces, k, dim) with forced ties
 - blocked_cosine     per-cell Arrow fold == join-HOF form, incl. the
                         zero-norm NULL-drop path
-- kmeans_cells       use_arrow=True == False end-to-end (ties via
-                        duplicate/grid vectors)
+- pair_dots_arrow    + JVM cosine tail == join-HOF form, incl. NULL ids,
+                        NULL cell keys, NULL/NaN/zero/ragged vectors
+- kmeans_cells       == plain-Python Lloyd model (ascending-d folds,
+                        smaller-cell ties via duplicate/grid vectors)
 - event_pattern      registered conditional-last plan == per-user
                         ordered-history scan (random windows)
 - ts_best_window     registered integer-HOF sliding-window plan ==
@@ -77,11 +80,25 @@ def fuzz_global_rank(spark) -> None:
     print(f"global_rank: {N} cases OK")
 
 
-def fuzz_simhash_twins(spark) -> None:
+def fuzz_simhash(spark) -> None:
+    """simhash_bits_arrow == the plain-Python vote model: bit j votes bit
+    (j % 4) of md5-hex nibble j // 4 per token occurrence, a NULL token
+    votes -1 on every bit, NULL/empty token arrays are dropped, bit 63 is
+    the BIGINT sign bit."""
+    import hashlib
+
     from spring_cloud_kafka_streams_dbz_etl_spark.operators.dedup import (
-        simhash_bits,
         simhash_bits_arrow,
     )
+
+    def model(toks, width):
+        votes = [0] * width
+        for t in toks:
+            hx = hashlib.md5(t.encode()).hexdigest() if t is not None else "0" * 32
+            for j in range(width):
+                votes[j] += 1 if (int(hx[j // 4], 16) >> (j % 4)) & 1 else -1
+        fp = sum(1 << j for j in range(min(width, 63)) if votes[j] > 0)
+        return fp - (1 << 63) if width == 64 and votes[63] > 0 else fp
 
     vocab = [f"tok{c}" for c in range(50)]
     for i in range(N):
@@ -97,15 +114,13 @@ def fuzz_simhash_twins(spark) -> None:
             docs.append((d, toks))
         df = spark.createDataFrame(docs, "doc_id long, toks array<string>")
         width = rng.choice([8, 40, 64])
-        a = simhash_bits_arrow(df, "doc_id", "toks", width=width)
-        j = simhash_bits(df, "doc_id", "toks", width=width)
-        assert a.exceptAll(j).count() == 0 and j.exceptAll(a).count() == 0, (
-            SEED,
-            i,
-            width,
-            docs,
-        )
-    print(f"simhash twins: {N} cases OK")
+        got = {
+            r.doc_id: r.simhash
+            for r in simhash_bits_arrow(df, "doc_id", "toks", width=width).collect()
+        }
+        want = {d: model(t, width) for d, t in docs if t}
+        assert got == want, (SEED, i, width, docs)
+    print(f"simhash model: {N} cases OK")
 
 
 def fuzz_interval_overlap(spark) -> None:
@@ -160,22 +175,41 @@ def _random_vec(dim: int) -> list[float]:
     return [rng.random() - 0.5 for _ in range(dim)]
 
 
-def fuzz_pq_twins(spark) -> None:
-    """pq_encode / pq_adc_topk (Arrow, registered) == their retained JVM
-    expression forms on random corpora and random (subspaces, k, dim) —
-    the fixture tests pin one shape; this walks the parameter space and
-    forces duplicate/zero vectors so the argmin-first tie-break and the
-    ascending-m fold actually get exercised."""
+def _fold_l2(x, c) -> float:
+    """Squared L2 as an explicit ascending-d left fold from 0.0."""
+    acc = 0.0
+    for a, b in zip(x, c):
+        acc = acc + (a - b) * (a - b)
+    return acc
+
+
+def _argmin_first(ds) -> int:
+    return min(range(len(ds)), key=lambda j: (ds[j], j))
+
+
+def _jvm_round(spark, rows, schema: str, col: str, places: int) -> list:
+    """The model's raw doubles through the operators' own JVM ROUND
+    (HALF_UP), so model and operator compare bit-for-bit."""
+    df = spark.createDataFrame(rows, schema)
+    return df.withColumn(col, F.round(F.col(col), places)).collect()
+
+
+def fuzz_pq(spark) -> None:
+    """pq_encode / pq_adc_topk == a plain-Python model written as explicit
+    ascending-d (distance) and ascending-m (recon error, ADC sum) folds,
+    on random corpora and random (subspaces, k, dim) — duplicate, grid
+    and zero vectors force the argmin-first smaller-code tie-break and
+    equal ADC distances (ranked by neighbor id)."""
     from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
         pq_adc_topk,
-        pq_adc_topk_expr,
+        pq_codebook,
         pq_encode,
-        pq_encode_expr,
     )
 
     for i in range(max(1, N // 6)):
         subspaces = rng.choice([2, 4])
         dim = subspaces * rng.choice([2, 4])
+        sub = dim // subspaces
         k_codes = rng.choice([4, 8])
         n = rng.randint(k_codes, 120)
         vecs = [_random_vec(dim) for _ in range(n)]
@@ -185,22 +219,61 @@ def fuzz_pq_twins(spark) -> None:
         df = spark.createDataFrame(
             rows, "vec_id long, label long, embedding array<double>"
         )
-        kw = dict(subspaces=subspaces, k=k_codes, dim=dim, keep_cols=("label",))
-        a = pq_encode(df, **kw)
-        j = pq_encode_expr(df, **kw)
-        assert a.exceptAll(j).count() == 0 and j.exceptAll(a).count() == 0, (
+        books = [
+            [pq_codebook(m, kk, sub) for kk in range(k_codes)]
+            for m in range(subspaces)
+        ]
+        model_codes, enc_rows = {}, []
+        for j, lab, v in rows:
+            codes, err = [], 0.0
+            for m in range(subspaces):
+                ds = [_fold_l2(v[m * sub : (m + 1) * sub], c) for c in books[m]]
+                codes.append(_argmin_first(ds))
+                err = err + ds[codes[-1]]
+            model_codes[j] = codes
+            enc_rows.append((j, lab, ",".join(map(str, codes)), err))
+        want = _jvm_round(
+            spark, enc_rows,
+            "vec_id long, label long, pq_codes string, recon_err double",
+            "recon_err", 6,
+        )
+        a = pq_encode(df, subspaces=subspaces, k=k_codes, dim=dim, keep_cols=("label",))
+        assert sorted(a.collect()) == sorted(want), (
             SEED, i, "pq_encode", subspaces, k_codes, dim, n,
         )
         probes = df.filter(F.col("vec_id") < 3).toPandas()
-        codes = a.select("vec_id", "label", "pq_codes")
+        codes_df = a.select("vec_id", "label", "pq_codes")
         adc_kw = dict(k=5, subspaces=subspaces, n_codes=k_codes, dim=dim)
         for cell in (None, "label"):
-            x = pq_adc_topk(probes, codes, cell_col=cell, **adc_kw)
-            y = pq_adc_topk_expr(probes, codes, cell_col=cell, **adc_kw)
-            assert (
-                x.exceptAll(y).count() == 0 and y.exceptAll(x).count() == 0
-            ), (SEED, i, "pq_adc", cell, subspaces, k_codes, dim, n)
-    print(f"pq twins: {max(1, N // 6)} cases OK")
+            dist_rows = []
+            for q in range(min(3, n)):
+                qv = vecs[q]
+                lut = [
+                    [_fold_l2(qv[m * sub : (m + 1) * sub], c) for c in books[m]]
+                    for m in range(subspaces)
+                ]
+                for j, lab, _ in rows:
+                    if j == q or (cell is not None and lab != rows[q][1]):
+                        continue
+                    dist = 0.0
+                    for m in range(subspaces):
+                        dist = dist + lut[m][model_codes[j][m]]
+                    dist_rows.append((q, j, dist))
+            scored = _jvm_round(
+                spark, dist_rows,
+                "query_id long, neighbor_id long, adc_dist double", "adc_dist", 9,
+            )
+            want_adc = []
+            for q in range(min(3, n)):
+                mine = sorted(
+                    (r.adc_dist, r.neighbor_id) for r in scored if r.query_id == q
+                )[:5]
+                want_adc += [(q, nid, d, rk + 1) for rk, (d, nid) in enumerate(mine)]
+            got = pq_adc_topk(probes, codes_df, cell_col=cell, **adc_kw)
+            assert sorted(tuple(r) for r in got.collect()) == sorted(want_adc), (
+                SEED, i, "pq_adc", cell, subspaces, k_codes, dim, n,
+            )
+    print(f"pq model: {max(1, N // 6)} cases OK")
 
 
 def fuzz_blocked_cosine(spark) -> None:
@@ -259,29 +332,117 @@ def fuzz_blocked_cosine(spark) -> None:
     print(f"blocked cosine twins: {max(1, N // 6)} cases OK")
 
 
-def fuzz_kmeans_twins(spark) -> None:
-    """kmeans_cells(use_arrow=True) == use_arrow=False end-to-end (both
-    Lloyd iterations and the final assignment) on random corpora —
-    duplicates and grid-valued vectors force equidistant-centroid ties
-    through the smaller-cell argmin rule."""
+def fuzz_pair_dots(spark) -> None:
+    """pair_dots_arrow + the JVM cosine_from_dot tail == the join-HOF form
+    (cosine_pre over an equi-join on the cell key), pair-for-pair with
+    bit-identical rounded cosines, on random cells with NULL ids, NULL
+    cell keys and NULL/NaN/zero/ragged/NULL-element vectors — NULL keys
+    pair with nothing (inner-join semantics)."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.functions.vector import (
+        cosine_from_dot,
+        cosine_pre,
+        l2_norm,
+    )
+    from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
+        pair_dots_arrow,
+    )
+
+    cases = max(1, N // 6)
+    for i in range(cases):
+        dim = rng.choice([2, 5])
+        rows = []
+        for j in range(rng.randint(2, 60)):
+            v = _random_vec(dim)
+            roll = rng.random()
+            if roll < 0.05:
+                v = None
+            elif roll < 0.10:
+                v[rng.randrange(dim)] = float("nan")
+            elif roll < 0.15:
+                v[rng.randrange(dim)] = None
+            elif roll < 0.20:
+                v = v[: rng.randrange(dim)]  # ragged, possibly empty
+            vid = None if rng.random() < 0.1 else j
+            lab = None if rng.random() < 0.1 else rng.randint(0, 2)
+            rows.append((vid, lab, v))
+        df = spark.createDataFrame(rows, "vec_id long, label long, v array<double>")
+        directed = rng.random() < 0.5
+
+        def side(s):
+            return df.select(
+                F.col("vec_id").alias(f"i{s}"), "label",
+                F.col("v").alias(f"v{s}"), l2_norm(F.col("v")).alias(f"n{s}"),
+            )
+
+        keep = F.col("ia") != F.col("ib") if directed else F.col("ia") < F.col("ib")
+        join_form = side("a").join(side("b"), "label").filter(keep).select(
+            "ia", "ib", cosine_pre(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
+        )
+        arrow = pair_dots_arrow(df, directed=directed).select(
+            "vec_id_a", "vec_id_b",
+            cosine_from_dot(F.col("__dp"), F.col("__na"), F.col("__nb")),
+        )
+        want = sorted(repr(tuple(r)) for r in join_form.collect())
+        got = sorted(repr(tuple(r)) for r in arrow.collect())
+        assert got == want, (SEED, i, directed, rows)
+    print(f"pair dots (NULL keys): {cases} cases OK")
+
+
+def fuzz_kmeans(spark) -> None:
+    """kmeans_cells == a plain-Python Lloyd model end-to-end (seeds in
+    hash-spread order, both iterations, final assignment): integer
+    vectors floor(x·1e6), explicit ascending-d distance folds,
+    argmin-first smaller-cell ties (forced by duplicate, grid and zero
+    vectors), centroids sum/(n·1e6), empty cells keep their centroid."""
+    import math
+
     from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
         kmeans_cells,
     )
 
-    for i in range(max(1, N // 12)):
+    cases = max(1, N // 12)
+    for i in range(cases):
         dim = rng.choice([4, 8])
         k = rng.choice([2, 4])
         n = rng.randint(k, 60)
         vecs = [_random_vec(dim) for _ in range(n)]
-        rows = [(j, v) for j, v in enumerate(vecs)]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        kw = dict(k=k, iters=2, dim=dim)
-        a = kmeans_cells(df, use_arrow=True, **kw)
-        j = kmeans_cells(df, use_arrow=False, **kw)
-        assert a.exceptAll(j).count() == 0 and j.exceptAll(a).count() == 0, (
-            SEED, i, k, dim, n,
+        for _ in range(rng.randint(0, n // 4)):  # exact duplicates → ties
+            vecs[rng.randrange(n)] = list(rng.choice(vecs))
+        df = spark.createDataFrame(
+            list(enumerate(vecs)), "vec_id long, embedding array<double>"
         )
-    print(f"kmeans twins: {max(1, N // 12)} cases OK")
+        IV = [[math.floor(x * 1e6) for x in v] for v in vecs]
+        X = [[t / 1e6 for t in iv] for iv in IV]
+        seeds = sorted(
+            range(n),
+            key=lambda j: (((j % 1_048_576) * 2_654_435_761) % 4_294_967_296, j),
+        )[:k]
+        cents = [list(X[j]) for j in seeds]
+
+        def assign():
+            out = []
+            for x in X:
+                ds = [_fold_l2(x, c) for c in cents]
+                cell = _argmin_first(ds)
+                out.append((cell, ds[cell]))
+            return out
+
+        for _ in range(2):
+            cells = assign()
+            for c in range(k):
+                members = [IV[j] for j in range(n) if cells[j][0] == c]
+                if members:
+                    cents[c] = [
+                        float(sum(col)) / (float(len(members)) * 1e6)
+                        for col in zip(*members)
+                    ]
+        want = _jvm_round(
+            spark, [(j, c, d) for j, (c, d) in enumerate(assign())],
+            "vec_id long, cell int, dist double", "dist", 6,
+        )
+        got = kmeans_cells(df, k=k, iters=2, dim=dim)
+        assert sorted(got.collect()) == sorted(want), (SEED, i, k, dim, n)
+    print(f"kmeans model: {cases} cases OK")
 
 
 def fuzz_pq_train(spark) -> None:
@@ -489,11 +650,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     print(f"seed {SEED}, {N} examples per invariant")
     fuzz_global_rank(spark)
-    fuzz_simhash_twins(spark)
+    fuzz_simhash(spark)
     fuzz_interval_overlap(spark)
-    fuzz_pq_twins(spark)
+    fuzz_pq(spark)
     fuzz_blocked_cosine(spark)
-    fuzz_kmeans_twins(spark)
+    fuzz_pair_dots(spark)
+    fuzz_kmeans(spark)
     fuzz_pq_train(spark)
     fuzz_event_pattern(spark)
     fuzz_ts_windows(spark)

@@ -6,7 +6,9 @@ kernel into q_triangle_count / q_knn_graph, prove bit-parity of the
 ROUNDED COSINE (the decision value) against the JVM
 ``aggregate(zip_with(...))`` fold over >= 1e6 random pairs, including
 the degenerate rows the dirty-data contract pins (NaN components,
-zero vectors, NULL vectors, NULL elements, ragged lengths, empties).
+zero vectors, NULL vectors, NULL elements, ragged lengths, empties) and
+NULL ids / NULL cell keys, which pair with nothing in either form
+(inner-join semantics).
 
 Run:  python tools/measure_pairdots.py [--vectors 1500] [--dim 64]
 
@@ -68,7 +70,9 @@ def main() -> None:
             v = [rng.uniform(-1, 1) for _ in range(args.dim // 2)]  # ragged
         else:
             v = [rng.uniform(-1, 1) for _ in range(args.dim)]
-        rows.append((i, 0, v))
+        # NULL keys: a handful of each, drawn without touching rng so the
+        # vector stream is unchanged
+        rows.append((None if i % 331 == 7 else i, None if i % 317 == 11 else 0, v))
     df = spark.createDataFrame(rows, "vec_id long, label int, v array<double>")
 
     a = df.select(

@@ -62,7 +62,7 @@ def ops(spark, docs):
         minhash_signature,
         prefix_filter_candidates,
         shingle,
-        simhash_bits,
+        simhash_bits_arrow,
     )
     from spring_cloud_kafka_streams_dbz_etl_spark.operators.graph import (
         connected_components,
@@ -91,7 +91,7 @@ def ops(spark, docs):
     yield run_op("dup_clusters_cc", comp)
     pairs.unpersist()
 
-    fp = simhash_bits(
+    fp = simhash_bits_arrow(
         docs.select("doc_id", F.array_distinct(F.split(F.col("text"), " ")).alias("t")),
         "doc_id", "t", width=64,
     ).persist()
