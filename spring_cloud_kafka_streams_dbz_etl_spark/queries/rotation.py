@@ -790,6 +790,25 @@ CHECKED_BY_ROUND: dict[int, frozenset[str]] = {
 # Restamp adjudication: q_dataset_card and q_tpch_q21 diffed as the
 # known PROCESS_VARIANT gid-order flips (src unchanged) — no re-front.
 # Zero tier = these 33 <= 50.
+# Entries after the one-pass CDC epoch change (tools/plan_stamps.py
+# restamp; outputs checked unchanged by oracle parity at sf0.001,
+# sf0.01 and sf0.1, so these re-front for fresh checked rows):
+# - plan moved: q_cdc_envelope_parse (the synthesized payload is now
+#   eval_once-guarded: one to_json per row instead of two).
+# - closure only (the s_* stamps hash the sink read-back, whose plan is
+#   unchanged; the epoch body behind it changed): the foreachBatch body
+#   is one tagged persist with both sinks as filters of it, the
+#   pre-codec repartition is gone, the dimension resolves once per
+#   committed version (sources/sinks.py::dimension_reader), and the
+#   entity pipeline runs the same body — s_cdc_pipeline,
+#   s_cdc_pipeline_orders, s_dlq_split, s_dlq_reprocess, s_offset_reset,
+#   s_idempotent_sink, s_dim_upsert, s_dim_delete, s_backfill_then_tail,
+#   s_cdc_multiplex; and the version listing (_list_versions now reads
+#   one listStatus) behind q_dim_time_travel (s_ann_index_rebuild and
+#   q_index_health, which reach the same helper, are already listed).
+# Restamp adjudication: q_dataset_card and q_tpch_q21 again diffed as
+# the PROCESS_VARIANT flips — kept at their committed stamps.
+# Zero tier = these 45 <= 50.
 CHANGED_SINCE_CHECK: frozenset[str] = frozenset(
     {
         # r17 stale tier (pinned by name in tests/test_rotation.py)
@@ -808,6 +827,13 @@ CHANGED_SINCE_CHECK: frozenset[str] = frozenset(
         "q_knn_mutual", "q_knn_graph_ivf",
         # src/closure only
         "q_ann_pq_recall_trained_cb", "q_lsh_cosine", "s_ann_index_rebuild",
+        # one-pass CDC epoch: plan moved
+        "q_cdc_envelope_parse",
+        # one-pass CDC epoch: closure only
+        "s_cdc_pipeline", "s_cdc_pipeline_orders", "s_dlq_split",
+        "s_dlq_reprocess", "s_offset_reset", "s_idempotent_sink",
+        "s_dim_upsert", "s_dim_delete", "s_backfill_then_tail",
+        "s_cdc_multiplex", "q_dim_time_travel",
     }
 )
 

@@ -35,6 +35,8 @@ def synthesize_event_envelopes(
     `corrupt_every`: if set, every Nth record's payload is garbled into
     non-JSON (deterministically, by event_id) — the chaos knob for the
     deserialization-failure DLQ path (reference enable-dlq semantics)."""
+    from ..functions.scalars import eval_once
+
     after = F.when(
         F.col("event_type") != "error",
         F.struct(
@@ -55,7 +57,12 @@ def synthesize_event_envelopes(
             (F.col("event_id") % corrupt_every) == 0,
             F.concat(F.lit("CORRUPT<<"), envelope),
         ).otherwise(envelope)
-    value = F.when((F.col("event_id") % 97) == 0, F.lit(None).cast("string")).otherwise(envelope)
+    # eval_once: the parse reads `value` twice (tombstone filter, then
+    # from_json); unguarded, Catalyst inlines the alias into both and the
+    # to_json codec runs twice per row — see functions/scalars.py
+    value = eval_once(
+        F.when((F.col("event_id") % 97) == 0, F.lit(None).cast("string")).otherwise(envelope)
+    )
     return events.select(
         F.col("event_id").alias("kafka_key"),
         value.alias("value"),

@@ -13,7 +13,7 @@ Scale rationale:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -131,18 +131,28 @@ def _hadoop_fs(spark: SparkSession, path: str):
 _VERSION_RE = "_v"
 
 
-def _list_versions(fs, target) -> list[int]:
-    if not fs.exists(target):
+def _version_dirs(fs, target) -> list:
+    """Committed version dirs under ``target`` as sorted ``(n, FileStatus)``
+    pairs, from ONE listing call (a missing ``target`` has none)."""
+    try:
+        statuses = fs.listStatus(target)
+    except Exception as exc:
+        if "FileNotFoundException" not in str(exc):
+            raise
         return []
     out = []
-    for st in fs.listStatus(target):
+    for st in statuses:
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith(_VERSION_RE):
             try:
-                out.append(int(name[len(_VERSION_RE):]))
+                out.append((int(name[len(_VERSION_RE):]), st))
             except ValueError:
                 continue
-    return sorted(out)
+    return sorted(out, key=lambda v: v[0])
+
+
+def _list_versions(fs, target) -> list[int]:
+    return [n for n, _ in _version_dirs(fs, target)]
 
 
 def _version_dir(path: str, n: int) -> str:
@@ -171,6 +181,66 @@ def load_dimension(
     if versions:
         return spark.read.parquet(_version_dir(path, versions[-1]))
     return spark.read.parquet(path)
+
+
+def _footer_schema(spark: SparkSession, fs, vdir):
+    """The Spark schema stored in the footer of a version dir's first
+    parquet file — what read-time inference returns for a Spark-written
+    file (ParquetFileFormat.readSchemaFromFooter) — read directly through
+    the Hadoop file system, so it launches no Spark job. None when there is no top-level data file
+    (partitioned layout) or the writer stored no Spark schema."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    files = [
+        st.getPath() for st in fs.listStatus(vdir)
+        if st.getPath().getName().endswith(".parquet")
+    ]
+    if not files:
+        return None
+    jvm = spark._jvm
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            files[0], spark._jsc.hadoopConfiguration()
+        )
+    )
+    try:
+        meta = reader.getFooter().getFileMetaData().getKeyValueMetaData().get(
+            "org.apache.spark.sql.parquet.row.metadata"
+        )
+    finally:
+        reader.close()
+    return StructType.fromJson(json.loads(meta)) if meta else None
+
+
+def dimension_reader(spark: SparkSession, path: str) -> Callable[[], DataFrame]:
+    """A zero-arg reader of the CURRENT version of the dimension at
+    ``path``, for a stream that reads it every micro-batch. Each call lists
+    the version dirs (one filesystem call, no Spark job); the DataFrame is
+    rebuilt only when the newest committed version changes, keyed by its
+    number and modification time, with the schema taken from the new
+    version's parquet footer instead of an inference job. Version dirs are
+    immutable, so the reused DataFrame — file listing and schema already
+    resolved — reads exactly what a fresh :func:`load_dimension` would,
+    and an upsert is visible to the next call. A static dim (no version
+    dirs) is read fresh on every call."""
+    fs, target = _hadoop_fs(spark, path)
+    memo: dict = {}
+
+    def read() -> DataFrame:
+        versions = _version_dirs(fs, target)
+        if not versions:
+            return spark.read.parquet(path)
+        n, st = versions[-1]
+        key = (n, st.getModificationTime())
+        if memo.get("key") != key:
+            schema = _footer_schema(spark, fs, st.getPath())
+            reader = spark.read.schema(schema) if schema else spark.read
+            memo["key"], memo["dim"] = key, reader.parquet(_version_dir(path, n))
+        return memo["dim"]
+
+    return read
 
 
 def _commit_version(

@@ -26,6 +26,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.scalars import eval_once, no_pushdown
+from ..sources.sinks import dimension_reader
+from .pipeline import Enrichment, _enrich_and_split, resilient_batch
+
 
 @dataclass(frozen=True)
 class EntitySpec:
@@ -92,8 +96,9 @@ def synthesize_entity_envelopes(
             0, F.struct(F.lit(spec.source_table).alias("table")).alias("source")
         )
     envelope = F.to_json(F.struct(*env_fields))
-    value = F.when(F.expr(spec.tombstone_when), F.lit(None).cast("string")).otherwise(
-        envelope
+    # eval_once: one to_json per row (see sources/cdc.py)
+    value = eval_once(
+        F.when(F.expr(spec.tombstone_when), F.lit(None).cast("string")).otherwise(envelope)
     )
     return source.select(F.col(spec.key_col).alias("kafka_key"), value.alias("value"))
 
@@ -104,8 +109,6 @@ def parse_entity_envelopes(raw: DataFrame, schema: T.StructType) -> DataFrame:
     pipeline._parse_keep_original). The payload is carried as __original
     so after-fields may use ANY name (the events entity has an after field
     literally called `value`)."""
-    from ..functions.scalars import eval_once, no_pushdown
-
     # eval_once (r18): one from_json per row instead of one per
     # referencing filter/field — see functions/scalars.py
     parsed = raw.filter(no_pushdown(F.col("value").isNotNull())).withColumn(
@@ -137,61 +140,38 @@ def build_entity_pipeline(
     checkpoint: str,
     max_files_per_trigger: int | None = None,
 ):
-    """Returns an unstarted query builder (StreamRegistry-compatible)."""
+    """Returns an unstarted query factory (StreamRegistry-compatible).
+    Each epoch runs pipeline.py's epoch body (_enrich_and_split: one
+    tagged persist, two sink filters of it), with the dimension
+    re-resolved per micro-batch so upserts between epochs are visible."""
     source_batch = spark.read.parquet(f"{sf_dir}/{spec.source_table}.parquet")
     schema = entity_envelope_schema(source_batch, spec)
-
-    def load_dim():
-        # per-batch re-resolution: dimension upserts between micro-batches
-        # are visible, matching the reference's always-fresh lookup
-        return spark.read.parquet(f"{sf_dir}/{spec.dim_table}.parquet")
+    load_dim = dimension_reader(spark, f"{sf_dir}/{spec.dim_table}.parquet")
+    enrichment = Enrichment(
+        spec.dim_join, spec.dim_match_col, spec.output_cols, payload="__original"
+    )
 
     reader = spark.readStream.schema(source_batch.schema).option(
         "pathGlobFilter", f"{spec.source_table}.parquet"
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src_stream = reader.parquet(sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    raw = synthesize_entity_envelopes(src_stream.repartition(par), spec)
+    raw = synthesize_entity_envelopes(reader.parquet(sf_dir), spec)
     parsed = parse_entity_envelopes(raw, schema).observe(
         spec.name, F.count(F.lit(1)).alias("n_parsed")
     )
 
-    def enrich_and_split(batch: DataFrame, _batch_id: int) -> None:
-        corrupt = batch.filter(F.col("parse_failed")).select(
-            "kafka_key",
-            F.col("__original").alias("value"),
-            F.lit("parse_error").alias("reason"),
-        )
-        ok_in = batch.filter(~F.col("parse_failed"))
-        from pyspark import StorageLevel
-
-        # spill-don't-recompute: see pipeline.py::_enrich_and_split
-        joined = ok_in.join(F.broadcast(load_dim()), F.expr(spec.dim_join), "left").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        try:
-            ok = joined.filter(F.col(spec.dim_match_col).isNotNull()).selectExpr(
-                *[f"{expr} AS {alias}" for alias, expr in spec.output_cols]
-            )
-            bad = joined.filter(F.col(spec.dim_match_col).isNull()).select(
-                "kafka_key",
-                F.col("__original").alias("value"),
-                F.lit("enrichment_miss").alias("reason"),
-            )
-            ok.write.mode("append").parquet(out_path)
-            bad.unionByName(corrupt).write.mode("append").parquet(dlq_path)
-        finally:
-            joined.unpersist()
-
     def start():
-        from .pipeline import resilient_batch
-
         return (
             parsed.writeStream.outputMode("append")
             .option("checkpointLocation", checkpoint)
-            .foreachBatch(resilient_batch(enrich_and_split))
+            .foreachBatch(
+                resilient_batch(
+                    lambda b, _id: _enrich_and_split(
+                        b, load_dim(), out_path, dlq_path, enrichment=enrichment
+                    )
+                )
+            )
             .start()
         )
 

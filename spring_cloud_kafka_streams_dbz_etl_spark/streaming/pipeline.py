@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from ..schemas import events_envelope_schema
 from ..sources.cdc import synthesize_event_envelopes
+from ..sources.sinks import dimension_reader
 from ..sources.streams import stream_events, stream_parquet_dir
 
 # DLQ rows are original payloads + failure context (key, value, reason).
@@ -117,51 +118,24 @@ def _parse_keep_original(raw: DataFrame) -> DataFrame:
     )
 
 
-def _size_aware_broadcast(dim: DataFrame, memo: list | None = None) -> DataFrame:
-    """Broadcast the enrichment dimension only when the optimizer's size
-    estimate fits under autoBroadcastJoinThreshold; otherwise return it
-    unhinted so Catalyst picks a shuffle join. The reference's dims are
-    tiny (event/animal lookup tables), but an unconditional hint in the
-    per-batch path would pin a fixed decision onto a dimension that may
-    grow 100x — and AQE is disabled inside streaming queries, so a wrong
-    static hint would never be demoted at runtime.
-
-    ``memo`` (a mutable list owned by the pipeline) caches the DECISION
-    across micro-batches: the size estimate costs a plan-analysis
-    round-trip, and dimensions don't cross the broadcast threshold between
-    batches in practice. The dimension DATA is still re-read every batch;
-    a stream restart re-decides."""
-    if memo:
-        return F.broadcast(dim) if memo[0] else dim
-    try:
-        stats = dim._jdf.queryExecution().optimizedPlan().stats()
-        size = int(stats.sizeInBytes().longValue())
-        conf = dim.sparkSession._jsparkSession.sessionState().conf()
-        threshold = int(conf.autoBroadcastJoinThreshold())
-    except Exception:  # estimation unavailable -> let Catalyst decide
-        return dim
-    fits = 0 < threshold and 0 <= size <= threshold
-    if memo is not None:
-        memo.append(fits)
-    return F.broadcast(dim) if fits else dim
-
-
 def resilient_batch(fn):
     """Wrap a foreachBatch body: retry up to 3x when an input path
     vanishes between path resolution and execution-time file listing.
     With the dimension's immutable-version layout
     (sources/sinks.py::_commit_version) this is a belt-and-suspenders
     guard — the only remaining window is a version dir pruned while a
-    micro-batch that resolved it two upserts ago is still running. (No isEmpty() pre-check: that action re-executes the
-    micro-batch's repartition lineage on EVERY data batch, a worse cost
-    than letting the rare empty batch run a no-op join.)
+    micro-batch that resolved it two upserts ago is still running; the
+    retry re-resolves the dimension. (No isEmpty() pre-check: that action
+    re-executes the micro-batch's source and codec on EVERY data batch, a
+    worse cost than letting the rare empty batch run a no-op join.)
 
     Delivery contract: a failed attempt commits nothing in practice —
-    the batch's joined relation persists MEMORY_AND_DISK during the
-    first sink write, so the second write never re-reads the dimension,
-    and FileOutputCommitter v1 exposes files only at job commit. The
-    idempotent sink path is retry-safe unconditionally (batch-id-keyed
-    overwrite)."""
+    the epoch's one tagged relation (batch LEFT JOIN dimension, see
+    _enrich_and_split) persists MEMORY_AND_DISK before the first sink
+    write, so the second write never re-runs the codec or re-reads the
+    dimension, and FileOutputCommitter v1 exposes files only at job
+    commit. The idempotent sink path is retry-safe unconditionally
+    (batch-id-keyed overwrite)."""
 
     def wrapped(batch: DataFrame, batch_id: int) -> None:
         import time as _time
@@ -185,6 +159,34 @@ def resilient_batch(fn):
     return wrapped
 
 
+@dataclass(frozen=True)
+class Enrichment:
+    """What differs between the epochs of the CDC pipelines: the join of
+    the parsed batch to the dimension (SQL), the dimension column whose
+    NULL marks an enrichment miss, the ok-sink projection as
+    ``(alias, SQL)`` pairs, and the column carrying the original payload."""
+
+    join: str
+    match_col: str
+    output_cols: tuple[tuple[str, str], ...]
+    payload: str = "value"
+
+
+# events -> customer: the output of build_cdc_pipeline (ENRICHED_SCHEMA)
+EVENTS_ENRICHMENT = Enrichment(
+    join="user_id = c_custkey",
+    match_col="c_custkey",
+    output_cols=(
+        ("id", "id"),
+        ("user_id", "user_id"),
+        ("name", "COALESCE(c_name, '')"),
+        ("segment", "COALESCE(c_mktsegment, 'UNKNOWN')"),
+        ("event_type", "event_type"),
+        ("value", "evt_value"),
+    ),
+)
+
+
 def _enrich_and_split(
     batch: DataFrame,
     dim: DataFrame,
@@ -192,10 +194,17 @@ def _enrich_and_split(
     dlq_path: str,
     batch_id: int | None = None,
     idempotent: bool = False,
-    broadcast_memo: list | None = None,
+    enrichment: Enrichment = EVENTS_ENRICHMENT,
 ) -> None:
-    """foreachBatch body: split off decode failures, one broadcast join,
-    branch on join miss, dual write. Default delivery is at-least-once on
+    """foreachBatch body: ONE relation per epoch — the parsed batch LEFT
+    JOIN the dimension, tagged with a ``reason`` (NULL, 'parse_error' or
+    'enrichment_miss') — persisted once; the ok and DLQ sinks are filters
+    of it. Decode failures carry a NULL join key, so they never match and
+    ride the same join. Catalyst broadcasts the dimension when its size
+    estimate is under autoBroadcastJoinThreshold, and AQE (on inside
+    foreachBatch bodies) re-plans the write at runtime.
+
+    Default delivery is at-least-once on
     batch retry (append is not transactional) — matching the reference's
     processing.guarantee default (CLAUDE.md:157-159); `idempotent=True`
     upgrades both sinks to batch-id-keyed DYNAMIC partition overwrite
@@ -209,51 +218,27 @@ def _enrich_and_split(
     AnimalTransformerStream.java:55-59)."""
     from pyspark import StorageLevel
 
-    parsed_cache = None
-    if "parse_failed" in batch.columns:
-        # The corrupt/ok split consumes the PARSED batch twice (the ok
-        # side through the joined persist below, the corrupt side
-        # directly into the DLQ union) — without this cache the DLQ
-        # branch re-executes the whole synthesize+parse codec from the
-        # fan-out exchange (r18 census: a duplicate ~15 s-taskTime
-        # 32-task stage per micro-batch). One micro-batch-sized
-        # MEMORY_AND_DISK cache runs the codec once; spill-not-recompute
-        # for the same retry-contract reason as `joined` below.
-        parsed_cache = batch.persist(StorageLevel.MEMORY_AND_DISK)
-        corrupt = parsed_cache.filter(F.col("parse_failed")).select(
-            F.col("kafka_key"),
-            F.col("value"),
-            F.lit("parse_error").alias("reason"),
-        )
-        batch = parsed_cache.filter(~F.col("parse_failed"))
-    else:  # DLQ-reprocess path re-parses already-valid payloads
-        corrupt = None
-
+    e = enrichment
+    reason = F.when(F.col("parse_failed"), F.lit("parse_error")).when(
+        F.col(e.match_col).isNull(), F.lit("enrichment_miss")
+    )
     # MEMORY_AND_DISK (not cache/MEMORY_ONLY): eviction must spill, never
-    # recompute — a recompute in the SECOND sink write would re-read the
-    # dimension, breaking resilient_batch's nothing-committed-on-failure
-    # retry contract (and double-appending on retry).
-    joined = batch.join(
-        _size_aware_broadcast(dim, broadcast_memo),
-        batch.user_id == dim.c_custkey,
-        "left",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # recompute — a recompute in the SECOND sink write would re-run the
+    # codec and re-read the dimension, breaking resilient_batch's
+    # nothing-committed-on-failure retry contract (and double-appending
+    # on retry).
+    tagged = (
+        batch.join(dim, F.expr(e.join), "left")
+        .withColumn("reason", reason)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     try:
-        ok = joined.filter(F.col("c_custkey").isNotNull()).select(
-            F.col("id"),
-            F.col("user_id"),
-            F.coalesce(F.col("c_name"), F.lit("")).alias("name"),
-            F.coalesce(F.col("c_mktsegment"), F.lit("UNKNOWN")).alias("segment"),
-            F.col("event_type"),
-            F.col("evt_value").alias("value"),
+        ok = tagged.filter(F.col("reason").isNull()).selectExpr(
+            *[f"{expr} AS {alias}" for alias, expr in e.output_cols]
         )
-        bad = joined.filter(F.col("c_custkey").isNull()).select(
-            F.col("kafka_key"),
-            F.col("value"),  # ORIGINAL envelope payload (reference parity)
-            F.lit("enrichment_miss").alias("reason"),
+        bad = tagged.filter(F.col("reason").isNotNull()).select(
+            "kafka_key", F.col(e.payload).alias("value"), "reason"
         )
-        if corrupt is not None:
-            bad = bad.unionByName(corrupt)
         if idempotent:
             from ..sources.sinks import idempotent_batch_write
 
@@ -263,9 +248,7 @@ def _enrich_and_split(
             ok.write.mode("append").parquet(out_path)
             bad.write.mode("append").parquet(dlq_path)
     finally:
-        joined.unpersist()
-        if parsed_cache is not None:
-            parsed_cache.unpersist()
+        tagged.unpersist()
 
 
 def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):
@@ -273,48 +256,38 @@ def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):
     writer factory for StreamRegistry (so start/stop/reset own the
     lifecycle and checkpoint).
 
-    The dimension is re-resolved PER MICRO-BATCH (fresh file listing +
-    read), matching the reference's always-fresh REST lookup (§2A #22:
-    CRUD upserts on the dimension are visible to the next batch). A
-    build-time DataFrame would freeze the file listing forever."""
+    Each epoch runs four Spark jobs: the dimension's broadcast, the one
+    tagged persist, and the two sink writes (_enrich_and_split); a static
+    dimension adds its per-epoch schema-inference job. The codec runs at
+    the source's own parallelism — a Kafka topic's partitions, a file
+    source's files and row groups — with no pre-codec shuffle.
+
+    The dimension is re-resolved PER MICRO-BATCH, matching the reference's
+    always-fresh REST lookup (§2A #22: CRUD upserts on the dimension are
+    visible to the next batch). The versioned store lists its version
+    dirs each epoch and re-reads only when a new version commits
+    (sources/sinks.py::dimension_reader); static dims and
+    ``cfg.dim_source`` callables are read every epoch."""
+    read_dim = cfg.dim_source or dimension_reader(
+        spark, f"{cfg.sf_dir}/customer.parquet"
+    )
 
     def load_dim():
-        # Resolves through the dimension's committed-version layout
-        # (sources/sinks.py::load_dimension): the resolved version dir is
-        # immutable, so a concurrent CRUD upsert can never yank files out
-        # from under this micro-batch — no retry loop needed. Static dims
-        # (plain testdata parquet) read directly. With cfg.dim_source the
-        # resolver is the caller's (e.g. a JDBC read against the
-        # reference's Postgres source of truth) — still per-batch, so
-        # upstream CRUD writes are visible to the next micro-batch.
-        if cfg.dim_source is not None:
-            dim = cfg.dim_source()
-        else:
-            from ..sources.sinks import load_dimension
+        # With cfg.dim_source the resolver is the caller's (e.g. a JDBC
+        # read against the reference's Postgres source of truth) — still
+        # per-batch, so upstream CRUD writes are visible to the next
+        # micro-batch.
+        dim = read_dim()
+        return dim.filter(cfg.dim_filter) if cfg.dim_filter else dim
 
-            dim = load_dimension(spark, f"{cfg.sf_dir}/customer.parquet")
-        if cfg.dim_filter:
-            dim = dim.filter(cfg.dim_filter)
-        return dim
     if cfg.raw_source is not None:
         # Real-broker path: the caller's source already yields
         # (kafka_key, value-json) records; everything downstream —
         # parse, DLQ flagging, enrichment, split, sinks — is identical.
         raw = cfg.raw_source()
     else:
-        # Decouple codec parallelism from source partitioning (a Kafka
-        # topic's partition count, or here a single-row-group file):
-        # shuffle the raw records across the cluster before the JSON
-        # encode/decode stage. Project to the envelope's inputs FIRST so
-        # the fan-out shuffle never carries unused columns (props alone
-        # is most of the row's bytes).
-        par = spark.sparkContext.defaultParallelism
-        src = stream_events(spark, cfg.sf_dir, cfg.max_files_per_trigger).select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        raw = synthesize_event_envelopes(
-            src.repartition(par), corrupt_every=cfg.corrupt_every
-        )
+        src = stream_events(spark, cfg.sf_dir, cfg.max_files_per_trigger)
+        raw = synthesize_event_envelopes(src, corrupt_every=cfg.corrupt_every)
     # The reference's peek()/log side-channel (§2A #13) as observe()
     # metrics: per-batch counts surface in query.lastProgress without
     # touching the data path (no extra action, no caching).
@@ -323,7 +296,6 @@ def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):
     )
 
     def start():
-        memo: list = []  # per-run broadcast decision (re-decided on restart)
         return (
             parsed.writeStream.outputMode("append")
             .option("checkpointLocation", cfg.checkpoint)
@@ -332,7 +304,6 @@ def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):
                     lambda b, bid: _enrich_and_split(
                         b, load_dim(), cfg.out_path, cfg.dlq_path,
                         batch_id=bid, idempotent=cfg.idempotent,
-                        broadcast_memo=memo,
                     )
                 )
             )
@@ -356,17 +327,11 @@ def build_dlq_reprocess(
     appends recovered records to the output. Independently checkpointed ->
     resumes from its own committed position after stop/start
     (DlqPipelineIT.java:128-170 semantics)."""
-
-    def load_dim():
-        from ..sources.sinks import load_dimension
-
-        return load_dimension(spark, f"{repair_sf_dir}/customer.parquet")
-
+    load_dim = dimension_reader(spark, f"{repair_sf_dir}/customer.parquet")
     raw = stream_parquet_dir(spark, dlq_path, DLQ_SCHEMA, throttle_files)
     parsed = _parse_keep_original(raw.select("kafka_key", "value"))
 
     def start():
-        memo: list = []  # throttled stream = many tiny batches; decide once
         return (
             parsed.writeStream.outputMode("append")
             .option("checkpointLocation", checkpoint)
@@ -375,8 +340,7 @@ def build_dlq_reprocess(
                 # the output (reprocessing can itself fail)
                 resilient_batch(
                     lambda b, _id: _enrich_and_split(
-                        b, load_dim(), out_path, out_path + "_dlq",
-                        broadcast_memo=memo,
+                        b, load_dim(), out_path, out_path + "_dlq"
                     )
                 )
             )

@@ -110,6 +110,40 @@ def test_upsert_dimension_latest_wins_and_append(spark, tmp_path):
     assert load_dimension(spark, plain).count() == 2
 
 
+def test_dimension_reader_resolves_once_per_version(spark, tmp_path):
+    """A stream's per-epoch dimension read reuses one DataFrame while the
+    newest committed version is unchanged, switches to the new version
+    after an upsert, takes the same schema inference would (from the
+    version's footer), and re-reads a static dim on every call."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import (
+        dimension_reader,
+        load_dimension,
+        upsert_dimension,
+    )
+
+    path = str(tmp_path / "dim")
+    read = dimension_reader(spark, path)
+    base = spark.createDataFrame(
+        [(1, "a", 10.0), (2, "b", 20.0)], "k int, name string, v double"
+    )
+    upsert_dimension(base, path, keys=["k"])
+    first = read()
+    assert read() is first
+    assert first.schema == load_dimension(spark, path).schema
+    assert sorted(r.k for r in first.collect()) == [1, 2]
+
+    upsert_dimension(spark.createDataFrame([(3, "c", 30.0)], base.schema), path, keys=["k"])
+    second = read()
+    assert second is not first and read() is second
+    assert sorted(r.k for r in second.collect()) == [1, 2, 3]
+
+    plain = str(tmp_path / "static")
+    base.write.parquet(plain)
+    static = dimension_reader(spark, plain)
+    assert static() is not static()
+    assert static().count() == 2
+
+
 def test_upsert_rejects_duplicate_key_batch(spark, tmp_path):
     """Review finding r03: duplicate keys in one upsert batch have no
     defined winner and would give the dimension duplicate join keys —

@@ -477,6 +477,81 @@ def test_upsert_dimension_api_visible_to_next_batch(spark, sf_smoke):
     assert out2.filter(F.col("user_id") % 2 == 1).count() > 0
 
 
+def test_cdc_epoch_is_one_pass(spark, sf_smoke, monkeypatch):
+    """Shape of a one-file CDC epoch: at most four Spark jobs (dimension
+    broadcast, the one tagged persist, two sink writes), one parquet file
+    per sink, and the versioned dimension re-read only when a new version
+    commits — while an upsert between epochs is still visible to the next
+    one. Jobs are counted by the stream's job group (its run id, which
+    the foreachBatch body's jobs run under)."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import DataFrameReader
+
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import upsert_dimension
+
+    src_dir = _tmp("epoch_sf")
+    ev = pq.read_table(f"{sf_smoke}/events.parquet")
+    files = [ev.slice(25 * k, 25) for k in range(3)]
+    # a customer with a valid (non-tombstone, non-delete) record in epoch 3
+    target = next(
+        r["user_id"] for r in files[2].to_pylist()
+        if r["event_id"] % 97 and r["event_type"] != "error"
+    )
+    cust = spark.read.parquet(f"{sf_smoke}/customer.parquet")
+    dim_path = f"{src_dir}/customer.parquet"
+    upsert_dimension(cust.filter(F.col("c_custkey") != target), dim_path, keys=["c_custkey"])
+
+    reads = []
+    real_parquet = DataFrameReader.parquet
+
+    def counting_parquet(self, *paths, **kw):
+        reads.extend(p for p in paths if p.startswith(dim_path))
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
+
+    def drop(k):  # atomic publish: the stream never lists a partial file
+        pq.write_table(files[k], f"{src_dir}/.events{k}.tmp")
+        os.rename(f"{src_dir}/.events{k}.tmp", f"{src_dir}/events{k}.parquet")
+
+    out, dlq, ckpt = _tmp("epoch_out"), _tmp("epoch_dlq"), _tmp("epoch_ckpt")
+    cfg = CdcPipelineConfig(sf_dir=src_dir, out_path=out, dlq_path=dlq, checkpoint=ckpt)
+    drop(0)
+    q = build_cdc_pipeline(spark, cfg)()
+    tracker = spark.sparkContext.statusTracker()
+    jobs, sink_files, dim_reads = [], [], []
+    try:
+        for k in range(3):
+            if k == 2:
+                upsert_dimension(
+                    cust.filter(F.col("c_custkey") == target), dim_path, keys=["c_custkey"]
+                )
+            if k:
+                drop(k)
+            n_reads, n_jobs = len(reads), len(tracker.getJobIdsForGroup(str(q.runId)))
+            q.processAllAvailable()
+            jobs.append(len(tracker.getJobIdsForGroup(str(q.runId))) - n_jobs)
+            dim_reads.append(len(reads) - n_reads)
+            sink_files.append(
+                tuple(len(glob.glob(f"{d}/part-*.parquet")) for d in (out, dlq))
+            )
+    finally:
+        q.stop()
+
+    assert q.lastProgress["batchId"] == 2  # three one-file epochs
+    assert all(0 < n <= 4 for n in jobs), jobs
+    assert sink_files == [(1, 1), (2, 2), (3, 3)], sink_files
+    # read once, reused while the version is unchanged, re-read after the upsert
+    assert dim_reads == [1, 0, 1], dim_reads
+    enriched = spark.read.schema(ENRICHED_SCHEMA).parquet(out).filter(
+        F.col("user_id") == target
+    )
+    epoch3_ids = set(files[2]["event_id"].to_pylist())
+    assert any(r.id in epoch3_ids and r.name for r in enriched.collect())
+
+
 def test_stream_metrics_cumulative(spark, sf_smoke):
     """§2A #13 metrics: the registry's /metrics view accumulates retained
     progress events — batches, input rows, rows/sec, trigger durations —
@@ -812,7 +887,10 @@ def test_state_sources_partition_parallel_at_1e5_keys(spark):
     touched = 1_000
     stream_tune(spark, keys)
     planned = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert planned == 5  # ceil(120k / 25k)
+    # ceil(120k / 25k) = 5 instances, capped by design at
+    # max(defaultParallelism, 4) (session.stream_tune)
+    cap = max(spark.sparkContext.defaultParallelism, 4)
+    assert planned == min(5, cap)
     name = f"big_{uuid.uuid4().hex[:8]}"
     src = tempfile.mkdtemp(prefix="bigstate_src")
     ckpt = tempfile.mkdtemp(prefix="bigstate_ckpt")
