@@ -135,8 +135,28 @@ def fan_out_vectorized(
     return df.repartition(n)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
+def driver_sized_bytes(df: DataFrame) -> int | None:
+    """The optimized plan's size estimate of ``df`` when the driver can
+    hold it, else None. "Can hold" means at most the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` — the size Spark already
+    ships to every executor as a broadcast — with the stock 10 MB anchor
+    when auto-broadcast is disabled (<= 0). A plan that reports no size
+    (Spark's default estimate is ``Long.MaxValue``, e.g. a Kafka scan) or
+    whose estimate cannot be read is not small. No job runs: the estimate
+    comes from plan statistics (file sizes scaled by projection). The
+    threshold is read typed from the session's SQLConf, so a byte string
+    such as "10MB" (or the "10485760b" ``spark.conf.get`` returns for the
+    default) means what Spark's own join selection takes it to mean."""
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        threshold = int(
+            df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        )
+    except Exception:
+        return None
+    if threshold <= 0:
+        threshold = 10 << 20
+    return size if size <= threshold else None
 
 
 def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:

@@ -20,10 +20,6 @@ def tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def distinct_tokens(text: Column) -> Column:
-    return F.array_distinct(F.split(text, " "))
-
-
 def token_total_len(toks: Column) -> Column:
     """Sum of token lengths as BIGINT (exact, order-free).
 

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..catalog import driver_sized_bytes
+
 
 def connected_components(
     vertices: DataFrame,
@@ -112,20 +114,13 @@ def connected_components(
         # corpus-sized q_semantic_clusters CC 2.5x; reverted to this
         # gate). The measured cached size is read off the materialized
         # InMemoryRelation, so the decision is data-driven, not a
-        # core-count constant.
-        try:
-            und_bytes = int(
-                und._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            threshold = int(spark.conf.get(bcast_key, "10485760"))
-            if threshold <= 0:
-                # caller disabled auto-broadcast (e.g. the streaming
-                # consumer's own micro-batch pin) — fall back to the
-                # stock 10 MB anchor for the small/large decision
-                threshold = 10 << 20
-        except Exception:  # estimation unavailable -> keep caller conf
-            und_bytes, threshold = None, 0
-        if und_bytes is not None and 0 < threshold and und_bytes <= threshold:
+        # core-count constant. The gate is catalog.driver_sized_bytes,
+        # which also falls back to the stock 10 MB anchor when the caller
+        # disabled auto-broadcast (e.g. the streaming consumer's own
+        # micro-batch pin), and keeps the caller's conf when no estimate
+        # is available.
+        und_bytes = driver_sized_bytes(und)
+        if und_bytes is not None:
             aqe_before = spark.conf.get(aqe_key, "true")
             bcast_before = spark.conf.get(bcast_key, "10485760")
             shuf_before = spark.conf.get(shuf_key, None)

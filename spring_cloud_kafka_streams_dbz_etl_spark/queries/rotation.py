@@ -809,6 +809,25 @@ CHECKED_BY_ROUND: dict[int, frozenset[str]] = {
 # Restamp adjudication: q_dataset_card and q_tpch_q21 again diffed as
 # the PROCESS_VARIANT flips — kept at their committed stamps.
 # Zero tier = these 45 <= 50.
+# After the driver-commit CDC epoch (one collect per small epoch, both
+# sinks committed from the driver), the tools/plan_stamps.py restamp
+# diffed closure-only on 23 queries and moved no plan or src:
+# - the CDC epoch body and the dimension reader/version listing:
+#   s_cdc_pipeline, s_cdc_pipeline_orders, s_dlq_split, s_dlq_reprocess,
+#   s_offset_reset, s_idempotent_sink, s_dim_upsert, s_dim_delete,
+#   s_backfill_then_tail, q_dim_time_travel, q_index_health,
+#   s_ann_index_rebuild, s_ann_index_maintain, s_ann_serve,
+#   q_semantic_clusters — all already listed below, so no set change;
+# - not re-fronted, as output-identical: q_dup_clusters,
+#   q_dup_cluster_stats, q_dedup_survivors, q_leakage_split and
+#   s_minhash_incremental reach connected_components, whose loop-conf
+#   gate moved into catalog.driver_sized_bytes with the same decision
+#   for every numeric threshold (the pin shapes jobs, never rows);
+#   s_curation_incremental, s_linear_probe_online and s_mean_shift_alert
+#   (and s_minhash_incremental) reach StreamRegistry.metrics only
+#   through the class, and no query reads its new durationMsP50 key.
+# q_dataset_card and q_tpch_q21 flipped as the PROCESS_VARIANT again and
+# were kept. Zero tier stays these 45 <= 50.
 CHANGED_SINCE_CHECK: frozenset[str] = frozenset(
     {
         # r17 stale tier (pinned by name in tests/test_rotation.py)

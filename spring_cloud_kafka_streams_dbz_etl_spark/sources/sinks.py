@@ -74,8 +74,13 @@ def idempotent_batch_write(df: DataFrame, batch_id: int, path: str) -> None:
     empty until checkpoint replay re-runs the batch (which the WAL
     guarantees, so the exactly-once CONTENT contract still holds). Readers
     needing the old rows until the new ones land should read a snapshot
-    isolation layer (e.g. a table format) or tolerate the gap; a
-    temp-prefix + rename commit is the upgrade if that matters.
+    isolation layer (e.g. a table format) or tolerate the gap.
+
+    This is the CDC epoch's Spark path (epochs above the driver size
+    gate). Epochs under it write the same ``_batch_id=<N>`` layout through
+    :func:`commit_parts`, the temp-prefix + rename commit: the new
+    partition is staged in full first, so the window shrinks to one
+    delete and one rename.
     """
     spark = df.sparkSession
     jvm = spark._jvm
@@ -94,6 +99,105 @@ def idempotent_batch_write(df: DataFrame, batch_id: int, path: str) -> None:
 def read_idempotent_sink(spark: SparkSession, path: str) -> DataFrame:
     """Read an idempotent sink's logical content (partition key dropped)."""
     return spark.read.parquet(path).drop("_batch_id")
+
+
+# The footer key Spark's parquet writer stores its schema under, and reads
+# it back from before falling back to the parquet schema.
+SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def _parquet_part(spark: SparkSession, table, schema) -> bytes:
+    """``table`` (Arrow) as the bytes of one snappy parquet part laid out
+    the way Spark's writer lays out ``schema``: the same field names,
+    types and nullability (non-nullable fields REQUIRED), and Spark's
+    schema and version under its footer keys (beside Arrow's own schema
+    key, which Spark ignores). An empty table gives the schema-only part
+    Spark writes for an empty task."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema).with_metadata(
+        {SPARK_ROW_METADATA: schema.json(), "org.apache.spark.version": spark.version}
+    )
+    sink = pa.BufferOutputStream()
+    pq.write_table(
+        table.rename_columns(arrow_schema.names).cast(arrow_schema),
+        sink,
+        compression="snappy",
+    )
+    return sink.getvalue().to_pybytes()
+
+
+def _stage_parts(spark: SparkSession, parts, batch_id: int | None, staged: list) -> None:
+    """Write each ``(arrow table, Spark schema, sink path)`` of ``parts``
+    as ONE parquet part under a ``.``-prefixed name that Spark, Hadoop and
+    the file stream source never list, through the Hadoop ``FileSystem``
+    (local, HDFS and S3A alike), appending ``(fs, staged, final)`` paths
+    to ``staged`` as it goes; nothing is visible yet.
+
+    ``batch_id=None`` stages a file beside the sink's parts. Otherwise the
+    part goes into a staged ``_batch_id=<N>`` directory, the layout of
+    :func:`idempotent_batch_write`; an empty side then stages nothing
+    (``staged`` None), as a dynamic partition overwrite of no rows writes
+    no partition."""
+    import uuid
+
+    for table, schema, path in parts:
+        fs, _ = _hadoop_fs(spark, path)
+        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        if batch_id is None:
+            stage = file = f"{path}/.{name}.staging"
+            final = f"{path}/{name}"
+        elif table.num_rows:
+            stage = f"{path}/._batch_id={batch_id}.{uuid.uuid4().hex[:12]}"
+            file, final = f"{stage}/{name}", f"{path}/_batch_id={batch_id}"
+        else:
+            staged.append((fs, None, f"{path}/_batch_id={batch_id}"))
+            continue
+        staged.append((fs, stage, final))
+        out = fs.create(_hadoop_fs(spark, file)[1], False)
+        try:
+            out.write(_parquet_part(spark, table, schema))
+        finally:
+            out.close()
+
+
+def _publish_parts(spark: SparkSession, staged: list, batch_id: int | None) -> None:
+    """Make staged parts visible, one rename each. With ``batch_id`` each
+    sink's ``_batch_id=<N>`` directory is deleted first, so a replayed
+    epoch replaces its partition — even with zero rows — instead of
+    adding to it."""
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    for fs, stage, final in staged:
+        if batch_id is not None:
+            fs.delete(path(final), True)
+        if stage is not None and not fs.rename(path(stage), path(final)):
+            raise OSError(f"could not publish {stage} as {final}")
+
+
+def commit_parts(spark: SparkSession, parts, batch_id: int | None = None) -> None:
+    """Write each ``(arrow table, Spark schema, sink path)`` of ``parts``
+    as one parquet part of its sink, written on the driver: every part is
+    staged first, and only then are they all published. A failure before
+    the publish leaves no part visible and deletes the staged ones, so a
+    retry of the epoch commits exactly once. This is the temp-prefix +
+    rename commit :func:`idempotent_batch_write` names as its upgrade:
+    with ``batch_id`` the parts land in ``_batch_id=<N>`` partitions, and
+    the old partition stays readable until its replacement is fully
+    written, then is swapped out by a delete and a rename."""
+    staged: list = []
+    try:
+        _stage_parts(spark, parts, batch_id, staged)
+        _publish_parts(spark, staged, batch_id)
+    except BaseException:
+        # a published part was renamed away, so this never touches
+        # visible data
+        path = spark._jvm.org.apache.hadoop.fs.Path
+        for fs, stage, _ in staged:
+            if stage is not None:
+                fs.delete(path(stage), True)
+        raise
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -131,15 +235,19 @@ def _hadoop_fs(spark: SparkSession, path: str):
 _VERSION_RE = "_v"
 
 
-def _version_dirs(fs, target) -> list:
-    """Committed version dirs under ``target`` as sorted ``(n, FileStatus)``
-    pairs, from ONE listing call (a missing ``target`` has none)."""
+def _list_status(fs, target) -> list:
+    """``fs.listStatus(target)``, with a missing ``target`` listing nothing."""
     try:
-        statuses = fs.listStatus(target)
+        return list(fs.listStatus(target))
     except Exception as exc:
         if "FileNotFoundException" not in str(exc):
             raise
         return []
+
+
+def _version_dirs(statuses) -> list:
+    """The committed version dirs among a dimension path's listing
+    ``statuses``, as sorted ``(n, FileStatus)`` pairs."""
     out = []
     for st in statuses:
         name = st.getPath().getName()
@@ -152,7 +260,7 @@ def _version_dirs(fs, target) -> list:
 
 
 def _list_versions(fs, target) -> list[int]:
-    return [n for n, _ in _version_dirs(fs, target)]
+    return [n for n, _ in _version_dirs(_list_status(fs, target))]
 
 
 def _version_dir(path: str, n: int) -> str:
@@ -183,20 +291,18 @@ def load_dimension(
     return spark.read.parquet(path)
 
 
-def _footer_schema(spark: SparkSession, fs, vdir):
-    """The Spark schema stored in the footer of a version dir's first
-    parquet file — what read-time inference returns for a Spark-written
-    file (ParquetFileFormat.readSchemaFromFooter) — read directly through
-    the Hadoop file system, so it launches no Spark job. None when there is no top-level data file
-    (partitioned layout) or the writer stored no Spark schema."""
+def _footer_schema(spark: SparkSession, statuses):
+    """The Spark schema stored in the footer of the first parquet file
+    among ``statuses`` — what read-time inference returns for a
+    Spark-written file (ParquetFileFormat.readSchemaFromFooter) — read
+    directly through the Hadoop file system, so it launches no Spark job.
+    None when there is no top-level data file (partitioned layout) or the
+    writer stored no Spark schema."""
     import json
 
     from pyspark.sql.types import StructType
 
-    files = [
-        st.getPath() for st in fs.listStatus(vdir)
-        if st.getPath().getName().endswith(".parquet")
-    ]
+    files = [st.getPath() for st in statuses if st.getPath().getName().endswith(".parquet")]
     if not files:
         return None
     jvm = spark._jvm
@@ -207,7 +313,7 @@ def _footer_schema(spark: SparkSession, fs, vdir):
     )
     try:
         meta = reader.getFooter().getFileMetaData().getKeyValueMetaData().get(
-            "org.apache.spark.sql.parquet.row.metadata"
+            SPARK_ROW_METADATA
         )
     finally:
         reader.close()
@@ -216,28 +322,46 @@ def _footer_schema(spark: SparkSession, fs, vdir):
 
 def dimension_reader(spark: SparkSession, path: str) -> Callable[[], DataFrame]:
     """A zero-arg reader of the CURRENT version of the dimension at
-    ``path``, for a stream that reads it every micro-batch. Each call lists
-    the version dirs (one filesystem call, no Spark job); the DataFrame is
-    rebuilt only when the newest committed version changes, keyed by its
-    number and modification time, with the schema taken from the new
-    version's parquet footer instead of an inference job. Version dirs are
-    immutable, so the reused DataFrame — file listing and schema already
-    resolved — reads exactly what a fresh :func:`load_dimension` would,
-    and an upsert is visible to the next call. A static dim (no version
-    dirs) is read fresh on every call."""
+    ``path``, for a stream that reads it every micro-batch. Each call
+    lists ``path`` once (one filesystem call, no Spark job) and reuses the
+    DataFrame it built last — file listing and schema already resolved —
+    while what it read is unchanged:
+
+    - a versioned dim is keyed by its newest committed version's number
+      and modification time (version dirs are immutable, so the reused
+      DataFrame reads exactly what a fresh :func:`load_dimension` would,
+      and an upsert is visible to the next call);
+    - a static dim (a plain parquet file or directory) is keyed by the
+      (name, size, modification time) of its visible entries, so an
+      in-place rewrite is visible to the next call too.
+
+    On a change the DataFrame is rebuilt with the schema taken from the
+    parquet footer when a Spark writer stored one, instead of an
+    inference job."""
     fs, target = _hadoop_fs(spark, path)
     memo: dict = {}
 
     def read() -> DataFrame:
-        versions = _version_dirs(fs, target)
-        if not versions:
-            return spark.read.parquet(path)
-        n, st = versions[-1]
-        key = (n, st.getModificationTime())
+        statuses = _list_status(fs, target)
+        versions = _version_dirs(statuses)
+        if versions:
+            n, st = versions[-1]
+            key, src = (n, st.getModificationTime()), _version_dir(path, n)
+        else:
+            statuses = [
+                st for st in statuses
+                if not st.getPath().getName().startswith((".", "_"))
+            ]
+            key = tuple(
+                (st.getPath().getName(), st.getLen(), st.getModificationTime())
+                for st in statuses
+            )
+            src = path
         if memo.get("key") != key:
-            schema = _footer_schema(spark, fs, st.getPath())
+            listed = fs.listStatus(versions[-1][1].getPath()) if versions else statuses
+            schema = _footer_schema(spark, listed)
             reader = spark.read.schema(schema) if schema else spark.read
-            memo["key"], memo["dim"] = key, reader.parquet(_version_dir(path, n))
+            memo["key"], memo["dim"] = key, reader.parquet(src)
         return memo["dim"]
 
     return read

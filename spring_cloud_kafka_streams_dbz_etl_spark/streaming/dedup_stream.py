@@ -54,13 +54,6 @@ ACCEPTED_SCHEMA = T.StructType(
 )
 
 
-def _sig_schema(k: int) -> T.StructType:
-    return T.StructType(
-        [T.StructField("doc_id", T.LongType(), True)]
-        + [T.StructField(f"mh_{j}", T.LongType(), True) for j in range(k)]
-    )
-
-
 BAND_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), True),

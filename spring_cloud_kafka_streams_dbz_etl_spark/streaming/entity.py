@@ -142,8 +142,10 @@ def build_entity_pipeline(
 ):
     """Returns an unstarted query factory (StreamRegistry-compatible).
     Each epoch runs pipeline.py's epoch body (_enrich_and_split: one
-    tagged persist, two sink filters of it), with the dimension
-    re-resolved per micro-batch so upserts between epochs are visible."""
+    tagged relation; under the size gate one collect with both sinks
+    committed from the driver, above it one persist and two sink
+    filters of it), with the dimension re-resolved per micro-batch so
+    upserts between epochs are visible."""
     source_batch = spark.read.parquet(f"{sf_dir}/{spec.source_table}.parquet")
     schema = entity_envelope_schema(source_batch, spec)
     load_dim = dimension_reader(spark, f"{sf_dir}/{spec.dim_table}.parquet")

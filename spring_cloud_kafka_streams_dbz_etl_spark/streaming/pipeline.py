@@ -129,13 +129,17 @@ def resilient_batch(fn):
     re-executes the micro-batch's source and codec on EVERY data batch, a
     worse cost than letting the rare empty batch run a no-op join.)
 
-    Delivery contract: a failed attempt commits nothing in practice —
-    the epoch's one tagged relation (batch LEFT JOIN dimension, see
-    _enrich_and_split) persists MEMORY_AND_DISK before the first sink
-    write, so the second write never re-runs the codec or re-reads the
-    dimension, and FileOutputCommitter v1 exposes files only at job
-    commit. The idempotent sink path is retry-safe unconditionally
-    (batch-id-keyed overwrite)."""
+    Delivery contract: a failed attempt commits nothing in practice. On
+    the driver path (_enrich_and_split, an epoch under the size gate) the
+    epoch's one collect feeds both sinks, whose parts are staged under
+    hidden names and renamed into place only after both are written; a
+    failure before the renames deletes the staged parts, so the retry
+    commits each sink exactly once. On the Spark path the tagged relation
+    persists MEMORY_AND_DISK before the first sink write, so the second
+    write never re-runs the codec or re-reads the dimension, and
+    FileOutputCommitter v1 exposes files only at job commit. Idempotent
+    mode is retry-safe on either path (batch-id-keyed partitions that a
+    retry replaces)."""
 
     def wrapped(batch: DataFrame, batch_id: int) -> None:
         import time as _time
@@ -198,52 +202,89 @@ def _enrich_and_split(
 ) -> None:
     """foreachBatch body: ONE relation per epoch — the parsed batch LEFT
     JOIN the dimension, tagged with a ``reason`` (NULL, 'parse_error' or
-    'enrichment_miss') — persisted once; the ok and DLQ sinks are filters
-    of it. Decode failures carry a NULL join key, so they never match and
-    ride the same join. Catalyst broadcasts the dimension when its size
-    estimate is under autoBroadcastJoinThreshold, and AQE (on inside
-    foreachBatch bodies) re-plans the write at runtime.
+    'enrichment_miss'); the ok sink takes its untagged rows, the DLQ the
+    tagged ones. Decode failures carry a NULL join key, so they never
+    match and ride the same join. Catalyst broadcasts the dimension when
+    its size estimate is under autoBroadcastJoinThreshold.
 
-    Default delivery is at-least-once on
-    batch retry (append is not transactional) — matching the reference's
-    processing.guarantee default (CLAUDE.md:157-159); `idempotent=True`
-    upgrades both sinks to batch-id-keyed DYNAMIC partition overwrite
-    (sources/sinks.py::idempotent_batch_write), making epoch replay
-    rewrite-in-place — effective exactly-once. The remaining at-least-once
-    mitigations stay documented: downstream key+version dedup
-    (q_window_rank / s_dedup_stream); s_offset_reset proves the
+    Two paths, one output. An epoch the driver can hold (the batch's
+    size estimate passes catalog.driver_sized_bytes — a one-file live
+    epoch measured about 3 KB) runs as ONE Spark execution: the relation,
+    projected to the ok columns plus the DLQ key and payload, is
+    collected once as Arrow, split on ``reason IS NULL`` on the driver,
+    and each sink gets one parquet part written through the Hadoop
+    FileSystem, staged under a hidden name and renamed into place only
+    after both are written (sources/sinks.py::commit_parts) — so a
+    failed attempt leaves nothing visible. The parts read back exactly
+    like Spark-written ones (same schema in the footer; a schema-only
+    part for an empty side). Larger batches, and batches whose plan
+    reports no size (a backfill, the JVM Kafka source), keep the Spark
+    path: the relation persisted once MEMORY_AND_DISK, and the two sinks
+    written as filters of it.
+
+    Default delivery is at-least-once on batch retry (append is not
+    transactional) — matching the reference's processing.guarantee
+    default (CLAUDE.md:157-159); `idempotent=True` upgrades both sinks to
+    batch-id-keyed ``_batch_id=<N>`` partitions that a replayed epoch
+    rewrites in place — effective exactly-once: on the driver path the
+    staged partition is swapped in, on the Spark path
+    sources/sinks.py::idempotent_batch_write overwrites it. The remaining
+    at-least-once mitigations stay documented: downstream key+version
+    dedup (q_window_rank / s_dedup_stream); s_offset_reset proves the
     replay-duplicate semantics end-to-end. Both DLQ reasons keep the
     ORIGINAL payload (reference parity: deserialization DLQ is
     framework-level, enrichment DLQ is explicit — application.yml:23-31 /
     AnimalTransformerStream.java:55-59)."""
     from pyspark import StorageLevel
 
+    from ..catalog import driver_sized_bytes
+    from ..sources.sinks import commit_parts, idempotent_batch_write
+
     e = enrichment
     reason = F.when(F.col("parse_failed"), F.lit("parse_error")).when(
         F.col(e.match_col).isNull(), F.lit("enrichment_miss")
     )
+    tagged = batch.join(dim, F.expr(e.join), "left").withColumn("reason", reason)
+    ok_cols = [F.expr(expr).alias(alias) for alias, expr in e.output_cols]
+    bad_cols = [F.col("kafka_key"), F.col(e.payload).alias("value"), F.col("reason")]
+    ok = tagged.filter(F.col("reason").isNull()).select(*ok_cols)
+    bad = tagged.filter(F.col("reason").isNotNull()).select(*bad_cols)
+    epoch = (batch_id or 0) if idempotent else None
+
+    if driver_sized_bytes(batch) is not None:
+        import pyarrow.compute as pc
+
+        # positional names: an ok column may share its name with a DLQ
+        # one; ok rows ship no payload (it is only ever written to the DLQ)
+        n = len(ok_cols)
+        payload = F.when(F.col("reason").isNotNull(), F.col(e.payload))
+        rows = tagged.select(
+            *[
+                c.alias(f"_{i}")
+                for i, c in enumerate([*ok_cols, F.col("kafka_key"), payload, F.col("reason")])
+            ]
+        ).toArrow()
+        untagged = pc.is_null(rows.column(n + 2))
+        commit_parts(
+            batch.sparkSession,
+            [
+                (rows.filter(untagged).select(range(n)), ok.schema, out_path),
+                (rows.filter(pc.invert(untagged)).select(range(n, n + 3)), bad.schema, dlq_path),
+            ],
+            epoch,
+        )
+        return
+
     # MEMORY_AND_DISK (not cache/MEMORY_ONLY): eviction must spill, never
     # recompute — a recompute in the SECOND sink write would re-run the
     # codec and re-read the dimension, breaking resilient_batch's
     # nothing-committed-on-failure retry contract (and double-appending
     # on retry).
-    tagged = (
-        batch.join(dim, F.expr(e.join), "left")
-        .withColumn("reason", reason)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    tagged.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        ok = tagged.filter(F.col("reason").isNull()).selectExpr(
-            *[f"{expr} AS {alias}" for alias, expr in e.output_cols]
-        )
-        bad = tagged.filter(F.col("reason").isNotNull()).select(
-            "kafka_key", F.col(e.payload).alias("value"), "reason"
-        )
         if idempotent:
-            from ..sources.sinks import idempotent_batch_write
-
-            idempotent_batch_write(ok, batch_id or 0, out_path)
-            idempotent_batch_write(bad, batch_id or 0, dlq_path)
+            idempotent_batch_write(ok, epoch, out_path)
+            idempotent_batch_write(bad, epoch, dlq_path)
         else:
             ok.write.mode("append").parquet(out_path)
             bad.write.mode("append").parquet(dlq_path)
@@ -256,17 +297,20 @@ def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):
     writer factory for StreamRegistry (so start/stop/reset own the
     lifecycle and checkpoint).
 
-    Each epoch runs four Spark jobs: the dimension's broadcast, the one
-    tagged persist, and the two sink writes (_enrich_and_split); a static
-    dimension adds its per-epoch schema-inference job. The codec runs at
-    the source's own parallelism — a Kafka topic's partitions, a file
-    source's files and row groups — with no pre-codec shuffle.
+    An epoch the driver can hold (a live one-file epoch, a replay epoch
+    of a few files) runs two Spark jobs: the dimension's broadcast and
+    the one collect of the tagged relation, whose rows both sinks are
+    committed from on the driver (_enrich_and_split). A larger epoch, or
+    one whose source reports no size (the JVM Kafka source), runs four:
+    the broadcast, the tagged persist and the two sink writes. The codec
+    runs at the source's own parallelism — a Kafka topic's partitions, a
+    file source's files and row groups — with no pre-codec shuffle.
 
     The dimension is re-resolved PER MICRO-BATCH, matching the reference's
     always-fresh REST lookup (§2A #22: CRUD upserts on the dimension are
-    visible to the next batch). The versioned store lists its version
-    dirs each epoch and re-reads only when a new version commits
-    (sources/sinks.py::dimension_reader); static dims and
+    visible to the next batch). The reader lists the dimension each
+    epoch and re-reads only when its newest version, or for a static dim
+    its files, changed (sources/sinks.py::dimension_reader);
     ``cfg.dim_source`` callables are read every epoch."""
     read_dim = cfg.dim_source or dimension_reader(
         spark, f"{cfg.sf_dir}/customer.parquet"

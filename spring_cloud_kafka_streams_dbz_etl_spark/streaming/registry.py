@@ -55,6 +55,8 @@ class StreamRegistry:
     """Named StreamingQuery lifecycle + offset control."""
 
     STOP_TIMEOUT_S = 30  # reference: 5 s stream-stop + 60 s group-inactive
+    # epoch phases whose durations metrics() reports (progress durationMs keys)
+    PHASES = ("addBatch", "latestOffset", "queryPlanning", "walCommit", "commitOffsets")
 
     def __init__(self) -> None:
         self._streams: dict[str, _Stream] = {}
@@ -168,20 +170,31 @@ class StreamRegistry:
     def metrics(self, name: str) -> dict[str, Any]:
         """Cumulative throughput metrics from the query's retained
         progress events (Spark keeps the last ~100): batches, input rows,
-        rows/sec, trigger durations. The Spark twin of the reference's
-        micrometer/actuator stream metrics — no extra listener machinery,
-        the engine already emits progress per micro-batch."""
+        rows/sec, trigger durations, and the median of each epoch phase's
+        duration (``durationMsP50``: addBatch — the foreachBatch body —,
+        latestOffset, queryPlanning, walCommit, commitOffsets; None for a
+        phase no retained event reports). The Spark twin of the
+        reference's micrometer/actuator stream metrics — no extra listener
+        machinery or Observation, the engine already emits progress per
+        micro-batch."""
+        import statistics
+
         s = self._get(name)
         q = s.query
         progresses = list(q.recentProgress) if q is not None else []
         total_rows = 0
         trigger_ms: list[int] = []
+        phase_ms: dict[str, list[int]] = {k: [] for k in self.PHASES}
         rates: list[float] = []
         for p in progresses:
             total_rows += int(p.get("numInputRows") or 0)
-            dur = (p.get("durationMs") or {}).get("triggerExecution")
+            durations = p.get("durationMs") or {}
+            dur = durations.get("triggerExecution")
             if dur is not None:
                 trigger_ms.append(int(dur))
+            for phase, ms in phase_ms.items():
+                if durations.get(phase) is not None:
+                    ms.append(int(durations[phase]))
             rate = p.get("processedRowsPerSecond")
             # `is not None`, not truthiness: a legitimate 0.0 rate (empty
             # trigger) must count toward the average or it biases upward
@@ -198,6 +211,10 @@ class StreamRegistry:
             ),
             "maxTriggerMs": max(trigger_ms) if trigger_ms else None,
             "lastTriggerMs": trigger_ms[-1] if trigger_ms else None,
+            "durationMsP50": {
+                phase: statistics.median(ms) if ms else None
+                for phase, ms in phase_ms.items()
+            },
         }
 
     # -- offsets (§2A #18) -----------------------------------------------

@@ -350,6 +350,16 @@ def test_schema_registry_routes():
         bare.stop()
 
 
+class _ProgressQuery:
+    """A stopped query's retained progress events, as StreamingQuery
+    exposes them (dict-like progress with a durationMs map)."""
+
+    isActive = False
+
+    def __init__(self, progress):
+        self.recentProgress = progress
+
+
 def test_metrics_route(facade):
     _, base = facade
     code, payload = _call(f"{base}/api/stream/animal/metrics")
@@ -360,6 +370,33 @@ def test_metrics_route(facade):
         raise AssertionError("expected 404")
     except urllib.error.HTTPError as e:
         assert e.code == 404
+
+    # a real registry reports per-phase medians of the retained events;
+    # a phase no event reports reads null
+    durations = [
+        {"addBatch": 900, "latestOffset": 10, "queryPlanning": 40, "walCommit": 30,
+         "triggerExecution": 1000},
+        {"addBatch": 700, "latestOffset": 30, "queryPlanning": 20, "walCommit": 50,
+         "triggerExecution": 820},
+        {"addBatch": 800, "latestOffset": 20, "queryPlanning": 60, "triggerExecution": 910},
+    ]
+    reg = StreamRegistry()
+    reg.register("cdc", builder=lambda: None, checkpoint="unused", auto_start=False)
+    reg._get("cdc").query = _ProgressQuery(
+        [{"numInputRows": 25, "durationMs": d} for d in durations]
+    )
+    srv = StreamControlHttp(reg)
+    port = srv.start()
+    try:
+        code, payload = _call(f"http://127.0.0.1:{port}/api/stream/cdc/metrics")
+    finally:
+        srv.stop()
+    assert code == 200 and payload["batches"] == 3 and payload["totalInputRows"] == 75
+    assert payload["maxTriggerMs"] == 1000 and payload["lastTriggerMs"] == 910
+    assert payload["durationMsP50"] == {
+        "addBatch": 800, "latestOffset": 20, "queryPlanning": 40,
+        "walCommit": 40, "commitOffsets": None,
+    }
 
 
 def test_dim_crud_routes(spark, tmp_path):

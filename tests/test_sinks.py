@@ -114,7 +114,8 @@ def test_dimension_reader_resolves_once_per_version(spark, tmp_path):
     """A stream's per-epoch dimension read reuses one DataFrame while the
     newest committed version is unchanged, switches to the new version
     after an upsert, takes the same schema inference would (from the
-    version's footer), and re-reads a static dim on every call."""
+    version's footer), and reuses a static dim's DataFrame until its
+    files change, when an in-place rewrite is visible to the next call."""
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import (
         dimension_reader,
         load_dimension,
@@ -140,8 +141,12 @@ def test_dimension_reader_resolves_once_per_version(spark, tmp_path):
     plain = str(tmp_path / "static")
     base.write.parquet(plain)
     static = dimension_reader(spark, plain)
-    assert static() is not static()
-    assert static().count() == 2
+    once = static()
+    assert static() is once and once.count() == 2
+    assert once.schema == spark.read.parquet(plain).schema
+    spark.createDataFrame([(4, "d", 40.0)], base.schema).write.mode("overwrite").parquet(plain)
+    again = static()
+    assert again is not once and [r.k for r in again.collect()] == [4]
 
 
 def test_upsert_rejects_duplicate_key_batch(spark, tmp_path):

@@ -4,6 +4,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 import uuid
@@ -478,12 +479,13 @@ def test_upsert_dimension_api_visible_to_next_batch(spark, sf_smoke):
 
 
 def test_cdc_epoch_is_one_pass(spark, sf_smoke, monkeypatch):
-    """Shape of a one-file CDC epoch: at most four Spark jobs (dimension
-    broadcast, the one tagged persist, two sink writes), one parquet file
-    per sink, and the versioned dimension re-read only when a new version
-    commits — while an upsert between epochs is still visible to the next
-    one. Jobs are counted by the stream's job group (its run id, which
-    the foreachBatch body's jobs run under)."""
+    """Shape of a one-file CDC epoch: at most two Spark jobs (dimension
+    broadcast, the one collect of the tagged relation; both sinks are
+    committed from the driver), one parquet file per sink, and the
+    versioned dimension re-read only when a new version commits — while
+    an upsert between epochs is still visible to the next one. Jobs are
+    counted by the stream's job group (its run id, which the
+    foreachBatch body's jobs run under)."""
     import glob
 
     import pyarrow.parquet as pq
@@ -541,7 +543,7 @@ def test_cdc_epoch_is_one_pass(spark, sf_smoke, monkeypatch):
         q.stop()
 
     assert q.lastProgress["batchId"] == 2  # three one-file epochs
-    assert all(0 < n <= 4 for n in jobs), jobs
+    assert all(0 < n <= 2 for n in jobs), jobs
     assert sink_files == [(1, 1), (2, 2), (3, 3)], sink_files
     # read once, reused while the version is unchanged, re-read after the upsert
     assert dim_reads == [1, 0, 1], dim_reads
@@ -550,6 +552,321 @@ def test_cdc_epoch_is_one_pass(spark, sf_smoke, monkeypatch):
     )
     epoch3_ids = set(files[2]["event_id"].to_pylist())
     assert any(r.id in epoch3_ids and r.name for r in enriched.collect())
+
+
+@contextlib.contextmanager
+def _spark_path(spark):
+    """autoBroadcastJoinThreshold at 1 KB: every batch these tests build
+    (a 25-row file alone estimates about 3 KB) fails
+    catalog.driver_sized_bytes, so the epoch takes the Spark path. A
+    stream clones the session conf at start, so start it inside."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def _count_commits(monkeypatch) -> list:
+    """Record every driver-side sink commit (the driver path's marker)."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources import sinks
+
+    calls, real = [], sinks.commit_parts
+
+    def spy(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(sinks, "commit_parts", spy)
+    return calls
+
+
+def _rows(df) -> list[str]:
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def test_cdc_spark_path_writes_the_driver_path_rows(spark, sf_smoke, monkeypatch):
+    """The same stream with the epoch forced onto the Spark path (1 KB
+    gate) writes exactly the rows the driver path writes — ok rows, and
+    DLQ rows of both reasons — and observedMetrics.cdc.n_parsed still
+    counts every parsed row of the epoch, once."""
+    commits = _count_commits(monkeypatch)
+    results = []
+    for spark_path in (False, True):
+        out, dlq, ckpt = _tmp("path_out"), _tmp("path_dlq"), _tmp("path_ckpt")
+        cfg = CdcPipelineConfig(
+            sf_dir=sf_smoke, out_path=out, dlq_path=dlq, checkpoint=ckpt,
+            dim_filter="c_custkey % 2 = 0", corrupt_every=7,
+        )
+        n_commits = len(commits)
+        with _spark_path(spark) if spark_path else contextlib.nullcontext():
+            q = build_cdc_pipeline(spark, cfg)()
+            try:
+                q.processAllAvailable()
+                n_parsed = q.lastProgress["observedMetrics"]["cdc"]["n_parsed"]
+            finally:
+                q.stop()
+        assert (len(commits) > n_commits) != spark_path
+        ok = spark.read.schema(ENRICHED_SCHEMA).parquet(out)
+        bad = spark.read.schema(DLQ_SCHEMA).parquet(dlq)
+        assert n_parsed == ok.count() + bad.count()
+        results.append((_rows(ok), _rows(bad), n_parsed))
+    assert results[0] == results[1]
+    reasons = {r.reason for r in spark.read.schema(DLQ_SCHEMA).parquet(dlq).collect()}
+    assert reasons == {"parse_error", "enrichment_miss"} and results[0][0]
+
+
+def _epoch_cases(spark, sf_smoke):
+    """(name, parsed batch, dimension, enrichment) for the events and the
+    orders pipelines, with both sinks filled, no DLQ rows, and no ok rows."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
+        synthesize_event_envelopes,
+    )
+    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.entity import (
+        ORDERS_ENTITY,
+        entity_envelope_schema,
+        parse_entity_envelopes,
+        synthesize_entity_envelopes,
+    )
+    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        EVENTS_ENRICHMENT,
+        Enrichment,
+        _parse_keep_original,
+    )
+
+    dim = spark.read.parquet(f"{sf_smoke}/customer.parquet")
+    events = _parse_keep_original(
+        synthesize_event_envelopes(
+            spark.read.parquet(f"{sf_smoke}/events.parquet").limit(60), corrupt_every=7
+        )
+    )
+    clean = events.filter(~F.col("parse_failed")).join(
+        dim, F.col("user_id") == F.col("c_custkey"), "left_semi"
+    )
+    src = spark.read.parquet(f"{sf_smoke}/orders.parquet").limit(60)
+    spec = ORDERS_ENTITY
+    orders = parse_entity_envelopes(
+        synthesize_entity_envelopes(src, spec), entity_envelope_schema(src, spec)
+    )
+    orders_enrichment = Enrichment(
+        spec.dim_join, spec.dim_match_col, spec.output_cols, payload="__original"
+    )
+    return [
+        ("events", events, dim, EVENTS_ENRICHMENT),
+        ("events_no_dlq", clean, dim, EVENTS_ENRICHMENT),
+        ("events_no_ok", events, dim.filter("false"), EVENTS_ENRICHMENT),
+        ("orders", orders, dim.filter("c_custkey % 3 = 0"), orders_enrichment),
+    ]
+
+
+def _parts(path: str) -> list[str]:
+    import glob
+
+    return sorted(glob.glob(f"{path}/**/part-*.parquet", recursive=True))
+
+
+def _footers(path: str) -> tuple[list, list[int]]:
+    """The distinct Spark schemas stored in the footers of the sink's
+    parts, and each part's row count."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import SPARK_ROW_METADATA
+
+    schemas, rows = [], []
+    for f in _parts(path):
+        meta = pq.read_metadata(f)
+        schema = StructType.fromJson(json.loads(meta.metadata[SPARK_ROW_METADATA.encode()]))
+        if schema not in schemas:
+            schemas.append(schema)
+        rows.append(meta.num_rows)
+    return schemas, rows
+
+
+def test_driver_written_sinks_read_like_spark_written(spark, sf_smoke, monkeypatch):
+    """For the events and orders ok sinks and the DLQ, in append and
+    idempotent mode, and for epochs where one side is empty: the one part
+    per sink the driver path writes carries the footer schema of the parts
+    the Spark path writes, Spark reads the sink back with the same schema,
+    and the rows are the same. An empty side is a schema-only part in
+    append mode and no partition in idempotent mode, as Spark writes it."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        _enrich_and_split,
+    )
+
+    commits = _count_commits(monkeypatch)
+    for name, batch, dim, enrichment in _epoch_cases(spark, sf_smoke):
+        for idempotent in (False, True):
+            sinks = []
+            for spark_path in (False, True):
+                out, dlq = _tmp(f"{name}_out"), _tmp(f"{name}_dlq")
+                n_commits = len(commits)
+                with _spark_path(spark) if spark_path else contextlib.nullcontext():
+                    _enrich_and_split(
+                        batch, dim, out, dlq, batch_id=3, idempotent=idempotent,
+                        enrichment=enrichment,
+                    )
+                assert (len(commits) > n_commits) != spark_path, name
+                sinks.append((out, dlq))
+            case = (name, idempotent)
+            sizes = []
+            for driver_dir, spark_dir in zip(*sinks):
+                schemas, rows = _footers(driver_dir)
+                want_schemas, want_rows = _footers(spark_dir)
+                assert schemas == want_schemas and len(schemas) <= 1, case
+                assert sum(rows) == sum(want_rows), case
+                # an empty side in idempotent mode writes no part, as Spark
+                assert len(rows) == 1 or (idempotent and not rows and not want_rows), case
+                if rows:
+                    got = spark.read.parquet(driver_dir)
+                    want = spark.read.parquet(spark_dir)
+                    assert got.schema == want.schema, case
+                    assert _rows(got) == _rows(want), case
+                sizes.append(rows)
+            empty = [] if idempotent else [0]  # schema-only part in append mode
+            if name == "events_no_dlq":
+                assert sizes[0][0] > 0 and sizes[1] == empty, (case, sizes)
+            if name == "events_no_ok":
+                assert sizes[1][0] > 0 and sizes[0] == empty, (case, sizes)
+
+
+def test_driver_commit_failure_publishes_nothing_and_retry_commits_once(
+    spark, sf_smoke, monkeypatch
+):
+    """A failure after both parts are staged (before their rename) leaves
+    no new part visible — in idempotent mode the epoch's old partition
+    stays readable — and resilient_batch's retry of the epoch commits
+    each sink exactly once, with no staged file left behind."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources import sinks
+    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        _enrich_and_split,
+        resilient_batch,
+    )
+
+    _, batch, dim, _ = _epoch_cases(spark, sf_smoke)[0]
+    n_rows = batch.count()
+    real_publish = sinks._publish_parts
+    for idempotent in (False, True):
+        out, dlq = _tmp("fail_out"), _tmp("fail_dlq")
+        if idempotent:  # an earlier attempt's partition, to be replaced
+            _enrich_and_split(batch.limit(5), dim, out, dlq, batch_id=9, idempotent=True)
+        before = [_parts(d) for d in (out, dlq)]
+        seen = []
+
+        def failing_publish(spark_, staged, batch_id):
+            if not seen:
+                seen.append([_parts(d) for d in (out, dlq)])
+                seen.append(sorted(
+                    f for d in (out, dlq) for f in os.listdir(d)
+                    if f.startswith(".") and not f.endswith(".crc")
+                ))
+                raise FileNotFoundError("simulated: staged path does not exist")
+            return real_publish(spark_, staged, batch_id)
+
+        monkeypatch.setattr(sinks, "_publish_parts", failing_publish)
+        resilient_batch(
+            lambda b, bid: _enrich_and_split(
+                b, dim, out, dlq, batch_id=bid, idempotent=idempotent
+            )
+        )(batch, 9)
+        visible_at_failure, staged_at_failure = seen
+        assert visible_at_failure == before, idempotent
+        assert len(staged_at_failure) == 2, staged_at_failure
+        assert [len(_parts(d)) for d in (out, dlq)] == [1, 1]
+        hidden = [f for d in (out, dlq) for f in os.listdir(d)
+                  if f.startswith(".") and not f.endswith(".crc")]
+        assert hidden == [], hidden
+        got = sum(spark.read.parquet(d).count() for d in (out, dlq))
+        assert got == n_rows
+
+
+def test_idempotent_driver_epoch_replay_rewrites_in_place(spark, sf_smoke, monkeypatch):
+    """A replayed epoch on the driver path replaces its own
+    ``_batch_id=<N>`` partition of both sinks — also when the replay has
+    different content, or an empty side — while other epochs stay."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import read_idempotent_sink
+    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        _enrich_and_split,
+    )
+
+    commits = _count_commits(monkeypatch)
+    cases = _epoch_cases(spark, sf_smoke)
+    _, events, dim, _ = cases[0]
+    _, clean, _, _ = cases[1]
+    out, dlq = _tmp("replay_out"), _tmp("replay_dlq")
+
+    def epoch(batch, bid):
+        _enrich_and_split(batch, dim, out, dlq, batch_id=bid, idempotent=True)
+        return [read_idempotent_sink(spark, d).count() for d in (out, dlq)]
+
+    first = epoch(events, 5)
+    assert first[0] > 0 and first[1] > 0
+    assert epoch(events, 5) == first  # replay: same rows, not twice
+    both = epoch(events.limit(7), 6)
+    assert both[0] + both[1] == first[0] + first[1] + 7
+    # replay of epoch 5 with other content and no DLQ rows: its DLQ
+    # partition goes, epoch 6's stays
+    n_clean = clean.count()
+    assert epoch(clean, 5) == [n_clean + both[0] - first[0], both[1] - first[1]]
+    assert sorted(os.listdir(dlq)) == ["_batch_id=6"] and len(commits) == 4
+
+
+def test_static_dimension_epoch_runs_two_jobs(spark, sf_smoke):
+    """A static (unversioned) dimension is resolved once and reused while
+    its files are unchanged, so each one-file epoch runs at most two Spark
+    jobs (no per-epoch schema inference); an in-place rewrite of the
+    dimension is visible to the next epoch."""
+    import pyarrow.parquet as pq
+
+    src_dir = _tmp("static_sf")
+    ev = pq.read_table(f"{sf_smoke}/events.parquet")
+    files = [ev.slice(25 * k, 25) for k in range(3)]
+    target = next(
+        r["user_id"] for r in files[2].to_pylist()
+        if r["event_id"] % 97 and r["event_type"] != "error"
+    )
+    cust = spark.read.parquet(f"{sf_smoke}/customer.parquet")
+    dim_path = f"{src_dir}/customer.parquet"
+    cust.write.parquet(dim_path)
+
+    def drop(k):
+        pq.write_table(files[k], f"{src_dir}/.events{k}.tmp")
+        os.rename(f"{src_dir}/.events{k}.tmp", f"{src_dir}/events{k}.parquet")
+
+    out, dlq, ckpt = _tmp("static_out"), _tmp("static_dlq"), _tmp("static_ckpt")
+    cfg = CdcPipelineConfig(sf_dir=src_dir, out_path=out, dlq_path=dlq, checkpoint=ckpt)
+    drop(0)
+    q = build_cdc_pipeline(spark, cfg)()
+    tracker = spark.sparkContext.statusTracker()
+    jobs = []
+    try:
+        for k in range(3):
+            if k == 2:  # rewrite in place: the target customer renamed
+                renamed = cust.withColumn(
+                    "c_name",
+                    F.when(F.col("c_custkey") == target, F.lit("RENAMED"))
+                    .otherwise(F.col("c_name")),
+                )
+                renamed.localCheckpoint().write.mode("overwrite").parquet(dim_path)
+            if k:
+                drop(k)
+            n_jobs = len(tracker.getJobIdsForGroup(str(q.runId)))
+            q.processAllAvailable()
+            jobs.append(len(tracker.getJobIdsForGroup(str(q.runId))) - n_jobs)
+    finally:
+        q.stop()
+    assert q.lastProgress["batchId"] == 2
+    assert all(0 < n <= 2 for n in jobs), jobs
+    names = {
+        r.name for r in spark.read.schema(ENRICHED_SCHEMA).parquet(out)
+        .filter(F.col("user_id") == target).collect()
+        if r.id in set(files[2]["event_id"].to_pylist())
+    }
+    assert names == {"RENAMED"}, names
 
 
 def test_stream_metrics_cumulative(spark, sf_smoke):

@@ -27,6 +27,10 @@ Covered (operator → invariant):
                         plain-python zero-filled horizon scan
 - pq_train           single-pass all-subspace Lloyd == per-subspace
                         numpy model, random (subspaces, k, dim)
+- epoch sinks        CDC epoch driver commit == Spark-path sink writes
+                        (rows and read-back schema) on dirty batches:
+                        NULL keys, garbled payloads, tombstones, duplicate
+                        dimension keys, empty and all-DLQ batches
 
 Run: python tools/deep_fuzz.py [EXAMPLES]   (default 60 per invariant)
 """
@@ -645,6 +649,108 @@ def fuzz_shard_assign(spark) -> None:
     print(f"shard assign twins: {cases} cases OK")
 
 
+def _read_sink(spark, path: str, schema, idempotent: bool):
+    """(read-back schema, sorted row reprs) of a sink dir; (None, []) when
+    it holds no part (an empty side in idempotent mode writes none)."""
+    import glob
+
+    if not glob.glob(f"{path}/**/part-*.parquet", recursive=True):
+        return None, []
+    df = spark.read.parquet(path)
+    rows = (df.drop("_batch_id") if idempotent else df).select(*schema.fieldNames())
+    return df.schema, sorted(repr(tuple(r)) for r in rows.collect())
+
+
+def fuzz_epoch_sinks(spark) -> None:
+    """The CDC epoch body's two paths — the one-collect driver commit an
+    epoch takes under catalog.driver_sized_bytes, and the Spark path
+    (persist + two sink writes) it takes above — write the same ok and
+    DLQ rows with the same read-back schema, on dirty micro-batches: NULL
+    user ids and payload fields, garbled payloads, tombstones, deletes,
+    id=0 sentinels, duplicate and NULL dimension keys, and empty and
+    all-DLQ batches, in append and idempotent (replayed) mode."""
+    import json
+    import tempfile
+
+    from spring_cloud_kafka_streams_dbz_etl_spark import catalog
+    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        DLQ_SCHEMA,
+        ENRICHED_SCHEMA,
+        _enrich_and_split,
+        _parse_keep_original,
+    )
+
+    garbled = ["CORRUPT<<{}", "{", "", "null", "[1, 2]", '{"op": null}', '{"after": 3}']
+    cases = max(3, N // 6)
+    diffs = compared = 0
+    real_gate = catalog.driver_sized_bytes
+    try:
+        for i in range(cases):
+            kind = ("empty", "all_dlq", "mixed")[i % 3]
+            raw = []
+            for j in range(rng.randint(1, 80)):
+                # empty: only records the parse drops (tombstones, deletes,
+                # id=0 sentinels), so the parsed epoch has no row
+                roll = rng.random() * (0.1 if kind == "empty" else 1)
+                if roll < 0.05:
+                    value = None  # tombstone
+                elif kind == "empty":
+                    value = json.dumps(rng.choice([
+                        {"after": None, "op": "d"}, {"after": {"id": 0}, "op": "u"},
+                    ]))
+                elif roll < 0.25:
+                    value = rng.choice(garbled)
+                else:
+                    after = None if rng.random() < 0.1 else {  # None: a delete
+                        "id": 0 if rng.random() < 0.05 else j + 1,
+                        "user_id": None if rng.random() < 0.15 else rng.randint(0, 40),
+                        "event_type": rng.choice(["view", "click", None]),
+                        "value": None if rng.random() < 0.2 else rng.uniform(-5, 5),
+                    }
+                    value = json.dumps({"after": after, "op": "d" if after is None else "u"})
+                raw.append((None if rng.random() < 0.05 else j, value))
+            dim_rows = []
+            if kind != "all_dlq":  # all_dlq: no key matches, every row dead-letters
+                for key in rng.sample(range(0, 41), rng.randint(0, 41)):
+                    for _ in range(2 if rng.random() < 0.2 else 1):  # duplicate keys
+                        dim_rows.append((key, rng.choice([f"n{key}", None]),
+                                         rng.choice(["A", "B", None])))
+            dim_rows += [(None, "null-key", "A")] * rng.randint(0, 2)
+            # local relations (the pandas path) carry a size estimate, as a
+            # stream's micro-batch does; a parallelized list reports none
+            batch = _parse_keep_original(
+                catalog.local_rows(spark, raw, "kafka_key long, value string")
+            )
+            dim = catalog.local_rows(
+                spark, dim_rows, "c_custkey long, c_name string, c_mktsegment string"
+            )
+            assert real_gate(batch) is not None, (SEED, i)  # the driver side is reachable
+            idempotent = rng.random() < 0.5
+            results = []
+            for driver in (True, False):
+                catalog.driver_sized_bytes = real_gate if driver else (lambda df: None)
+                with tempfile.TemporaryDirectory() as d:
+                    out, dlq = f"{d}/out", f"{d}/dlq"
+                    for _ in range(2 if idempotent else 1):  # idempotent: a replay
+                        _enrich_and_split(batch, dim, out, dlq, batch_id=i,
+                                          idempotent=idempotent)
+                    results.append([
+                        _read_sink(spark, out, ENRICHED_SCHEMA, idempotent),
+                        _read_sink(spark, dlq, DLQ_SCHEMA, idempotent),
+                    ])
+            for (got_schema, got), (want_schema, want) in zip(*results):
+                assert got_schema == want_schema, (SEED, i, got_schema, want_schema)
+                diffs += len(set(got) ^ set(want)) + abs(len(got) - len(want))
+                compared += len(want)
+            assert diffs == 0, (SEED, i, kind, idempotent, raw, dim_rows)
+    finally:
+        catalog.driver_sized_bytes = real_gate
+    print(
+        f"epoch sinks (driver vs Spark path): {cases} cases OK, "
+        f"{compared} rows compared, {diffs} row diffs"
+    )
+
+
 def main() -> None:
     spark = get_spark("deep-fuzz", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -660,6 +766,7 @@ def main() -> None:
     fuzz_event_pattern(spark)
     fuzz_ts_windows(spark)
     fuzz_shard_assign(spark)
+    fuzz_epoch_sinks(spark)
     print("deep fuzz: ALL OK")
 
 
