@@ -26,13 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor the
-# reference's deployment would see (region/nation are bounded; customer is
-# the enrichment dim of SURVEY.md §2A#5 — broadcast while it fits, else AQE
-# falls back to shuffle join).
-BROADCAST_DIMS = ("region", "nation", "supplier")
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")

@@ -1,24 +1,31 @@
-"""Distributed connected components (iterative label propagation).
+"""Connected components: near-dup PAIRS become duplicate CLUSTERS.
 
-The dedup pipeline's final step: near-dup PAIRS (from MinHash/LSH or
-blocked Jaccard) must become duplicate CLUSTERS so exactly one document
-per cluster survives. Transitive closure is a graph problem — this is
-the engine's iterative-algorithm surface (no driver-side union-find, no
-collect; every step is a DataFrame join).
+The dedup pipeline's final step: near-dup pairs (from MinHash/LSH or
+blocked Jaccard) must become clusters so exactly one document per
+cluster survives. Transitive closure is a graph problem with two
+regimes, split by one size gate (``catalog.driver_sized_bytes``) on the
+materialized edge cache:
 
-Algorithm: min-label propagation. label(v) starts as v; each round every
-vertex takes the min of its own label and its neighbors' labels; stop at
-fixpoint. Rounds needed = graph diameter — near-dup clusters are tiny
-(pairs/triples), so 2-3 rounds in practice. For web-scale graphs with
-long chains you'd switch to pointer-jumping (large-star/small-star,
-Kiveris et al.), which converges in O(log d) rounds; the per-round
-dataflow below is the same building block.
+- A graph the driver can hold (every near-dup graph of the fixtures: a
+  few KB of edges) is collected once and labeled by a vectorized numpy
+  union-find — at that size each Spark round is pure per-job scheduling
+  cost, and the driver finishes the closure in under a millisecond.
+- A larger graph runs min-label propagation as DataFrame joins. label(v)
+  starts as v; each round every vertex takes the min of its own label
+  and its neighbors' labels; stop at fixpoint. Rounds needed = graph
+  diameter — near-dup clusters are tiny (pairs/triples), so 2-3 rounds
+  in practice.
+
+Both regimes label a vertex with the minimum id of its component and run
+under the caller's session conf, which neither touches.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import driver_sized_bytes
 
@@ -34,169 +41,49 @@ def connected_components(
     """Return (id, component) where component = min vertex id reachable.
 
     `vertices`: one row per vertex (isolated vertices become their own
-    component). `edges`: undirected pairs (each listed once is enough).
+    component). `edges`: undirected pairs (each listed once is enough);
+    an edge with a NULL endpoint joins nothing, and a NULL vertex id
+    keeps a NULL component.
 
-    Scale: each round is one shuffle join on the current labels plus a
-    min-aggregate; labels are localCheckpointed per round so the plan
+    Scale: the edge list is materialized once and measured. Within
+    ``catalog.driver_sized_bytes`` (the broadcast threshold, 10 MB when
+    auto-broadcast is off) it is collected and labeled on the driver
+    (:func:`_min_labels`), and the labels come back as a local relation.
+    Above it, each round is one shuffle join on the current labels plus
+    a min-aggregate; labels are localCheckpointed per round so the plan
     doesn't grow with iteration count (lineage blowup is the classic
-    iterative-Spark failure mode). Small graphs (cached edge list within
-    the broadcast threshold) run the loop with AQE/auto-broadcast pinned
-    off — per-job scheduling tax dominates at that size (r18; see the
-    in-body comment) — while large graphs keep the caller's adaptive
-    shape untouched. Crucially, the iterated label relation
-    covers only EDGE ENDPOINTS, not all vertices: a vertex in no pair can
-    never change label, and near-dup graphs are sparse — at corpus scale
-    that's millions of endpoints iterated instead of billions of
-    documents, with the full vertex set joined back exactly once at the
-    end.
+    iterative-Spark failure mode). Either way the label relation covers
+    only EDGE ENDPOINTS, not all vertices: a vertex in no pair can never
+    change label, and near-dup graphs are sparse — at corpus scale that's
+    millions of endpoints labeled instead of billions of documents, with
+    the full vertex set joined back exactly once at the end.
     """
     from pyspark import StorageLevel
 
-    spark = edges.sparkSession
-
     # Materialize the edge list ONCE: `edges` usually carries an expensive
-    # lineage (e.g. the whole MinHash/LSH candidate pipeline), and every
-    # round's join would otherwise re-execute it from the scan.
-    # MEMORY_AND_DISK persist, not an eager localCheckpoint (r18, guide
-    # §1.2/§2.4 via VERDICT r17 #4 — the wall of the streaming CC
-    # consumer is per-job overhead, so fewer jobs IS the optimization):
-    # the cache fills inside the seed-label checkpoint job below instead
-    # of costing its own materialization job, spills rather than
-    # recomputes under pressure, and is released right after the loop —
-    # the edge lineage is static, so nothing grows per round. Defined
-    # BEFORE the conf pinning below ON PURPOSE: persist() captures the
-    # cached plan under the session conf at call time, and the edge
-    # pipeline belongs to the CALLER (a corpus-scale banded-candidate
-    # pipeline in the batch dedup queries wants its AQE/broadcast shape;
-    # the streaming consumer pins its own micro-batch-scoped conf around
-    # this call instead — streaming/dedup_stream.py).
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # lineage (e.g. the whole MinHash/LSH candidate pipeline), and the
+    # collect or every round's join would otherwise re-execute it from
+    # the scan. One direction only: a cached union of both directions
+    # runs the edge lineage's AQE stages twice (22 jobs instead of 17 for
+    # q_dup_clusters at local[4]). MEMORY_AND_DISK: spills rather than
+    # recomputes under pressure, and is released right after the labels
+    # are built. The gate reads the materialized InMemoryRelation's size.
+    cached = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    aqe_key = "spark.sql.adaptive.enabled"
-    bcast_key = "spark.sql.autoBroadcastJoinThreshold"
-    shuf_key = "spark.sql.shuffle.partitions"
-    sc = spark.sparkContext
+    sc = edges.sparkSession.sparkContext
     desc_before = sc.getLocalProperty("spark.job.description")
-    pinned = False
     try:
-        # Seed labels with min(id, min neighbor id): identical to the
-        # state after one propagation round from identity labels, but
-        # computed as a bare groupBy on the edge list (no join against a
-        # label relation) — one full join+checkpoint round saved on
-        # every graph. Runs under the CALLER's conf (it also fills the
-        # edge cache, whose plan is the caller's pipeline).
-        sc.setJobDescription("cc: seed labels (+edge cache fill)")
-        labels = (
-            und.groupBy("a")  # both directions -> all endpoints
-            .agg(F.least(F.min("b"), F.first("a")).alias("component"))
-            .select(F.col("a").alias("id"), "component")
-            .localCheckpoint(eager=True)
-        )
-        # SIZE-AWARE loop confs (r18, guide §1.2 — fix the job shape
-        # first): for a SMALL graph (cached edge list within the
-        # session's broadcast threshold — the micro-batch CC of the
-        # streaming dedup, per-label blocks, test graphs) every AQE
-        # stage materialization and broadcast build the loop plans is
-        # its own Spark job, pure per-job scheduling tax at that size
-        # (r18 census: ~20 jobs per micro-batch CC, nearly all AQE
-        # sub-stages + per-round broadcast collects; 73 jobs/run on the
-        # streaming consumer, whose wall is 5 s of jobs + 3.7 s of
-        # inter-job gaps). Pinning AQE+broadcast off folds each round
-        # into checkpoint + probe, two plain jobs, and statically
-        # shuffling a <=10 MB relation costs microseconds. A LARGE
-        # graph keeps the caller's adaptive shape unchanged — broadcast
-        # demotion, skew splitting and partition coalescing are exactly
-        # right when the label relation has millions of rows (the r18
-        # first cut pinned unconditionally and regressed the
-        # corpus-sized q_semantic_clusters CC 2.5x; reverted to this
-        # gate). The measured cached size is read off the materialized
-        # InMemoryRelation, so the decision is data-driven, not a
-        # core-count constant. The gate is catalog.driver_sized_bytes,
-        # which also falls back to the stock 10 MB anchor when the caller
-        # disabled auto-broadcast (e.g. the streaming consumer's own
-        # micro-batch pin), and keeps the caller's conf when no estimate
-        # is available.
-        und_bytes = driver_sized_bytes(und)
-        if und_bytes is not None:
-            aqe_before = spark.conf.get(aqe_key, "true")
-            bcast_before = spark.conf.get(bcast_key, "10485760")
-            shuf_before = spark.conf.get(shuf_key, None)
-            pinned = True  # set BEFORE the flips: a mid-set failure
-            # must still restore whatever landed (the finally keys off
-            # this flag)
-            spark.conf.set(aqe_key, "false")
-            spark.conf.set(bcast_key, "-1")
-            # Static partition count derived from the MEASURED edge
-            # bytes (~32 MB/partition, so <=10 MB graphs run 1-partition
-            # rounds) — the same tiny-shuffle shape AQE coalescing would
-            # reach, minus its per-stage materialization jobs. This is
-            # size-adaptive, not a core-count constant, and it revisits
-            # r17's "partition narrowing harmful" negative result with
-            # the cause removed: that measurement narrowed partitions
-            # UNDER AQE, whose re-planning dominated; here AQE is off in
-            # the same scope.
-            spark.conf.set(
-                shuf_key, str(max(1, -(-und_bytes // (32 << 20))))
-            )
-        changed = 0
-        for i in range(max_iter):
-            nbr_min = (
-                und.join(labels, und.b == labels.id)
-                .groupBy("a")
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            # The convergence flag rides along in the SAME join that
-            # computes the new labels (nbr_min < component <=> this
-            # vertex improves), so the per-round termination check is a
-            # narrow scan of the checkpointed result — no extra join
-            # job per iteration. Labels stay localCheckpointed per
-            # round: a cached-chain variant (probe count doubling as
-            # the materialization) measured one job less per round but
-            # its nested-InMemoryRelation planning grew 0.5 -> 1.8 s
-            # across 4 rounds on the corpus-sized CC — flat lineage
-            # wins (r18).
-            stepped = (
-                labels.join(nbr_min, labels.id == nbr_min.a, "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("component"), F.coalesce("nbr_min", "component")
-                    ).alias("component"),
-                    (F.coalesce("nbr_min", "component") < F.col("component")).alias(
-                        "__improved"
-                    ),
-                )
-                .localCheckpoint(eager=True)
-            )
-            sc.setJobDescription(f"cc: round {i} probe")
-            changed = stepped.filter(F.col("__improved")).limit(1).count()
-            labels = stepped.drop("__improved")
-            if changed == 0:
-                break
+        sc.setJobDescription("cc: edge cache fill")
+        cached.count()
+        if driver_sized_bytes(cached) is not None:
+            sc.setJobDescription("cc: collect edges")
+            labels = _driver_labels(cached)
+        else:
+            labels = _propagate_labels(cached, max_iter)
     finally:
         sc.setJobDescription(desc_before)
-        if pinned:
-            spark.conf.set(aqe_key, aqe_before)
-            spark.conf.set(bcast_key, bcast_before)
-            if shuf_before is None:
-                spark.conf.unset(shuf_key)
-            else:
-                spark.conf.set(shuf_key, shuf_before)
-        und.unpersist()
-    if changed != 0:
-        # min-label propagation needs diameter rounds; exiting via
-        # max_iter means a chain longer than max_iter hops exists and the
-        # labels are NOT a fixpoint — silently returning them would make
-        # downstream dedup clusters wrong. Callers with genuinely deep
-        # graphs should raise max_iter or switch to pointer-jumping
-        # (large-star/small-star), which converges in O(log d) rounds.
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds (graph diameter exceeds max_iter)"
-        )
+        cached.unpersist()
     # Re-attach the full vertex set once: isolated vertices label themselves.
     ids = vertices.select(F.col(id_col).alias("id"))
     return ids.join(labels, "id", "left").select(
@@ -204,84 +91,112 @@ def connected_components(
     )
 
 
-def connected_components_pointer_jumping(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 40,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14): the O(log d)-round path for graphs whose diameter makes
-    min-label propagation (one round per hop) too slow.
+def _min_labels(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Component label of each of ``n`` dense vertex indices: the minimum
+    index in its component, for undirected edges ``u[i] -- v[i]``.
 
-    large-star: every node links its LARGER neighbors to the minimum of
-    its neighborhood; small-star: every node links its smaller-or-equal
-    neighbors (and itself) to that minimum. Alternating the two contracts
-    chains exponentially — a 10⁶-hop chain converges in ~20 rounds where
-    min-label would need 10⁶.
+    Hook-and-shortcut union-find, vectorized: every round hooks each
+    edge's two roots to the smaller one (``np.minimum.at``), then pointer
+    jumping flattens the forest back to stars. Pointers only ever move
+    to smaller indices, so no cycle forms; every tree with a cross edge
+    merges each round, so rounds are O(log n) and no Python loop runs per
+    edge. At the fixpoint no hook moves a root, so both endpoints of every
+    edge share one root, and that root is the component minimum (it
+    points to nothing smaller)."""
+    lab = np.arange(n)
+    while True:
+        ru, rv = lab[u], lab[v]
+        hooked = lab.copy()
+        m = np.minimum(ru, rv)
+        np.minimum.at(hooked, ru, m)
+        np.minimum.at(hooked, rv, m)
+        if np.array_equal(hooked, lab):
+            return lab
+        while True:
+            jumped = hooked[hooked]
+            if np.array_equal(jumped, hooked):
+                break
+            hooked = jumped
+        lab = hooked
 
-    Same contract as :func:`connected_components`: (id, component) with
-    component = min reachable vertex id; isolated vertices keep their own
-    id. Each round is two groupBy shuffles over the CURRENT edge set
-    (which only shrinks toward stars); edge sets are localCheckpointed so
-    lineage stays O(1). Use for long-chain graphs; for shallow near-dup
-    graphs min-label's single join per round is cheaper.
-    """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+
+def _driver_labels(cached: DataFrame) -> DataFrame:
+    """(id, component) for every endpoint of the cached (a, b) edge list,
+    labeled on the driver: one collect (self-loops and edges with a NULL
+    endpoint are dropped — they join nothing in the Spark loop either),
+    ids factorized to dense sorted indices so the minimum index is the
+    minimum id, and the labels shipped back as an Arrow local relation."""
+    import pyarrow as pa
+
+    t = cached.filter(F.col("a") != F.col("b")).toArrow()
+    a, b = t.column("a").to_numpy(), t.column("b").to_numpy()
+    ids, dense = np.unique(np.concatenate([a, b]), return_inverse=True)
+    lab = _min_labels(dense[: len(a)], dense[len(a) :], len(ids))
+    # the type a union of both directions widens the endpoints to
+    typ = cached.select("a").union(cached.select("b")).schema[0].dataType
+    return cached.sparkSession.createDataFrame(
+        pa.table({"id": ids, "component": ids[lab]}),
+        schema=T.StructType(
+            [T.StructField("id", typ), T.StructField("component", typ)]
+        ),
     )
 
-    def large_star(cur: DataFrame) -> DataFrame:
-        both = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = both.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        return (
-            both.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
 
-    def small_star(cur: DataFrame) -> DataFrame:
-        down = cur.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+def _propagate_labels(cached: DataFrame, max_iter: int) -> DataFrame:
+    """(id, component) for every endpoint of the cached (a, b) edge list
+    by min-label propagation, one shuffle join + checkpoint per round."""
+    sc = cached.sparkSession.sparkContext
+    und = cached.union(cached.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    # Seed labels with min(id, min neighbor id): identical to the state
+    # after one propagation round from identity labels, but computed as a
+    # bare groupBy on the edge list (no join against a label relation) —
+    # one full join+checkpoint round saved on every graph.
+    sc.setJobDescription("cc: seed labels")
+    labels = (
+        und.groupBy("a")  # both directions -> all endpoints
+        .agg(F.least(F.min("b"), F.first("a")).alias("component"))
+        .select(F.col("a").alias("id"), "component")
+        .localCheckpoint(eager=True)
+    )
+    for i in range(max_iter):
+        nbr_min = (
+            und.join(labels, und.b == labels.id)
+            .groupBy("a")
+            .agg(F.min("component").alias("nbr_min"))
         )
-        m = down.groupBy("u").agg(F.min("v").alias("m"))  # all v < u here
-        nbrs = down.join(m, "u").select(
-            F.col("v").alias("u"), F.col("m").alias("v")
+        # The convergence flag rides along in the SAME join that computes
+        # the new labels (nbr_min < component <=> this vertex improves), so
+        # the per-round termination check is a narrow scan of the
+        # checkpointed result — no extra join job per iteration. Labels
+        # stay localCheckpointed per round: a cached-chain variant (probe
+        # count doubling as the materialization) measured one job less per
+        # round but its nested-InMemoryRelation planning grew 0.5 -> 1.8 s
+        # across 4 rounds on a corpus-sized CC — flat lineage wins.
+        stepped = (
+            labels.join(nbr_min, labels.id == nbr_min.a, "left")
+            .select(
+                "id",
+                F.least(
+                    F.col("component"), F.coalesce("nbr_min", "component")
+                ).alias("component"),
+                (F.coalesce("nbr_min", "component") < F.col("component")).alias(
+                    "__improved"
+                ),
+            )
+            .localCheckpoint(eager=True)
         )
-        selfs = m.select(F.col("u"), F.col("m").alias("v"))
-        return nbrs.union(selfs).filter(F.col("u") != F.col("v")).distinct()
-
-    for _ in range(max_iter):
-        stepped = small_star(large_star(e)).localCheckpoint(eager=True)
-        # Fixpoint = identical edge set. subtract is a narrow
-        # anti-join over two checkpointed edge lists that SHRINK toward
-        # star count; limit(1) short-circuits the scan.
-        changed = (
-            stepped.subtract(e).limit(1).count() + e.subtract(stepped).limit(1).count()
-        )
-        e = stepped
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"pointer-jumping did not converge within max_iter={max_iter} rounds"
-        )
-    # e is now a union of stars: u -> component root. Roots and isolated
-    # vertices label themselves.
-    membership = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    ids = vertices.select(F.col(id_col).alias("id"))
-    return (
-        ids.join(membership, "id", "left")
-        .select("id", F.coalesce("component", "id").alias("component"))
+        sc.setJobDescription(f"cc: round {i} probe")
+        labels = stepped.drop("__improved")
+        if stepped.filter(F.col("__improved")).limit(1).count() == 0:
+            return labels
+    # min-label propagation needs diameter rounds; exiting via max_iter
+    # means a chain longer than max_iter hops exists and the labels are NOT
+    # a fixpoint — silently returning them would make downstream dedup
+    # clusters wrong. Callers with genuinely deep graphs should raise
+    # max_iter.
+    raise RuntimeError(
+        f"connected_components did not converge within max_iter={max_iter} "
+        "rounds (graph diameter exceeds max_iter)"
     )
 
 

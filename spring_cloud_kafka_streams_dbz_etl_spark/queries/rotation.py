@@ -828,6 +828,14 @@ CHECKED_BY_ROUND: dict[int, frozenset[str]] = {
 #   through the class, and no query reads its new durationMsP50 key.
 # q_dataset_card and q_tpch_q21 flipped as the PROCESS_VARIANT again and
 # were kept. Zero tier stays these 45 <= 50.
+# After connected_components moved small graphs to a driver union-find
+# (labels join back as a local relation), the restamp moved plan on
+# q_dup_clusters, q_dup_cluster_stats, q_dedup_survivors,
+# q_leakage_split and q_semantic_clusters (already listed), and closure
+# only on s_minhash_incremental (graph.py and the epoch body's pin
+# region). The four new plan moves and s_minhash_incremental are added;
+# q_dataset_card and q_tpch_q21 flipped as the PROCESS_VARIANT and were
+# kept. Zero tier = these 50 <= 50.
 CHANGED_SINCE_CHECK: frozenset[str] = frozenset(
     {
         # r17 stale tier (pinned by name in tests/test_rotation.py)
@@ -853,6 +861,11 @@ CHANGED_SINCE_CHECK: frozenset[str] = frozenset(
         "s_dlq_reprocess", "s_offset_reset", "s_idempotent_sink",
         "s_dim_upsert", "s_dim_delete", "s_backfill_then_tail",
         "s_cdc_multiplex", "q_dim_time_travel",
+        # driver union-find for small connected components: plan moved
+        "q_dup_clusters", "q_dup_cluster_stats", "q_dedup_survivors",
+        "q_leakage_split",
+        # ... closure only
+        "s_minhash_incremental",
     }
 )
 

@@ -42,12 +42,6 @@ def write_bucketed(
     writer.format("parquet").saveAsTable(table_name)
 
 
-def read_partition_pruned(spark: SparkSession, path: str) -> DataFrame:
-    """Read back a partitioned layout (partition columns become columns;
-    filters on them prune directories — assert via plans.inspect)."""
-    return spark.read.parquet(path)
-
-
 def idempotent_batch_write(df: DataFrame, batch_id: int, path: str) -> None:
     """Exactly-once foreachBatch sink: the epoch's rows land in a
     ``_batch_id=<N>`` partition via DYNAMIC partition overwrite, so a

@@ -71,16 +71,6 @@ def stream_parquet_dir(
     return reader.parquet(path)
 
 
-def starting_offsets_json(topic: str, partition_offsets: dict[int, int]) -> str:
-    """Build the ``startingOffsets`` JSON for a reset-to-specific-offsets
-    restart (the Spark twin of alterConsumerGroupOffsets,
-    KafkaOffsetService.java:80-90): ``{"topic": {"0": 42, ...}}``.
-    -1 = latest, -2 = earliest per Kafka convention."""
-    import json
-
-    return json.dumps({topic: {str(p): int(o) for p, o in partition_offsets.items()}})
-
-
 def kafka_source_options(
     bootstrap_servers: str,
     topic: str,

@@ -112,39 +112,6 @@ def build_minhash_dedup_stream(spark: SparkSession, cfg: MinhashStreamConfig):
         # and purely cosmetic)
         spark_l.sparkContext.setJobDescription(f"mhs epoch {epoch_id}")
         toks = F.split(F.col("text"), " ")
-        # Everything from here through the CC call operates on ONE
-        # micro-batch's relations — bounded by the trigger, never
-        # corpus-sized — so AQE and auto-broadcast are pinned off for
-        # the whole region (restored below, BEFORE the store probe and
-        # the sinks, which face the unbounded signature store and keep
-        # the session's adaptive shape): cached plans are captured at
-        # .persist() call time, and every AQE stage materialization and
-        # broadcast build runs as its own job — pure per-job scheduling
-        # tax at micro-batch sizes (the r18 census put the CC seed
-        # execution alone at 14 jobs, nearly all cache-fill AQE
-        # sub-stages and broadcast collects; guide §1.2 — fix the job
-        # shape first).
-        aqe_key = "spark.sql.adaptive.enabled"
-        bcast_key = "spark.sql.autoBroadcastJoinThreshold"
-        aqe_before = spark_l.conf.get(aqe_key, "true")
-        bcast_before = spark_l.conf.get(bcast_key, "10485760")
-        spark_l.conf.set(aqe_key, "false")
-        spark_l.conf.set(bcast_key, "-1")
-        try:
-            docs = batch.select(
-                "doc_id",
-                F.lit(int(epoch_id)).cast("int").alias("shard"),
-                toks.alias("toks"),
-            ).persist()
-            shingled = docs.filter(F.size("toks") >= 3).select(
-                "doc_id", shingle(F.col("toks"), 3).alias("shingles")
-            )
-            sig = minhash_signature(shingled, "doc_id", "shingles", k=cfg.k).persist()
-            bands = lsh_bands(sig, "doc_id", k=cfg.k, bands=cfg.bands).persist()
-        except BaseException:
-            spark_l.conf.set(aqe_key, aqe_before)
-            spark_l.conf.set(bcast_key, bcast_before)
-            raise
 
         def with_sigs(pairs: DataFrame, right_sig: DataFrame) -> DataFrame:
             a = sig.select(
@@ -162,22 +129,56 @@ def build_minhash_dedup_stream(spark: SparkSession, cfg: MinhashStreamConfig):
                 .select("id_a", "id_b")
             )
 
-        # within-batch: band self-join -> slot-verified edges -> CC keep-min
-        ba = bands.select(F.col("doc_id").alias("id_a"), "band_idx", "band_hash")
-        bb = bands.select(F.col("doc_id").alias("id_b"), "band_idx", "band_hash")
-        in_cand = (
-            ba.join(bb, ["band_idx", "band_hash"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
+        # Everything from here through the CC call operates on ONE
+        # micro-batch's relations — bounded by the trigger, never
+        # corpus-sized — so AQE and auto-broadcast are pinned off for the
+        # whole region: cached plans are captured at .persist() call time,
+        # and every AQE stage materialization and broadcast build runs as
+        # its own job — pure per-job scheduling tax at micro-batch sizes
+        # (without the pin, s_minhash_incremental at sf0.01 runs 48 jobs
+        # instead of 29, local[4]). One try/finally restores the confs
+        # BEFORE the store probe and the sinks, which face the unbounded
+        # signature store and keep the adaptive shape, and on any failure
+        # in between. The pin cannot reach another query: foreachBatch
+        # hands the batch the stream's own clone of the session
+        # (StreamExecution's cloneSession), so the caller's session — and
+        # every query planned on it meanwhile — never sees the flipped
+        # confs (tests/test_dedup_stream.py pins that).
+        aqe_key = "spark.sql.adaptive.enabled"
+        bcast_key = "spark.sql.autoBroadcastJoinThreshold"
+        aqe_before = spark_l.conf.get(aqe_key, "true")
+        bcast_before = spark_l.conf.get(bcast_key, "10485760")
         try:
-            edges = with_sigs(in_cand, sig)
+            spark_l.conf.set(aqe_key, "false")
+            spark_l.conf.set(bcast_key, "-1")
+            docs = batch.select(
+                "doc_id",
+                F.lit(int(epoch_id)).cast("int").alias("shard"),
+                toks.alias("toks"),
+            ).persist()
+            shingled = docs.filter(F.size("toks") >= 3).select(
+                "doc_id", shingle(F.col("toks"), 3).alias("shingles")
+            )
+            sig = minhash_signature(shingled, "doc_id", "shingles", k=cfg.k).persist()
+            bands = lsh_bands(sig, "doc_id", k=cfg.k, bands=cfg.bands).persist()
+            # within-batch: band self-join -> slot-verified edges -> CC keep-min
+            ba = bands.select(F.col("doc_id").alias("id_a"), "band_idx", "band_hash")
+            bb = bands.select(F.col("doc_id").alias("id_b"), "band_idx", "band_hash")
+            in_cand = (
+                ba.join(bb, ["band_idx", "band_hash"])
+                .filter(F.col("id_a") < F.col("id_b"))
+                .select("id_a", "id_b")
+                .distinct()
+            )
             spark_l.sparkContext.setJobDescription(f"mhs e{epoch_id}: cc")
-            # the eager materializations (edge cache fill, seed, rounds)
-            # all happen inside this call — still in the pinned region
+            # the eager materializations (edge cache fill, labels) all
+            # happen inside this call — still in the pinned region
             comp = connected_components(
-                docs.select("doc_id"), edges, id_col="doc_id", src="id_a", dst="id_b"
+                docs.select("doc_id"),
+                with_sigs(in_cand, sig),
+                id_col="doc_id",
+                src="id_a",
+                dst="id_b",
             )
         finally:
             spark_l.conf.set(aqe_key, aqe_before)

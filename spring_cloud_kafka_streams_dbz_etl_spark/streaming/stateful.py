@@ -65,80 +65,6 @@ def running_user_counters(events: DataFrame) -> DataFrame:
     )
 
 
-TWS_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("event_type", T.StringType(), False),
-        T.StructField("n_events", T.LongType(), False),
-        T.StructField("total_value_micros", T.LongType(), False),
-    ]
-)
-
-
-def per_type_counters_tws(events: DataFrame) -> DataFrame:
-    """Per-user, per-event-type running counters on transformWithState —
-    Spark 4's arbitrary-stateful API (SPARK-46815), the successor to
-    applyInPandasWithState: named state variables (here a MapState keyed
-    by event_type) instead of one opaque state tuple, per-variable TTL,
-    timers, and RocksDB-backed storage (the API REQUIRES the RocksDB
-    provider — state lives off-heap by construction).
-
-    Emits the updated (user, type) totals each micro-batch; totals are
-    exact integer micros, so the latest emission per key equals the batch
-    aggregate (the oracle's claim).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class PerTypeCounters(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getMapState(
-                "counts",
-                "event_type string",
-                "n bigint, total_micros bigint",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            touched: dict[str, tuple[int, int]] = {}
-            for pdf in rows:
-                for etype, grp in pdf.groupby("event_type"):
-                    n, total = touched.get(etype) or (
-                        tuple(self._counts.getValue((etype,)))
-                        if self._counts.containsKey((etype,))
-                        else (0, 0)
-                    )
-                    n += len(grp)
-                    total += sum(
-                        int(round(float(v) * 1_000_000)) for v in grp["value"]
-                    )
-                    touched[etype] = (n, total)
-            for etype, (n, total) in touched.items():
-                self._counts.updateValue((etype,), (n, total))
-            if touched:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]] * len(touched),
-                        "event_type": list(touched),
-                        "n_events": [v[0] for v in touched.values()],
-                        "total_value_micros": [v[1] for v in touched.values()],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=PerTypeCounters(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 SHARD_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),

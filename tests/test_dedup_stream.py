@@ -128,3 +128,52 @@ def test_result_matches_crash_free_run(spark, sf_smoke, tmp_path):
     clean = run(tmp_path / "clean", frozenset())
     replayed = run(tmp_path / "crash", frozenset({1}))
     assert clean == replayed
+
+
+def test_micro_batch_pin_leaves_outer_session_conf_alone(spark, sf_smoke, tmp_path, monkeypatch):
+    """The epoch body pins AQE and auto-broadcast off, but on the stream's
+    own clone of the session (foreachBatch's ``batch.sparkSession``): no
+    flip lands on the caller's session, so no query planned on it while
+    the stream runs sees them, and its confs read the same afterwards."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.shuffle.partitions",
+    )
+    before = {k: spark.conf.get(k) for k in keys}
+    outer = spark.conf._jconf
+    flips = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        flips.append((key, self._jconf.equals(outer)))
+        return real_set(self, key, value)
+
+    src = tmp_path / "src"
+    src.mkdir()
+    docs = pq.read_table(f"{sf_smoke}/documents.parquet")
+    even = pc.equal(pc.bit_wise_and(docs["doc_id"], 1), 0)
+    pq.write_table(docs.filter(even), str(src / "documents.parquet"))
+    pq.write_table(docs.filter(pc.invert(even)), str(src / "documents2.parquet"))
+    cfg = MinhashStreamConfig(
+        src_dir=str(src),
+        out_path=str(tmp_path / "out"),
+        state_path=str(tmp_path / "state"),
+        checkpoint=str(tmp_path / "ckpt"),
+        max_files_per_trigger=1,
+    )
+    start = build_minhash_dedup_stream(spark, cfg)
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    q = start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    monkeypatch.undo()
+
+    assert ("spark.sql.adaptive.enabled", False) in flips  # the pin ran
+    assert [k for k, on_outer in flips if on_outer] == []
+    assert {k: spark.conf.get(k) for k in keys} == before
+    assert read_accepted(spark, cfg.out_path).count() > 0

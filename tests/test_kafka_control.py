@@ -17,7 +17,6 @@ import os
 from spring_cloud_kafka_streams_dbz_etl_spark.sources.streams import (
     kafka_sink_options,
     kafka_source_options,
-    starting_offsets_json,
 )
 from spring_cloud_kafka_streams_dbz_etl_spark.streaming.registry import StreamRegistry
 
@@ -85,7 +84,7 @@ def test_file_source_offsets_not_kafka_shaped(tmp_path):
 def test_kafka_source_options_shape():
     opts = kafka_source_options(
         "kafka:9092", "dbserver1.public.event",
-        starting_offsets=starting_offsets_json("dbserver1.public.event", {0: 42}),
+        starting_offsets=json.dumps({"dbserver1.public.event": {"0": 42}}),
         max_offsets_per_trigger=10,
     )
     assert opts["subscribe"] == "dbserver1.public.event"

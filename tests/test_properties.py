@@ -13,6 +13,9 @@ part of the "add what the reference lacks" test plan.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -109,13 +112,24 @@ def test_sessionize_matches_gap_model(spark, cases, gap_s):
 
 
 # -- connected components -----------------------------------------------------
+# connected_components has two sides of one size gate (the materialized
+# edge cache against autoBroadcastJoinThreshold): a driver-side union-find
+# for graphs the driver can hold — every test graph by default — and the
+# Spark min-label loop above it. A threshold of 1 byte forces the loop.
 
 graph_case = st.lists(
-    st.tuples(st.integers(0, 9), st.integers(0, 9)), min_size=0, max_size=20
+    st.tuples(
+        st.one_of(st.none(), st.integers(0, 9)),
+        st.one_of(st.none(), st.integers(0, 9)),
+    ),
+    min_size=0,
+    max_size=20,
 )
 
 
-def _union_find_components(n_vertices: int, edges: list[tuple[int, int]]) -> dict[int, int]:
+def _union_find_components(n_vertices: int, edges: list[tuple]) -> dict[int, int]:
+    """Plain-Python model: component label = min member id; an edge with a
+    NULL endpoint joins nothing."""
     parent = list(range(n_vertices))
 
     def find(x: int) -> int:
@@ -125,6 +139,8 @@ def _union_find_components(n_vertices: int, edges: list[tuple[int, int]]) -> dic
         return x
 
     for a, b in edges:
+        if a is None or b is None:
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
@@ -136,74 +152,77 @@ def _union_find_components(n_vertices: int, edges: list[tuple[int, int]]) -> dic
     return {v: by_root[find(v)] for v in range(n_vertices)}
 
 
+@contextmanager
+def _cc_side(spark, side: str):
+    """Run connected_components on one side of its size gate."""
+    if side == "driver":
+        yield
+        return
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
 @given(st.lists(graph_case, min_size=1, max_size=6))
 @settings(**SETTINGS)
 def test_connected_components_matches_union_find(spark, cases):
     N = 10  # vertices per case; offset isolates cases in one graph
-    vrows, erows, expected = [], [], {}
+    vrows, erows, expected = [(None,)], [], {None: None}
     for case_id, edges in enumerate(cases):
         off = case_id * N
         vrows += [(off + v,) for v in range(N)]
-        erows += [(off + a, off + b) for a, b in edges]
+        erows += [
+            (None if a is None else off + a, None if b is None else off + b)
+            for a, b in edges
+        ]
         for v, c in _union_find_components(N, edges).items():
             expected[off + v] = off + c
     vertices = spark.createDataFrame(vrows, "id long")
-    edges_df = (
-        spark.createDataFrame(erows, "src long, dst long")
-        if erows
-        else spark.createDataFrame([], "src long, dst long")
-    )
-    out = connected_components(vertices, edges_df, id_col="id")
-    got = {r["id"]: r["component"] for r in out.collect()}
-    assert got == expected
-
-
-@given(st.lists(graph_case, min_size=1, max_size=4))
-@settings(**SETTINGS)
-def test_pointer_jumping_matches_union_find(spark, cases):
-    from spring_cloud_kafka_streams_dbz_etl_spark.operators.graph import (
-        connected_components_pointer_jumping,
-    )
-
-    N = 10
-    vrows, erows, expected = [], [], {}
-    for case_id, edges in enumerate(cases):
-        off = case_id * N
-        vrows += [(off + v,) for v in range(N)]
-        erows += [(off + a, off + b) for a, b in edges]
-        for v, c in _union_find_components(N, edges).items():
-            expected[off + v] = off + c
-    vertices = spark.createDataFrame(vrows, "id long")
-    edges_df = (
-        spark.createDataFrame(erows, "src long, dst long")
-        if erows
-        else spark.createDataFrame([], "src long, dst long")
-    )
-    out = connected_components_pointer_jumping(vertices, edges_df, id_col="id")
-    got = {r["id"]: r["component"] for r in out.collect()}
-    assert got == expected
+    edges_df = spark.createDataFrame(erows, "src long, dst long")
+    for side in ("driver", "spark"):
+        with _cc_side(spark, side):
+            out = connected_components(vertices, edges_df, id_col="id")
+            got = {r["id"]: r["component"] for r in out.collect()}
+        assert got == expected, side
 
 
 def test_pointer_jumping_long_chain_few_rounds(spark):
-    """The reason pointer-jumping exists: a 200-hop path graph converges
-    in O(log d) rounds where min-label propagation needs one round PER HOP
-    (it raises at max_iter=25 on this graph)."""
-    import pytest
-
-    from spring_cloud_kafka_streams_dbz_etl_spark.operators.graph import (
-        connected_components,
-        connected_components_pointer_jumping,
-    )
-
+    """A 200-hop path graph: the driver union-find's pointer jumping
+    converges in O(log d) rounds, while min-label propagation on the Spark
+    side needs one round PER HOP and raises at max_iter=25."""
     n = 200
-    vertices = spark.range(n).withColumnRenamed("id", "id")
+    vertices = spark.range(n)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
     )
-    out = connected_components_pointer_jumping(vertices, edges, id_col="id")
+    out = connected_components(vertices, edges, id_col="id", max_iter=25)
     assert {r["component"] for r in out.collect()} == {0}
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(vertices, edges, id_col="id", max_iter=25)
+    with _cc_side(spark, "spark"):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(vertices, edges, id_col="id", max_iter=25)
+
+
+@pytest.mark.parametrize("side", ["driver", "spark"])
+def test_connected_components_sets_no_session_conf(spark, side, monkeypatch):
+    """Neither side of the gate touches session conf: a conf flipped on a
+    shared session reaches every query planned on it meanwhile."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    vertices = spark.range(8)
+    edges = spark.createDataFrame([(0, 1), (1, 2), (4, 5)], "src long, dst long")
+    calls = []
+    with _cc_side(spark, side), monkeypatch.context() as m:
+        m.setattr(RuntimeConfig, "set", lambda self, *a: calls.append(("set", a)))
+        m.setattr(RuntimeConfig, "unset", lambda self, *a: calls.append(("unset", a)))
+        got = dict(
+            map(tuple, connected_components(vertices, edges, id_col="id").collect())
+        )
+    assert calls == []
+    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4, 6: 6, 7: 7}
 
 
 # -- Avro codec roundtrip ---------------------------------------------------

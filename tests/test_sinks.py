@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from spring_cloud_kafka_streams_dbz_etl_spark.catalog import table
 from spring_cloud_kafka_streams_dbz_etl_spark.plans import explain_str
 from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import (
-    read_partition_pruned,
     write_bucketed,
     write_partitioned,
 )
@@ -24,7 +23,7 @@ def test_partitioned_write_prunes(spark, sf_smoke):
     write_partitioned(ev, out, ["event_type"])
     # hive-style directories exist
     assert any(d.startswith("event_type=") for d in os.listdir(out))
-    back = read_partition_pruned(spark, out).filter(F.col("event_type") == "click")
+    back = spark.read.parquet(out).filter(F.col("event_type") == "click")
     text = explain_str(back)
     assert "PartitionFilters" in text and "event_type" in text.split("PartitionFilters")[1][:200]
     assert back.count() == ev.filter("event_type = 'click'").count()

@@ -31,6 +31,10 @@ Covered (operator → invariant):
                         (rows and read-back schema) on dirty batches:
                         NULL keys, garbled payloads, tombstones, duplicate
                         dimension keys, empty and all-DLQ batches
+- connected_components driver union-find and Spark min-label loop (both
+                        sides of the size gate) == plain-Python union-find
+                        on dirty graphs: NULL endpoints and vertex ids,
+                        self-loops, duplicate/reversed edges, near-int64 ids
 
 Run: python tools/deep_fuzz.py [EXAMPLES]   (default 60 per invariant)
 """
@@ -751,6 +755,70 @@ def fuzz_epoch_sinks(spark) -> None:
     )
 
 
+def fuzz_cc(spark) -> None:
+    """connected_components on both sides of its size gate — the driver
+    union-find every small graph takes, and the Spark min-label loop a
+    1-byte autoBroadcastJoinThreshold forces — == a plain-Python
+    union-find, on dirty graphs: NULL endpoints, self-loops, duplicate
+    and reversed edges, endpoints outside the vertex set, NULL vertex ids,
+    negative and near-int64-limit ids, long chains."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.operators.graph import (
+        connected_components,
+    )
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    cases = max(3, N // 6)
+    for i in range(cases):
+        pool = rng.sample(
+            [rng.randint(-50, 50) for _ in range(60)]
+            + [rng.choice([-1, 1]) * ((1 << 62) + rng.randrange(1 << 20)) for _ in range(4)],
+            rng.randint(1, 40),
+        )
+        edges = [
+            (rng.choice(pool), rng.choice(pool)) for _ in range(rng.randint(0, 50))
+        ]
+        if rng.random() < 0.3:  # a chain through a random order of the pool
+            edges += list(zip(pool, pool[1:]))
+        edges += [(x, x) for x in rng.sample(pool, min(3, len(pool)))]  # self-loops
+        edges += [(b, a) for a, b in rng.sample(edges, len(edges) // 4)]  # reversed
+        edges += [(None, rng.choice(pool)), (rng.choice(pool), None), (None, None)][
+            : rng.randint(0, 3)
+        ]
+        vertices = [v for v in pool if rng.random() < 0.9] + [None] * rng.randint(0, 2)
+        vertices += [10**6 + j for j in range(rng.randint(0, 3))]  # isolated
+
+        parent = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            if a is not None and b is not None:
+                ra, rb = find(a), find(b)
+                parent[max(ra, rb)] = min(ra, rb)  # roots hold their set's min
+        want = sorted(((v, None if v is None else find(v)) for v in vertices), key=repr)
+
+        vdf = spark.createDataFrame([(v,) for v in vertices], "id long")
+        edf = spark.createDataFrame(edges, "src long, dst long")
+        before = spark.conf.get(key)
+        for side in ("driver", "spark"):
+            if side == "spark":
+                spark.conf.set(key, "1")
+            try:
+                got = sorted(
+                    map(tuple, connected_components(vdf, edf, max_iter=100).collect()),
+                    key=repr,
+                )
+            finally:
+                spark.conf.set(key, before)
+            assert got == want, (SEED, i, side, edges, vertices)
+    print(f"connected components (driver and Spark side): {cases} cases OK")
+
+
 def main() -> None:
     spark = get_spark("deep-fuzz", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -767,6 +835,7 @@ def main() -> None:
     fuzz_ts_windows(spark)
     fuzz_shard_assign(spark)
     fuzz_epoch_sinks(spark)
+    fuzz_cc(spark)
     print("deep fuzz: ALL OK")
 
 
