@@ -913,93 +913,6 @@ def kmeans_cells(
     return ivf_assign(df, cents, id_col, vec_col, int_scale)
 
 
-def blocked_cosine_pairs(
-    e: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    cell_col: str = "label",
-    vec_col: str = "v",
-) -> DataFrame:
-    """All within-cell cosine pairs >= threshold, as ONE applyInPandas
-    pass per blocking cell — the scale form of the blocked self-join:
-    each vector shuffles ONCE (the groupBy), and the cell's full pair
-    grid accumulates as ``dim`` sequential rank-1 numpy updates instead
-    of a join that carries BOTH d-double arrays on every pair row and
-    evaluates an interpreted HOF fold per pair. Measured
-    (tools/measure_cosine_pairs.py, 16k vectors in 1.6k-row cells):
-    join-HOF 58.3 s vs 3.4 s here — 17x, widening quadratically with
-    cell size, zero membership diffs.
-
-    Bit-compatibility: acc[i,j] += V[i,d]*V[j,d] in ascending d is the
-    SAME multiply-then-accumulate sequence as the HOF dot's left fold,
-    and the norms are the accumulator's diagonal, so every raw cosine
-    equals the expression form's double exactly; ROUND(6) and the
-    threshold decision stay JVM-side. Returns
-    (vec_a, vec_b, cell_col, cos_sim) with vec_a < vec_b.
-
-    Memory: the accumulator is |cell|^2 doubles — cells are bounded by
-    the blocking scheme's design (that's what keeps pair counts
-    sub-quadratic); for outsized cells chunk the row axis, same
-    fold."""
-    import numpy as np
-
-    cell_t = e.schema[cell_col].dataType.simpleString()
-
-    def cell_pairs(pdf):
-        import pandas as pd
-
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {"vec_a": [], "vec_b": [], cell_col: [], "__cos": []}
-            )
-        V = np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
-        ids = pdf[id_col].to_numpy()
-        acc = np.zeros((n, n))
-        for d in range(V.shape[1]):
-            col = V[:, d]
-            # ascending-d left fold for every pair at once; the diagonal
-            # accumulates the squared norms with the same fold
-            acc += np.outer(col, col)
-        norms = np.sqrt(np.diag(acc))
-        iu, ju = np.triu_indices(n, k=1)
-        cos = acc[iu, ju] / (norms[iu] * norms[ju])
-        # margin pre-filter only; the exact decision happens JVM-side on
-        # the rounded value, identical to the expression form. ROUND(6)
-        # can lift a value by up to 5e-7, so the margin must exceed that.
-        # NaN-preserving (negated complement): a zero-norm vector yields
-        # cos = NaN here, which the Arrow handoff converts to NULL
-        # (pandas float NaN is the missing-value sentinel), so the
-        # JVM-side >= threshold DROPS such pairs — exactly what the
-        # DuckDB oracle does (x / 0.0 is NULL there, and NULL fails the
-        # WHERE). Deep-fuzzed in tools/deep_fuzz.py::fuzz_blocked_cosine
-        # and pinned in tests/test_zero_norm_cosine.py. Dropping is also
-        # the sane scale semantics: a NaN that compared high (Spark
-        # orders NaN above every double) would pair one zero embedding
-        # with the entire cell.
-        keep = ~(cos < threshold - 1e-6)
-        va, vb = ids[iu[keep]], ids[ju[keep]]
-        lo, hi = np.minimum(va, vb), np.maximum(va, vb)
-        return pd.DataFrame(
-            {
-                "vec_a": lo,
-                "vec_b": hi,
-                cell_col: pdf[cell_col].iloc[0],
-                "__cos": cos[keep],
-            }
-        )
-
-    out = e.groupBy(cell_col).applyInPandas(
-        cell_pairs, f"vec_a long, vec_b long, {cell_col} {cell_t}, __cos double"
-    )
-    return out.select(
-        "vec_a",
-        "vec_b",
-        cell_col,
-        F.round(F.col("__cos"), 6).alias("cos_sim"),
-    ).filter(F.col("cos_sim") >= threshold)
-
-
 def pair_dots_arrow(
     e: DataFrame,
     id_col: str = "vec_id",
@@ -1008,21 +921,25 @@ def pair_dots_arrow(
     directed: bool = False,
 ) -> DataFrame:
     """All within-cell pair DOT PRODUCTS plus both vectors' norms, as one
-    mapInArrow pass per cell — :func:`blocked_cosine_pairs` for consumers
-    that must preserve the exact NULL/NaN algebra of the expression form
-    (the brute-force contract: q_triangle_count keeps NaN pairs because
-    NaN compares largest in both engines; q_knn_graph ranks NULL cosines
-    last and NaN first). The pandas handoff cannot express that — pandas
-    float NaN IS the missing-value sentinel — so this variant stays in
-    Arrow end to end: NaN data flows through numpy untouched and NULLs
-    are explicit validity bits.
+    mapInArrow pass per cell — the blocked self-join's pair generator.
+    Each vector shuffles once to its cell, and the cell's pair grid
+    accumulates as ``dim`` sequential rank-1 numpy updates instead of a
+    join that carries both arrays on every pair row and folds each pair
+    in an interpreted HOF. It preserves the exact NULL/NaN algebra of
+    the expression form (q_triangle_count keeps NaN pairs because NaN
+    compares largest in both engines; q_knn_graph ranks NULL cosines
+    last and NaN first; q_embedding_cosine_dup drops zero-norm pairs,
+    whose cosine is NULL as the DuckDB oracle's x/0.0 is), because it
+    stays in Arrow end to end: NaN data flows through numpy untouched
+    and NULLs are explicit validity bits.
 
-    Emits (``{id}_a``, ``{id}_b``, __dp, __na, __nb) for every ordered
-    pair id_a < id_b of the cell (both directions when ``directed``);
-    the caller applies the SAME JVM tail as the join form —
-    ``round(try_divide(__dp, __na*__nb), 6)`` — so every division,
-    zero-norm NULL, ROUND and threshold/rank decision is made by the
-    identical expression on bit-identical operands:
+    Emits (``cell_col``, ``{id}_a``, ``{id}_b``, __dp, __na, __nb) for
+    every ordered pair id_a < id_b of the cell (both directions when
+    ``directed``); the caller applies the SAME JVM tail as the join
+    form — ``cosine_from_dot`` = ``round(try_divide(__dp, __na*__nb),
+    6)`` — so every division, zero-norm NULL, ROUND and threshold/rank
+    decision is made by the identical expression on bit-identical
+    operands:
 
     - __dp accumulates ``V[i,d]*V[j,d]`` in ascending d with one IEEE
       add per step — the expression form's ``aggregate(zip_with(...))``
@@ -1051,8 +968,10 @@ def pair_dots_arrow(
     import numpy as np
     import pyarrow as pa
 
+    cell_t = e.schema[cell_col].dataType.simpleString()
     out_schema = (
-        f"{id_col}_a long, {id_col}_b long, __dp double, __na double, __nb double"
+        f"{cell_col} {cell_t}, {id_col}_a long, {id_col}_b long,"
+        " __dp double, __na double, __nb double"
     )
     block_rows = 2048
 
@@ -1065,11 +984,10 @@ def pair_dots_arrow(
             cells = batch.column(cell_col)
             vecs = batch.column(vec_col)
             for r in range(batch.num_rows):
-                key = cells[r].as_py()
-                by_cell.setdefault(key, []).append(
+                by_cell.setdefault(cells[r].as_py(), (cells[r], []))[1].append(
                     (ids[r].as_py(), vecs[r])
                 )
-        for rows in by_cell.values():
+        for cell, rows in by_cell.values():
             rows.sort(key=lambda t: t[0])  # id_a < id_b == index order
             m = len(rows)
             if m < 2:
@@ -1119,13 +1037,14 @@ def pair_dots_arrow(
                 iu, ju = np.concatenate([iu, ju]), np.concatenate([ju, iu])
             yield pa.record_batch(
                 [
+                    pa.repeat(cell, len(iu)),
                     pa.array(ids[iu]),
                     pa.array(ids[ju]),
                     pa.array(dp[iu, ju], mask=~valid[iu, ju]),
                     pa.array(norms[iu], mask=~norms_valid[iu]),
                     pa.array(norms[ju], mask=~norms_valid[ju]),
                 ],
-                names=[f"{id_col}_a", f"{id_col}_b", "__dp", "__na", "__nb"],
+                names=[cell_col, f"{id_col}_a", f"{id_col}_b", "__dp", "__na", "__nb"],
             )
 
     return (

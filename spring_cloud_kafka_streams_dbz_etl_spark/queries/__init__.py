@@ -145,7 +145,8 @@ def all_queries() -> dict[str, QuerySpec]:
     # verification rotation: least-recently-driver-checked queries sort
     # first (never-checked ones front; ties broken by fewest total checks,
     # then original registration order), bounding staleness at
-    # ceil(N/50) rounds. The per-round checked sets live in rotation.py
-    # (appended each round from CORRECTNESS_r{N}.json).
+    # ceil(N/50) rounds. rotation.py derives the checked sets from the
+    # committed CORRECTNESS_rNN.json files, and fronts every query whose
+    # PLAN_STAMPS.json entry moved since plans/rNN/PLAN_STAMPS.json.
     names = rotation_order(list(_REGISTRY))
     return {name: _REGISTRY[name] for name in names}

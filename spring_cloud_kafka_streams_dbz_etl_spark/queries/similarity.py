@@ -121,15 +121,16 @@ def q_embedding_cosine_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (blocking), keep pairs >= threshold. Cell blocking keeps the pair count
     at sum(|cell|^2) instead of |corpus|^2.
 
-    Pair generation runs as ONE applyInPandas pass per cell
-    (operators/similarity.py::blocked_cosine_pairs) since r6: each
-    vector shuffles once and the cell's pair grid accumulates as dim
-    sequential rank-1 numpy updates — measured 17x over the self-join
-    that carried both 64-double arrays on every pair row
-    (tools/measure_cosine_pairs.py), with the SAME ascending-d fold,
-    JVM-side ROUND(6) and threshold, so decisions are identical.
+    Pair generation is ONE Arrow pass per cell
+    (operators/similarity.py::pair_dots_arrow, the kernel the kNN and
+    triangle families share): each vector shuffles once and the cell's
+    pair grid accumulates as dim sequential rank-1 numpy updates, with
+    the same ascending-d fold as the expression form; the JVM-side
+    cosine_from_dot makes the ROUND(6) and threshold decision, so
+    decisions are identical. A zero-norm vector's cosine is NULL
+    (safe_div), so its pairs drop, as the oracle's x/0.0 drops them.
     """
-    from ..operators.similarity import blocked_cosine_pairs
+    from ..operators.similarity import pair_dots_arrow
 
     tune(spark)
     # finite vectors only (functions/vector.py::has_nan): candidate
@@ -140,8 +141,17 @@ def q_embedding_cosine_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(~has_nan(F.col("embedding")))
         .select("vec_id", "label", to_double(F.col("embedding")).alias("v"))
     )
-    return blocked_cosine_pairs(e, threshold=COSINE_DUP_MIN).select(
-        "vec_a", "vec_b", "label", "cos_sim"
+    return (
+        pair_dots_arrow(e, id_col="vec_id", cell_col="label", vec_col="v")
+        .select(
+            F.col("vec_id_a").alias("vec_a"),
+            F.col("vec_id_b").alias("vec_b"),
+            "label",
+            cosine_from_dot(F.col("__dp"), F.col("__na"), F.col("__nb")).alias(
+                "cos_sim"
+            ),
+        )
+        .filter(F.col("cos_sim") >= COSINE_DUP_MIN)
     )
 
 
@@ -2942,7 +2952,7 @@ def q_embedding_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding data-quality audit (r13) — the hygiene gate BEFORE any
     index build or dedup pass touches the vectors: per label, counts of
     zero-norm vectors (undefined cosine — the NULL-drop contract
-    blocked_cosine_pairs pins), declared-width mismatches (a silent
+    q_embedding_cosine_dup pins), declared-width mismatches (a silent
     upstream re-embed), and non-finite components (NaN/Inf poison every
     distance), plus the norm envelope (min/max/avg) whose drift says
     the embedding model or its normalization changed. The embedding

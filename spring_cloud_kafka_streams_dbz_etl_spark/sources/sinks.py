@@ -285,32 +285,45 @@ def load_dimension(
     return spark.read.parquet(path)
 
 
+def _parquet_files(statuses) -> list:
+    return [st.getPath() for st in statuses if st.getPath().getName().endswith(".parquet")]
+
+
+def _footer(spark: SparkSession, file_path, read):
+    """``read(ParquetFileReader)`` on one parquet file's footer, opened
+    directly through the Hadoop file system, so it launches no Spark job."""
+    jvm = spark._jvm
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            file_path, spark._jsc.hadoopConfiguration()
+        )
+    )
+    try:
+        return read(reader)
+    finally:
+        reader.close()
+
+
 def _footer_schema(spark: SparkSession, statuses):
     """The Spark schema stored in the footer of the first parquet file
     among ``statuses`` — what read-time inference returns for a
-    Spark-written file (ParquetFileFormat.readSchemaFromFooter) — read
-    directly through the Hadoop file system, so it launches no Spark job.
-    None when there is no top-level data file (partitioned layout) or the
-    writer stored no Spark schema."""
+    Spark-written file (ParquetFileFormat.readSchemaFromFooter). None when
+    there is no top-level data file (partitioned layout) or the writer
+    stored no Spark schema."""
     import json
 
     from pyspark.sql.types import StructType
 
-    files = [st.getPath() for st in statuses if st.getPath().getName().endswith(".parquet")]
+    files = _parquet_files(statuses)
     if not files:
         return None
-    jvm = spark._jvm
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            files[0], spark._jsc.hadoopConfiguration()
-        )
-    )
-    try:
-        meta = reader.getFooter().getFileMetaData().getKeyValueMetaData().get(
+    meta = _footer(
+        spark,
+        files[0],
+        lambda r: r.getFooter().getFileMetaData().getKeyValueMetaData().get(
             SPARK_ROW_METADATA
-        )
-    finally:
-        reader.close()
+        ),
+    )
     return StructType.fromJson(json.loads(meta)) if meta else None
 
 
@@ -366,7 +379,7 @@ def _commit_version(
     merged: DataFrame,
     path: str,
     partition_by: Sequence[str] | None = None,
-) -> None:
+) -> int:
     """Write ``merged`` to a staging dir, atomically rename it to the next
     version number, then prune versions older than the previous one (kept
     for in-flight readers) and any dead staging leftovers. A crash before
@@ -376,7 +389,8 @@ def _commit_version(
     ``partition_by`` partitions the version dir's files (e.g. the ANN
     index store commits cell-partitioned so the serving scan prunes to
     nprobe/n_cells of the files); the rename-commit contract is
-    unchanged — a version is one immutable directory either way."""
+    unchanged — a version is one immutable directory either way. Returns
+    the committed version number."""
     import uuid as _uuid
 
     fs, target = _hadoop_fs(spark, path)
@@ -403,6 +417,17 @@ def _commit_version(
                 continue
         elif name.startswith(".staging_") and name != staging.rsplit("/", 1)[-1]:
             fs.delete(st.getPath(), True)
+    return next_ver
+
+
+def _version_rows(spark: SparkSession, path: str, n: int) -> int:
+    """Rows in committed version ``n`` of an unpartitioned dimension,
+    summed from its parquet footers' record counts, with no count job."""
+    fs, version = _hadoop_fs(spark, _version_dir(path, n))
+    return sum(
+        _footer(spark, f, lambda r: r.getRecordCount())
+        for f in _parquet_files(fs.listStatus(version))
+    )
 
 
 def upsert_dimension(df: DataFrame, path: str, keys: Sequence[str]) -> dict:
@@ -420,19 +445,29 @@ def upsert_dimension(df: DataFrame, path: str, keys: Sequence[str]) -> dict:
     dimension duplicate join keys (every subsequent enrichment would
     fan out events silently). Duplicate-key batches fail loudly.
 
-    Scale: one anti-join shuffle on the key columns, sized by the
+    Scale: one aggregate over the incoming batch (duplicate check and row
+    count), then one anti-join shuffle on the key columns, sized by the
     DIMENSION (not the stream); dims are orders of magnitude smaller than
-    facts, and the write rewrites only the dimension. For a very large
-    partitioned dim, partition-restricted dynamic overwrite inside the
-    version commit is the upgrade path.
+    facts, and the write rewrites only the dimension. The existing schema
+    and the new total come from parquet footers, with no job. For a very
+    large partitioned dim, partition-restricted dynamic overwrite inside
+    the version commit is the upgrade path.
     """
     spark = df.sparkSession
-    dup = (
-        df.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).collect()
+    # one aggregate over the incoming batch: its row count and, if any
+    # key repeats, one such key (the largest) for the error message
+    stats = (
+        df.groupBy(*keys)
+        .count()
+        .agg(
+            F.sum("count").alias("rows"),
+            F.max(F.when(F.col("count") > 1, F.struct(*keys))).alias("dup"),
+        )
+        .first()
     )
-    if dup:
+    if stats["dup"] is not None:
         raise ValueError(
-            f"upsert batch has duplicate keys (e.g. {dup[0][:len(keys)]}); "
+            f"upsert batch has duplicate keys (e.g. {tuple(stats['dup'])}); "
             "resolve a single winner per key before upserting"
         )
     fs, target = _hadoop_fs(spark, path)
@@ -447,7 +482,7 @@ def upsert_dimension(df: DataFrame, path: str, keys: Sequence[str]) -> dict:
             for st in fs.listStatus(target)
         )
     if _list_versions(fs, target) or _has_plain_data():
-        existing = load_dimension(spark, path)
+        existing = dimension_reader(spark, path)()
         if set(existing.columns) != set(df.columns):
             raise ValueError(
                 f"dimension schema mismatch: existing {sorted(existing.columns)} "
@@ -457,12 +492,8 @@ def upsert_dimension(df: DataFrame, path: str, keys: Sequence[str]) -> dict:
         merged = kept.unionByName(df)
     else:
         merged = df
-    _commit_version(spark, merged, path)
-    return {
-        "upserted": df.count(),
-        "total": load_dimension(spark, path).count(),
-        "path": path,
-    }
+    n = _commit_version(spark, merged, path)
+    return {"upserted": stats["rows"] or 0, "total": _version_rows(spark, path, n), "path": path}
 
 
 def delete_from_dimension(
@@ -472,9 +503,9 @@ def delete_from_dimension(
     drop rows whose ``keys`` appear in ``keys_df``, committed as a new
     immutable version with the same visibility contract as
     :func:`upsert_dimension`."""
-    existing = load_dimension(spark, path)
+    existing = dimension_reader(spark, path)()
     remaining = existing.join(
         keys_df.select(*keys).distinct(), on=list(keys), how="left_anti"
     )
-    _commit_version(spark, remaining, path)
-    return {"total": load_dimension(spark, path).count(), "path": path}
+    n = _commit_version(spark, remaining, path)
+    return {"total": _version_rows(spark, path, n), "path": path}

@@ -1,9 +1,10 @@
 """Plan-stamp tool pins (VERDICT r13 ask #2).
 
-PLAN_STAMPS.json is the committed per-round ground truth for transitive
-re-front detection: a query whose canonicalized-plan hash differs from
-the committed stamp changed materially since its last driver row and
-must re-front via rotation.CHANGED_SINCE_CHECK. These tests pin the
+PLAN_STAMPS.json is the committed ground truth for transitive re-front
+detection: a query whose stamp moved (rotation.stamp_moved) against the
+last driver round's snapshot, plans/rNN/PLAN_STAMPS.json, changed
+materially since its last driver row, and the rotation fronts it for a
+fresh one. These tests pin the
 properties the workflow depends on: volatile run-local tokens are
 normalized away (else every run would diff), stamps are deterministic
 within a session, and the committed file covers the whole registry.
@@ -187,8 +188,8 @@ def test_committed_stamps_match_live_plans_sample(spark, sf_smoke):
     """The committed PLAN_STAMPS.json must describe the plans at HEAD,
     not a stale snapshot: spot-stamp three stable anchor queries and
     compare against the file. If this fails after an intentional plan
-    change, rerun tools/plan_stamps.py (and re-front consumers via
-    CHANGED_SINCE_CHECK) — that is the workflow, not a flake: the
+    change, rerun tools/plan_stamps.py (the rotation then fronts the
+    moved consumers) — that is the workflow, not a flake: the
     normalizer suite makes these stamps process-deterministic."""
     stamp_file = os.path.join(os.path.dirname(__file__), "..", "PLAN_STAMPS.json")
     if not os.path.exists(stamp_file):
@@ -241,7 +242,11 @@ def test_diff_classifies_known_process_variant(tmp_path, monkeypatch, capsys):
     """A plan-only hash move on a PROCESS_VARIANT member (Spark's
     RewriteDistinctAggregates gid ordering is JVM-dependent) reports as
     VARIANT, not CHANGED — but a src change still reports CHANGED."""
-    name = next(iter(plan_stamps.PROCESS_VARIANT))
+    from spring_cloud_kafka_streams_dbz_etl_spark.queries.rotation import (
+        PROCESS_VARIANT,
+    )
+
+    name = next(iter(PROCESS_VARIANT))
     old = {name: {"plan": "p1", "src": "s1"}}
     stamp_file = tmp_path / "PLAN_STAMPS.json"
     stamp_file.write_text(json.dumps(old))

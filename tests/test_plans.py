@@ -1124,44 +1124,6 @@ def test_ts_similarity_single_rollup_then_topk(spark, sf_smoke):
     assert "CartesianProduct" not in text and "SortMergeJoin" not in text, text[:2000]
 
 
-def test_blocked_cosine_pairs_equals_join_form(spark, sf_smoke):
-    """The per-cell Arrow pair generator must agree with the join-HOF
-    form row-for-row (ids, cells, rounded cosines) — the bit-compatible
-    guarantee the r6 swap rests on — and plan as ONE groupBy exchange
-    feeding FlatMapGroupsInPandas."""
-    from pyspark.sql import functions as F
-
-    from spring_cloud_kafka_streams_dbz_etl_spark.catalog import table
-    from spring_cloud_kafka_streams_dbz_etl_spark.functions.vector import (
-        cosine,
-        to_double,
-    )
-    from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
-        blocked_cosine_pairs,
-    )
-    from spring_cloud_kafka_streams_dbz_etl_spark.plans import explain_str
-
-    e = table(spark, sf_smoke, "embeddings").select(
-        "vec_id", "label", to_double(F.col("embedding")).alias("v")
-    )
-    arrow = blocked_cosine_pairs(e, threshold=0.35).select(
-        "vec_a", "vec_b", "label", "cos_sim"
-    )
-    text = explain_str(arrow, mode="simple")
-    assert "FlatMapGroupsInPandas" in text, text[:2000]
-    assert text.count("Exchange") == 1, text[:2000]
-    a = e.select(F.col("vec_id").alias("vec_a"), "label", F.col("v").alias("va"))
-    b = e.select(F.col("vec_id").alias("vec_b"), "label", F.col("v").alias("vb"))
-    join_form = (
-        a.join(b, "label")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", "label", cosine(F.col("va"), F.col("vb")).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= 0.35)
-    )
-    assert arrow.exceptAll(join_form).count() == 0
-    assert join_form.exceptAll(arrow).count() == 0
-
-
 def test_pair_dots_arrow_null_keys_match_join_form(spark):
     """Rows with a NULL id or a NULL cell key pair with nothing — the
     inner-join semantics of the join form (``a.label = b.label`` and

@@ -2,16 +2,20 @@
 
 The external driver evaluates the first 50 entries of
 ``__spark_entry__.queries()`` per round. These tests pin the window
-budget mechanically so the guarantees stated in rotation.py's comments
-are enforced, not just asserted in prose:
+budget mechanically so the guarantees stated in rotation.py are
+enforced, not just asserted in prose:
 
-- the prior round's deferrals front the current window (ask #1);
+- every query whose plan stamp moved since the last driver round fronts
+  the window (ask #1);
 - max staleness (rounds since a query's last driver check) stays <= 6
   across ALL registered queries once the current window lands (ask #6);
-- the bookkeeping sets stay consistent with the registry.
+- the derived sets stay consistent with the registry, and a gap or a
+  missing input file raises instead of reordering silently.
 """
 
 from __future__ import annotations
+
+import json
 
 import pytest
 
@@ -31,35 +35,27 @@ def registered() -> list[str]:
 
 
 def test_prior_round_deferrals_front_the_window(registered):
-    order = rotation.rotation_order(registered)
-    fronted = set(order[:WINDOW])
-    # The r18 zero tier is exactly CHANGED_SINCE_CHECK (277/277 queries
-    # carry a green row after r17, so no never-checked names remain):
-    # the 11 r17 stale-changed queries (closure-only tier + q_ann_recall,
-    # VERDICT r17 next-round #1) plus every query the r18 optimization
-    # round changed materially (plan-stamp restamp enumeration). All of
-    # them must front for fresh driver rows.
-    for name in sorted(rotation.CHANGED_SINCE_CHECK):
-        assert name in fronted, f"{name} must front the r18 window"
-        assert name not in rotation.DEFERRED_NEW
-    # and the stale-11 specifically are in that tier (the round's
-    # verification-gap closure — regression-pinned by name)
-    for name in (
-        "q_simhash_near_dup", "q_semantic_clusters", "q_index_health",
-        "q_linear_probe_pca", "q_embedding_spectrum",
-        "s_ann_index_maintain", "s_ann_serve", "s_chained_agg",
-        "s_session_window", "s_stream_outer_join", "q_ann_recall",
-    ):
-        assert name in rotation.CHANGED_SINCE_CHECK, name
+    """Every query whose committed stamp differs from the last round's
+    snapshot fronts the window: its green rows describe a plan that no
+    longer exists."""
+    by_round, changed = rotation.derived()
+    last = max(by_round)
+    snap = rotation.ROOT / "plans" / f"r{last:02d}" / "PLAN_STAMPS.json"
+    old = json.loads(snap.read_text())
+    new = json.loads((rotation.ROOT / "PLAN_STAMPS.json").read_text())
+    moved = {
+        n for n in registered
+        if n not in old or rotation.stamp_moved(n, old[n], new[n])
+    }
+    assert moved == changed
+    assert len(moved) <= WINDOW, "the changed tier overflows the window"
+    fronted = set(rotation.rotation_order(registered)[:WINDOW])
+    assert moved <= fronted, sorted(moved - fronted)
 
 
 def test_never_checked_queries_front(registered):
     order = rotation.rotation_order(registered)
-    never = [
-        n
-        for n in registered
-        if rotation.times_checked(n) == 0 and n not in rotation.DEFERRED_NEW
-    ]
+    never = [n for n in registered if rotation.checked(n) == (0, 0)]
     fronted = set(order[: max(WINDOW, len(never))])
     missing = [n for n in never if n not in fronted]
     assert not missing, f"never-checked queries missing from window: {missing}"
@@ -67,20 +63,20 @@ def test_never_checked_queries_front(registered):
 
 def test_max_staleness_bounded(registered):
     """Every registered query is driver-checked within STALENESS_BAR
-    rounds: once the current window lands (its members' last_checked
+    rounds: once the current window lands (its members' last check
     becomes CURRENT_ROUND), no query's last check is older than
     CURRENT_ROUND - STALENESS_BAR."""
     order = rotation.rotation_order(registered)
     window = set(order[:WINDOW])
     worst = min(
-        CURRENT_ROUND if n in window else rotation.last_checked(n)
+        CURRENT_ROUND if n in window else rotation.checked(n)[0]
         for n in registered
     )
     staleness = CURRENT_ROUND - worst
     assert staleness <= STALENESS_BAR, (
         f"max staleness {staleness} rounds exceeds the <= {STALENESS_BAR} "
         f"bar; stalest queries outside the window: "
-        f"{sorted((rotation.last_checked(n), n) for n in registered if n not in window)[:5]}"
+        f"{sorted((rotation.checked(n)[0], n) for n in registered if n not in window)[:5]}"
     )
 
 
@@ -101,20 +97,65 @@ def test_steady_state_staleness_bound_holds(registered):
 
 def test_checked_by_round_names_are_registered(registered):
     known = set(registered)
-    for rnd, names in rotation.CHECKED_BY_ROUND.items():
+    for rnd, names in rotation.derived()[0].items():
         unknown = names - known
         assert not unknown, f"round {rnd} records unregistered names: {unknown}"
 
 
 def test_sentinel_sets_are_registered(registered):
-    known = set(registered)
-    assert rotation.DEFERRED_NEW <= known
-    assert rotation.CHANGED_SINCE_CHECK <= known
+    assert rotation.derived()[1] <= set(registered)
 
 
-def test_deferred_new_sorts_behind_everything(registered):
-    if not rotation.DEFERRED_NEW:
-        pytest.skip("no deferrals this round")
-    order = rotation.rotation_order(registered)
-    tail = order[-len(rotation.DEFERRED_NEW) :]
-    assert set(tail) == set(rotation.DEFERRED_NEW)
+def _correctness(root, rnd: int, rows: dict) -> None:
+    (root / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+
+
+def test_green_rule(tmp_path):
+    _correctness(tmp_path, 1, {
+        "matched": {"hash_match": True, "spark_rows": 3, "err": None},
+        "mismatched": {"hash_match": False, "spark_rows": 3, "err": None},
+        "rows_only": {"hash_match": None, "spark_rows": 5, "err": "no_oracle"},
+        "rows_only_failed": {"hash_match": None, "spark_rows": None, "err": "no_oracle"},
+        "crashed": {"hash_match": None, "spark_rows": None, "err": "boom"},
+    })
+    assert rotation.checked_by_round(tmp_path) == {
+        1: frozenset({"matched", "rows_only"})
+    }
+
+
+def test_round_gap_raises(tmp_path):
+    for rnd in (1, 2, 4):
+        _correctness(tmp_path, rnd, {"q": {"hash_match": True}})
+    with pytest.raises(RuntimeError, match="no gap"):
+        rotation.checked_by_round(tmp_path)
+    with pytest.raises(RuntimeError, match="no gap"):
+        rotation.checked_by_round(tmp_path / "empty")
+
+
+def test_missing_snapshot_raises(tmp_path):
+    (tmp_path / "PLAN_STAMPS.json").write_text("{}")
+    with pytest.raises(FileNotFoundError):
+        rotation.changed_since_check(tmp_path, 3)
+
+
+def test_changed_since_check_applies_the_stamp_rule(tmp_path):
+    variant = next(iter(rotation.PROCESS_VARIANT))
+    old = {
+        "same": {"plan": "p", "src": "s", "closures": "c"},
+        "src_only": {"plan": "p", "src": "s", "closures": "c"},
+        "plan": {"plan": "p", "src": "s", "closures": "c"},
+        "closure": {"plan": "p", "src": "s", "closures": "c"},
+        variant: {"plan": "p", "src": "s", "closures": "c"},
+    }
+    new = {
+        "same": {"plan": "p", "src": "s", "closures": "c"},
+        "src_only": {"plan": "p", "src": "s2", "closures": "c"},
+        "plan": {"plan": "p2", "src": "s", "closures": "c"},
+        "closure": {"plan": "p", "src": "s", "closures": "c2"},
+        variant: {"plan": "p2", "src": "s", "closures": "c"},
+        "fresh": {"plan": "p", "src": "s", "closures": "c"},
+    }
+    (tmp_path / "plans" / "r03").mkdir(parents=True)
+    (tmp_path / "plans" / "r03" / "PLAN_STAMPS.json").write_text(json.dumps(old))
+    (tmp_path / "PLAN_STAMPS.json").write_text(json.dumps(new))
+    assert rotation.changed_since_check(tmp_path, 3) == {"plan", "closure", "fresh"}

@@ -206,6 +206,41 @@ def test_upsert_survives_interrupted_commit(spark, tmp_path):
     assert not os.path.exists(dead)  # dead staging pruned by the commit
 
 
+def test_dimension_crud_job_count(spark, tmp_path):
+    """Shape of a small CRUD call on a 1,000-row dimension, counted by job
+    group: an upsert runs one aggregate over the incoming batch (its
+    duplicate check and row count) plus the anti-join write; a delete runs
+    the anti-join write alone. Both take the dimension's schema and the
+    new total from parquet footers, with no inference or count job."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import (
+        delete_from_dimension,
+        load_dimension,
+        upsert_dimension,
+    )
+
+    path = str(tmp_path / "dim")
+    rows = [(k, f"n{k}", float(k)) for k in range(1000)]
+    upsert_dimension(spark.createDataFrame(rows, "k long, name string, v double"), path, ["k"])
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    batch = spark.createDataFrame(
+        [(k, f"m{k}", -1.0) for k in range(995, 1005)], "k long, name string, v double"
+    )
+    dels = spark.createDataFrame([(0,), (1,)], "k long")
+    try:
+        sc.setJobGroup("dim-upsert", "dim-upsert")
+        up = upsert_dimension(batch, path, ["k"])
+        sc.setJobGroup("dim-delete", "dim-delete")
+        rm = delete_from_dimension(spark, path, ["k"], dels)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert up == {"upserted": 10, "total": 1005, "path": path}
+    assert rm == {"total": 1003, "path": path}
+    assert load_dimension(spark, path).count() == 1003
+    assert len(tracker.getJobIdsForGroup("dim-upsert")) <= 7
+    assert len(tracker.getJobIdsForGroup("dim-delete")) <= 4
+
+
 def test_dynamic_partition_pruning_from_dim_filter(spark, sf_smoke, tmp_path):
     """Dynamic partition pruning: a fact table PARTITIONED on the join
     key must be pruned at runtime by a FILTERED dimension — the filter

@@ -1,15 +1,13 @@
-"""Pin the zero-norm (NULL-drop) contract of blocked_cosine_pairs.
+"""Pin the zero-norm (NULL-drop) contract of the blocked cosine pairs.
 
-A zero-norm embedding makes the cosine undefined. The operator computes
-NaN in numpy, the Arrow handoff converts that to NULL (pandas float NaN
-is the missing-value sentinel), and the JVM-side ``>= threshold`` then
-drops the pair — which is exactly what the DuckDB oracle does, since
-``x / 0.0`` is NULL there and NULL fails the WHERE. This test exists
-because the operator's docstring once claimed the opposite (pairs kept
-as NaN, which Spark orders above every double); tools/deep_fuzz.py's
-blocked-cosine pass caught the divergence. Dropping is also the sane
-scale semantics: a kept-NaN would pair one zero embedding with its
-entire blocking cell.
+A zero-norm embedding makes the cosine undefined. The pair kernel
+(``pair_dots_arrow``) emits the pair's dot and both norms, and the
+JVM-side tail ``cosine_from_dot`` divides with ``safe_div``, which
+yields NULL on a zero denominator; ``>= threshold`` then drops the pair,
+which is exactly what the DuckDB oracle does, since ``x / 0.0`` is NULL
+there and NULL fails the WHERE. Dropping is also the sane scale
+semantics: a kept NaN (which Spark orders above every double) would
+pair one zero embedding with its entire blocking cell.
 """
 
 from __future__ import annotations
@@ -17,9 +15,12 @@ from __future__ import annotations
 import duckdb
 from pyspark.sql import functions as F
 
-from spring_cloud_kafka_streams_dbz_etl_spark.functions.vector import to_double
+from spring_cloud_kafka_streams_dbz_etl_spark.functions.vector import (
+    cosine_from_dot,
+    to_double,
+)
 from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
-    blocked_cosine_pairs,
+    pair_dots_arrow,
 )
 
 ROWS = [
@@ -58,7 +59,17 @@ def test_zero_norm_pairs_dropped_like_oracle(spark):
         ROWS, "vec_id long, label long, embedding array<double>"
     ).select("vec_id", "label", to_double(F.col("embedding")).alias("v"))
     for threshold in (-2.0, 0.5):
-        out = blocked_cosine_pairs(df, threshold=threshold)
+        out = (
+            pair_dots_arrow(df)
+            .select(
+                F.col("vec_id_a").alias("vec_a"),
+                F.col("vec_id_b").alias("vec_b"),
+                cosine_from_dot(F.col("__dp"), F.col("__na"), F.col("__nb")).alias(
+                    "cos_sim"
+                ),
+            )
+            .filter(F.col("cos_sim") >= threshold)
+        )
         got = {(r.vec_a, r.vec_b) for r in out.collect()}
         # no pair may involve the zero vectors, even at a threshold
         # below -1 that every defined cosine passes

@@ -15,10 +15,9 @@ Covered (operator → invariant):
 - interval_overlap   grid-cell join == quadratic bruteforce
 - pq_encode/adc      == plain-Python ascending-d / ascending-m fold model
                         across random (subspaces, k, dim) with forced ties
-- blocked_cosine     per-cell Arrow fold == join-HOF form, incl. the
-                        zero-norm NULL-drop path
 - pair_dots_arrow    + JVM cosine tail == join-HOF form, incl. NULL ids,
                         NULL cell keys, NULL/NaN/zero/ragged vectors
+                        (zero norms: NULL cosine, dropped by a threshold)
 - kmeans_cells       == plain-Python Lloyd model (ascending-d folds,
                         smaller-cell ties via duplicate/grid vectors)
 - event_pattern      registered conditional-last plan == per-user
@@ -282,62 +281,6 @@ def fuzz_pq(spark) -> None:
                 SEED, i, "pq_adc", cell, subspaces, k_codes, dim, n,
             )
     print(f"pq model: {max(1, N // 6)} cases OK")
-
-
-def fuzz_blocked_cosine(spark) -> None:
-    """blocked_cosine_pairs (per-cell Arrow rank-1 fold) == the join-HOF
-    form it replaced, on random cells with forced zero-norm vectors.
-    Zero-norm pairs must be DROPPED on both sides: the Arrow handoff
-    turns numpy NaN into NULL (this fuzzer is what first caught that —
-    the docstring used to claim the pairs were kept as NaN), and the
-    DuckDB oracle's x/0.0 is NULL, so NULL-drop is the pinned
-    contract (tests/test_zero_norm_cosine.py)."""
-    from spring_cloud_kafka_streams_dbz_etl_spark.functions.vector import (
-        dot,
-        l2_norm,
-        to_double,
-    )
-    from spring_cloud_kafka_streams_dbz_etl_spark.operators.similarity import (
-        blocked_cosine_pairs,
-    )
-
-    def null_cosine(a, b):
-        # The bare cosine() twin throws DIVIDE_BY_ZERO under ANSI for a
-        # zero-norm vector; the operator's actual semantics (pinned in
-        # tests/test_zero_norm_cosine.py) yield NULL there — numpy NaN
-        # becomes NULL across the Arrow handoff — and the JVM-side >=
-        # then DROPS the pair, same as the DuckDB oracle's x/0.0→NULL.
-        # Model that: a lazy CASE whose zero-denominator branch is NULL.
-        denom = l2_norm(a) * l2_norm(b)
-        return F.when(denom != 0, F.round(dot(a, b) / denom, 6))
-
-    for i in range(max(1, N // 6)):
-        dim = rng.choice([3, 8])
-        n = rng.randint(2, 80)
-        rows = [(j, rng.randint(0, 2), _random_vec(dim)) for j in range(n)]
-        df = spark.createDataFrame(
-            rows, "vec_id long, label long, embedding array<double>"
-        ).select("vec_id", "label", to_double(F.col("embedding")).alias("v"))
-        thr = rng.choice([-0.5, 0.0, 0.35, 0.9])
-        arrow = blocked_cosine_pairs(df, threshold=thr).select(
-            "vec_a", "vec_b", "label", "cos_sim"
-        )
-        a = df.select(F.col("vec_id").alias("vec_a"), "label", F.col("v").alias("va"))
-        b = df.select(F.col("vec_id").alias("vec_b"), "label", F.col("v").alias("vb"))
-        join_form = (
-            a.join(b, "label")
-            .filter(F.col("vec_a") < F.col("vec_b"))
-            .select(
-                "vec_a", "vec_b", "label",
-                null_cosine(F.col("va"), F.col("vb")).alias("cos_sim"),
-            )
-            .filter(F.col("cos_sim") >= thr)
-        )
-        assert (
-            arrow.exceptAll(join_form).count() == 0
-            and join_form.exceptAll(arrow).count() == 0
-        ), (SEED, i, thr, dim, n)
-    print(f"blocked cosine twins: {max(1, N // 6)} cases OK")
 
 
 def fuzz_pair_dots(spark) -> None:
@@ -827,7 +770,6 @@ def main() -> None:
     fuzz_simhash(spark)
     fuzz_interval_overlap(spark)
     fuzz_pq(spark)
-    fuzz_blocked_cosine(spark)
     fuzz_pair_dots(spark)
     fuzz_kmeans(spark)
     fuzz_pq_train(spark)

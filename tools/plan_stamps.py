@@ -1,56 +1,41 @@
 #!/usr/bin/env python
-"""Per-query physical-plan stamps — automated transitive re-front
-detection (VERDICT r13 ask #2).
-
-The rotation's CHANGED_SINCE_CHECK discipline was manual: when a shared
-helper changes (``_pca_model`` extraction, ``lsh_bits_for``
-integer-exactness in r13), the builder had to *remember* which consumers'
-plans changed and re-front them. At 244 registered queries that is the
-next silent-staleness risk — a helper edit that shifts a downstream plan
-without anyone noticing leaves a green driver row attached to a plan that
-no longer exists.
-
-This tool makes the detection mechanical:
+"""Per-query physical-plan stamps: mechanical detection of which queries
+need a fresh driver row.
 
   python tools/plan_stamps.py             # stamp all queries at sf0.001
   python tools/plan_stamps.py --diff      # compare against PLAN_STAMPS.json
   python tools/plan_stamps.py --only a,b  # spot-stamp a subset
 
 For every registered query it builds the DataFrame at sf0.001 and hashes
-the CANONICALIZED optimized logical plan (expression IDs normalized by
-Catalyst, volatile run-local tokens — temp checkpoint paths, uuid-suffixed
-memory-sink names, RDD ids — normalized here). A committed
-``PLAN_STAMPS.json`` then gives each round a ground truth: any query whose
-stamp differs from the prior round's file changed plan shape or
-driver-computed literals (knob values, trained-model literals) and MUST
-either re-front via CHANGED_SINCE_CHECK or be explained.
+the normalized optimized logical plan (volatile run-local tokens: temp
+checkpoint paths, uuid-suffixed memory-sink names, RDD ids, expression
+ids, normalized here). Each stamp carries three hashes:
 
-A second, coarser signal is stamped alongside: the sha of the query
-function's own source. ``src`` changing without ``plan`` changing is a
-comment/doc edit; ``plan`` changing without ``src`` changing is exactly
-the transitive-helper case this tool exists to catch.
+- ``plan``: the plan text. It moves on a plan-shape change or on a
+  driver-computed literal (knob values, trained-model literals), also
+  when only a shared helper changed.
+- ``src``: the query function's own source. ``src`` moving alone is a
+  comment or doc edit.
+- ``closures``: the digest of every PACKAGE function the query's builder
+  reaches, transitively (bytecode-level reference walk, AST-level hashing
+  so comment/docstring edits don't churn). It catches edits inside a
+  Python kernel body (applyInPandasWithState functions, pandas UDFs,
+  Arrow kernels), which the plan shows only by name.
 
-Closure digests (VERDICT r14 ask #2) close the tool's former blind
-spot: the BODY of a Python stateful/UDF closure (applyInPandasWithState
-functions, pandas UDF kernels) is not part of the plan string — the
-plan shows only the function's name and signature, so an edit inside
-such a closure (r14's GroupState.get fix in streaming/stateful.py)
-moved neither ``plan`` nor the consumer query's ``src`` and re-fronting
-relied on builder discipline. Each stamp now carries a third hash,
-``closures``: the digest of every PACKAGE function the query's builder
-references, transitively (bytecode-level reference walk, AST-level
-hashing so comment/docstring edits don't churn). ``--diff`` reports a
-query whose plan and src are unchanged but whose closure digest moved
-as ``closure-only`` — the exact class the GroupState fix fell in — and
-exits non-zero so it lands in CHANGED_SINCE_CHECK mechanically.
+The committed ``PLAN_STAMPS.json`` describes HEAD, and
+``plans/rNN/PLAN_STAMPS.json`` snapshots the stamps a driver round
+verified. The verification rotation (``queries/rotation.py``) fronts
+every query whose stamp moved since that snapshot, under the one rule
+``rotation.stamp_moved``; ``--diff`` applies the same rule against the
+committed file, so restamping is the whole rotation step.
 
 Cost note: batch queries stamp lazily (no job runs — plan-only, ~0.1 s
 each). Streaming queries EXECUTE on call (their returned DataFrame is the
 read-back of a memory sink / state store), so a full stamp run costs a few
-minutes at sf0.001 — a per-round tool, not a pre-commit hook. Determinism:
-stamps are stable across processes on one machine + Spark version (pinned
-by test_plan_stamps.py); cross-round comparison assumes the same driver
-environment, which the harness provides.
+minutes at sf0.001. Stamps are stable across processes on one machine and
+Spark version (pinned by tests/test_plan_stamps.py); ``fan_out`` plans
+embed the core count, so stamp with ``SPARK_GRAFT_CPUS=32``, the driver's
+width.
 """
 
 from __future__ import annotations
@@ -65,6 +50,8 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from spring_cloud_kafka_streams_dbz_etl_spark.queries.rotation import stamp_moved  # noqa: E402
 
 STAMP_FILE = os.path.join(REPO, "PLAN_STAMPS.json")
 DEFAULT_SF = os.environ.get("SPARK_GRAFT_STAMP_SF", "/root/testdata/sf0.001")
@@ -367,27 +354,6 @@ def closure_digest(root_fn) -> str:
     return _sha("\n".join(f"{k}:{v}" for k, v in sorted(entries.items())))
 
 
-# Queries whose OPTIMIZED PLAN is legitimately process-dependent inside
-# Spark itself: RewriteDistinctAggregates assigns the Expand gid of each
-# distinct-argument group by iterating a hash-ordered Scala collection
-# keyed on exprIds, so plans with >= 2 DISTINCT aggregate groups swap
-# gid labels (and the Expand projection order) between JVMs — verified
-# semantically identical both ways. A plan-only diff on these is noise;
-# a plan+src diff still reports. Keep this list SHORT and evidence-backed
-# (A/B dumps in two fresh processes showing only the gid swap).
-# r17 additions, same mechanism each (A/B dumps on file for
-# q_decontaminate: the two contexts differ ONLY in gid labels 1<->2 and
-# the Expand projection order of its two COUNT(DISTINCT) groups;
-# q_dataset_card carries a THREE-group distinct Expand (gid 0/1/2) and
-# flipped between the r16 full sweep and every r17 context with src and
-# closures identical — the r16-code worktree reproduces the r17 hash in
-# isolation, proving the committed r16 stamp was the sweep-context
-# variant). Neither ever re-fronts on a plan-only diff.
-PROCESS_VARIANT: frozenset[str] = frozenset(
-    {"q_tpch_q21", "q_decontaminate", "q_dataset_card"}
-)
-
-
 def plan_text(df) -> str:
     """Normalized RAW optimized logical plan.
 
@@ -459,28 +425,17 @@ def diff(new: dict[str, dict[str, str]]) -> int:
     for name, st in sorted(new.items()):
         if name not in old:
             added.append(name)
-        elif old[name]["plan"] != st["plan"]:
-            if (
-                name in PROCESS_VARIANT
-                and old[name].get("src") == st.get("src")
-            ):
+        elif not stamp_moved(name, old[name], st):
+            if old[name]["plan"] != st["plan"]:
                 variants.append(name)
-                continue
-            kind = (
-                "plan+src" if old[name].get("src") != st.get("src")
-                else "plan-only (transitive helper change!)"
-            )
-            changed.append((name, kind))
-        elif old[name].get("closures", st.get("closures")) != st.get(
-            "closures"
-        ):
-            # plan and src unchanged but a reachable Python function body
-            # moved — the stateful-kernel/UDF class the plan can't see
-            # (the r14 GroupState.get fix). Missing key in the old file
-            # (pre-closure-digest stamps) compares as unchanged.
+        elif old[name]["plan"] == st["plan"]:
             changed.append(
                 (name, "closure-only (Python kernel/helper body change!)")
             )
+        elif old[name].get("src") != st.get("src"):
+            changed.append((name, "plan+src"))
+        else:
+            changed.append((name, "plan-only (transitive helper change!)"))
     for name, kind in changed:
         print(f"CHANGED {name}  [{kind}]")
     for name in variants:
@@ -492,8 +447,8 @@ def diff(new: dict[str, dict[str, str]]) -> int:
     if changed:
         print(
             f"\n{len(changed)} plan(s) changed since the committed stamps — "
-            "each needs a fresh driver row: add to rotation.CHANGED_SINCE_CHECK "
-            "(or document why the change is non-material).",
+            "each needs a fresh driver row: commit the restamped PLAN_STAMPS.json "
+            "and queries/rotation.py fronts it in the next window.",
             file=sys.stderr,
         )
     return 1 if changed else 0
