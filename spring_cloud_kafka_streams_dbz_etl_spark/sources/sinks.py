@@ -100,7 +100,28 @@ def read_idempotent_sink(spark: SparkSession, path: str) -> DataFrame:
 SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
 
-def _parquet_part(spark: SparkSession, table, schema) -> bytes:
+class SinkHandles:
+    """The Hadoop handles :func:`commit_parts` writes through, resolved
+    once and reused by every commit that holds them: the JVM ``Path``
+    class, the Spark version the parts' footers carry, and one
+    ``FileSystem`` per sink path, resolved on the first commit to it.
+    Each CDC pipeline holds one for all its epochs, so an epoch's commit
+    makes no class lookup through the JVM gateway."""
+
+    def __init__(self, spark: SparkSession) -> None:
+        self.path = spark._jvm.org.apache.hadoop.fs.Path
+        self.version = spark.version
+        self._conf = spark._jsc.hadoopConfiguration()
+        self._fs: dict = {}
+
+    def fs(self, path: str):
+        """The ``FileSystem`` of the sink at ``path``."""
+        if path not in self._fs:
+            self._fs[path] = self.path(path).getFileSystem(self._conf)
+        return self._fs[path]
+
+
+def _parquet_part(spark_version: str, table, schema) -> bytes:
     """``table`` (Arrow) as the bytes of one snappy parquet part laid out
     the way Spark's writer lays out ``schema``: the same field names,
     types and nullability (non-nullable fields REQUIRED), and Spark's
@@ -112,7 +133,7 @@ def _parquet_part(spark: SparkSession, table, schema) -> bytes:
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema).with_metadata(
-        {SPARK_ROW_METADATA: schema.json(), "org.apache.spark.version": spark.version}
+        {SPARK_ROW_METADATA: schema.json(), "org.apache.spark.version": spark_version}
     )
     sink = pa.BufferOutputStream()
     pq.write_table(
@@ -123,7 +144,7 @@ def _parquet_part(spark: SparkSession, table, schema) -> bytes:
     return sink.getvalue().to_pybytes()
 
 
-def _stage_parts(spark: SparkSession, parts, batch_id: int | None, staged: list) -> None:
+def _stage_parts(handles: SinkHandles, parts, batch_id: int | None, staged: list) -> None:
     """Write each ``(arrow table, Spark schema, sink path)`` of ``parts``
     as ONE parquet part under a ``.``-prefixed name that Spark, Hadoop and
     the file stream source never list, through the Hadoop ``FileSystem``
@@ -138,7 +159,7 @@ def _stage_parts(spark: SparkSession, parts, batch_id: int | None, staged: list)
     import uuid
 
     for table, schema, path in parts:
-        fs, _ = _hadoop_fs(spark, path)
+        fs = handles.fs(path)
         name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
         if batch_id is None:
             stage = file = f"{path}/.{name}.staging"
@@ -150,19 +171,19 @@ def _stage_parts(spark: SparkSession, parts, batch_id: int | None, staged: list)
             staged.append((fs, None, f"{path}/_batch_id={batch_id}"))
             continue
         staged.append((fs, stage, final))
-        out = fs.create(_hadoop_fs(spark, file)[1], False)
+        out = fs.create(handles.path(file), False)
         try:
-            out.write(_parquet_part(spark, table, schema))
+            out.write(_parquet_part(handles.version, table, schema))
         finally:
             out.close()
 
 
-def _publish_parts(spark: SparkSession, staged: list, batch_id: int | None) -> None:
+def _publish_parts(handles: SinkHandles, staged: list, batch_id: int | None) -> None:
     """Make staged parts visible, one rename each. With ``batch_id`` each
     sink's ``_batch_id=<N>`` directory is deleted first, so a replayed
     epoch replaces its partition — even with zero rows — instead of
     adding to it."""
-    path = spark._jvm.org.apache.hadoop.fs.Path
+    path = handles.path
     for fs, stage, final in staged:
         if batch_id is not None:
             fs.delete(path(final), True)
@@ -170,7 +191,9 @@ def _publish_parts(spark: SparkSession, staged: list, batch_id: int | None) -> N
             raise OSError(f"could not publish {stage} as {final}")
 
 
-def commit_parts(spark: SparkSession, parts, batch_id: int | None = None) -> None:
+def commit_parts(
+    spark: SparkSession, parts, batch_id: int | None = None, handles: SinkHandles | None = None
+) -> None:
     """Write each ``(arrow table, Spark schema, sink path)`` of ``parts``
     as one parquet part of its sink, written on the driver: every part is
     staged first, and only then are they all published. A failure before
@@ -179,18 +202,24 @@ def commit_parts(spark: SparkSession, parts, batch_id: int | None = None) -> Non
     rename commit :func:`idempotent_batch_write` names as its upgrade:
     with ``batch_id`` the parts land in ``_batch_id=<N>`` partitions, and
     the old partition stays readable until its replacement is fully
-    written, then is swapped out by a delete and a rename."""
+    written, then is swapped out by a delete and a rename.
+
+    ``handles`` are built once per pipeline and passed to each epoch's
+    commit; without them the commit resolves its own. Per commit, what
+    crosses to the JVM is only the work itself: per part one ``Path``
+    and one create, write and close, then the publish's renames (and
+    deletes in idempotent mode)."""
+    handles = handles or SinkHandles(spark)
     staged: list = []
     try:
-        _stage_parts(spark, parts, batch_id, staged)
-        _publish_parts(spark, staged, batch_id)
+        _stage_parts(handles, parts, batch_id, staged)
+        _publish_parts(handles, staged, batch_id)
     except BaseException:
         # a published part was renamed away, so this never touches
         # visible data
-        path = spark._jvm.org.apache.hadoop.fs.Path
         for fs, stage, _ in staged:
             if stage is not None:
-                fs.delete(path(stage), True)
+                fs.delete(handles.path(stage), True)
         raise
 
 
@@ -344,7 +373,14 @@ def dimension_reader(spark: SparkSession, path: str) -> Callable[[], DataFrame]:
 
     On a change the DataFrame is rebuilt with the schema taken from the
     parquet footer when a Spark writer stored one, instead of an
-    inference job."""
+    inference job.
+
+    So, for a stream that builds one reader per pipeline: the path's
+    ``FileSystem`` is resolved once per pipeline, the DataFrame (footer
+    read, file listing) once per dimension version, and per epoch the
+    reader costs one ``listStatus`` and returns the SAME object while the
+    version holds — which is what lets an epoch state key its memos on
+    the returned object (streaming/pipeline.py::EpochState)."""
     fs, target = _hadoop_fs(spark, path)
     memo: dict = {}
 

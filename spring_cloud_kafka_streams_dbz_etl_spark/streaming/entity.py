@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 
 from ..functions.scalars import eval_once, no_pushdown
 from ..sources.sinks import dimension_reader
-from .pipeline import Enrichment, _enrich_and_split, resilient_batch
+from .pipeline import Enrichment, EpochState, _enrich_and_split, resilient_batch
 
 
 @dataclass(frozen=True)
@@ -145,12 +145,14 @@ def build_entity_pipeline(
     tagged relation; under the size gate one collect with both sinks
     committed from the driver, above it one persist and two sink
     filters of it), with the dimension re-resolved per micro-batch so
-    upserts between epochs are visible."""
+    upserts between epochs are visible. The spec's enrichment columns and
+    the sinks' handles are built once, in one EpochState for all epochs."""
     source_batch = spark.read.parquet(f"{sf_dir}/{spec.source_table}.parquet")
     schema = entity_envelope_schema(source_batch, spec)
     load_dim = dimension_reader(spark, f"{sf_dir}/{spec.dim_table}.parquet")
-    enrichment = Enrichment(
-        spec.dim_join, spec.dim_match_col, spec.output_cols, payload="__original"
+    state = EpochState(
+        spark,
+        Enrichment(spec.dim_join, spec.dim_match_col, spec.output_cols, payload="__original"),
     )
 
     reader = spark.readStream.schema(source_batch.schema).option(
@@ -170,7 +172,7 @@ def build_entity_pipeline(
             .foreachBatch(
                 resilient_batch(
                     lambda b, _id: _enrich_and_split(
-                        b, load_dim(), out_path, dlq_path, enrichment=enrichment
+                        b, load_dim(), out_path, dlq_path, state=state
                     )
                 )
             )

@@ -191,6 +191,64 @@ EVENTS_ENRICHMENT = Enrichment(
 )
 
 
+class EpochState:
+    """What every epoch of one pipeline shares, built once per pipeline
+    and handed to each epoch's :func:`_enrich_and_split`:
+
+    - per pipeline: the Column objects of the ``enrichment`` (the join
+      condition, the ``reason`` tag, the ok and DLQ projections and the
+      positional collect projection of the driver path, which both sides
+      of the size gate share) and the sinks' Hadoop handles
+      (sources/sinks.py::SinkHandles). Columns need a live session, and
+      sessions restart within one JVM, so they are never built at import;
+    - per dimension: the ok and DLQ sink schemas, derived again only
+      when the epoch's dimension is another DataFrame object than the
+      last one's (``dimension_reader`` returns a new one per version, or
+      per rewrite of a static dimension). Every batch of one pipeline
+      carries its stream's schema, so the dimension is all that moves
+      them."""
+
+    def __init__(self, spark: SparkSession, enrichment: Enrichment = EVENTS_ENRICHMENT) -> None:
+        from ..sources.sinks import SinkHandles
+
+        e = enrichment
+        self.join = F.expr(e.join)
+        self.reason = F.when(F.col("parse_failed"), F.lit("parse_error")).when(
+            F.col(e.match_col).isNull(), F.lit("enrichment_miss")
+        )
+        self.is_ok = F.col("reason").isNull()
+        self.is_bad = F.col("reason").isNotNull()
+        self.ok_cols = [F.expr(expr).alias(alias) for alias, expr in e.output_cols]
+        self.bad_cols = [F.col("kafka_key"), F.col(e.payload).alias("value"), F.col("reason")]
+        # positional names: an ok column may share its name with a DLQ
+        # one; ok rows ship no payload (it is only ever written to the DLQ)
+        payload = F.when(self.is_bad, F.col(e.payload))
+        self.collected = [
+            c.alias(f"_{i}")
+            for i, c in enumerate([*self.ok_cols, F.col("kafka_key"), payload, F.col("reason")])
+        ]
+        self.sinks = SinkHandles(spark)
+        self._dim: DataFrame | None = None
+        self._schemas: tuple[T.StructType, T.StructType] | None = None
+
+    def split(self, tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """The ok and the DLQ side of the tagged relation."""
+        return (
+            tagged.filter(self.is_ok).select(*self.ok_cols),
+            tagged.filter(self.is_bad).select(*self.bad_cols),
+        )
+
+    def schemas(self, tagged: DataFrame, dim: DataFrame) -> tuple[T.StructType, T.StructType]:
+        """The ok and DLQ sink schemas of ``tagged``, the epoch's batch
+        joined to ``dim``: analyzed once per dimension object, compared by
+        identity against the kept reference (never by ``id()``, which a
+        freed object's successor may reuse)."""
+        if self._dim is not dim:
+            ok, bad = self.split(tagged)
+            self._dim, self._schemas = dim, (ok.schema, bad.schema)
+        return self._schemas
+
+
 def _enrich_and_split(
     batch: DataFrame,
     dim: DataFrame,
@@ -199,6 +257,7 @@ def _enrich_and_split(
     batch_id: int | None = None,
     idempotent: bool = False,
     enrichment: Enrichment = EVENTS_ENRICHMENT,
+    state: EpochState | None = None,
 ) -> None:
     """foreachBatch body: ONE relation per epoch — the parsed batch LEFT
     JOIN the dimension, tagged with a ``reason`` (NULL, 'parse_error' or
@@ -206,6 +265,14 @@ def _enrich_and_split(
     tagged ones. Decode failures carry a NULL join key, so they never
     match and ride the same join. Catalyst broadcasts the dimension when
     its size estimate is under autoBroadcastJoinThreshold.
+
+    What is built when: the pipeline builders make one :class:`EpochState`
+    per pipeline (the enrichment's Column objects, the sinks' Hadoop
+    handles) and pass it as ``state``; the sink schemas are derived once
+    per dimension version; per epoch this body builds only the tagged
+    relation over the epoch's batch, reads the size gate and moves the
+    epoch's rows. A direct call without ``state`` builds one for itself
+    from ``enrichment``; with ``state`` its enrichment is the one used.
 
     Two paths, one output. An epoch the driver can hold (the batch's
     size estimate passes catalog.driver_sized_bytes — a one-file live
@@ -240,41 +307,29 @@ def _enrich_and_split(
     from ..catalog import driver_sized_bytes
     from ..sources.sinks import commit_parts, idempotent_batch_write
 
-    e = enrichment
-    reason = F.when(F.col("parse_failed"), F.lit("parse_error")).when(
-        F.col(e.match_col).isNull(), F.lit("enrichment_miss")
-    )
-    tagged = batch.join(dim, F.expr(e.join), "left").withColumn("reason", reason)
-    ok_cols = [F.expr(expr).alias(alias) for alias, expr in e.output_cols]
-    bad_cols = [F.col("kafka_key"), F.col(e.payload).alias("value"), F.col("reason")]
-    ok = tagged.filter(F.col("reason").isNull()).select(*ok_cols)
-    bad = tagged.filter(F.col("reason").isNotNull()).select(*bad_cols)
+    s = state or EpochState(batch.sparkSession, enrichment)
+    tagged = batch.join(dim, s.join, "left").withColumn("reason", s.reason)
     epoch = (batch_id or 0) if idempotent else None
 
     if driver_sized_bytes(batch) is not None:
         import pyarrow.compute as pc
 
-        # positional names: an ok column may share its name with a DLQ
-        # one; ok rows ship no payload (it is only ever written to the DLQ)
-        n = len(ok_cols)
-        payload = F.when(F.col("reason").isNotNull(), F.col(e.payload))
-        rows = tagged.select(
-            *[
-                c.alias(f"_{i}")
-                for i, c in enumerate([*ok_cols, F.col("kafka_key"), payload, F.col("reason")])
-            ]
-        ).toArrow()
+        rows = tagged.select(*s.collected).toArrow()
+        ok_schema, bad_schema = s.schemas(tagged, dim)
+        n = len(s.ok_cols)
         untagged = pc.is_null(rows.column(n + 2))
         commit_parts(
             batch.sparkSession,
             [
-                (rows.filter(untagged).select(range(n)), ok.schema, out_path),
-                (rows.filter(pc.invert(untagged)).select(range(n, n + 3)), bad.schema, dlq_path),
+                (rows.filter(untagged).select(range(n)), ok_schema, out_path),
+                (rows.filter(pc.invert(untagged)).select(range(n, n + 3)), bad_schema, dlq_path),
             ],
             epoch,
+            s.sinks,
         )
         return
 
+    ok, bad = s.split(tagged)
     # MEMORY_AND_DISK (not cache/MEMORY_ONLY): eviction must spill, never
     # recompute — a recompute in the SECOND sink write would re-run the
     # codec and re-read the dimension, breaking resilient_batch's
@@ -311,10 +366,21 @@ def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):
     visible to the next batch). The reader lists the dimension each
     epoch and re-reads only when its newest version, or for a static dim
     its files, changed (sources/sinks.py::dimension_reader);
-    ``cfg.dim_source`` callables are read every epoch."""
+    ``cfg.dim_source`` callables are read every epoch.
+
+    Built once here, per pipeline: the reader, the parse, and the
+    :class:`EpochState` every epoch shares (the enrichment's columns,
+    the sinks' Hadoop handles). Per dimension version: the DataFrame the
+    reader returns, its ``cfg.dim_filter`` view, and the sink schemas.
+    Per epoch: the listing of the dimension, the tagged relation over
+    the epoch's batch, and its rows."""
     read_dim = cfg.dim_source or dimension_reader(
         spark, f"{cfg.sf_dir}/customer.parquet"
     )
+    state = EpochState(spark)
+    # (dimension read, its filtered view): one view per dimension object,
+    # so the epoch state's schema memo sees one object per version too
+    filtered: list = [None, None]
 
     def load_dim():
         # With cfg.dim_source the resolver is the caller's (e.g. a JDBC
@@ -322,7 +388,11 @@ def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):
         # per-batch, so upstream CRUD writes are visible to the next
         # micro-batch.
         dim = read_dim()
-        return dim.filter(cfg.dim_filter) if cfg.dim_filter else dim
+        if not cfg.dim_filter:
+            return dim
+        if filtered[0] is not dim:
+            filtered[:] = [dim, dim.filter(cfg.dim_filter)]
+        return filtered[1]
 
     if cfg.raw_source is not None:
         # Real-broker path: the caller's source already yields
@@ -347,7 +417,7 @@ def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):
                 resilient_batch(
                     lambda b, bid: _enrich_and_split(
                         b, load_dim(), cfg.out_path, cfg.dlq_path,
-                        batch_id=bid, idempotent=cfg.idempotent,
+                        batch_id=bid, idempotent=cfg.idempotent, state=state,
                     )
                 )
             )
@@ -370,8 +440,10 @@ def build_dlq_reprocess(
     dimension (the reference's repair URL -> here the unbroken dim), and
     appends recovered records to the output. Independently checkpointed ->
     resumes from its own committed position after stop/start
-    (DlqPipelineIT.java:128-170 semantics)."""
+    (DlqPipelineIT.java:128-170 semantics). Like build_cdc_pipeline it
+    builds one EpochState per pipeline for all its epochs."""
     load_dim = dimension_reader(spark, f"{repair_sf_dir}/customer.parquet")
+    state = EpochState(spark)
     raw = stream_parquet_dir(spark, dlq_path, DLQ_SCHEMA, throttle_files)
     parsed = _parse_keep_original(raw.select("kafka_key", "value"))
 
@@ -384,7 +456,7 @@ def build_dlq_reprocess(
                 # the output (reprocessing can itself fail)
                 resilient_batch(
                     lambda b, _id: _enrich_and_split(
-                        b, load_dim(), out_path, out_path + "_dlq"
+                        b, load_dim(), out_path, out_path + "_dlq", state=state
                     )
                 )
             )

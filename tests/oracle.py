@@ -17,8 +17,18 @@ import duckdb
 from spring_cloud_kafka_streams_dbz_etl_spark.catalog import TABLES
 
 
+# DuckDB's default memory_limit is 80% of RAM, for every connection.
+# Measured at sf0.1 (one process per oracle, 4 threads): the heaviest
+# oracle, q_ann_nprobe_curve, peaks at 9.8 GB RSS and fails with an
+# out-of-memory error under an 8 GB limit; every other oracle peaks
+# under 3.1 GB. The limit is that peak plus headroom.
+MEMORY_LIMIT = "11GB"
+
+
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    """An in-memory DuckDB connection with every table as a view over
+    ``sf_dir``'s parquet files. The caller closes it."""
+    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT})
     for t in TABLES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
@@ -60,8 +70,11 @@ def compare(spark_df, oracle_sql: str, sf_dir: str, name: str = "query") -> None
             "pandas canonicalizer cannot hash nested cells; emit a canonical string"
         )
     con = duck_connection(sf_dir)
-    expected = con.execute(oracle_sql).fetchall()
-    exp_cols = [d[0] for d in con.description]
+    try:
+        expected = con.execute(oracle_sql).fetchall()
+        exp_cols = [d[0] for d in con.description]
+    finally:
+        con.close()
     got = [tuple(r) for r in spark_df.collect()]
     got_cols = spark_df.columns
 

@@ -869,6 +869,125 @@ def test_static_dimension_epoch_runs_two_jobs(spark, sf_smoke):
     assert names == {"RENAMED"}, names
 
 
+def _one_file_epochs(spark, sf_smoke, kind: str):
+    """Three 25-row event files parsed the way the CDC stream parses
+    them (one one-file epoch's batch each), a customer with a valid
+    record in the third file, and the path of a versioned customer
+    dimension committed WITHOUT that customer."""
+    import pyarrow.parquet as pq
+
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
+        synthesize_event_envelopes,
+    )
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import upsert_dimension
+    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        _parse_keep_original,
+    )
+
+    src_dir = _tmp(kind)
+    ev = pq.read_table(f"{sf_smoke}/events.parquet")
+    batches = []
+    for k in range(3):
+        pq.write_table(ev.slice(25 * k, 25), f"{src_dir}/events{k}.parquet")
+        batches.append(_parse_keep_original(synthesize_event_envelopes(
+            spark.read.parquet(f"{src_dir}/events{k}.parquet")
+        )))
+    target = next(
+        r["user_id"] for r in ev.slice(50, 25).to_pylist()
+        if r["event_id"] % 97 and r["event_type"] != "error"
+    )
+    dim_path = f"{src_dir}/customer.parquet"
+    cust = spark.read.parquet(f"{sf_smoke}/customer.parquet")
+    upsert_dimension(cust.filter(F.col("c_custkey") != target), dim_path, keys=["c_custkey"])
+    return batches, target, cust, dim_path
+
+
+def test_epoch_state_second_epoch_sends_few_jvm_commands(spark, sf_smoke, monkeypatch):
+    """Two one-file driver-path epochs through one pipeline's EpochState:
+    the second epoch, dimension read included, sends at most 100 commands
+    through the py4j gateway, because the enrichment's columns, the sink
+    schemas and the sinks' Hadoop handles are built once, not per epoch
+    (a body that rebuilt them sent over 500). Counted by wrapping
+    ClientServerConnection.send_command — no clock — on this thread, and
+    without py4j's memory-release commands, whose timing follows Python's
+    garbage collector (they also arrive from other threads)."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import dimension_reader
+    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        EpochState,
+        _enrich_and_split,
+    )
+
+    batches, _, _, dim_path = _one_file_epochs(spark, sf_smoke, "py4j_sf")
+    commits = _count_commits(monkeypatch)
+    out, dlq = _tmp("py4j_out"), _tmp("py4j_dlq")
+    state = EpochState(spark)
+    read_dim = dimension_reader(spark, dim_path)
+    counting, sent = [False], [0]
+    real_send = ClientServerConnection.send_command
+    epoch_thread = threading.get_ident()
+
+    def send(self, command):
+        if counting[0] and threading.get_ident() == epoch_thread:
+            sent[0] += not command.startswith("m\n")
+        return real_send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", send)
+    try:
+        for k, batch in enumerate(batches[:2]):
+            counting[0] = k == 1
+            _enrich_and_split(batch, read_dim(), out, dlq, batch_id=k, state=state)
+    finally:
+        counting[0] = False
+    assert len(commits) == 2  # both epochs took the driver path
+    assert 0 < sent[0] <= 100, sent[0]
+
+
+def test_epoch_state_rederives_sink_schemas_after_dimension_upsert(
+    spark, sf_smoke, monkeypatch
+):
+    """Three one-file epochs through one EpochState, with an upsert of
+    the dimension before the third: the sink schemas are derived in the
+    first epoch, reused in the second, and derived again in the third,
+    whose dimension is the new version's DataFrame, equal to what a fresh
+    state derives; the upserted customer is enriched in the third epoch."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import (
+        dimension_reader,
+        upsert_dimension,
+    )
+    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        EpochState,
+        _enrich_and_split,
+    )
+
+    batches, target, cust, dim_path = _one_file_epochs(spark, sf_smoke, "rederive_sf")
+    out, dlq = _tmp("rederive_out"), _tmp("rederive_dlq")
+    state = EpochState(spark)
+    derived = []
+    real_split = state.split
+    monkeypatch.setattr(state, "split", lambda t: derived.append(t) or real_split(t))
+    read_dim = dimension_reader(spark, dim_path)
+    per_epoch = []
+    for k, batch in enumerate(batches):
+        if k == 2:
+            upsert_dimension(
+                cust.filter(F.col("c_custkey") == target), dim_path, keys=["c_custkey"]
+            )
+        n = len(derived)
+        _enrich_and_split(batch, read_dim(), out, dlq, batch_id=k, state=state)
+        per_epoch.append(len(derived) - n)
+    assert per_epoch == [1, 0, 1], per_epoch
+    fresh = EpochState(spark)
+    tagged = batches[2].join(read_dim(), fresh.join, "left").withColumn("reason", fresh.reason)
+    assert state.schemas(tagged, read_dim()) == fresh.schemas(tagged, read_dim())
+    ok = spark.read.parquet(out).filter(F.col("user_id") == target).collect()
+    epoch3_ids = {r.id for r in batches[2].collect()}
+    assert ok and all(r.id in epoch3_ids and r.name for r in ok), ok
+
+
 def test_stream_metrics_cumulative(spark, sf_smoke):
     """§2A #13 metrics: the registry's /metrics view accumulates retained
     progress events — batches, input rows, rows/sec, trigger durations —

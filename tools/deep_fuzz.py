@@ -29,7 +29,11 @@ Covered (operator → invariant):
 - epoch sinks        CDC epoch driver commit == Spark-path sink writes
                         (rows and read-back schema) on dirty batches:
                         NULL keys, garbled payloads, tombstones, duplicate
-                        dimension keys, empty and all-DLQ batches
+                        dimension keys, empty and all-DLQ batches; and a
+                        pipeline's reused EpochState over 4 epochs with
+                        dimension upsert/delete between them == fresh
+                        single-epoch runs (rows, footer and read-back
+                        schemas), both gate sides, append and idempotent
 - connected_components driver union-find and Spark min-label loop (both
                         sides of the size gate) == plain-Python union-find
                         on dirty graphs: NULL endpoints and vertex ids,
@@ -608,6 +612,67 @@ def _read_sink(spark, path: str, schema, idempotent: bool):
     return df.schema, sorted(repr(tuple(r)) for r in rows.collect())
 
 
+_GARBLED = ["CORRUPT<<{}", "{", "", "null", "[1, 2]", '{"op": null}', '{"after": 3}']
+_DIM_SCHEMA = "c_custkey long, c_name string, c_mktsegment string"
+
+
+def _dirty_raw(kind: str) -> list:
+    """One micro-batch of (kafka_key, payload) records: NULL user ids and
+    payload fields, garbled payloads, tombstones, deletes and id=0
+    sentinels. ``empty``: only records the parse drops, so the parsed
+    epoch has no row."""
+    import json
+
+    raw = []
+    for j in range(rng.randint(1, 80)):
+        roll = rng.random() * (0.1 if kind == "empty" else 1)
+        if roll < 0.05:
+            value = None  # tombstone
+        elif kind == "empty":
+            value = json.dumps(rng.choice([
+                {"after": None, "op": "d"}, {"after": {"id": 0}, "op": "u"},
+            ]))
+        elif roll < 0.25:
+            value = rng.choice(_GARBLED)
+        else:
+            after = None if rng.random() < 0.1 else {  # None: a delete
+                "id": 0 if rng.random() < 0.05 else j + 1,
+                "user_id": None if rng.random() < 0.15 else rng.randint(0, 40),
+                "event_type": rng.choice(["view", "click", None]),
+                "value": None if rng.random() < 0.2 else rng.uniform(-5, 5),
+            }
+            value = json.dumps({"after": after, "op": "d" if after is None else "u"})
+        raw.append((None if rng.random() < 0.05 else j, value))
+    return raw
+
+
+def _dirty_dim_rows(kind: str) -> list:
+    """Customer dimension rows with duplicate and NULL keys; ``all_dlq``:
+    no key a batch can match, so every row dead-letters."""
+    rows = []
+    if kind != "all_dlq":
+        for key in rng.sample(range(0, 41), rng.randint(0, 41)):
+            for _ in range(2 if rng.random() < 0.2 else 1):  # duplicate keys
+                rows.append((key, rng.choice([f"n{key}", None]), rng.choice(["A", "B", None])))
+    return rows + [(None, "null-key", "A")] * rng.randint(0, 2)
+
+
+def _epoch_output(spark, files: list):
+    """(read-back schema, footer schemas, sorted row reprs) of the parquet
+    parts one epoch wrote to a sink; (None, [], []) when it wrote none."""
+    import pyarrow.parquet as pq
+
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import SPARK_ROW_METADATA
+
+    if not files:
+        return None, [], []
+    footers = sorted({
+        pq.read_metadata(f).metadata[SPARK_ROW_METADATA.encode()].decode() for f in files
+    })
+    df = spark.read.parquet(*files)
+    return df.schema, footers, sorted(repr(tuple(r)) for r in df.collect())
+
+
 def fuzz_epoch_sinks(spark) -> None:
     """The CDC epoch body's two paths — the one-collect driver commit an
     epoch takes under catalog.driver_sized_bytes, and the Spark path
@@ -615,62 +680,50 @@ def fuzz_epoch_sinks(spark) -> None:
     DLQ rows with the same read-back schema, on dirty micro-batches: NULL
     user ids and payload fields, garbled payloads, tombstones, deletes,
     id=0 sentinels, duplicate and NULL dimension keys, and empty and
-    all-DLQ batches, in append and idempotent (replayed) mode."""
-    import json
+    all-DLQ batches, in append and idempotent (replayed) mode.
+
+    Then the pipelines' reuse: four epochs per pipeline through ONE
+    EpochState and one dimension reader over a versioned dimension, with
+    an upsert committing a new version after the first epoch and a
+    delete after the second, write per epoch exactly the rows and the
+    footer and read-back schemas of a fresh single-epoch run (new state,
+    new reader, new sinks) over the same batch and dimension version —
+    on the driver side of the gate, the Spark side, and both in turn, in
+    append and idempotent (replayed) mode."""
+    import glob
     import tempfile
 
     from spring_cloud_kafka_streams_dbz_etl_spark import catalog
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import (
+        _commit_version,
+        delete_from_dimension,
+        dimension_reader,
+        upsert_dimension,
+    )
     from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
         DLQ_SCHEMA,
         ENRICHED_SCHEMA,
+        EpochState,
         _enrich_and_split,
         _parse_keep_original,
     )
 
-    garbled = ["CORRUPT<<{}", "{", "", "null", "[1, 2]", '{"op": null}', '{"after": 3}']
+    def parsed(raw):
+        # local relations (the pandas path) carry a size estimate, as a
+        # stream's micro-batch does; a parallelized list reports none
+        return _parse_keep_original(
+            catalog.local_rows(spark, raw, "kafka_key long, value string")
+        )
+
     cases = max(3, N // 6)
     diffs = compared = 0
     real_gate = catalog.driver_sized_bytes
     try:
         for i in range(cases):
             kind = ("empty", "all_dlq", "mixed")[i % 3]
-            raw = []
-            for j in range(rng.randint(1, 80)):
-                # empty: only records the parse drops (tombstones, deletes,
-                # id=0 sentinels), so the parsed epoch has no row
-                roll = rng.random() * (0.1 if kind == "empty" else 1)
-                if roll < 0.05:
-                    value = None  # tombstone
-                elif kind == "empty":
-                    value = json.dumps(rng.choice([
-                        {"after": None, "op": "d"}, {"after": {"id": 0}, "op": "u"},
-                    ]))
-                elif roll < 0.25:
-                    value = rng.choice(garbled)
-                else:
-                    after = None if rng.random() < 0.1 else {  # None: a delete
-                        "id": 0 if rng.random() < 0.05 else j + 1,
-                        "user_id": None if rng.random() < 0.15 else rng.randint(0, 40),
-                        "event_type": rng.choice(["view", "click", None]),
-                        "value": None if rng.random() < 0.2 else rng.uniform(-5, 5),
-                    }
-                    value = json.dumps({"after": after, "op": "d" if after is None else "u"})
-                raw.append((None if rng.random() < 0.05 else j, value))
-            dim_rows = []
-            if kind != "all_dlq":  # all_dlq: no key matches, every row dead-letters
-                for key in rng.sample(range(0, 41), rng.randint(0, 41)):
-                    for _ in range(2 if rng.random() < 0.2 else 1):  # duplicate keys
-                        dim_rows.append((key, rng.choice([f"n{key}", None]),
-                                         rng.choice(["A", "B", None])))
-            dim_rows += [(None, "null-key", "A")] * rng.randint(0, 2)
-            # local relations (the pandas path) carry a size estimate, as a
-            # stream's micro-batch does; a parallelized list reports none
-            batch = _parse_keep_original(
-                catalog.local_rows(spark, raw, "kafka_key long, value string")
-            )
-            dim = catalog.local_rows(
-                spark, dim_rows, "c_custkey long, c_name string, c_mktsegment string"
-            )
+            raw, dim_rows = _dirty_raw(kind), _dirty_dim_rows(kind)
+            batch = parsed(raw)
+            dim = catalog.local_rows(spark, dim_rows, _DIM_SCHEMA)
             assert real_gate(batch) is not None, (SEED, i)  # the driver side is reachable
             idempotent = rng.random() < 0.5
             results = []
@@ -690,10 +743,68 @@ def fuzz_epoch_sinks(spark) -> None:
                 diffs += len(set(got) ^ set(want)) + abs(len(got) - len(want))
                 compared += len(want)
             assert diffs == 0, (SEED, i, kind, idempotent, raw, dim_rows)
+
+        pipelines = epochs = 0
+        for idempotent in (False, True):
+            for side in ("driver", "spark", "both"):
+                with tempfile.TemporaryDirectory() as d:
+                    dim_path, out, dlq = f"{d}/customer", f"{d}/out", f"{d}/dlq"
+                    _commit_version(
+                        spark,
+                        catalog.local_rows(spark, _dirty_dim_rows("mixed"), _DIM_SCHEMA),
+                        dim_path,
+                    )
+                    state, read_dim = EpochState(spark), dimension_reader(spark, dim_path)
+                    for k in range(4):
+                        if k == 1:  # replace some names, add keys (NULL one too)
+                            keys = rng.sample(range(0, 50), rng.randint(1, 20))
+                            rows = [(key, f"u{key}", "U") for key in keys]
+                            upsert_dimension(
+                                catalog.local_rows(spark, rows + [(None, "u", "U")], _DIM_SCHEMA),
+                                dim_path, keys=["c_custkey"],
+                            )
+                        if k == 2:
+                            keys = [(key,) for key in rng.sample(range(0, 50), 15)]
+                            delete_from_dimension(
+                                spark, dim_path, ["c_custkey"],
+                                catalog.local_rows(spark, keys, "c_custkey long"),
+                            )
+                        kind = ("mixed", "all_dlq", "empty", "mixed")[k]
+                        raw = _dirty_raw(kind)
+                        driver = side == "driver" or (side == "both" and k % 2 == 0)
+                        catalog.driver_sized_bytes = real_gate if driver else (lambda df: None)
+                        before = {p: set(glob.glob(f"{p}/**/part-*.parquet", recursive=True))
+                                  for p in (out, dlq)}
+                        for _ in range(2 if idempotent else 1):  # idempotent: a replay
+                            _enrich_and_split(parsed(raw), read_dim(), out, dlq, batch_id=k,
+                                              idempotent=idempotent, state=state)
+                        with tempfile.TemporaryDirectory() as f:
+                            _enrich_and_split(
+                                parsed(raw), dimension_reader(spark, dim_path)(),
+                                f"{f}/out", f"{f}/dlq", batch_id=k, idempotent=idempotent,
+                            )
+                            for got_dir, want_dir in ((out, f"{f}/out"), (dlq, f"{f}/dlq")):
+                                part = f"/_batch_id={k}/" if idempotent else "/"
+                                got = _epoch_output(spark, sorted(
+                                    p for p in glob.glob(f"{got_dir}/**/part-*.parquet",
+                                                         recursive=True)
+                                    if p not in before[got_dir] and part in p
+                                ))
+                                want = _epoch_output(spark, sorted(glob.glob(
+                                    f"{want_dir}/**/part-*.parquet", recursive=True
+                                )))
+                                assert got[:2] == want[:2], (SEED, idempotent, side, k, got, want)
+                                diffs += len(set(got[2]) ^ set(want[2]))
+                                diffs += abs(len(got[2]) - len(want[2]))
+                                compared += len(want[2])
+                        assert diffs == 0, (SEED, idempotent, side, k, raw)
+                        epochs += 1
+                pipelines += 1
     finally:
         catalog.driver_sized_bytes = real_gate
     print(
-        f"epoch sinks (driver vs Spark path): {cases} cases OK, "
+        f"epoch sinks (driver vs Spark path): {cases} cases OK; reused epoch state vs "
+        f"fresh epochs: {pipelines} pipelines, {epochs} epochs OK; "
         f"{compared} rows compared, {diffs} row diffs"
     )
 
