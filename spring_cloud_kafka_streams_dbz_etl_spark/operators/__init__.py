@@ -8,19 +8,15 @@ broadcast/AQE treatment — rather than materialized intermediate steps.
 from .relational import (
     enrich_join,
     latest_by_key,
-    parse_cdc_envelope,
     project_with_defaults,
     rekey,
-    tombstone_filter,
     top_k,
 )
 
 __all__ = [
     "enrich_join",
     "latest_by_key",
-    "parse_cdc_envelope",
     "project_with_defaults",
     "rekey",
-    "tombstone_filter",
     "top_k",
 ]

@@ -8,8 +8,6 @@ a stream-static/broadcast equi-join (the single biggest scale win: one
 batch-wide join instead of one RPC per record).
 
 Reference parity anchors:
-- tombstone_filter      <- EventTransformerStream.java:32 (.filter(v != null))
-- parse_cdc_envelope    <- EventTransformerStream.java:42-59 (after/after.id)
 - enrich_join           <- EventTransformerStream.java:61-85,
                            AnimalEnrichmentService.java:57-82 (REST lookup)
 - project_with_defaults <- EventTransformerStream.java:67-72 (builder with
@@ -25,31 +23,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def tombstone_filter(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """Drop Kafka tombstones (null envelope payloads)."""
-    return df.filter(F.col(value_col).isNotNull())
-
-
-def parse_cdc_envelope(
-    df: DataFrame,
-    envelope_col: str = "envelope",
-    id_field: str = "id",
-) -> DataFrame:
-    """Envelope -> flat `after` image; skips deletes (after IS NULL) and the
-    reference's id==0 sentinel rejection (EventTransformerStream.java:53-58).
-    """
-    after = F.col(f"{envelope_col}.after")
-    return (
-        df.filter(after.isNotNull())
-        .filter(after.getField(id_field).isNotNull() & (after.getField(id_field) != 0))
-        .select("*")
-        .withColumn("__after", after)
-        .drop(envelope_col)
-        .select("*", "__after.*")
-        .drop("__after")
-    )
 
 
 def enrich_join(

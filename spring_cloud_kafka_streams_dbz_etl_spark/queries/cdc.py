@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import local_rows, table
 from ..session import tune
-from ..sources.cdc import parse_event_envelopes, synthesize_event_envelopes
+from ..sources.cdc import EVENTS_ENTITY, parse_envelopes, synthesize_envelopes
 from . import query
 
 
@@ -34,8 +34,12 @@ def q_cdc_envelope_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune(spark)
     ev = table(spark, sf_dir, "events")
-    raw = synthesize_event_envelopes(ev)
-    return parse_event_envelopes(raw)
+    raw = synthesize_envelopes(ev, EVENTS_ENTITY)
+    return (
+        parse_envelopes(raw, EVENTS_ENTITY)
+        .filter(~F.col("parse_failed"))
+        .select("id", "user_id", "event_type", "value", "op")
+    )
 
 
 @query(

@@ -96,18 +96,19 @@ WHERE o_orderkey % 97 <> 0 AND o_orderstatus <> 'F' AND o_orderkey <> 0
 """,
 )
 def s_cdc_pipeline_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The generic entity-pipeline builder (streaming/entity.py) driving a
-    SECOND entity type end-to-end — the reference's animal topology analog
-    (different source schema, wider output with a dim payload column in
-    the breed position). Proves the engine builds the full topology
-    (synth -> parse -> enrich -> dual sink) from an EntitySpec alone."""
-    from ..streaming.entity import ORDERS_ENTITY, build_entity_pipeline
+    """The CDC pipeline builder driving a SECOND entity type end-to-end —
+    the reference's animal topology analog (different source schema,
+    wider output with a dim payload column in the breed position). Proves
+    the engine builds the full topology (synth -> parse -> enrich -> dual
+    sink) from an EntitySpec alone (sources/cdc.py::ORDERS_ENTITY)."""
+    from ..sources.cdc import ORDERS_ENTITY
 
     tune(spark)
     out, dlq, ckpt = _tmp("ord_out"), _tmp("ord_dlq"), _tmp("ord_ckpt")
-    _run_to_completion(
-        build_entity_pipeline(spark, ORDERS_ENTITY, sf_dir, out, dlq, ckpt)
+    cfg = CdcPipelineConfig(
+        sf_dir=sf_dir, out_path=out, dlq_path=dlq, checkpoint=ckpt, entity=ORDERS_ENTITY
     )
+    _run_to_completion(build_cdc_pipeline(spark, cfg))
     return spark.read.parquet(out).select(
         "id", "custkey", "name", "segment", "acctbal", "totalprice"
     )
@@ -146,11 +147,11 @@ def s_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("ok").alias("status"), "id", "user_id", "name", "event_type", "value"
     )
     # DLQ rows carry the original payload; re-parse to expose identity.
-    from ..sources.cdc import parse_event_envelopes
+    from ..sources.cdc import EVENTS_ENTITY, parse_envelopes
     from ..streaming.pipeline import DLQ_SCHEMA
 
     bad_raw = spark.read.schema(DLQ_SCHEMA).parquet(dlq)
-    bad = parse_event_envelopes(bad_raw, keep_op=False).select(
+    bad = parse_envelopes(bad_raw, EVENTS_ENTITY).filter(~F.col("parse_failed")).select(
         F.lit("dlq").alias("status"),
         "id",
         "user_id",
@@ -1270,11 +1271,12 @@ def s_backfill_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backfill-then-tail bootstrap — the standard way a new pipeline
     consumer catches up at 100 TB: the HISTORICAL events (even ids, the
     data-lake archive) are processed as ONE batch pass through the SAME
-    parse -> enrich -> split code the stream runs (_parse_keep_original /
-    _enrich_and_split are batch functions; foreachBatch merely invokes
-    them per epoch), writing to the same sink; the streaming tail then
-    starts on a directory holding ONLY the post-cutover records (odd
-    ids) so nothing is double-processed. The oracle is the full-corpus
+    synthesize -> parse -> enrich -> split code the stream runs
+    (synthesize_envelopes / parse_envelopes / _enrich_and_split are batch
+    functions; foreachBatch merely invokes them per epoch), writing to
+    the same sink; the streaming tail then starts on a directory holding
+    ONLY the post-cutover records (odd ids) so nothing is
+    double-processed. The oracle is the full-corpus
     enrichment — union of backfill + tail must equal it exactly.
 
     Scale: the backfill is one batch job at full cluster parallelism
@@ -1288,8 +1290,8 @@ def s_backfill_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as pq
 
     from ..catalog import fan_out, table
-    from ..sources.cdc import synthesize_event_envelopes
-    from ..streaming.pipeline import _enrich_and_split, _parse_keep_original
+    from ..sources.cdc import EVENTS_ENTITY, parse_envelopes, synthesize_envelopes
+    from ..streaming.pipeline import EpochState, _enrich_and_split
 
     tune(spark)
     tail_dir, out, dlq, ckpt = (
@@ -1311,8 +1313,10 @@ def s_backfill_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_id") % 2 == 0)
         .select("event_id", "user_id", "event_type", "value")
     )
-    raw = synthesize_event_envelopes(fan_out(hist, spark))
-    _enrich_and_split(_parse_keep_original(raw), dim, out, dlq)
+    raw = synthesize_envelopes(fan_out(hist, spark), EVENTS_ENTITY)
+    _enrich_and_split(
+        parse_envelopes(raw, EVENTS_ENTITY), dim, out, dlq, EpochState(spark, EVENTS_ENTITY)
+    )
 
     # -- tail: the streaming topology over the post-cutover directory,
     # dimension resolved from the ORIGINAL sf_dir
@@ -1971,63 +1975,42 @@ def s_cdc_multiplex(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     src, out, ckpt = _tmp("mux_src"), _tmp("mux_out"), _tmp("mux_ckpt")
     from ..catalog import table as load_table
-    from ..streaming.entity import (
+    from ..sources.cdc import (
         EVENTS_ENTITY,
         ORDERS_ENTITY,
-        synthesize_entity_envelopes,
+        parse_envelopes,
+        synthesize_envelopes,
     )
 
-    ev_raw = synthesize_entity_envelopes(
-        load_table(spark, sf_dir, "events"), EVENTS_ENTITY, source_table_tag=True
-    )
-    o_raw = synthesize_entity_envelopes(
-        load_table(spark, sf_dir, "orders"), ORDERS_ENTITY, source_table_tag=True
-    )
-    ev_raw.unionByName(o_raw).write.mode("overwrite").parquet(src)
+    # (spec, after field of the customer key, after field of the metric)
+    branches = ((EVENTS_ENTITY, "user_id", "value"), (ORDERS_ENTITY, "custkey", "totalprice"))
+    raws = [
+        synthesize_envelopes(
+            load_table(spark, sf_dir, spec.source_table), spec, source_table_tag=True
+        )
+        for spec, _, _ in branches
+    ]
+    raws[0].unionByName(raws[1]).write.mode("overwrite").parquet(src)
 
     dim = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    ev_schema = (
-        "source struct<table:string>, "
-        "after struct<id:bigint,user_id:bigint,event_type:string,value:double>, "
-        "op string"
-    )
-    o_schema = (
-        "source struct<table:string>, "
-        "after struct<id:bigint,custkey:bigint,totalprice:double>, "
-        "op string"
-    )
 
     def route(batch: DataFrame, _epoch: int) -> None:
         live = batch.filter(F.col("value").isNotNull()).withColumn(
             "tbl", F.get_json_object("value", "$.source.table")
         )
-        ev_b = (
-            live.filter(F.col("tbl") == "events")
-            # eval_once: one from_json per row, not one per consumer
-            .withColumn("env", eval_once(F.from_json("value", ev_schema)))
-            .filter(F.col("env.after").isNotNull() & (F.col("env.after.id") != 0))
-            .join(F.broadcast(dim), F.col("env.after.user_id") == dim.c_custkey)
+        # each branch decodes with its own spec's envelope schema
+        ev_b, o_b = (
+            parse_envelopes(live.filter(F.col("tbl") == spec.source_table), spec)
+            .filter(~F.col("parse_failed"))
+            .join(F.broadcast(dim), F.col(key) == dim.c_custkey)
             .select(
-                F.lit("events").alias("src_table"),
-                F.col("env.after.id").alias("id"),
-                F.col("env.after.user_id").alias("key_id"),
+                F.lit(spec.source_table).alias("src_table"),
+                "id",
+                F.col(key).alias("key_id"),
                 F.col("c_name").alias("name"),
-                F.col("env.after.value").alias("metric"),
+                F.col(metric).alias("metric"),
             )
-        )
-        o_b = (
-            live.filter(F.col("tbl") == "orders")
-            # eval_once: one from_json per row, not one per consumer
-            .withColumn("env", eval_once(F.from_json("value", o_schema)))
-            .filter(F.col("env.after").isNotNull() & (F.col("env.after.id") != 0))
-            .join(F.broadcast(dim), F.col("env.after.custkey") == dim.c_custkey)
-            .select(
-                F.lit("orders").alias("src_table"),
-                F.col("env.after.id").alias("id"),
-                F.col("env.after.custkey").alias("key_id"),
-                F.col("c_name").alias("name"),
-                F.col("env.after.totalprice").alias("metric"),
-            )
+            for spec, key, metric in branches
         )
         ev_b.unionByName(o_b).write.mode("append").parquet(out)
 

@@ -1,5 +1,11 @@
 """Sources: CDC envelope synthesis/parsing + Kafka source builders."""
 
-from .cdc import parse_event_envelopes, synthesize_event_envelopes
+from .cdc import EVENTS_ENTITY, ORDERS_ENTITY, EntitySpec, parse_envelopes, synthesize_envelopes
 
-__all__ = ["parse_event_envelopes", "synthesize_event_envelopes"]
+__all__ = [
+    "EVENTS_ENTITY",
+    "ORDERS_ENTITY",
+    "EntitySpec",
+    "parse_envelopes",
+    "synthesize_envelopes",
+]

@@ -191,9 +191,7 @@ def _publish_parts(handles: SinkHandles, staged: list, batch_id: int | None) -> 
             raise OSError(f"could not publish {stage} as {final}")
 
 
-def commit_parts(
-    spark: SparkSession, parts, batch_id: int | None = None, handles: SinkHandles | None = None
-) -> None:
+def commit_parts(parts, batch_id: int | None, handles: SinkHandles) -> None:
     """Write each ``(arrow table, Spark schema, sink path)`` of ``parts``
     as one parquet part of its sink, written on the driver: every part is
     staged first, and only then are they all published. A failure before
@@ -205,11 +203,9 @@ def commit_parts(
     written, then is swapped out by a delete and a rename.
 
     ``handles`` are built once per pipeline and passed to each epoch's
-    commit; without them the commit resolves its own. Per commit, what
-    crosses to the JVM is only the work itself: per part one ``Path``
-    and one create, write and close, then the publish's renames (and
-    deletes in idempotent mode)."""
-    handles = handles or SinkHandles(spark)
+    commit. Per commit, what crosses to the JVM is only the work itself:
+    per part one ``Path`` and one create, write and close, then the
+    publish's renames (and deletes in idempotent mode)."""
     staged: list = []
     try:
         _stage_parts(handles, parts, batch_id, staged)

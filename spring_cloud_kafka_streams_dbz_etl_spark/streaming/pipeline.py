@@ -2,11 +2,15 @@
 
 Reference topology (SURVEY.md §3.1): CDC topic -> tombstone filter ->
 envelope `after` extraction -> per-record REST enrichment -> branch
-success/failure -> {output topic, DLQ topic}. Here each micro-batch runs
-one broadcast join against the dimension and a dual parquet/Kafka write
-inside ``foreachBatch`` — per-record failures become join misses tagged on
-rows (never thrown), exactly mirroring the reference's EnrichResult
-tagging (AnimalTransformerStream.java:30,36-53).
+success/failure -> {output topic, DLQ topic}. The reference runs one such
+topology per entity type; here ONE builder, :func:`build_cdc_pipeline`,
+runs it for any sources/cdc.py::EntitySpec (``CdcPipelineConfig.entity``:
+the events spec by default, the orders spec for the "animal" analog), and
+the DLQ reprocess stream is the same builder over the DLQ directory. Each
+micro-batch runs one broadcast join against the dimension and a dual
+parquet/Kafka write inside ``foreachBatch`` — per-record failures become
+join misses tagged on rows (never thrown), exactly mirroring the
+reference's EnrichResult tagging (AnimalTransformerStream.java:30,36-53).
 
 Failure semantics parity:
 - DLQ rows keep the ORIGINAL envelope payload, not the half-parsed row
@@ -26,10 +30,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schemas import events_envelope_schema
-from ..sources.cdc import synthesize_event_envelopes
+from ..sources.cdc import (
+    EVENTS_ENTITY,
+    PAYLOAD,
+    EntitySpec,
+    parse_envelopes,
+    synthesize_envelopes,
+)
 from ..sources.sinks import dimension_reader
-from ..sources.streams import stream_events, stream_parquet_dir
+from ..sources.streams import stream_parquet_dir
 
 # DLQ rows are original payloads + failure context (key, value, reason).
 DLQ_SCHEMA = T.StructType(
@@ -77,45 +86,9 @@ class CdcPipelineConfig:
     # (proven against embedded Derby in tests/test_jdbc_dim.py). None =
     # the versioned parquet dimension store over sf_dir.
     dim_source: "Callable[[], DataFrame] | None" = None
-
-
-def _parse_keep_original(raw: DataFrame) -> DataFrame:
-    """Tombstone-filter + envelope parse, KEEPING the original payload
-    column for DLQ fidelity. Delete/id==0 records are dropped (reference
-    skips them silently, EventTransformerStream.java:43-58); records whose
-    payload fails to DECODE are kept and flagged — the reference's
-    framework-level deserialization DLQ (enable-dlq, application.yml:23-31)
-    routes those, it does not drop them. from_json yields an all-null
-    struct for malformed JSON (null only for empty input), and a real
-    envelope always carries `op` — hence the parse_failed rule."""
-    from ..functions.scalars import eval_once, no_pushdown
-
-    schema = events_envelope_schema()
-    # eval_once (r18): without it the envelope alias is inlined into
-    # every consumer — the physical plan carried SIX from_json
-    # evaluations per row (each flag/filter/projected field its own) —
-    # see functions/scalars.py
-    parsed = raw.filter(no_pushdown(F.col("value").isNotNull())).withColumn(
-        "envelope", eval_once(F.from_json("value", schema))
-    )
-    parse_failed = F.col("envelope").isNull() | (
-        F.col("envelope.op").isNull() & F.col("envelope.after").isNull()
-    )
-    flagged = parsed.withColumn("parse_failed", parse_failed)
-    return flagged.filter(
-        no_pushdown(
-            F.col("parse_failed")
-            | (F.col("envelope.after").isNotNull() & (F.col("envelope.after.id") != 0))
-        )
-    ).select(
-        "kafka_key",
-        "value",
-        "parse_failed",
-        F.col("envelope.after.id").alias("id"),
-        F.col("envelope.after.user_id").alias("user_id"),
-        F.col("envelope.after.event_type").alias("event_type"),
-        F.col("envelope.after.value").alias("evt_value"),
-    )
+    # The entity type the topology carries: its source table under sf_dir,
+    # envelope, dimension and ok-sink projection (sources/cdc.py).
+    entity: EntitySpec = EVENTS_ENTITY
 
 
 def resilient_batch(fn):
@@ -163,44 +136,17 @@ def resilient_batch(fn):
     return wrapped
 
 
-@dataclass(frozen=True)
-class Enrichment:
-    """What differs between the epochs of the CDC pipelines: the join of
-    the parsed batch to the dimension (SQL), the dimension column whose
-    NULL marks an enrichment miss, the ok-sink projection as
-    ``(alias, SQL)`` pairs, and the column carrying the original payload."""
-
-    join: str
-    match_col: str
-    output_cols: tuple[tuple[str, str], ...]
-    payload: str = "value"
-
-
-# events -> customer: the output of build_cdc_pipeline (ENRICHED_SCHEMA)
-EVENTS_ENRICHMENT = Enrichment(
-    join="user_id = c_custkey",
-    match_col="c_custkey",
-    output_cols=(
-        ("id", "id"),
-        ("user_id", "user_id"),
-        ("name", "COALESCE(c_name, '')"),
-        ("segment", "COALESCE(c_mktsegment, 'UNKNOWN')"),
-        ("event_type", "event_type"),
-        ("value", "evt_value"),
-    ),
-)
-
-
 class EpochState:
     """What every epoch of one pipeline shares, built once per pipeline
     and handed to each epoch's :func:`_enrich_and_split`:
 
-    - per pipeline: the Column objects of the ``enrichment`` (the join
-      condition, the ``reason`` tag, the ok and DLQ projections and the
-      positional collect projection of the driver path, which both sides
-      of the size gate share) and the sinks' Hadoop handles
-      (sources/sinks.py::SinkHandles). Columns need a live session, and
-      sessions restart within one JVM, so they are never built at import;
+    - per pipeline: the Column objects of the entity ``spec``'s
+      enrichment (the join condition, the ``reason`` tag, the ok and DLQ
+      projections and the positional collect projection of the driver
+      path, which both sides of the size gate share) and the sinks'
+      Hadoop handles (sources/sinks.py::SinkHandles). Columns need a live
+      session, and sessions restart within one JVM, so they are never
+      built at import;
     - per dimension: the ok and DLQ sink schemas, derived again only
       when the epoch's dimension is another DataFrame object than the
       last one's (``dimension_reader`` returns a new one per version, or
@@ -208,21 +154,20 @@ class EpochState:
       carries its stream's schema, so the dimension is all that moves
       them."""
 
-    def __init__(self, spark: SparkSession, enrichment: Enrichment = EVENTS_ENRICHMENT) -> None:
+    def __init__(self, spark: SparkSession, spec: EntitySpec) -> None:
         from ..sources.sinks import SinkHandles
 
-        e = enrichment
-        self.join = F.expr(e.join)
+        self.join = F.expr(spec.dim_join)
         self.reason = F.when(F.col("parse_failed"), F.lit("parse_error")).when(
-            F.col(e.match_col).isNull(), F.lit("enrichment_miss")
+            F.col(spec.dim_match_col).isNull(), F.lit("enrichment_miss")
         )
         self.is_ok = F.col("reason").isNull()
         self.is_bad = F.col("reason").isNotNull()
-        self.ok_cols = [F.expr(expr).alias(alias) for alias, expr in e.output_cols]
-        self.bad_cols = [F.col("kafka_key"), F.col(e.payload).alias("value"), F.col("reason")]
+        self.ok_cols = [F.expr(expr).alias(alias) for alias, expr in spec.output_cols]
+        self.bad_cols = [F.col("kafka_key"), F.col(PAYLOAD).alias("value"), F.col("reason")]
         # positional names: an ok column may share its name with a DLQ
         # one; ok rows ship no payload (it is only ever written to the DLQ)
-        payload = F.when(self.is_bad, F.col(e.payload))
+        payload = F.when(self.is_bad, F.col(PAYLOAD))
         self.collected = [
             c.alias(f"_{i}")
             for i, c in enumerate([*self.ok_cols, F.col("kafka_key"), payload, F.col("reason")])
@@ -254,10 +199,9 @@ def _enrich_and_split(
     dim: DataFrame,
     out_path: str,
     dlq_path: str,
+    state: EpochState,
     batch_id: int | None = None,
     idempotent: bool = False,
-    enrichment: Enrichment = EVENTS_ENRICHMENT,
-    state: EpochState | None = None,
 ) -> None:
     """foreachBatch body: ONE relation per epoch — the parsed batch LEFT
     JOIN the dimension, tagged with a ``reason`` (NULL, 'parse_error' or
@@ -266,13 +210,12 @@ def _enrich_and_split(
     match and ride the same join. Catalyst broadcasts the dimension when
     its size estimate is under autoBroadcastJoinThreshold.
 
-    What is built when: the pipeline builders make one :class:`EpochState`
-    per pipeline (the enrichment's Column objects, the sinks' Hadoop
-    handles) and pass it as ``state``; the sink schemas are derived once
+    What is built when: the caller makes one :class:`EpochState` per
+    pipeline (the entity's enrichment Column objects, the sinks' Hadoop
+    handles) and passes it as ``state``; the sink schemas are derived once
     per dimension version; per epoch this body builds only the tagged
     relation over the epoch's batch, reads the size gate and moves the
-    epoch's rows. A direct call without ``state`` builds one for itself
-    from ``enrichment``; with ``state`` its enrichment is the one used.
+    epoch's rows.
 
     Two paths, one output. An epoch the driver can hold (the batch's
     size estimate passes catalog.driver_sized_bytes — a one-file live
@@ -307,29 +250,27 @@ def _enrich_and_split(
     from ..catalog import driver_sized_bytes
     from ..sources.sinks import commit_parts, idempotent_batch_write
 
-    s = state or EpochState(batch.sparkSession, enrichment)
-    tagged = batch.join(dim, s.join, "left").withColumn("reason", s.reason)
+    tagged = batch.join(dim, state.join, "left").withColumn("reason", state.reason)
     epoch = (batch_id or 0) if idempotent else None
 
     if driver_sized_bytes(batch) is not None:
         import pyarrow.compute as pc
 
-        rows = tagged.select(*s.collected).toArrow()
-        ok_schema, bad_schema = s.schemas(tagged, dim)
-        n = len(s.ok_cols)
+        rows = tagged.select(*state.collected).toArrow()
+        ok_schema, bad_schema = state.schemas(tagged, dim)
+        n = len(state.ok_cols)
         untagged = pc.is_null(rows.column(n + 2))
         commit_parts(
-            batch.sparkSession,
             [
                 (rows.filter(untagged).select(range(n)), ok_schema, out_path),
                 (rows.filter(pc.invert(untagged)).select(range(n, n + 3)), bad_schema, dlq_path),
             ],
             epoch,
-            s.sinks,
+            state.sinks,
         )
         return
 
-    ok, bad = s.split(tagged)
+    ok, bad = state.split(tagged)
     # MEMORY_AND_DISK (not cache/MEMORY_ONLY): eviction must spill, never
     # recompute — a recompute in the SECOND sink write would re-run the
     # codec and re-read the dimension, breaking resilient_batch's
@@ -348,9 +289,17 @@ def _enrich_and_split(
 
 
 def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):
-    """Main CDC enrichment stream (§2A #1-#14). Returns an unstarted
-    writer factory for StreamRegistry (so start/stop/reset own the
-    lifecycle and checkpoint).
+    """The CDC enrichment stream (§2A #1-#14) of the entity type
+    ``cfg.entity``. Returns an unstarted writer factory for StreamRegistry
+    (so start/stop/reset own the lifecycle and checkpoint).
+
+    Source: ``cfg.raw_source`` when given (a real broker's
+    (kafka_key, value-json) records), else the file-source stand-in — the
+    spec's source table files under ``cfg.sf_dir``
+    (``<source_table>*.parquet``, so later-arriving files become later
+    micro-batches), read with the spec's source schema and synthesized
+    into envelopes. Building runs no Spark job: every schema comes from
+    the spec.
 
     An epoch the driver can hold (a live one-file epoch, a replay epoch
     of a few files) runs two Spark jobs: the dimension's broadcast and
@@ -374,10 +323,11 @@ def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):
     reader returns, its ``cfg.dim_filter`` view, and the sink schemas.
     Per epoch: the listing of the dimension, the tagged relation over
     the epoch's batch, and its rows."""
+    spec = cfg.entity
     read_dim = cfg.dim_source or dimension_reader(
-        spark, f"{cfg.sf_dir}/customer.parquet"
+        spark, f"{cfg.sf_dir}/{spec.dim_table}.parquet"
     )
-    state = EpochState(spark)
+    state = EpochState(spark, spec)
     # (dimension read, its filtered view): one view per dimension object,
     # so the epoch state's schema memo sees one object per version too
     filtered: list = [None, None]
@@ -400,14 +350,18 @@ def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):
         # parse, DLQ flagging, enrichment, split, sinks — is identical.
         raw = cfg.raw_source()
     else:
-        src = stream_events(spark, cfg.sf_dir, cfg.max_files_per_trigger)
-        raw = synthesize_event_envelopes(src, corrupt_every=cfg.corrupt_every)
+        # maxFilesPerTrigger: the file-source analogue of the reference's
+        # max.poll.records throttle (application.yml:36)
+        reader = spark.readStream.schema(spec.source_schema()).option(
+            "pathGlobFilter", f"{spec.source_table}*.parquet"
+        )
+        if cfg.max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", cfg.max_files_per_trigger)
+        raw = synthesize_envelopes(reader.parquet(cfg.sf_dir), spec, cfg.corrupt_every)
     # The reference's peek()/log side-channel (§2A #13) as observe()
     # metrics: per-batch counts surface in query.lastProgress without
     # touching the data path (no extra action, no caching).
-    parsed = _parse_keep_original(raw).observe(
-        "cdc", F.count(F.lit(1)).alias("n_parsed")
-    )
+    parsed = parse_envelopes(raw, spec).observe("cdc", F.count(F.lit(1)).alias("n_parsed"))
 
     def start():
         return (
@@ -416,8 +370,8 @@ def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):
             .foreachBatch(
                 resilient_batch(
                     lambda b, bid: _enrich_and_split(
-                        b, load_dim(), cfg.out_path, cfg.dlq_path,
-                        batch_id=bid, idempotent=cfg.idempotent, state=state,
+                        b, load_dim(), cfg.out_path, cfg.dlq_path, state,
+                        batch_id=bid, idempotent=cfg.idempotent,
                     )
                 )
             )
@@ -435,32 +389,19 @@ def build_dlq_reprocess(
     checkpoint: str,
     throttle_files: int = 1,
 ):
-    """DLQ reprocessing stream (§2A #15): reads the DLQ directory as a
-    stream, re-parses the ORIGINAL payloads, enriches against the repair
+    """DLQ reprocessing stream (§2A #15): :func:`build_cdc_pipeline` over
+    the DLQ directory as its raw source, read ``throttle_files`` files per
+    epoch. It re-parses the ORIGINAL payloads, enriches against the repair
     dimension (the reference's repair URL -> here the unbroken dim), and
-    appends recovered records to the output. Independently checkpointed ->
-    resumes from its own committed position after stop/start
-    (DlqPipelineIT.java:128-170 semantics). Like build_cdc_pipeline it
-    builds one EpochState per pipeline for all its epochs."""
-    load_dim = dimension_reader(spark, f"{repair_sf_dir}/customer.parquet")
-    state = EpochState(spark)
-    raw = stream_parquet_dir(spark, dlq_path, DLQ_SCHEMA, throttle_files)
-    parsed = _parse_keep_original(raw.select("kafka_key", "value"))
-
-    def start():
-        return (
-            parsed.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(
-                # repair path: misses stay in a dead-letter parquet next to
-                # the output (reprocessing can itself fail)
-                resilient_batch(
-                    lambda b, _id: _enrich_and_split(
-                        b, load_dim(), out_path, out_path + "_dlq", state=state
-                    )
-                )
-            )
-            .start()
-        )
-
-    return start
+    appends recovered records to the output; misses stay in a dead-letter
+    parquet next to it (reprocessing can itself fail). Independently
+    checkpointed -> resumes from its own committed position after
+    stop/start (DlqPipelineIT.java:128-170 semantics)."""
+    cfg = CdcPipelineConfig(
+        sf_dir=repair_sf_dir,
+        out_path=out_path,
+        dlq_path=out_path + "_dlq",
+        checkpoint=checkpoint,
+        raw_source=lambda: stream_parquet_dir(spark, dlq_path, DLQ_SCHEMA, throttle_files),
+    )
+    return build_cdc_pipeline(spark, cfg)

@@ -74,7 +74,8 @@ def test_cdc_pipeline_against_real_broker(kafka_spark, sf_smoke, tmp_path):
     from pyspark.sql import functions as F
 
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
-        synthesize_event_envelopes,
+        EVENTS_ENTITY,
+        synthesize_envelopes,
     )
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.streams import (
         kafka_raw_envelope_source,
@@ -98,7 +99,7 @@ def test_cdc_pipeline_against_real_broker(kafka_spark, sf_smoke, tmp_path):
     events = spark.read.parquet(f"{sf_smoke}/events.parquet").select(
         "event_id", "user_id", "event_type", "value"
     )
-    envelopes = synthesize_event_envelopes(events, corrupt_every=500)
+    envelopes = synthesize_envelopes(events, EVENTS_ENTITY, corrupt_every=500)
     writer = envelopes.select(
         F.col("kafka_key").cast("string").cast("binary").alias("key"),
         F.col("value").cast("binary").alias("value"),

@@ -110,42 +110,43 @@ def test_cdc_parse_codec_stays_above_fanout_exchange(spark, sf_smoke):
     from pyspark.sql import functions as F
 
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
-        synthesize_event_envelopes,
-    )
-    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
-        _parse_keep_original,
+        EVENTS_ENTITY,
+        parse_envelopes,
+        synthesize_envelopes,
     )
 
     src = spark.read.parquet(f"{sf_smoke}/events.parquet").repartition(8)
-    df = _parse_keep_original(synthesize_event_envelopes(src))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    exchange_pos = plan.find("Exchange RoundRobinPartitioning")
-    assert exchange_pos != -1, plan[:1500]
-    below = plan[exchange_pos:]
-    assert "from_json" not in below, below[:2000]
-    assert "StructsToJson" not in below, below[:2000]
+    stream = parse_envelopes(synthesize_envelopes(src, EVENTS_ENTITY), EVENTS_ENTITY)
+    for df in (stream, stream.filter(~F.col("parse_failed"))):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        exchange_pos = plan.find("Exchange RoundRobinPartitioning")
+        assert exchange_pos != -1, plan[:1500]
+        below = plan[exchange_pos:]
+        assert "from_json" not in below, below[:2000]
+        assert "StructsToJson" not in below, below[:2000]
 
 
 def test_cdc_parse_evaluates_from_json_once(spark, sf_smoke):
     """eval_once pins the envelope codec to ONE from_json evaluation per
-    row in both CDC parse plans — the batch parse (sources/cdc.py) and
-    the DLQ-keeping stream parse (streaming/pipeline.py). Without the
-    guard Catalyst inlines the envelope alias into every referencing
-    filter and projected field (3 and 6 evaluations respectively). The
+    row in both forms of the CDC parse (sources/cdc.py::parse_envelopes)
+    — the DLQ-keeping stream form and the batch form, which filters
+    decode failures out. Without the guard Catalyst inlines the envelope
+    alias into every referencing filter and projected field. The
     synthesized payload is guarded the same way: ONE to_json
     (StructsToJson) per row, not one in the tombstone filter and another
     inside from_json."""
+    from pyspark.sql import functions as F
+
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
-        parse_event_envelopes,
-        synthesize_event_envelopes,
-    )
-    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
-        _parse_keep_original,
+        EVENTS_ENTITY,
+        parse_envelopes,
+        synthesize_envelopes,
     )
 
     src = spark.read.parquet(f"{sf_smoke}/events.parquet").repartition(8)
-    raw = synthesize_event_envelopes(src)
-    for df in (parse_event_envelopes(raw), _parse_keep_original(raw)):
+    stream = parse_envelopes(synthesize_envelopes(src, EVENTS_ENTITY), EVENTS_ENTITY)
+    batch = stream.filter(~F.col("parse_failed")).select("id", "user_id", "value", "op")
+    for df in (batch, stream):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("from_json(") == 1, plan[:3000]
         assert plan.count("StructsToJson") == 1, plan[:3000]

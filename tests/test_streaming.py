@@ -229,7 +229,8 @@ def test_checkpoint_resume_and_specific_reset(spark, sf_smoke):
     (§2A #19): phase 2 must NOT reprocess phase 1's batch; truncating the
     checkpoint back to batch 0 must reprocess exactly phase 2's input."""
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
-        synthesize_event_envelopes,
+        EVENTS_ENTITY,
+        synthesize_envelopes,
     )
 
     src, out, ckpt = _tmp("resume_src"), _tmp("resume_out"), _tmp("resume_ckpt")
@@ -241,8 +242,8 @@ def test_checkpoint_resume_and_specific_reset(spark, sf_smoke):
     phase1.coalesce(1).write.mode("overwrite").parquet(src)
 
     def builder():
-        raw = synthesize_event_envelopes(
-            spark.readStream.schema(ev.schema).parquet(src)
+        raw = synthesize_envelopes(
+            spark.readStream.schema(ev.schema).parquet(src), EVENTS_ENTITY
         )
         flat = raw.filter(F.col("value").isNotNull()).select("kafka_key", "value")
         return (
@@ -331,36 +332,6 @@ def test_registry_runs_parallel_independent_topologies(spark, sf_smoke):
     # offsets tracked per stream
     assert reg.offsets("event_transform")["committedBatch"] is not None
     assert reg.offsets("animal_dlq_transform")["committedBatch"] is not None
-
-
-def test_entity_spec_pipeline_matches_handbuilt(spark, sf_smoke):
-    """build_entity_pipeline(EVENTS_ENTITY) must produce exactly what the
-    hand-built events pipeline produces (same topology from a spec)."""
-    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.entity import (
-        EVENTS_ENTITY,
-        build_entity_pipeline,
-    )
-
-    out, dlq, ckpt = _tmp("ent_out"), _tmp("ent_dlq"), _tmp("ent_ckpt")
-    reg = StreamRegistry()
-    reg.register(
-        "ent",
-        build_entity_pipeline(spark, EVENTS_ENTITY, sf_smoke, out, dlq, ckpt),
-        checkpoint=ckpt,
-    )
-    reg.process_available("ent")
-    reg.stop("ent")
-
-    out2, dlq2, ckpt2 = _tmp("hb_out"), _tmp("hb_dlq"), _tmp("hb_ckpt")
-    cfg = CdcPipelineConfig(sf_dir=sf_smoke, out_path=out2, dlq_path=dlq2, checkpoint=ckpt2)
-    reg.register("hb", build_cdc_pipeline(spark, cfg), checkpoint=ckpt2)
-    reg.process_available("hb")
-    reg.stop("hb")
-
-    ent = spark.read.parquet(out).select(*ENRICHED_SCHEMA.fieldNames())
-    hb = spark.read.schema(ENRICHED_SCHEMA).parquet(out2)
-    assert ent.count() == hb.count() > 0
-    assert ent.exceptAll(hb).count() == 0 and hb.exceptAll(ent).count() == 0
 
 
 def test_dimension_update_visible_between_batches(spark, sf_smoke):
@@ -587,18 +558,26 @@ def _rows(df) -> list[str]:
     return sorted(repr(tuple(r)) for r in df.collect())
 
 
-def test_cdc_spark_path_writes_the_driver_path_rows(spark, sf_smoke, monkeypatch):
-    """The same stream with the epoch forced onto the Spark path (1 KB
-    gate) writes exactly the rows the driver path writes — ok rows, and
-    DLQ rows of both reasons — and observedMetrics.cdc.n_parsed still
-    counts every parsed row of the epoch, once."""
+@pytest.mark.parametrize("entity", ["events", "orders"])
+def test_cdc_spark_path_writes_the_driver_path_rows(spark, sf_smoke, monkeypatch, entity):
+    """The same stream, of each entity type, with the epoch forced onto
+    the Spark path (1 KB gate) writes exactly the rows the driver path
+    writes — ok rows, and DLQ rows of both reasons (garbled payloads and
+    enrichment misses) — and observedMetrics.cdc.n_parsed still counts
+    every parsed row of the epoch, once."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
+        EVENTS_ENTITY,
+        ORDERS_ENTITY,
+    )
+
+    spec = {"events": EVENTS_ENTITY, "orders": ORDERS_ENTITY}[entity]
     commits = _count_commits(monkeypatch)
     results = []
     for spark_path in (False, True):
         out, dlq, ckpt = _tmp("path_out"), _tmp("path_dlq"), _tmp("path_ckpt")
         cfg = CdcPipelineConfig(
             sf_dir=sf_smoke, out_path=out, dlq_path=dlq, checkpoint=ckpt,
-            dim_filter="c_custkey % 2 = 0", corrupt_every=7,
+            dim_filter="c_custkey % 2 = 0", corrupt_every=7, entity=spec,
         )
         n_commits = len(commits)
         with _spark_path(spark) if spark_path else contextlib.nullcontext():
@@ -609,55 +588,44 @@ def test_cdc_spark_path_writes_the_driver_path_rows(spark, sf_smoke, monkeypatch
             finally:
                 q.stop()
         assert (len(commits) > n_commits) != spark_path
-        ok = spark.read.schema(ENRICHED_SCHEMA).parquet(out)
+        ok = spark.read.parquet(out).select(*(alias for alias, _ in spec.output_cols))
         bad = spark.read.schema(DLQ_SCHEMA).parquet(dlq)
         assert n_parsed == ok.count() + bad.count()
+        reasons = {r.reason for r in bad.select("reason").distinct().collect()}
+        assert reasons == {"parse_error", "enrichment_miss"}, (spark_path, reasons)
         results.append((_rows(ok), _rows(bad), n_parsed))
-    assert results[0] == results[1]
-    reasons = {r.reason for r in spark.read.schema(DLQ_SCHEMA).parquet(dlq).collect()}
-    assert reasons == {"parse_error", "enrichment_miss"} and results[0][0]
+    assert results[0] == results[1] and results[0][0]
 
 
 def _epoch_cases(spark, sf_smoke):
-    """(name, parsed batch, dimension, enrichment) for the events and the
+    """(name, parsed batch, dimension, entity spec) for the events and the
     orders pipelines, with both sinks filled, no DLQ rows, and no ok rows."""
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
-        synthesize_event_envelopes,
-    )
-    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.entity import (
+        EVENTS_ENTITY,
         ORDERS_ENTITY,
-        entity_envelope_schema,
-        parse_entity_envelopes,
-        synthesize_entity_envelopes,
-    )
-    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
-        EVENTS_ENRICHMENT,
-        Enrichment,
-        _parse_keep_original,
+        parse_envelopes,
+        synthesize_envelopes,
     )
 
     dim = spark.read.parquet(f"{sf_smoke}/customer.parquet")
-    events = _parse_keep_original(
-        synthesize_event_envelopes(
-            spark.read.parquet(f"{sf_smoke}/events.parquet").limit(60), corrupt_every=7
-        )
+    events = parse_envelopes(
+        synthesize_envelopes(
+            spark.read.parquet(f"{sf_smoke}/events.parquet").limit(60),
+            EVENTS_ENTITY,
+            corrupt_every=7,
+        ),
+        EVENTS_ENTITY,
     )
     clean = events.filter(~F.col("parse_failed")).join(
         dim, F.col("user_id") == F.col("c_custkey"), "left_semi"
     )
     src = spark.read.parquet(f"{sf_smoke}/orders.parquet").limit(60)
-    spec = ORDERS_ENTITY
-    orders = parse_entity_envelopes(
-        synthesize_entity_envelopes(src, spec), entity_envelope_schema(src, spec)
-    )
-    orders_enrichment = Enrichment(
-        spec.dim_join, spec.dim_match_col, spec.output_cols, payload="__original"
-    )
+    orders = parse_envelopes(synthesize_envelopes(src, ORDERS_ENTITY), ORDERS_ENTITY)
     return [
-        ("events", events, dim, EVENTS_ENRICHMENT),
-        ("events_no_dlq", clean, dim, EVENTS_ENRICHMENT),
-        ("events_no_ok", events, dim.filter("false"), EVENTS_ENRICHMENT),
-        ("orders", orders, dim.filter("c_custkey % 3 = 0"), orders_enrichment),
+        ("events", events, dim, EVENTS_ENTITY),
+        ("events_no_dlq", clean, dim, EVENTS_ENTITY),
+        ("events_no_ok", events, dim.filter("false"), EVENTS_ENTITY),
+        ("orders", orders, dim.filter("c_custkey % 3 = 0"), ORDERS_ENTITY),
     ]
 
 
@@ -695,11 +663,12 @@ def test_driver_written_sinks_read_like_spark_written(spark, sf_smoke, monkeypat
     and the rows are the same. An empty side is a schema-only part in
     append mode and no partition in idempotent mode, as Spark writes it."""
     from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        EpochState,
         _enrich_and_split,
     )
 
     commits = _count_commits(monkeypatch)
-    for name, batch, dim, enrichment in _epoch_cases(spark, sf_smoke):
+    for name, batch, dim, spec in _epoch_cases(spark, sf_smoke):
         for idempotent in (False, True):
             sinks = []
             for spark_path in (False, True):
@@ -707,8 +676,8 @@ def test_driver_written_sinks_read_like_spark_written(spark, sf_smoke, monkeypat
                 n_commits = len(commits)
                 with _spark_path(spark) if spark_path else contextlib.nullcontext():
                     _enrich_and_split(
-                        batch, dim, out, dlq, batch_id=3, idempotent=idempotent,
-                        enrichment=enrichment,
+                        batch, dim, out, dlq, EpochState(spark, spec), batch_id=3,
+                        idempotent=idempotent,
                     )
                 assert (len(commits) > n_commits) != spark_path, name
                 sinks.append((out, dlq))
@@ -743,17 +712,21 @@ def test_driver_commit_failure_publishes_nothing_and_retry_commits_once(
     each sink exactly once, with no staged file left behind."""
     from spring_cloud_kafka_streams_dbz_etl_spark.sources import sinks
     from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        EpochState,
         _enrich_and_split,
         resilient_batch,
     )
 
-    _, batch, dim, _ = _epoch_cases(spark, sf_smoke)[0]
+    _, batch, dim, spec = _epoch_cases(spark, sf_smoke)[0]
+    state = EpochState(spark, spec)
     n_rows = batch.count()
     real_publish = sinks._publish_parts
     for idempotent in (False, True):
         out, dlq = _tmp("fail_out"), _tmp("fail_dlq")
         if idempotent:  # an earlier attempt's partition, to be replaced
-            _enrich_and_split(batch.limit(5), dim, out, dlq, batch_id=9, idempotent=True)
+            _enrich_and_split(
+                batch.limit(5), dim, out, dlq, state, batch_id=9, idempotent=True
+            )
         before = [_parts(d) for d in (out, dlq)]
         seen = []
 
@@ -770,7 +743,7 @@ def test_driver_commit_failure_publishes_nothing_and_retry_commits_once(
         monkeypatch.setattr(sinks, "_publish_parts", failing_publish)
         resilient_batch(
             lambda b, bid: _enrich_and_split(
-                b, dim, out, dlq, batch_id=bid, idempotent=idempotent
+                b, dim, out, dlq, state, batch_id=bid, idempotent=idempotent
             )
         )(batch, 9)
         visible_at_failure, staged_at_failure = seen
@@ -790,17 +763,19 @@ def test_idempotent_driver_epoch_replay_rewrites_in_place(spark, sf_smoke, monke
     different content, or an empty side — while other epochs stay."""
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import read_idempotent_sink
     from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        EpochState,
         _enrich_and_split,
     )
 
     commits = _count_commits(monkeypatch)
     cases = _epoch_cases(spark, sf_smoke)
-    _, events, dim, _ = cases[0]
+    _, events, dim, spec = cases[0]
+    state = EpochState(spark, spec)
     _, clean, _, _ = cases[1]
     out, dlq = _tmp("replay_out"), _tmp("replay_dlq")
 
     def epoch(batch, bid):
-        _enrich_and_split(batch, dim, out, dlq, batch_id=bid, idempotent=True)
+        _enrich_and_split(batch, dim, out, dlq, state, batch_id=bid, idempotent=True)
         return [read_idempotent_sink(spark, d).count() for d in (out, dlq)]
 
     first = epoch(events, 5)
@@ -813,6 +788,35 @@ def test_idempotent_driver_epoch_replay_rewrites_in_place(spark, sf_smoke, monke
     n_clean = clean.count()
     assert epoch(clean, 5) == [n_clean + both[0] - first[0], both[1] - first[1]]
     assert sorted(os.listdir(dlq)) == ["_batch_id=6"] and len(commits) == 4
+
+
+@pytest.mark.parametrize("entity", ["events", "orders"])
+def test_building_a_cdc_pipeline_runs_no_spark_job(spark, sf_smoke, entity):
+    """build_cdc_pipeline runs no Spark job for any entity spec: the
+    source stream's and the envelope's schemas come from the spec, not
+    from a schema-inference read of the source table. Counted by a job
+    group on this thread; the group is also shown to catch a job."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
+        EVENTS_ENTITY,
+        ORDERS_ENTITY,
+    )
+
+    spec = {"events": EVENTS_ENTITY, "orders": ORDERS_ENTITY}[entity]
+    cfg = CdcPipelineConfig(
+        sf_dir=sf_smoke, out_path=_tmp("build_out"), dlq_path=_tmp("build_dlq"),
+        checkpoint=_tmp("build_ckpt"), entity=spec,
+    )
+    sc, group = spark.sparkContext, f"build-{entity}-{uuid.uuid4().hex[:8]}"
+    try:
+        sc.setJobGroup(group, group)
+        build_cdc_pipeline(spark, cfg)
+        built = len(sc.statusTracker().getJobIdsForGroup(group))
+        spark.read.parquet(f"{sf_smoke}/{spec.source_table}.parquet")  # infers: a job
+        inferred = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert built == 0 and inferred > 0, (built, inferred)
 
 
 def test_static_dimension_epoch_runs_two_jobs(spark, sf_smoke):
@@ -877,21 +881,21 @@ def _one_file_epochs(spark, sf_smoke, kind: str):
     import pyarrow.parquet as pq
 
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
-        synthesize_event_envelopes,
+        EVENTS_ENTITY,
+        parse_envelopes,
+        synthesize_envelopes,
     )
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import upsert_dimension
-    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
-        _parse_keep_original,
-    )
 
     src_dir = _tmp(kind)
     ev = pq.read_table(f"{sf_smoke}/events.parquet")
     batches = []
     for k in range(3):
         pq.write_table(ev.slice(25 * k, 25), f"{src_dir}/events{k}.parquet")
-        batches.append(_parse_keep_original(synthesize_event_envelopes(
-            spark.read.parquet(f"{src_dir}/events{k}.parquet")
-        )))
+        batches.append(parse_envelopes(
+            synthesize_envelopes(spark.read.parquet(f"{src_dir}/events{k}.parquet"), EVENTS_ENTITY),
+            EVENTS_ENTITY,
+        ))
     target = next(
         r["user_id"] for r in ev.slice(50, 25).to_pylist()
         if r["event_id"] % 97 and r["event_type"] != "error"
@@ -915,6 +919,7 @@ def test_epoch_state_second_epoch_sends_few_jvm_commands(spark, sf_smoke, monkey
 
     from py4j.clientserver import ClientServerConnection
 
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import EVENTS_ENTITY
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import dimension_reader
     from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
         EpochState,
@@ -924,7 +929,7 @@ def test_epoch_state_second_epoch_sends_few_jvm_commands(spark, sf_smoke, monkey
     batches, _, _, dim_path = _one_file_epochs(spark, sf_smoke, "py4j_sf")
     commits = _count_commits(monkeypatch)
     out, dlq = _tmp("py4j_out"), _tmp("py4j_dlq")
-    state = EpochState(spark)
+    state = EpochState(spark, EVENTS_ENTITY)
     read_dim = dimension_reader(spark, dim_path)
     counting, sent = [False], [0]
     real_send = ClientServerConnection.send_command
@@ -939,7 +944,7 @@ def test_epoch_state_second_epoch_sends_few_jvm_commands(spark, sf_smoke, monkey
     try:
         for k, batch in enumerate(batches[:2]):
             counting[0] = k == 1
-            _enrich_and_split(batch, read_dim(), out, dlq, batch_id=k, state=state)
+            _enrich_and_split(batch, read_dim(), out, dlq, state, batch_id=k)
     finally:
         counting[0] = False
     assert len(commits) == 2  # both epochs took the driver path
@@ -954,6 +959,7 @@ def test_epoch_state_rederives_sink_schemas_after_dimension_upsert(
     first epoch, reused in the second, and derived again in the third,
     whose dimension is the new version's DataFrame, equal to what a fresh
     state derives; the upserted customer is enriched in the third epoch."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import EVENTS_ENTITY
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import (
         dimension_reader,
         upsert_dimension,
@@ -965,7 +971,7 @@ def test_epoch_state_rederives_sink_schemas_after_dimension_upsert(
 
     batches, target, cust, dim_path = _one_file_epochs(spark, sf_smoke, "rederive_sf")
     out, dlq = _tmp("rederive_out"), _tmp("rederive_dlq")
-    state = EpochState(spark)
+    state = EpochState(spark, EVENTS_ENTITY)
     derived = []
     real_split = state.split
     monkeypatch.setattr(state, "split", lambda t: derived.append(t) or real_split(t))
@@ -977,10 +983,10 @@ def test_epoch_state_rederives_sink_schemas_after_dimension_upsert(
                 cust.filter(F.col("c_custkey") == target), dim_path, keys=["c_custkey"]
             )
         n = len(derived)
-        _enrich_and_split(batch, read_dim(), out, dlq, batch_id=k, state=state)
+        _enrich_and_split(batch, read_dim(), out, dlq, state, batch_id=k)
         per_epoch.append(len(derived) - n)
     assert per_epoch == [1, 0, 1], per_epoch
-    fresh = EpochState(spark)
+    fresh = EpochState(spark, EVENTS_ENTITY)
     tagged = batches[2].join(read_dim(), fresh.join, "left").withColumn("reason", fresh.reason)
     assert state.schemas(tagged, read_dim()) == fresh.schemas(tagged, read_dim())
     ok = spark.read.parquet(out).filter(F.col("user_id") == target).collect()

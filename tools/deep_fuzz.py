@@ -27,8 +27,10 @@ Covered (operator → invariant):
 - pq_train           single-pass all-subspace Lloyd == per-subspace
                         numpy model, random (subspaces, k, dim)
 - epoch sinks        CDC epoch driver commit == Spark-path sink writes
-                        (rows and read-back schema) on dirty batches:
-                        NULL keys, garbled payloads, tombstones, duplicate
+                        (rows and read-back schema), events and orders
+                        specs, on dirty batches from the one synthesizer
+                        and parser: NULL keys, garbled payloads,
+                        tombstones, duplicate
                         dimension keys, empty and all-DLQ batches; and a
                         pipeline's reused EpochState over 4 epochs with
                         dimension upsert/delete between them == fresh
@@ -600,50 +602,78 @@ def fuzz_shard_assign(spark) -> None:
     print(f"shard assign twins: {cases} cases OK")
 
 
-def _read_sink(spark, path: str, schema, idempotent: bool):
-    """(read-back schema, sorted row reprs) of a sink dir; (None, []) when
-    it holds no part (an empty side in idempotent mode writes none)."""
+def _read_sink(spark, path: str, names: list, idempotent: bool):
+    """(read-back schema, sorted row reprs of columns ``names``) of a sink
+    dir; (None, []) when it holds no part (an empty side in idempotent
+    mode writes none)."""
     import glob
 
     if not glob.glob(f"{path}/**/part-*.parquet", recursive=True):
         return None, []
     df = spark.read.parquet(path)
-    rows = (df.drop("_batch_id") if idempotent else df).select(*schema.fieldNames())
+    rows = (df.drop("_batch_id") if idempotent else df).select(*names)
     return df.schema, sorted(repr(tuple(r)) for r in rows.collect())
 
 
-_GARBLED = ["CORRUPT<<{}", "{", "", "null", "[1, 2]", '{"op": null}', '{"after": 3}']
-_DIM_SCHEMA = "c_custkey long, c_name string, c_mktsegment string"
+# hand-written payloads the synthesizer never produces: garbled ones beside
+# its own CORRUPT<< garbling, and an id=0 sentinel (key 0 is a tombstone
+# under both specs' rules, so no synthesized record carries after.id=0)
+_GARBLED = ["{", "", "null", "[1, 2]", '{"op": null}', '{"after": 3}']
+_SENTINEL = '{"after": {"id": 0}, "op": "u"}'
+_DIM_SCHEMA = "c_custkey long, c_name string, c_mktsegment string, c_acctbal double"
+# string after-field values: both specs' delete and insert markers among them
+_STRINGS = ["view", "click", "signup", "error", "O", "F", "P", None]
 
 
-def _dirty_raw(kind: str) -> list:
-    """One micro-batch of (kafka_key, payload) records: NULL user ids and
-    payload fields, garbled payloads, tombstones, deletes and id=0
-    sentinels. ``empty``: only records the parse drops, so the parsed
+def _dirty_source(spec, kind: str) -> tuple:
+    """One micro-batch's input for the entity ``spec``: (source rows,
+    hand-written (kafka_key, payload) records, corrupt_every). Source rows
+    carry NULL keys and after-fields, tombstone and id=0 keys, and both
+    specs' delete markers; hand-written records are garbled payloads and
+    id=0 sentinels. ``empty``: only records the parse drops, so the parsed
     epoch has no row."""
-    import json
+    from pyspark.sql import types as T
 
-    raw = []
+    def field(typ):
+        if isinstance(typ, T.LongType):
+            return None if rng.random() < 0.15 else rng.randint(0, 40)
+        if isinstance(typ, T.DoubleType):
+            return None if rng.random() < 0.2 else rng.uniform(-5, 5)
+        return rng.choice(_STRINGS)
+
+    rows, hand = [], []
     for j in range(rng.randint(1, 80)):
-        roll = rng.random() * (0.1 if kind == "empty" else 1)
-        if roll < 0.05:
-            value = None  # tombstone
-        elif kind == "empty":
-            value = json.dumps(rng.choice([
-                {"after": None, "op": "d"}, {"after": {"id": 0}, "op": "u"},
-            ]))
-        elif roll < 0.25:
-            value = rng.choice(_GARBLED)
+        roll = rng.random()
+        if roll < 0.03:
+            hand.append((j, _SENTINEL))
+            continue
+        if kind == "empty" or roll < 0.08:
+            key = rng.choice([None, 0, 97 * rng.randint(1, 9)])
+        elif roll < 0.23:
+            hand.append((None if rng.random() < 0.05 else j, rng.choice(_GARBLED)))
+            continue
         else:
-            after = None if rng.random() < 0.1 else {  # None: a delete
-                "id": 0 if rng.random() < 0.05 else j + 1,
-                "user_id": None if rng.random() < 0.15 else rng.randint(0, 40),
-                "event_type": rng.choice(["view", "click", None]),
-                "value": None if rng.random() < 0.2 else rng.uniform(-5, 5),
-            }
-            value = json.dumps({"after": after, "op": "d" if after is None else "u"})
-        raw.append((None if rng.random() < 0.05 else j, value))
-    return raw
+            key = j + 1
+        rows.append((key, *(field(typ) for _, _, typ in spec.after_cols)))
+    return rows, hand, None if kind == "empty" else rng.choice([None, 3, 7])
+
+
+def _parsed_batch(spark, spec, source: tuple):
+    """``source`` (from :func:`_dirty_source`) through the one synthesizer
+    and parser, as the stream parses an epoch. Local relations (the
+    pandas path) carry a size estimate, as a stream's micro-batch does; a
+    parallelized list reports none."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.catalog import local_rows
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
+        parse_envelopes,
+        synthesize_envelopes,
+    )
+
+    rows, hand, corrupt_every = source
+    raw = synthesize_envelopes(local_rows(spark, rows, spec.source_schema()), spec, corrupt_every)
+    if hand:
+        raw = raw.unionByName(local_rows(spark, hand, "kafka_key long, value string"))
+    return parse_envelopes(raw, spec)
 
 
 def _dirty_dim_rows(kind: str) -> list:
@@ -653,8 +683,9 @@ def _dirty_dim_rows(kind: str) -> list:
     if kind != "all_dlq":
         for key in rng.sample(range(0, 41), rng.randint(0, 41)):
             for _ in range(2 if rng.random() < 0.2 else 1):  # duplicate keys
-                rows.append((key, rng.choice([f"n{key}", None]), rng.choice(["A", "B", None])))
-    return rows + [(None, "null-key", "A")] * rng.randint(0, 2)
+                rows.append((key, rng.choice([f"n{key}", None]), rng.choice(["A", "B", None]),
+                             rng.choice([None, key / 3])))
+    return rows + [(None, "null-key", "A", 1.0)] * rng.randint(0, 2)
 
 
 def _epoch_output(spark, files: list):
@@ -677,19 +708,86 @@ def fuzz_epoch_sinks(spark) -> None:
     """The CDC epoch body's two paths — the one-collect driver commit an
     epoch takes under catalog.driver_sized_bytes, and the Spark path
     (persist + two sink writes) it takes above — write the same ok and
-    DLQ rows with the same read-back schema, on dirty micro-batches: NULL
-    user ids and payload fields, garbled payloads, tombstones, deletes,
-    id=0 sentinels, duplicate and NULL dimension keys, and empty and
-    all-DLQ batches, in append and idempotent (replayed) mode.
+    DLQ rows with the same read-back schema, for the events and the
+    orders entity specs, on dirty micro-batches drawn from the one
+    synthesizer and parser: NULL keys and after-fields, garbled payloads
+    (the synthesizer's corrupt_every and hand-garbled ones), tombstones,
+    deletes, id=0 sentinels, duplicate and NULL dimension keys, and empty
+    and all-DLQ batches, in append and idempotent (replayed) mode.
 
-    Then the pipelines' reuse: four epochs per pipeline through ONE
-    EpochState and one dimension reader over a versioned dimension, with
-    an upsert committing a new version after the first epoch and a
-    delete after the second, write per epoch exactly the rows and the
-    footer and read-back schemas of a fresh single-epoch run (new state,
-    new reader, new sinks) over the same batch and dimension version —
-    on the driver side of the gate, the Spark side, and both in turn, in
-    append and idempotent (replayed) mode."""
+    Then the pipelines' reuse, for both specs: four epochs per pipeline
+    through ONE EpochState and one dimension reader over a versioned
+    dimension, with an upsert committing a new version after the first
+    epoch and a delete after the second, write per epoch exactly the rows
+    and the footer and read-back schemas of a fresh single-epoch run (new
+    state, new reader, new sinks) over the same batch and dimension
+    version — on the driver side of the gate, the Spark side, and both in
+    turn, in append and idempotent (replayed) mode."""
+    import tempfile
+
+    from spring_cloud_kafka_streams_dbz_etl_spark import catalog
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources.cdc import (
+        EVENTS_ENTITY,
+        ORDERS_ENTITY,
+    )
+    from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
+        DLQ_SCHEMA,
+        EpochState,
+        _enrich_and_split,
+    )
+
+    specs = (EVENTS_ENTITY, ORDERS_ENTITY)
+    cases = max(3, N // 6)
+    diffs = compared = 0
+    real_gate = catalog.driver_sized_bytes
+    try:
+        for i in range(cases):
+            spec, kind = specs[i % 2], ("empty", "all_dlq", "mixed")[i % 3]
+            source, dim_rows = _dirty_source(spec, kind), _dirty_dim_rows(kind)
+            batch = _parsed_batch(spark, spec, source)
+            dim = catalog.local_rows(spark, dim_rows, _DIM_SCHEMA)
+            assert real_gate(batch) is not None, (SEED, i)  # the driver side is reachable
+            idempotent = rng.random() < 0.5
+            results = []
+            for driver in (True, False):
+                catalog.driver_sized_bytes = real_gate if driver else (lambda df: None)
+                with tempfile.TemporaryDirectory() as d:
+                    out, dlq = f"{d}/out", f"{d}/dlq"
+                    state = EpochState(spark, spec)
+                    for _ in range(2 if idempotent else 1):  # idempotent: a replay
+                        _enrich_and_split(batch, dim, out, dlq, state, batch_id=i,
+                                          idempotent=idempotent)
+                    results.append([
+                        _read_sink(spark, out, [a for a, _ in spec.output_cols], idempotent),
+                        _read_sink(spark, dlq, DLQ_SCHEMA.fieldNames(), idempotent),
+                    ])
+            for (got_schema, got), (want_schema, want) in zip(*results):
+                assert got_schema == want_schema, (SEED, i, got_schema, want_schema)
+                diffs += len(set(got) ^ set(want)) + abs(len(got) - len(want))
+                compared += len(want)
+            assert diffs == 0, (SEED, i, spec.source_table, kind, idempotent, source, dim_rows)
+
+        pipelines = 0
+        for spec in specs:
+            for idempotent in (False, True):
+                for side in ("driver", "spark", "both"):
+                    compared += _reused_pipeline(spark, spec, idempotent, side, real_gate)
+                    pipelines += 1
+    finally:
+        catalog.driver_sized_bytes = real_gate
+    print(
+        f"epoch sinks (driver vs Spark path): {cases} cases OK; reused epoch state vs "
+        f"fresh epochs: {pipelines} pipelines, {4 * pipelines} epochs OK; "
+        f"{compared} rows compared, {diffs} row diffs"
+    )
+
+
+def _reused_pipeline(spark, spec, idempotent: bool, side: str, real_gate) -> int:
+    """One pipeline of fuzz_epoch_sinks's reuse phase: four epochs of the
+    entity ``spec`` through one EpochState and one dimension reader, each
+    epoch's parts checked against a fresh single-epoch run; ``side`` picks
+    the gate side (driver, spark, or both in turn). Returns the rows
+    compared."""
     import glob
     import tempfile
 
@@ -701,112 +799,62 @@ def fuzz_epoch_sinks(spark) -> None:
         upsert_dimension,
     )
     from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
-        DLQ_SCHEMA,
-        ENRICHED_SCHEMA,
         EpochState,
         _enrich_and_split,
-        _parse_keep_original,
     )
 
-    def parsed(raw):
-        # local relations (the pandas path) carry a size estimate, as a
-        # stream's micro-batch does; a parallelized list reports none
-        return _parse_keep_original(
-            catalog.local_rows(spark, raw, "kafka_key long, value string")
+    compared = 0
+    with tempfile.TemporaryDirectory() as d:
+        dim_path, out, dlq = f"{d}/customer", f"{d}/out", f"{d}/dlq"
+        _commit_version(
+            spark, catalog.local_rows(spark, _dirty_dim_rows("mixed"), _DIM_SCHEMA), dim_path
         )
-
-    cases = max(3, N // 6)
-    diffs = compared = 0
-    real_gate = catalog.driver_sized_bytes
-    try:
-        for i in range(cases):
-            kind = ("empty", "all_dlq", "mixed")[i % 3]
-            raw, dim_rows = _dirty_raw(kind), _dirty_dim_rows(kind)
-            batch = parsed(raw)
-            dim = catalog.local_rows(spark, dim_rows, _DIM_SCHEMA)
-            assert real_gate(batch) is not None, (SEED, i)  # the driver side is reachable
-            idempotent = rng.random() < 0.5
-            results = []
-            for driver in (True, False):
-                catalog.driver_sized_bytes = real_gate if driver else (lambda df: None)
-                with tempfile.TemporaryDirectory() as d:
-                    out, dlq = f"{d}/out", f"{d}/dlq"
-                    for _ in range(2 if idempotent else 1):  # idempotent: a replay
-                        _enrich_and_split(batch, dim, out, dlq, batch_id=i,
-                                          idempotent=idempotent)
-                    results.append([
-                        _read_sink(spark, out, ENRICHED_SCHEMA, idempotent),
-                        _read_sink(spark, dlq, DLQ_SCHEMA, idempotent),
-                    ])
-            for (got_schema, got), (want_schema, want) in zip(*results):
-                assert got_schema == want_schema, (SEED, i, got_schema, want_schema)
-                diffs += len(set(got) ^ set(want)) + abs(len(got) - len(want))
-                compared += len(want)
-            assert diffs == 0, (SEED, i, kind, idempotent, raw, dim_rows)
-
-        pipelines = epochs = 0
-        for idempotent in (False, True):
-            for side in ("driver", "spark", "both"):
-                with tempfile.TemporaryDirectory() as d:
-                    dim_path, out, dlq = f"{d}/customer", f"{d}/out", f"{d}/dlq"
-                    _commit_version(
-                        spark,
-                        catalog.local_rows(spark, _dirty_dim_rows("mixed"), _DIM_SCHEMA),
-                        dim_path,
+        state, read_dim = EpochState(spark, spec), dimension_reader(spark, dim_path)
+        for k in range(4):
+            if k == 1:  # replace some names, add keys (NULL one too)
+                keys = rng.sample(range(0, 50), rng.randint(1, 20))
+                rows = [(key, f"u{key}", "U", 2.0) for key in keys]
+                upsert_dimension(
+                    catalog.local_rows(spark, rows + [(None, "u", "U", None)], _DIM_SCHEMA),
+                    dim_path, keys=["c_custkey"],
+                )
+            if k == 2:
+                keys = [(key,) for key in rng.sample(range(0, 50), 15)]
+                delete_from_dimension(
+                    spark, dim_path, ["c_custkey"],
+                    catalog.local_rows(spark, keys, "c_custkey long"),
+                )
+            source = _dirty_source(spec, ("mixed", "all_dlq", "empty", "mixed")[k])
+            driver = side == "driver" or (side == "both" and k % 2 == 0)
+            catalog.driver_sized_bytes = real_gate if driver else (lambda df: None)
+            before = {p: set(glob.glob(f"{p}/**/part-*.parquet", recursive=True))
+                      for p in (out, dlq)}
+            for _ in range(2 if idempotent else 1):  # idempotent: a replay
+                _enrich_and_split(_parsed_batch(spark, spec, source), read_dim(), out, dlq,
+                                  state, batch_id=k, idempotent=idempotent)
+            diffs = 0
+            with tempfile.TemporaryDirectory() as f:
+                _enrich_and_split(
+                    _parsed_batch(spark, spec, source), dimension_reader(spark, dim_path)(),
+                    f"{f}/out", f"{f}/dlq", EpochState(spark, spec), batch_id=k,
+                    idempotent=idempotent,
+                )
+                for got_dir, want_dir in ((out, f"{f}/out"), (dlq, f"{f}/dlq")):
+                    part = f"/_batch_id={k}/" if idempotent else "/"
+                    got = _epoch_output(spark, sorted(
+                        p for p in glob.glob(f"{got_dir}/**/part-*.parquet", recursive=True)
+                        if p not in before[got_dir] and part in p
+                    ))
+                    want = _epoch_output(spark, sorted(glob.glob(
+                        f"{want_dir}/**/part-*.parquet", recursive=True
+                    )))
+                    assert got[:2] == want[:2], (
+                        SEED, spec.source_table, idempotent, side, k, got, want
                     )
-                    state, read_dim = EpochState(spark), dimension_reader(spark, dim_path)
-                    for k in range(4):
-                        if k == 1:  # replace some names, add keys (NULL one too)
-                            keys = rng.sample(range(0, 50), rng.randint(1, 20))
-                            rows = [(key, f"u{key}", "U") for key in keys]
-                            upsert_dimension(
-                                catalog.local_rows(spark, rows + [(None, "u", "U")], _DIM_SCHEMA),
-                                dim_path, keys=["c_custkey"],
-                            )
-                        if k == 2:
-                            keys = [(key,) for key in rng.sample(range(0, 50), 15)]
-                            delete_from_dimension(
-                                spark, dim_path, ["c_custkey"],
-                                catalog.local_rows(spark, keys, "c_custkey long"),
-                            )
-                        kind = ("mixed", "all_dlq", "empty", "mixed")[k]
-                        raw = _dirty_raw(kind)
-                        driver = side == "driver" or (side == "both" and k % 2 == 0)
-                        catalog.driver_sized_bytes = real_gate if driver else (lambda df: None)
-                        before = {p: set(glob.glob(f"{p}/**/part-*.parquet", recursive=True))
-                                  for p in (out, dlq)}
-                        for _ in range(2 if idempotent else 1):  # idempotent: a replay
-                            _enrich_and_split(parsed(raw), read_dim(), out, dlq, batch_id=k,
-                                              idempotent=idempotent, state=state)
-                        with tempfile.TemporaryDirectory() as f:
-                            _enrich_and_split(
-                                parsed(raw), dimension_reader(spark, dim_path)(),
-                                f"{f}/out", f"{f}/dlq", batch_id=k, idempotent=idempotent,
-                            )
-                            for got_dir, want_dir in ((out, f"{f}/out"), (dlq, f"{f}/dlq")):
-                                part = f"/_batch_id={k}/" if idempotent else "/"
-                                got = _epoch_output(spark, sorted(
-                                    p for p in glob.glob(f"{got_dir}/**/part-*.parquet",
-                                                         recursive=True)
-                                    if p not in before[got_dir] and part in p
-                                ))
-                                want = _epoch_output(spark, sorted(glob.glob(
-                                    f"{want_dir}/**/part-*.parquet", recursive=True
-                                )))
-                                assert got[:2] == want[:2], (SEED, idempotent, side, k, got, want)
-                                diffs += len(set(got[2]) ^ set(want[2]))
-                                diffs += abs(len(got[2]) - len(want[2]))
-                                compared += len(want[2])
-                        assert diffs == 0, (SEED, idempotent, side, k, raw)
-                        epochs += 1
-                pipelines += 1
-    finally:
-        catalog.driver_sized_bytes = real_gate
-    print(
-        f"epoch sinks (driver vs Spark path): {cases} cases OK; reused epoch state vs "
-        f"fresh epochs: {pipelines} pipelines, {epochs} epochs OK; "
-        f"{compared} rows compared, {diffs} row diffs"
-    )
+                    diffs += len(set(got[2]) ^ set(want[2])) + abs(len(got[2]) - len(want[2]))
+                    compared += len(want[2])
+            assert diffs == 0, (SEED, spec.source_table, idempotent, side, k, source)
+    return compared
 
 
 def fuzz_cc(spark) -> None:
