@@ -959,9 +959,14 @@ def pair_dots_arrow(
       and NULL keys never form a cell.
 
     Scale: identical shuffle to the groupBy form (each vector moves once
-    to its cell); the accumulator is |class|^2 doubles per cell, bounded
-    by the blocking scheme, chunked over the row axis past
-    ``block_rows``. Row-for-row parity with the join-HOF form is pinned
+    to its cell). Memory is NOT chunked: ``by_cell`` buffers the whole
+    Arrow partition (every cell the repartition sends it, vectors
+    included) before the first cell is scored, and each cell of m rows
+    allocates the dense m×m ``dp`` (doubles) and ``valid`` (bools) plus
+    its m(m-1)/2 emitted pair rows (twice that when ``directed``); only
+    the ``acc`` temporary is cut to ``block_rows`` × m. So the peak per
+    task is the partition's vectors plus O(m²) for its largest cell,
+    which the blocking scheme alone bounds. Row-for-row parity with the join-HOF form is pinned
     in tests/test_plans.py and fuzz-swept (incl. NaN/zero/ragged rows and
     NULL keys) in tools/deep_fuzz.py and tools/measure_pairdots.py.
     """

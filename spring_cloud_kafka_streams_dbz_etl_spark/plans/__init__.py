@@ -6,7 +6,6 @@ hope. Used by tests/test_plans.py to pin:
 - parquet filter pushdown (PushedFilters non-empty)
 - column pruning (ReadSchema only carries what's selected)
 - broadcast joins where a dimension is joined
-- whole-stage codegen coverage of the hot path
 """
 
 from .inspect import (
@@ -14,7 +13,6 @@ from .inspect import (
     has_broadcast_join,
     pushed_filters,
     read_schema_columns,
-    wholestage_codegen_ids,
 )
 
 __all__ = [
@@ -22,5 +20,4 @@ __all__ = [
     "has_broadcast_join",
     "pushed_filters",
     "read_schema_columns",
-    "wholestage_codegen_ids",
 ]

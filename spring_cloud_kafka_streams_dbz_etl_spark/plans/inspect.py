@@ -41,8 +41,3 @@ def read_schema_columns(df: DataFrame) -> list[set[str]]:
 
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df) or "BroadcastNestedLoopJoin" in explain_str(df)
-
-
-def wholestage_codegen_ids(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans (wider spans = fewer, bigger)."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", explain_str(df))))

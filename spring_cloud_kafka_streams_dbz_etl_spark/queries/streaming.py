@@ -620,8 +620,8 @@ WHERE {_VALID}
 )
 def s_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDC topology with the EXACTLY-ONCE sink upgrade: every epoch
-    writes through batch-id-keyed dynamic partition overwrite
-    (sources/sinks.py::idempotent_batch_write), so checkpoint-recovery
+    commits batch-id-keyed partitions, staged and then swapped in
+    (sources/sinks.py::commit_parts), so checkpoint-recovery
     replays rewrite their own partition in place instead of appending
     duplicates — same logical output as s_cdc_pipeline, different (and
     stronger) delivery contract than the reference's at_least_once

@@ -1,14 +1,13 @@
-"""Batch sinks: partitioned / bucketed parquet writers.
+"""Sinks: the staged commit every stream epoch publishes its sinks
+through, and the versioned dimension store.
 
-Scale rationale:
-- ``write_partitioned``: hive-style directory partitioning on low-
-  cardinality columns -> downstream queries get partition PRUNING (the
-  scan skips directories). The 100 TB layout for anything filtered by
-  date/type/cell.
-- ``write_bucketed``: pre-shuffle by join/agg key into N buckets at write
-  time -> later joins/aggs on that key skip their shuffle entirely
-  (bucketed scan co-location). Worth it for dimension-fact layouts that
-  join on the same key query after query.
+- :func:`commit_parts`: an epoch's parts, one per sink, are all staged
+  under hidden names first and only then renamed into place, so a
+  failed attempt publishes nothing. With a batch id each sink's part is
+  its ``_batch_id=<N>`` partition, which a replayed epoch replaces.
+- Dimension CRUD (:func:`upsert_dimension`, :func:`delete_from_dimension`):
+  immutable version directories committed by one rename, read through
+  :func:`load_dimension` / :func:`dimension_reader`.
 """
 
 from __future__ import annotations
@@ -17,77 +16,6 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: Sequence[str], mode: str = "overwrite"
-) -> None:
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table (metastore-backed; local spark-warehouse in
-    tests). Joins between two tables bucketed on the same key with the
-    same bucket count run shuffle-free."""
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table_name)
-
-
-def idempotent_batch_write(df: DataFrame, batch_id: int, path: str) -> None:
-    """Exactly-once foreachBatch sink: the epoch's rows land in a
-    ``_batch_id=<N>`` partition via DYNAMIC partition overwrite, so a
-    replayed epoch (checkpoint recovery re-runs the last uncommitted
-    batch) REPLACES its own partition instead of appending duplicates.
-    This is the upgrade path from the reference's at_least_once default
-    (CLAUDE.md:157-159) to effective exactly-once on an object-store sink:
-    idempotent writes + the checkpoint WAL's deterministic batch ids.
-
-    Dynamic overwrite only rewrites partitions PRESENT in the new data, so
-    a replay that produces zero rows (possible when the replayed transform
-    is non-deterministic — e.g. the enrichment dimension changed between
-    attempts) would otherwise strand the first attempt's rows. The epoch's
-    partition directory is therefore deleted up front (Hadoop FS API, so
-    the same code path works on HDFS/S3A/local), making the guarantee hold
-    for non-deterministic replays too.
-
-    Scale: the pre-delete + overwrite touch only the one partition being
-    (re)written — other epochs' directories are never listed or rewritten.
-
-    Read-visibility window (ADVICE r02): the pre-delete is NOT atomic with
-    the rewrite — a concurrent reader between delete and write-commit sees
-    the epoch's partition missing, and a crash in that window leaves it
-    empty until checkpoint replay re-runs the batch (which the WAL
-    guarantees, so the exactly-once CONTENT contract still holds). Readers
-    needing the old rows until the new ones land should read a snapshot
-    isolation layer (e.g. a table format) or tolerate the gap.
-
-    This is the CDC epoch's Spark path (epochs above the driver size
-    gate). Epochs under it write the same ``_batch_id=<N>`` layout through
-    :func:`commit_parts`, the temp-prefix + rename commit: the new
-    partition is staged in full first, so the window shrinks to one
-    delete and one rename.
-    """
-    spark = df.sparkSession
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    part_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_batch_id={batch_id}")
-    part_dir.getFileSystem(hconf).delete(part_dir, True)
-    (
-        df.withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(path)
-    )
 
 
 def read_idempotent_sink(spark: SparkSession, path: str) -> DataFrame:
@@ -144,27 +72,56 @@ def _parquet_part(spark_version: str, table, schema) -> bytes:
     return sink.getvalue().to_pybytes()
 
 
-def _stage_parts(handles: SinkHandles, parts, batch_id: int | None, staged: list) -> None:
-    """Write each ``(arrow table, Spark schema, sink path)`` of ``parts``
-    as ONE parquet part under a ``.``-prefixed name that Spark, Hadoop and
-    the file stream source never list, through the Hadoop ``FileSystem``
-    (local, HDFS and S3A alike), appending ``(fs, staged, final)`` paths
-    to ``staged`` as it goes; nothing is visible yet.
-
-    ``batch_id=None`` stages a file beside the sink's parts. Otherwise the
-    part goes into a staged ``_batch_id=<N>`` directory, the layout of
-    :func:`idempotent_batch_write`; an empty side then stages nothing
-    (``staged`` None), as a dynamic partition overwrite of no rows writes
-    no partition."""
+def _stage_frame(
+    handles: SinkHandles, fs, df: DataFrame, path: str, batch_id: int | None, staged: list
+) -> None:
+    """Spark writes ``df`` into a ``.``-prefixed scratch directory of the
+    sink at ``path``, staged as ``(fs, scratch, None)``, and each of its
+    parts is staged for the publish: with ``batch_id`` the scratch's
+    ``_batch_id=<N>`` partition (``stage`` None when ``df`` is empty, as
+    Spark writes no partition for no rows), else each part file."""
     import uuid
 
-    for table, schema, path in parts:
+    scratch = f"{path}/._stage-{uuid.uuid4().hex[:12]}"
+    staged.append((fs, scratch, None))
+    if batch_id is None:
+        df.write.parquet(scratch)
+        for st in fs.listStatus(handles.path(scratch)):
+            name = st.getPath().getName()
+            if name.startswith("part-"):
+                staged.append((fs, f"{scratch}/{name}", f"{path}/{name}"))
+        return
+    df.withColumn("_batch_id", F.lit(batch_id)).write.partitionBy("_batch_id").parquet(scratch)
+    part = f"{scratch}/_batch_id={batch_id}"
+    if not fs.exists(handles.path(part)):
+        part = None
+    staged.append((fs, part, f"{path}/_batch_id={batch_id}"))
+
+
+def _stage_parts(handles: SinkHandles, parts, batch_id: int | None, staged: list) -> None:
+    """Stage each ``(data, Spark schema, sink path)`` of ``parts`` under a
+    ``.``-prefixed name that Spark, Hadoop and the file stream source
+    never list, appending ``(fs, stage, final)`` paths to ``staged`` as
+    it goes; nothing is visible yet. An Arrow table is written here as
+    ONE parquet part laid out as ``schema``, through the Hadoop
+    ``FileSystem`` (local, HDFS and S3A alike); a DataFrame is written by
+    Spark (:func:`_stage_frame`, which ignores ``schema``).
+
+    ``batch_id=None`` stages a file beside the sink's parts. Otherwise the
+    part goes into a staged ``_batch_id=<N>`` directory; an empty side
+    then stages nothing (``stage`` None)."""
+    import uuid
+
+    for data, schema, path in parts:
         fs = handles.fs(path)
+        if isinstance(data, DataFrame):
+            _stage_frame(handles, fs, data, path, batch_id, staged)
+            continue
         name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
         if batch_id is None:
             stage = file = f"{path}/.{name}.staging"
             final = f"{path}/{name}"
-        elif table.num_rows:
+        elif data.num_rows:
             stage = f"{path}/._batch_id={batch_id}.{uuid.uuid4().hex[:12]}"
             file, final = f"{stage}/{name}", f"{path}/_batch_id={batch_id}"
         else:
@@ -173,39 +130,45 @@ def _stage_parts(handles: SinkHandles, parts, batch_id: int | None, staged: list
         staged.append((fs, stage, final))
         out = fs.create(handles.path(file), False)
         try:
-            out.write(_parquet_part(handles.version, table, schema))
+            out.write(_parquet_part(handles.version, data, schema))
         finally:
             out.close()
 
 
 def _publish_parts(handles: SinkHandles, staged: list, batch_id: int | None) -> None:
-    """Make staged parts visible, one rename each. With ``batch_id`` each
-    sink's ``_batch_id=<N>`` directory is deleted first, so a replayed
-    epoch replaces its partition — even with zero rows — instead of
-    adding to it."""
+    """Make staged parts visible, one rename each, then drop the emptied
+    scratch directories. With ``batch_id`` each sink's ``_batch_id=<N>``
+    directory is deleted first, so a replayed epoch replaces its
+    partition — even with zero rows — instead of adding to it."""
     path = handles.path
     for fs, stage, final in staged:
+        if final is None:
+            continue
         if batch_id is not None:
             fs.delete(path(final), True)
         if stage is not None and not fs.rename(path(stage), path(final)):
             raise OSError(f"could not publish {stage} as {final}")
+    for fs, stage, final in staged:
+        if final is None:
+            fs.delete(path(stage), True)
 
 
 def commit_parts(parts, batch_id: int | None, handles: SinkHandles) -> None:
-    """Write each ``(arrow table, Spark schema, sink path)`` of ``parts``
-    as one parquet part of its sink, written on the driver: every part is
-    staged first, and only then are they all published. A failure before
-    the publish leaves no part visible and deletes the staged ones, so a
-    retry of the epoch commits exactly once. This is the temp-prefix +
-    rename commit :func:`idempotent_batch_write` names as its upgrade:
-    with ``batch_id`` the parts land in ``_batch_id=<N>`` partitions, and
-    the old partition stays readable until its replacement is fully
-    written, then is swapped out by a delete and a rename.
+    """Write each ``(data, Spark schema, sink path)`` of ``parts`` as the
+    epoch's part of its sink: every part is staged first, and only then
+    are they all published. ``data`` is an Arrow table written on the
+    driver as one parquet part laid out as ``schema``, or a DataFrame
+    that Spark writes. A failure before the publish leaves no part
+    visible and deletes the staged ones, so a retry of the epoch commits
+    exactly once. With ``batch_id`` the parts land in ``_batch_id=<N>``
+    partitions, and the old partition stays readable until its
+    replacement is fully written, then is swapped out by a delete and a
+    rename.
 
     ``handles`` are built once per pipeline and passed to each epoch's
-    commit. Per commit, what crosses to the JVM is only the work itself:
-    per part one ``Path`` and one create, write and close, then the
-    publish's renames (and deletes in idempotent mode)."""
+    commit. Per commit, what crosses to the JVM for an Arrow part is only
+    the work itself: one ``Path`` and one create, write and close, then
+    the publish's renames (and deletes in idempotent mode)."""
     staged: list = []
     try:
         _stage_parts(handles, parts, batch_id, staged)
@@ -468,7 +431,7 @@ def upsert_dimension(df: DataFrame, path: str, keys: Sequence[str]) -> dict:
     whose writes are visible to the stream's next lookup). Latest-wins
     merge: incoming rows REPLACE existing rows sharing ``keys``; new keys
     append. The streaming pipeline re-reads the dimension per micro-batch
-    (through :func:`load_dimension`), so the batch after an upsert enriches
+    (through :func:`dimension_reader`), so the batch after an upsert enriches
     against the new rows — the same visibility the reference gets from
     per-record REST lookups, without its per-record round-trips.
 

@@ -23,9 +23,11 @@ Per micro-batch:
 3. CROSS-batch: batch bands join the signature STORE's bands -> slot
    match vs stored signatures -> any hit rejects the new doc (the
    content is already represented in the sink);
-4. survivors append to the sink; ALL batch signatures/bands append to
-   the store (rejected dups too — future shards must dedup against
-   everything seen, not just survivors).
+4. survivors go to the sink and ALL batch signatures/bands to the
+   store (rejected dups too — future shards must dedup against
+   everything seen, not just survivors), as the epoch's ``_batch_id=<N>``
+   partitions of one staged commit (sources/sinks.py::commit_parts): a
+   replayed epoch replaces all three, and a failed one publishes none.
 
 Scale: state rows are (id, k ints) + (id, band rows) — measured
 168 B/doc parquet-encoded at sf0.1, CONSTANT in document length where
@@ -44,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.dedup import lsh_bands, minhash_signature, shingle
+from ..sources.sinks import SinkHandles, commit_parts
 from .curation import DOCUMENTS_FILE_SCHEMA
 
 ACCEPTED_SCHEMA = T.StructType(
@@ -61,6 +64,9 @@ BAND_SCHEMA = T.StructType(
         T.StructField("band_hash", T.StringType(), True),
     ]
 )
+
+# the partition column of the sink and the store (sources/sinks.py::commit_parts)
+_BATCH_ID = T.StructField("_batch_id", T.IntegerType(), True)
 
 
 @dataclass
@@ -99,6 +105,7 @@ def build_minhash_dedup_stream(spark: SparkSession, cfg: MinhashStreamConfig):
     src = reader.parquet(cfg.src_dir)
     sig_path = f"{cfg.state_path}/sig"
     band_path = f"{cfg.state_path}/bands"
+    sinks = SinkHandles(spark)
     attempts: dict[int, int] = {}
 
     def process(batch: DataFrame, epoch_id: int) -> None:
@@ -195,13 +202,18 @@ def build_minhash_dedup_stream(spark: SparkSession, cfg: MinhashStreamConfig):
         # silently emit zero survivors. The filter is partition pruning
         # on the state layout, so the probe never reads the current
         # epoch's directories at all.
+        def seen(df: DataFrame, path: str) -> DataFrame:
+            # the store holds the epoch's own schema, so the read runs no
+            # inference job, and a store that a failed first epoch left
+            # empty reads as no rows
+            return (
+                spark_l.read.schema(T.StructType([*df.schema, _BATCH_ID]))
+                .parquet(path)
+                .filter(F.col("_batch_id") < int(epoch_id))
+            )
+
         if os.path.exists(band_path):
-            seen_bands = spark_l.read.parquet(band_path).filter(
-                F.col("_batch_id") < int(epoch_id)
-            )
-            seen_sig = spark_l.read.parquet(sig_path).filter(
-                F.col("_batch_id") < int(epoch_id)
-            )
+            seen_bands, seen_sig = seen(bands, band_path), seen(sig, sig_path)
             cross_cand = (
                 bands.select(F.col("doc_id").alias("id_a"), "band_idx", "band_hash")
                 .join(
@@ -225,18 +237,13 @@ def build_minhash_dedup_stream(spark: SparkSession, cfg: MinhashStreamConfig):
         ).join(batch_keep, "doc_id", "left_semi").unionByName(
             docs.select("doc_id", "shard").join(sig.select("doc_id"), "doc_id", "left_anti")
         )
-        # batch-id-keyed dynamic overwrite (sources/sinks.py): a replayed
-        # epoch REPLACES its own partitions in sink and state instead of
-        # appending duplicates — checkpoint recovery stays exactly-once.
-        from ..sources.sinks import idempotent_batch_write
-
-        spark_l.sparkContext.setJobDescription(f"mhs e{epoch_id}: sink")
-        idempotent_batch_write(survivors, epoch_id, cfg.out_path)
         # state: EVERY seen signature, survivors and dups alike
-        spark_l.sparkContext.setJobDescription(f"mhs e{epoch_id}: sig state")
-        idempotent_batch_write(sig, epoch_id, sig_path)
-        spark_l.sparkContext.setJobDescription(f"mhs e{epoch_id}: band state")
-        idempotent_batch_write(bands, epoch_id, band_path)
+        spark_l.sparkContext.setJobDescription(f"mhs e{epoch_id}: commit")
+        commit_parts(
+            [(survivors, None, cfg.out_path), (sig, None, sig_path), (bands, None, band_path)],
+            epoch_id,
+            sinks,
+        )
         spark_l.sparkContext.setJobDescription(None)
         for df in (bands, sig, docs):
             df.unpersist()

@@ -70,7 +70,7 @@ class CdcPipelineConfig:
     dim_filter: str | None = None  # simulate broken enrichment (DLQ tests)
     max_files_per_trigger: int | None = None
     corrupt_every: int | None = None  # garble every Nth payload (deser-DLQ tests)
-    idempotent: bool = False  # batch-id-keyed dynamic-overwrite sinks (exactly-once)
+    idempotent: bool = False  # batch-id-keyed sinks a replayed epoch rewrites (exactly-once)
     # Optional source override: a zero-arg callable returning the raw
     # (kafka_key, value-json) streaming DataFrame. This is how the SAME
     # topology (parse -> enrich -> split -> dual sink) runs against a real
@@ -102,17 +102,14 @@ def resilient_batch(fn):
     re-executes the micro-batch's source and codec on EVERY data batch, a
     worse cost than letting the rare empty batch run a no-op join.)
 
-    Delivery contract: a failed attempt commits nothing in practice. On
-    the driver path (_enrich_and_split, an epoch under the size gate) the
-    epoch's one collect feeds both sinks, whose parts are staged under
-    hidden names and renamed into place only after both are written; a
-    failure before the renames deletes the staged parts, so the retry
-    commits each sink exactly once. On the Spark path the tagged relation
-    persists MEMORY_AND_DISK before the first sink write, so the second
-    write never re-runs the codec or re-reads the dimension, and
-    FileOutputCommitter v1 exposes files only at job commit. Idempotent
-    mode is retry-safe on either path (batch-id-keyed partitions that a
-    retry replaces)."""
+    Delivery contract: a failed attempt commits nothing. On either side
+    of the size gate (_enrich_and_split) both sinks' parts are staged
+    under hidden names and renamed into place only after both are
+    written (sources/sinks.py::commit_parts); a failure before the
+    renames deletes the staged parts, so the retry commits each sink
+    exactly once. Idempotent mode also makes a checkpoint replay of a
+    published epoch safe (batch-id-keyed partitions that the replay
+    replaces)."""
 
     def wrapped(batch: DataFrame, batch_id: int) -> None:
         import time as _time
@@ -217,30 +214,28 @@ def _enrich_and_split(
     relation over the epoch's batch, reads the size gate and moves the
     epoch's rows.
 
-    Two paths, one output. An epoch the driver can hold (the batch's
-    size estimate passes catalog.driver_sized_bytes — a one-file live
-    epoch measured about 3 KB) runs as ONE Spark execution: the relation,
-    projected to the ok columns plus the DLQ key and payload, is
-    collected once as Arrow, split on ``reason IS NULL`` on the driver,
-    and each sink gets one parquet part written through the Hadoop
-    FileSystem, staged under a hidden name and renamed into place only
-    after both are written (sources/sinks.py::commit_parts) — so a
-    failed attempt leaves nothing visible. The parts read back exactly
-    like Spark-written ones (same schema in the footer; a schema-only
-    part for an empty side). Larger batches, and batches whose plan
-    reports no size (a backfill, the JVM Kafka source), keep the Spark
-    path: the relation persisted once MEMORY_AND_DISK, and the two sinks
-    written as filters of it.
+    Two ways to materialize the sinks' parts, one commit. An epoch the
+    driver can hold (the batch's size estimate passes
+    catalog.driver_sized_bytes — a one-file live epoch measured about
+    3 KB) runs as ONE Spark execution: the relation, projected to the ok
+    columns plus the DLQ key and payload, is collected once as Arrow and
+    split on ``reason IS NULL`` on the driver, and each sink's part is
+    one parquet file written through the Hadoop FileSystem. The parts
+    read back exactly like Spark-written ones (same schema in the footer;
+    a schema-only part for an empty side). Larger batches, and batches
+    whose plan reports no size (a backfill, the JVM Kafka source),
+    persist the relation once MEMORY_AND_DISK, and Spark writes the two
+    sinks' parts as filters of it. Either way both parts are staged and
+    then renamed into place (sources/sinks.py::commit_parts), so a failed
+    attempt leaves nothing visible.
 
-    Default delivery is at-least-once on batch retry (append is not
-    transactional) — matching the reference's processing.guarantee
+    Default delivery is at-least-once on checkpoint replay (a replayed
+    epoch appends again) — matching the reference's processing.guarantee
     default (CLAUDE.md:157-159); `idempotent=True` upgrades both sinks to
     batch-id-keyed ``_batch_id=<N>`` partitions that a replayed epoch
-    rewrites in place — effective exactly-once: on the driver path the
-    staged partition is swapped in, on the Spark path
-    sources/sinks.py::idempotent_batch_write overwrites it. The remaining
-    at-least-once mitigations stay documented: downstream key+version
-    dedup (q_window_rank / s_dedup_stream); s_offset_reset proves the
+    swaps in place — effective exactly-once. The remaining at-least-once
+    mitigations stay documented: downstream key+version dedup
+    (q_window_rank / s_dedup_stream); s_offset_reset proves the
     replay-duplicate semantics end-to-end. Both DLQ reasons keep the
     ORIGINAL payload (reference parity: deserialization DLQ is
     framework-level, enrichment DLQ is explicit — application.yml:23-31 /
@@ -248,44 +243,34 @@ def _enrich_and_split(
     from pyspark import StorageLevel
 
     from ..catalog import driver_sized_bytes
-    from ..sources.sinks import commit_parts, idempotent_batch_write
+    from ..sources.sinks import commit_parts
 
     tagged = batch.join(dim, state.join, "left").withColumn("reason", state.reason)
-    epoch = (batch_id or 0) if idempotent else None
-
-    if driver_sized_bytes(batch) is not None:
+    ok_schema, bad_schema = state.schemas(tagged, dim)
+    spark_path = driver_sized_bytes(batch) is None
+    if spark_path:
+        # MEMORY_AND_DISK (not cache/MEMORY_ONLY): eviction must spill,
+        # never recompute — a recompute in the SECOND sink write would
+        # re-run the codec and re-read the dimension
+        tagged.persist(StorageLevel.MEMORY_AND_DISK)
+        ok, bad = state.split(tagged)
+    else:
         import pyarrow.compute as pc
 
         rows = tagged.select(*state.collected).toArrow()
-        ok_schema, bad_schema = state.schemas(tagged, dim)
         n = len(state.ok_cols)
         untagged = pc.is_null(rows.column(n + 2))
+        ok = rows.filter(untagged).select(range(n))
+        bad = rows.filter(pc.invert(untagged)).select(range(n, n + 3))
+    try:
         commit_parts(
-            [
-                (rows.filter(untagged).select(range(n)), ok_schema, out_path),
-                (rows.filter(pc.invert(untagged)).select(range(n, n + 3)), bad_schema, dlq_path),
-            ],
-            epoch,
+            [(ok, ok_schema, out_path), (bad, bad_schema, dlq_path)],
+            (batch_id or 0) if idempotent else None,
             state.sinks,
         )
-        return
-
-    ok, bad = state.split(tagged)
-    # MEMORY_AND_DISK (not cache/MEMORY_ONLY): eviction must spill, never
-    # recompute — a recompute in the SECOND sink write would re-run the
-    # codec and re-read the dimension, breaking resilient_batch's
-    # nothing-committed-on-failure retry contract (and double-appending
-    # on retry).
-    tagged.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        if idempotent:
-            idempotent_batch_write(ok, epoch, out_path)
-            idempotent_batch_write(bad, epoch, dlq_path)
-        else:
-            ok.write.mode("append").parquet(out_path)
-            bad.write.mode("append").parquet(dlq_path)
     finally:
-        tagged.unpersist()
+        if spark_path:
+            tagged.unpersist()
 
 
 def build_cdc_pipeline(spark: SparkSession, cfg: CdcPipelineConfig):

@@ -5,7 +5,9 @@ EXACTLY-ONCE contract under checkpoint recovery — a micro-batch whose
 sink AND state writes all landed but whose commit never happened (crash
 injected between write and commit, the kafka_transcript_sink pattern),
 so Structured Streaming re-runs the same epoch through foreachBatch
-against its own failed attempt's on-disk output.
+against its own failed attempt's on-disk output — and a micro-batch
+whose staged commit failed before its publish, which must leave nothing
+of the epoch visible.
 """
 
 from __future__ import annotations
@@ -127,6 +129,66 @@ def test_result_matches_crash_free_run(spark, sf_smoke, tmp_path):
 
     clean = run(tmp_path / "clean", frozenset())
     replayed = run(tmp_path / "crash", frozenset({1}))
+    assert clean == replayed
+
+
+@pytest.mark.parametrize("epoch", [0, 1])
+def test_failed_publish_leaves_no_partition_and_replay_matches_crash_free_run(
+    spark, sf_smoke, tmp_path, monkeypatch, epoch
+):
+    """A failure injected in the epoch's publish — after the survivors,
+    sig and bands parts are all staged — leaves no ``_batch_id=<epoch>``
+    partition (and no staged leftover) in the sink or either store, and
+    the restarted stream's replay of the epoch accepts exactly the rows
+    of a crash-free run. Epoch 0 also covers a store that the failed
+    attempt left as an empty directory."""
+    from spring_cloud_kafka_streams_dbz_etl_spark.sources import sinks
+
+    docs = pq.read_table(f"{sf_smoke}/documents.parquet")
+    even = pc.equal(pc.bit_wise_and(docs["doc_id"], 1), 0)
+    shards = [docs.filter(even), docs.filter(pc.invert(even))]
+    real_publish, failed = sinks._publish_parts, []
+
+    def failing_publish(handles, staged, batch_id):
+        if batch_id == epoch and not failed:
+            failed.append([
+                sorted(os.listdir(d)) if os.path.isdir(d) else []
+                for d in (out, f"{state}/sig", f"{state}/bands")
+            ])
+            raise RuntimeError(f"injected failure in epoch {batch_id}'s publish")
+        return real_publish(handles, staged, batch_id)
+
+    def run(base):
+        src = base / "src"
+        src.mkdir(parents=True)
+        cfg = MinhashStreamConfig(
+            src_dir=str(src), out_path=str(base / "out"),
+            state_path=str(base / "state"), checkpoint=str(base / "ckpt"),
+        )
+        start = build_minhash_dedup_stream(spark, cfg)
+        q = start()
+        for k, shard in enumerate(shards):
+            pq.write_table(shard, str(src / f".d{k}.tmp"))
+            os.rename(str(src / f".d{k}.tmp"), str(src / f"documents{k}.parquet"))
+            try:
+                q.processAllAvailable()
+            except Exception:
+                assert failed, "the stream failed without the injected failure"
+                for d in (cfg.out_path, f"{cfg.state_path}/sig", f"{cfg.state_path}/bands"):
+                    names = os.listdir(d) if os.path.isdir(d) else []
+                    assert f"_batch_id={epoch}" not in names, (d, names)
+                    assert not [n for n in names if n.startswith("._")], (d, names)
+                q = start()  # restart: the epoch replays
+                q.processAllAvailable()
+        q.stop()
+        return sorted(map(tuple, read_accepted(spark, cfg.out_path).collect()))
+
+    clean = run(tmp_path / "clean")
+    out, state = str(tmp_path / "crash" / "out"), str(tmp_path / "crash" / "state")
+    monkeypatch.setattr(sinks, "_publish_parts", failing_publish)
+    replayed = run(tmp_path / "crash")
+    # every part was staged under a hidden name when the publish failed
+    assert failed and all(any(n.startswith("._") for n in names) for names in failed[0])
     assert clean == replayed
 
 

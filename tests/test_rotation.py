@@ -53,6 +53,15 @@ def test_prior_round_deferrals_front_the_window(registered):
     assert moved <= fronted, sorted(moved - fronted)
 
 
+def test_changed_tier_fits_the_window():
+    """The standing budget rule: the derived changed tier (queries whose
+    stamp moved since the last driver round) fits the 50-query window,
+    so a restamp that moves more plans than one round can verify fails
+    here, by name, before any rotation runs."""
+    tier = rotation.derived()[1]
+    assert len(tier) <= WINDOW, f"changed tier {len(tier)} > window {WINDOW}"
+
+
 def test_never_checked_queries_front(registered):
     order = rotation.rotation_order(registered)
     never = [n for n in registered if rotation.checked(n) == (0, 0)]

@@ -1,56 +1,12 @@
-"""Partitioned/bucketed sink tests: layout + pruning/shuffle-elimination
-properties that matter at scale."""
+"""Sink tests: the versioned dimension store's CRUD commits, and the
+partition pruning a partitioned fact layout gets from a filtered
+dimension."""
 
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import functions as F
-
-from spring_cloud_kafka_streams_dbz_etl_spark.catalog import table
-from spring_cloud_kafka_streams_dbz_etl_spark.plans import explain_str
-from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import (
-    write_bucketed,
-    write_partitioned,
-)
-
-
-def test_partitioned_write_prunes(spark, sf_smoke):
-    out = tempfile.mkdtemp(prefix="scksde_part_")
-    ev = table(spark, sf_smoke, "events")
-    write_partitioned(ev, out, ["event_type"])
-    # hive-style directories exist
-    assert any(d.startswith("event_type=") for d in os.listdir(out))
-    back = spark.read.parquet(out).filter(F.col("event_type") == "click")
-    text = explain_str(back)
-    assert "PartitionFilters" in text and "event_type" in text.split("PartitionFilters")[1][:200]
-    assert back.count() == ev.filter("event_type = 'click'").count()
-
-
-def test_bucketed_join_skips_shuffle(spark, sf_smoke):
-    suffix = uuid.uuid4().hex[:6]
-    ev = table(spark, sf_smoke, "events")
-    cust = table(spark, sf_smoke, "customer")
-    write_bucketed(ev, f"ev_b_{suffix}", ["user_id"], num_buckets=8)
-    write_bucketed(
-        cust.withColumnRenamed("c_custkey", "user_id"), f"cust_b_{suffix}", ["user_id"], 8
-    )
-    a = spark.table(f"ev_b_{suffix}")
-    b = spark.table(f"cust_b_{suffix}")
-    # disable broadcast so the join would need a shuffle if not bucketed
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = a.join(b, "user_id")
-        text = explain_str(joined)
-        assert "SortMergeJoin" in text
-        assert "Exchange hashpartitioning" not in text, "bucketed join must not shuffle"
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql(f"DROP TABLE IF EXISTS ev_b_{suffix}")
-        spark.sql(f"DROP TABLE IF EXISTS cust_b_{suffix}")
 
 
 # -- dimension CRUD (§2A #22) ------------------------------------------------

@@ -382,26 +382,33 @@ def test_dimension_update_visible_between_batches(spark, sf_smoke):
 
 def test_idempotent_sink_replay_rewrites_in_place(spark, tmp_path):
     """Replaying an epoch through the idempotent sink must not duplicate:
-    the second write of batch 7 REPLACES the first (dynamic partition
-    overwrite), while a different batch id appends alongside."""
+    the second commit of batch 7's DataFrame REPLACES the first (its
+    staged partition is swapped in), while a different batch id appends
+    alongside."""
     from pyspark.sql import functions as F
 
     from spring_cloud_kafka_streams_dbz_etl_spark.sources.sinks import (
-        idempotent_batch_write,
+        SinkHandles,
+        commit_parts,
         read_idempotent_sink,
     )
 
     out = str(tmp_path / "sink")
+    handles = SinkHandles(spark)
+
+    def commit(df, batch_id):
+        commit_parts([(df, None, out)], batch_id, handles)
+
     rows = spark.range(10).select(F.col("id"), (F.col("id") * 2).alias("v"))
-    idempotent_batch_write(rows, 7, out)
-    idempotent_batch_write(rows, 7, out)  # replayed epoch
+    commit(rows, 7)
+    commit(rows, 7)  # replayed epoch
     assert read_idempotent_sink(spark, out).count() == 10
-    idempotent_batch_write(spark.range(10, 15).select(F.col("id"), F.lit(0).alias("v")), 8, out)
+    commit(spark.range(10, 15).select(F.col("id"), F.lit(0).alias("v")), 8)
     got = read_idempotent_sink(spark, out)
     assert got.count() == 15
     # replay with DIFFERENT content for the same epoch (retry after partial
     # failure) still converges to exactly-one copy of the batch
-    idempotent_batch_write(spark.range(10, 12).select(F.col("id"), F.lit(1).alias("v")), 8, out)
+    commit(spark.range(10, 12).select(F.col("id"), F.lit(1).alias("v")), 8)
     assert read_idempotent_sink(spark, out).count() == 12
 
 
@@ -541,13 +548,18 @@ def _spark_path(spark):
 
 
 def _count_commits(monkeypatch) -> list:
-    """Record every driver-side sink commit (the driver path's marker)."""
+    """Record every sink commit of driver-built Arrow parts (the driver
+    path's marker: the Spark path commits DataFrame parts through the
+    same commit_parts)."""
+    import pyarrow as pa
+
     from spring_cloud_kafka_streams_dbz_etl_spark.sources import sinks
 
     calls, real = [], sinks.commit_parts
 
     def spy(*a, **kw):
-        calls.append(a)
+        if isinstance(a[0][0][0], pa.Table):
+            calls.append(a)
         return real(*a, **kw)
 
     monkeypatch.setattr(sinks, "commit_parts", spy)
@@ -703,13 +715,15 @@ def test_driver_written_sinks_read_like_spark_written(spark, sf_smoke, monkeypat
                 assert sizes[1][0] > 0 and sizes[0] == empty, (case, sizes)
 
 
+@pytest.mark.parametrize("side", ["driver", "spark"])
 def test_driver_commit_failure_publishes_nothing_and_retry_commits_once(
-    spark, sf_smoke, monkeypatch
+    spark, sf_smoke, monkeypatch, side
 ):
-    """A failure after both parts are staged (before their rename) leaves
-    no new part visible — in idempotent mode the epoch's old partition
-    stays readable — and resilient_batch's retry of the epoch commits
-    each sink exactly once, with no staged file left behind."""
+    """On either side of the size gate, a failure after both parts are
+    staged (before their rename) leaves no new part visible — in
+    idempotent mode the epoch's old partition stays readable — and
+    resilient_batch's retry of the epoch commits each sink exactly once,
+    with no staged file left behind."""
     from spring_cloud_kafka_streams_dbz_etl_spark.sources import sinks
     from spring_cloud_kafka_streams_dbz_etl_spark.streaming.pipeline import (
         EpochState,
@@ -723,33 +737,42 @@ def test_driver_commit_failure_publishes_nothing_and_retry_commits_once(
     real_publish = sinks._publish_parts
     for idempotent in (False, True):
         out, dlq = _tmp("fail_out"), _tmp("fail_dlq")
-        if idempotent:  # an earlier attempt's partition, to be replaced
+        with _spark_path(spark) if side == "spark" else contextlib.nullcontext():
+            if idempotent:  # an earlier attempt's partition, to be replaced
+                _enrich_and_split(
+                    batch.limit(5), dim, out, dlq, state, batch_id=9, idempotent=True
+                )
+            before = [_parts(d) for d in (out, dlq)]
+            # the parts one commit of the epoch writes: one per sink on
+            # the driver, one per non-empty task on the Spark path
+            once_out, once_dlq = _tmp("once_out"), _tmp("once_dlq")
             _enrich_and_split(
-                batch.limit(5), dim, out, dlq, state, batch_id=9, idempotent=True
+                batch, dim, once_out, once_dlq, state, batch_id=9, idempotent=idempotent
             )
-        before = [_parts(d) for d in (out, dlq)]
-        seen = []
+            once = [len(_parts(d)) for d in (once_out, once_dlq)]
+            seen = []
 
-        def failing_publish(spark_, staged, batch_id):
-            if not seen:
-                seen.append([_parts(d) for d in (out, dlq)])
-                seen.append(sorted(
-                    f for d in (out, dlq) for f in os.listdir(d)
-                    if f.startswith(".") and not f.endswith(".crc")
-                ))
-                raise FileNotFoundError("simulated: staged path does not exist")
-            return real_publish(spark_, staged, batch_id)
+            def failing_publish(spark_, staged, batch_id):
+                if not seen:
+                    seen.append([_parts(d) for d in (out, dlq)])
+                    seen.append(sorted(
+                        f for d in (out, dlq) for f in os.listdir(d)
+                        if f.startswith(".") and not f.endswith(".crc")
+                    ))
+                    raise FileNotFoundError("simulated: staged path does not exist")
+                return real_publish(spark_, staged, batch_id)
 
-        monkeypatch.setattr(sinks, "_publish_parts", failing_publish)
-        resilient_batch(
-            lambda b, bid: _enrich_and_split(
-                b, dim, out, dlq, state, batch_id=bid, idempotent=idempotent
-            )
-        )(batch, 9)
+            monkeypatch.setattr(sinks, "_publish_parts", failing_publish)
+            resilient_batch(
+                lambda b, bid: _enrich_and_split(
+                    b, dim, out, dlq, state, batch_id=bid, idempotent=idempotent
+                )
+            )(batch, 9)
         visible_at_failure, staged_at_failure = seen
         assert visible_at_failure == before, idempotent
         assert len(staged_at_failure) == 2, staged_at_failure
-        assert [len(_parts(d)) for d in (out, dlq)] == [1, 1]
+        assert [len(_parts(d)) for d in (out, dlq)] == once
+        assert side == "spark" or once == [1, 1]
         hidden = [f for d in (out, dlq) for f in os.listdir(d)
                   if f.startswith(".") and not f.endswith(".crc")]
         assert hidden == [], hidden
